@@ -462,9 +462,10 @@ object Bench {
       }
     // optional noop-sink series (§1.4): one extra run per query timing
     // full-column materialization, reported beside — never instead of —
-    // the count series (see [[NoopEnv]])
+    // the count series (see [[NoopEnv]]); only the unfiltered run's
+    // artifact below carries it, so a filtered run skips the pass
     val noop: Map[String, Double] =
-      if (!sys.env.get(NoopEnv).contains("1")) Map.empty
+      if (only.nonEmpty || !sys.env.get(NoopEnv).contains("1")) Map.empty
       else ordered.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok =

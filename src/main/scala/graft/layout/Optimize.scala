@@ -31,20 +31,9 @@ object Optimize {
     val clustered = df
       .repartitionByRange(targetFiles, clusterCols.map(col): _*)
       .sortWithinPartitions(clusterCols.map(col): _*)
-    if (partitionCols.isEmpty)
-      graft.sources.Tables.overwrite(clustered, path)
-    else {
-      // preserve hive-style layout: a plain overwrite would flatten the
-      // partition directories and permanently lose partition pruning.
-      // Stage to a dir DISTINCT from Tables.overwrite's ".__tmp__" and
-      // swap the materialized directory wholesale — re-reading the staged
-      // dir through overwrite() would both collide with its staging path
-      // and flatten the layout.
-      val tmp = path + ".__cluster_tmp__"
-      clustered.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*).parquet(tmp)
-      graft.sources.Tables.publish(spark, tmp, path)
-    }
+    // partitionCols keep the hive-style layout: a flat overwrite would
+    // lose the partition directories and with them partition pruning
+    graft.sources.Tables.overwrite(clustered, path, partitionCols)
   }
 
   /** Quantize a bounded numeric column onto the `[0, 2^bits)` integer

@@ -277,17 +277,14 @@ object BinaryQuantizer {
   def writeIndex(corpus0: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
     val spark = corpus0.sparkSession
-    val staged = dir + ".__write__"
-    val sp = new org.apache.hadoop.fs.Path(staged)
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(sp, true)
-    val corpus = CentroidState.ensureCached(corpus0)
-    val mid = mids(ScalarQuantizer.train(corpus, vecCol))
-    corpus.select(col(idCol), packed(col(vecCol), mid).as("bw"))
-      .write.mode("overwrite").parquet(s"$staged/codes")
-    midsToDF(spark, mid).coalesce(1)
-      .write.mode("overwrite").parquet(s"$staged/mids")
-    graft.sources.Tables.publish(spark, staged, dir)
+    graft.sources.Tables.replace(spark, dir) { staged =>
+      val corpus = CentroidState.ensureCached(corpus0)
+      val mid = mids(ScalarQuantizer.train(corpus, vecCol))
+      corpus.select(col(idCol), packed(col(vecCol), mid).as("bw"))
+        .write.mode("overwrite").parquet(s"$staged/codes")
+      midsToDF(spark, mid).coalesce(1)
+        .write.mode("overwrite").parquet(s"$staged/mids")
+    }
   }
 
   /** O(|delta|) append: new vectors pack through the STORED thresholds

@@ -124,14 +124,11 @@ object BpeTrainer {
   def writeMerges(spark: org.apache.spark.sql.SparkSession,
       merges: Seq[Merge], dir: String): Unit = {
     import spark.implicits._
-    val staged = dir + ".__write__"
-    val sp = new org.apache.hadoop.fs.Path(staged)
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-    merges.zipWithIndex
+    val rows = merges.zipWithIndex
       .map { case (m, i) => (i, m.x, m.y, m.count) }
       .toDF("ord", "x", "y", "cnt").coalesce(1)
-      .write.mode("overwrite").parquet(s"$staged/merges")
-    graft.sources.Tables.publish(spark, staged, dir)
+    graft.sources.Tables.replace(spark, dir)(staged =>
+      rows.write.mode("overwrite").parquet(s"$staged/merges"))
   }
 
   /** The stored merge table, in training order. */

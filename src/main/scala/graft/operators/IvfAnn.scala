@@ -266,19 +266,18 @@ object IvfAnn {
   /** Compact a cell layout in place: every cell's rows are rewritten
     * as ONE file (a `repartition` on `cell` puts each cell wholly in
     * one task, so `partitionBy` emits one file per cell directory),
-    * then swapped in via [[graft.sources.Tables.publish]]'s crash-safe
-    * rename chain — the layout stays addressable (old or new, never
-    * neither) throughout. This is the third leg of index maintenance:
-    * [[appendPartitionedByCell]] absorbs deltas as small files, probe
-    * I/O degrades with file COUNT (per-file open/footer cost), and
-    * periodic compaction restores one-file-per-cell without touching
-    * centroids or assignments. Content is untouched by construction —
+    * then swapped in by [[graft.sources.Tables.replace]] — the layout
+    * stays addressable (old or new, never neither) throughout, and
+    * markers written meanwhile are carried. This is the third leg of
+    * index maintenance: [[appendPartitionedByCell]] absorbs deltas as
+    * small files, probe I/O degrades with file COUNT (per-file
+    * open/footer cost), and periodic compaction restores
+    * one-file-per-cell without touching centroids or assignments. Content is untouched by construction —
     * the spec asserts file counts drop and search results are
     * identical.
     */
   def compactCells(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String): Unit = {
-    val staged = path + ".__compact__"
     val base = spark.read.parquet(path)
     // `idCol` is explicit — inferring it from column position would
     // silently anti-join tombstones against the wrong column on a
@@ -286,16 +285,11 @@ object IvfAnn {
     // pending tombstones apply physically here
     require(base.columns.contains(idCol),
       s"id column '$idCol' not in layout schema ${base.columns.mkString(",")}")
-    val snap = graft.sources.Tombstones.fileSnapshot(spark, path)
     val live = graft.sources.Tombstones.filterLive(spark, path, base, idCol)
-    live.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staged)
-    // deletes that arrived mid-compaction ride into the new layout
-    // instead of vanishing with the publish swap
-    graft.sources.Tombstones.carryInto(spark, path, snap, staged)
-    // the publish swap replaces the whole directory, so the applied
-    // tombstones vanish with the old layout — no separate cleanup step
-    graft.sources.Tables.publish(spark, staged, path)
+    graft.sources.Tables.replace(spark, path, live.inputFiles,
+        Seq(graft.sources.Tombstones.Dir))(
+      live.repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(_))
   }
 
   /** LOGICAL delete from a cell layout — O(|deletes|), append-only
@@ -485,8 +479,7 @@ object IvfAnn {
     * physically before training and re-encode ([[deleteFromCells]]
     * markers must neither shape the retrained centroids nor be
     * resurrected into the new layout), and markers that arrive while
-    * the retrain runs are carried into the staged layout — the
-    * [[compactCells]] snapshot/carry discipline.
+    * the retrain runs are carried ([[graft.sources.Tables.replace]]).
     *
     * Retraining costs what [[centroids]] + [[writePartitionedByCell]]
     * cost — `iters` corpus scans and one partitioned rewrite — which is
@@ -512,19 +505,18 @@ object IvfAnn {
     val ratio = globalDriftRatio(driftReport(tagged, genCol, vecCol, cents))
     if (!ratio.exists(_ > tau)) (cents, false)
     else {
-      val snap = graft.sources.Tombstones.fileSnapshot(spark, path)
       val full = graft.sources.Tombstones.filterLive(spark, path,
         tagged.select(col(idCol), col(vecCol)), idCol)
+      val listed = full.inputFiles // before training can cache `full`
       val retrained = centroids(full, idCol, vecCol, clusters, iters)
       val cs = CentroidState.collect(retrained)
-      val staged = path + ".__retrain__"
-      full.select(col(idCol), col(vecCol),
-          CentroidState.nearestCell(col(vecCol), cs).as("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(staged)
-      midRetrain()
-      // deletes that arrived mid-retrain ride into the new layout
-      graft.sources.Tombstones.carryInto(spark, path, snap, staged)
-      graft.sources.Tables.publish(spark, staged, path)
+      graft.sources.Tables.replace(spark, path, listed,
+          Seq(graft.sources.Tombstones.Dir)) { staged =>
+        full.select(col(idCol), col(vecCol),
+            CentroidState.nearestCell(col(vecCol), cs).as("cell"))
+          .write.mode("overwrite").partitionBy("cell").parquet(staged)
+        midRetrain()
+      }
       (retrained, true)
     }
   }

@@ -147,35 +147,34 @@ object IvfPq {
   def writeIndex(corpus0: DataFrame, idCol: String, vecCol: String,
       dir: String, clusters: Int, m: Int, dim: Int, codes: Int,
       coarseIters: Int = 1, pqIters: Int = 1): Unit = {
+    // built into the staged sibling and swapped in whole
+    // ([[graft.sources.Tables.replace]]): overwriting a dir IN PLACE
+    // that previously held the OPPOSITE encoding had crash states where
+    // stale residual codes survived flagless (searchIndex silently
+    // accepted them) — staged, an interrupted (re)write leaves the
+    // previous index — flag, quantizers, and codes consistent with each
+    // other — fully addressable, never a half-overwritten mix of
+    // encodings (round-10 review)
+    graft.sources.Tables.replace(corpus0.sparkSession, dir)(
+      buildGlobal(corpus0, idCol, vecCol, _, clusters, m, dim, codes,
+        coarseIters, pqIters))
+  }
+
+  private def buildGlobal(corpus0: DataFrame, idCol: String, vecCol: String,
+      out: String, clusters: Int, m: Int, dim: Int, codes: Int,
+      coarseIters: Int, pqIters: Int): Unit = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val spark = corpus0.sparkSession
-    // build under a staged sibling and swap in whole: overwriting a dir
-    // IN PLACE that previously held the OPPOSITE encoding had crash
-    // states where stale residual codes survived flagless (searchIndex
-    // silently accepted them) — with the staged publish, an interrupted
-    // (re)write leaves the previous index — flag, quantizers, and codes
-    // consistent with each other — fully addressable, never a
-    // half-overwritten mix of encodings (round-10 review)
-    val staged = dir + ".__write__"
-    // a crashed earlier staged write may have left the dir — flagged,
-    // even — which would poison this global build: clear it first
-    clearDir(spark, staged)
     val corpus = CentroidState.ensureCached(corpus0)
     val coarse = IvfAnn.lloyd(corpus, idCol, vecCol, clusters, coarseIters)
     val cb = ProductQuantizer.lloyd(corpus, idCol, vecCol, m, dim, codes,
       pqIters)
     encodedRows(corpus, idCol, vecCol, coarse, cb, m, dim)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$staged/cells")
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/cells")
     CentroidState.toDF(spark, coarse).coalesce(1)
-      .write.mode("overwrite").parquet(s"$staged/coarse")
+      .write.mode("overwrite").parquet(s"$out/coarse")
     ProductQuantizer.toDF(spark, cb).coalesce(1)
-      .write.mode("overwrite").parquet(s"$staged/codebook")
-    graft.sources.Tables.publish(spark, staged, dir)
-  }
-
-  private def clearDir(spark: SparkSession, d: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      .write.mode("overwrite").parquet(s"$out/codebook")
   }
 
   /** Load both quantizers back from the index dir (O(clusters·dim) +
@@ -255,14 +254,20 @@ object IvfPq {
   def writeIndexResidual(corpus0: DataFrame, idCol: String, vecCol: String,
       dir: String, clusters: Int, m: Int, dim: Int, codes: Int,
       coarseIters: Int = 1, pqIters: Int = 1): Unit = {
+    // staged build + whole-dir swap — the [[writeIndex]] crash-
+    // consistency rationale; the flag travels with the staged dir so a
+    // published index is ALWAYS flag-consistent with its codes, even
+    // when this write replaces a global-coded index
+    graft.sources.Tables.replace(corpus0.sparkSession, dir)(
+      buildResidual(corpus0, idCol, vecCol, _, clusters, m, dim, codes,
+        coarseIters, pqIters))
+  }
+
+  private def buildResidual(corpus0: DataFrame, idCol: String,
+      vecCol: String, out: String, clusters: Int, m: Int, dim: Int,
+      codes: Int, coarseIters: Int, pqIters: Int): Unit = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val spark = corpus0.sparkSession
-    // staged build + whole-dir publish swap — the [[writeIndex]]
-    // crash-consistency rationale; the flag travels with the staged dir
-    // so a published index is ALWAYS flag-consistent with its codes,
-    // even when this write replaces a global-coded index
-    val staged = dir + ".__write__"
-    clearDir(spark, staged)
     val corpus = CentroidState.ensureCached(corpus0)
     val coarse = IvfAnn.lloyd(corpus, idCol, vecCol, clusters, coarseIters)
     val resid = CentroidState.ensureCached(
@@ -273,17 +278,16 @@ object IvfPq {
     // published state — ever holds residual codes unflagged (searchIndex
     // would accept them and return garbage silently — the failure the
     // flag exists to stop)
-    locally { val (p, fs) = residualFlag(spark, staged)
+    locally { val (p, fs) = residualFlag(spark, out)
       fs.mkdirs(p.getParent); fs.create(p, true).close() }
     resid.select(col(idCol),
         ProductQuantizer.codesExpr(col("rv"), cb, m, dim).as("codes"),
         col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$staged/cells")
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/cells")
     CentroidState.toDF(spark, coarse).coalesce(1)
-      .write.mode("overwrite").parquet(s"$staged/coarse")
+      .write.mode("overwrite").parquet(s"$out/coarse")
     ProductQuantizer.toDF(spark, cb).coalesce(1)
-      .write.mode("overwrite").parquet(s"$staged/codebook")
-    graft.sources.Tables.publish(spark, staged, dir)
+      .write.mode("overwrite").parquet(s"$out/codebook")
   }
 
   /** `(idCol, cell, rv)` — each vector's assigned cell and float
@@ -526,16 +530,14 @@ object IvfPq {
     * defragments `dir/cells`, [[driftReport]] measures, THIS acts):
     * when the corpus-wide drift ratio exceeds `tau`, BOTH quantizers
     * retrain on the full LIVE tagged corpus (pending tombstones apply
-    * physically first; mid-retrain markers are carried into the staged
-    * layout — [[IvfAnn.compactCells]]' discipline) and the ENTIRE
-    * index directory
-    * (cells + coarse + codebook + encoding flag) rebuilds under the
-    * dir's existing encoding — residual or global, read from the
-    * `_residual_codes` flag — into a staged dir published through the
-    * crash-safe swap, so quantizers and codes can never skew and the
-    * layout stays addressable throughout. Below `tau` nothing is
-    * touched. The expensive path (two trainings + a full re-encode)
-    * hides behind the O(corpus-scan) telemetry, exactly like
+    * physically first; mid-retrain markers are carried) and the ENTIRE
+    * index directory (cells + coarse + codebook + encoding flag)
+    * rebuilds under the dir's existing encoding — residual or global,
+    * read from the `_residual_codes` flag — through
+    * [[graft.sources.Tables.replace]], so quantizers and codes can
+    * never skew and the layout stays addressable throughout. Below
+    * `tau` nothing is touched. The expensive path (two trainings + a
+    * full re-encode) hides behind the O(corpus-scan) telemetry, exactly like
     * [[IvfAnn.retrainIfDrifted]].
     *
     * @return whether a retrain ran
@@ -561,30 +563,25 @@ object IvfPq {
     else {
       val (p, fsF) = residualFlag(spark, dir)
       val residual = fsF.exists(p)
-      val staged = dir + ".__retrain__"
-      // clear a staged dir a crashed earlier retrain may have left
-      val sp = new org.apache.hadoop.fs.Path(staged)
-      sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(sp, true)
       // the rebuild sources vectors from the CALLER's corpus, which may
       // still hold logically deleted ids — pending markers apply
       // physically BEFORE training and re-encode (deleted vectors must
       // neither shape the quantizers nor be resurrected into the new
       // cells), and markers that arrive while the retrain runs are
-      // carried into the staged cell layout — compactCells' discipline
-      val snap = graft.sources.Tombstones.fileSnapshot(spark, s"$dir/cells")
+      // carried into the staged cell layout
       val full = graft.sources.Tombstones.filterLive(spark, s"$dir/cells",
         tagged.select(col(idCol), col(vecCol)), idCol)
-      if (residual)
-        writeIndexResidual(full, idCol, vecCol, staged, clusters, m, dim,
-          codes, coarseIters, pqIters)
-      else
-        writeIndex(full, idCol, vecCol, staged, clusters, m, dim, codes,
-          coarseIters, pqIters)
-      midRetrain()
-      graft.sources.Tombstones.carryInto(spark, s"$dir/cells", snap,
-        s"$staged/cells")
-      graft.sources.Tables.publish(spark, staged, dir)
+      val listed = full.inputFiles // before the build caches `full`
+      graft.sources.Tables.replace(spark, dir, listed,
+          Seq(s"cells/${graft.sources.Tombstones.Dir}")) { staged =>
+        if (residual)
+          buildResidual(full, idCol, vecCol, staged, clusters, m, dim,
+            codes, coarseIters, pqIters)
+        else
+          buildGlobal(full, idCol, vecCol, staged, clusters, m, dim, codes,
+            coarseIters, pqIters)
+        midRetrain()
+      }
       true
     }
   }

@@ -117,30 +117,24 @@ object LshIndex {
   /** Compact the index: per-batch appends accumulate one small file
     * each, and probe cost degrades with file COUNT (open/footer per
     * file) long before it degrades with rows. The rewrite coalesces to
-    * `targetFiles` and swaps in via the crash-safe publish chain —
+    * `targetFiles` and swaps in via [[Tables.replace]] —
     * the [[IvfAnn.compactCells]] discipline for the dedup index
     * (content untouched, spec-asserted). `idCol` names the id column
     * explicitly — inferring it from column position would silently
     * anti-join tombstones against the wrong column if a layout ever
-    * arrived reordered, permanently losing the deletes. Markers
-    * appended while the compaction ran are carried into the new layout
-    * instead of vanishing with the publish swap. For the 100 TB
+    * arrived reordered, permanently losing the deletes. For the 100 TB
     * steady-state probe layout, see [[compactBucketed]].
     */
   def compact(spark: SparkSession, path: String, idCol: String,
       targetFiles: Int = 1): Unit = {
-    val staged = path + ".__compact__"
     val base = spark.read.parquet(path)
     require(base.columns.contains(idCol),
       s"id column '$idCol' not in index schema ${base.columns.mkString(",")}")
-    val snap = graft.sources.Tombstones.fileSnapshot(spark, path)
     // pending tombstones apply physically here
     val live = graft.sources.Tombstones.filterLive(spark, path, base, idCol)
-    live.repartition(targetFiles)
-      .write.mode("overwrite").parquet(staged)
-    // deletes that arrived mid-compaction ride into the new layout
-    graft.sources.Tombstones.carryInto(spark, path, snap, staged)
-    Tables.publish(spark, staged, path)
+    Tables.replace(spark, path, live.inputFiles,
+        Seq(graft.sources.Tombstones.Dir))(
+      live.repartition(targetFiles).write.mode("overwrite").parquet(_))
   }
 
   /** Compact the index into a catalog table BUCKETED by `(band, bkt)`
@@ -200,9 +194,8 @@ object LshIndex {
     * ([[graft.layout.Bucketing.writeBucketedBySwap]]). Pending
     * tombstones apply physically to both tiers; markers that arrive
     * while the rollover runs are carried into the truncated ingest dir
-    * ([[graft.sources.Tombstones.carryInto]] — the [[compact]]
-    * discipline) so [[candidatesHybrid]] keeps masking them in either
-    * tier. Truncation publishes through the crash-safe swap.
+    * ([[Tables.replace]]) so [[candidatesHybrid]] keeps masking them in
+    * either tier.
     *
     * Crash/retry contract: a rollover interrupted mid-swap is recovered
     * by [[graft.layout.Bucketing.recoverSwap]] (called here before the
@@ -220,12 +213,11 @@ object LshIndex {
 
   /** Test seam: `midRollover` runs after the new bulk generation is
     * materialized (live read done) and before the ingest tier
-    * truncates — the race window the marker snapshot/carry covers.
+    * truncates — the race window the marker carry covers.
     */
   private[graft] def compactBucketedAndTruncate(spark: SparkSession,
       path: String, table: String, buckets: Int, idCol: String,
       midRollover: () => Unit): Unit = {
-    val snap = graft.sources.Tombstones.fileSnapshot(spark, path)
     val pathRows = spark.read.parquet(path)
     require(pathRows.columns.contains(idCol),
       s"id column '$idCol' not in index schema ${pathRows.columns.mkString(",")}")
@@ -239,6 +231,7 @@ object LshIndex {
     val all = bulk.fold(pathRows)(_.unionByName(pathRows))
     // pending tombstones apply physically here — to BOTH tiers
     val live = graft.sources.Tombstones.filterLive(spark, path, all, idCol)
+    val listed = live.inputFiles // before the swap moves the bulk's files
     if (bulk.isEmpty)
       graft.layout.Bucketing
         .writeBucketedBy(live, table, Seq("band", "bkt"), buckets)
@@ -246,13 +239,8 @@ object LshIndex {
       graft.layout.Bucketing
         .writeBucketedBySwap(live, table, Seq("band", "bkt"), buckets)
     midRollover()
-    val staged = path + ".__truncate__"
-    pathRows.limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(staged)
-    // deletes that arrived mid-rollover ride into the truncated tier as
-    // markers instead of vanishing with the publish swap
-    graft.sources.Tombstones.carryInto(spark, path, snap, staged)
-    Tables.publish(spark, staged, path)
+    Tables.replace(spark, path, listed, Seq(graft.sources.Tombstones.Dir))(
+      pathRows.limit(0).coalesce(1).write.mode("overwrite").parquet(_))
   }
 
   /** Per-doc shingle arrays minus corpus-wide HOT shingles (document
@@ -284,7 +272,7 @@ object LshIndex {
     * buckets — its exact probe-join cost) is computed from the index
     * rows alone, one O(index) groupBy with no corpus access. When it
     * exceeds `pairBudget`, the index rebuilds over [[dfCapShingles]]
-    * shingle sets and swaps in through the crash-safe publish chain;
+    * shingle sets and swaps in through [[Tables.replace]];
     * below budget nothing is touched. The expensive path hides behind
     * the cheap telemetry — q121's discipline.
     * @return (candidate_pairs observed, whether a rebuild ran)
@@ -307,20 +295,18 @@ object LshIndex {
       .head.getLong(0)
     if (pairs <= pairBudget) (pairs, false)
     else {
-      val staged = path + ".__rebucket__"
-      val snap = graft.sources.Tombstones.fileSnapshot(spark, path)
       // the rebuild sources band rows from the CALLER's corpus, which
       // may still hold logically deleted docs — pending markers apply
-      // physically here, or the publish swap would resurrect forgotten
+      // physically here, or the swap would resurrect forgotten
       // documents and destroy their markers (round-9 advice)
-      graft.sources.Tombstones.filterLive(spark, path,
-          bandRows(dfCapShingles(corpus, idCol, shCol, capDf), idCol, shCol),
-          idCol)
-        .write.mode("overwrite").parquet(staged)
-      midRebuild()
-      // deletes that arrived mid-rebuild ride into the new layout
-      graft.sources.Tombstones.carryInto(spark, path, snap, staged)
-      Tables.publish(spark, staged, path)
+      val live = graft.sources.Tombstones.filterLive(spark, path,
+        bandRows(dfCapShingles(corpus, idCol, shCol, capDf), idCol, shCol),
+        idCol)
+      Tables.replace(spark, path, live.inputFiles,
+          Seq(graft.sources.Tombstones.Dir)) { staged =>
+        live.write.mode("overwrite").parquet(staged)
+        midRebuild()
+      }
       (pairs, true)
     }
   }

@@ -95,11 +95,11 @@ object QualityClassifier {
   // is TWO artifacts — `counts` (≤ Buckets rows) and `totals` (1 row:
   // ptot, ntot, pdocs, ndocs) — that are only consistent TOGETHER, so
   // every publish commits them into one [[graft.sources.Snapshots]]
-  // version directory (`dir/_v=N/{counts,totals}`) and flips the
-  // pointer once: a reader (or a crash) can never observe new counts
-  // with stale totals, the failure two independent per-artifact swaps
-  // allowed. Serving resolves the pointer once and reads both artifacts
-  // from that immutable version.
+  // version directory (`dir/_v=N/{counts,totals}`) under one commit
+  // marker: a reader (or a crash) can never observe new counts with
+  // stale totals, the failure two independent per-artifact swaps
+  // allowed. Serving resolves the latest version once and reads both
+  // artifacts from that immutable version.
 
   /** Combined 1-row totals: token totals + labeled-doc counts (the
     * latter feed the class prior at serving time).
@@ -117,7 +117,7 @@ object QualityClassifier {
       totalsRow(feats, labels, idCol, labelCol))
 
   /** Atomic two-artifact publish: one snapshot version holds counts AND
-    * totals; the pointer flip makes both visible together.
+    * totals; its commit marker makes both visible together.
     */
   private def publish(spark: SparkSession, dir: String,
       counts: DataFrame, totals: DataFrame): Unit = {
@@ -188,7 +188,7 @@ object QualityClassifier {
     */
   def scoreIndexed(spark: SparkSession, dir: String, feats: DataFrame,
       idCol: String): DataFrame = {
-    // resolve the pointer ONCE: counts and totals come from the same
+    // resolve the version ONCE: counts and totals come from the same
     // immutable version even if a publish lands mid-query
     val vp = pinned(spark, dir)
     val totals = spark.read.parquet(s"$vp/totals")

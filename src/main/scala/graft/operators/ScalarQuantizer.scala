@@ -105,17 +105,14 @@ object ScalarQuantizer {
   def writeIndex(corpus0: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
     val spark = corpus0.sparkSession
-    val staged = dir + ".__write__"
-    val sp = new org.apache.hadoop.fs.Path(staged)
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(sp, true)
-    val corpus = CentroidState.ensureCached(corpus0)
-    val stats = train(corpus, vecCol)
-    encoded(corpus, idCol, vecCol, stats)
-      .write.mode("overwrite").parquet(s"$staged/codes")
-    statsToDF(spark, stats).coalesce(1)
-      .write.mode("overwrite").parquet(s"$staged/stats")
-    graft.sources.Tables.publish(spark, staged, dir)
+    graft.sources.Tables.replace(spark, dir) { staged =>
+      val corpus = CentroidState.ensureCached(corpus0)
+      val stats = train(corpus, vecCol)
+      encoded(corpus, idCol, vecCol, stats)
+        .write.mode("overwrite").parquet(s"$staged/codes")
+      statsToDF(spark, stats).coalesce(1)
+        .write.mode("overwrite").parquet(s"$staged/stats")
+    }
   }
 
   /** O(|delta|) incremental append: new vectors encode through the

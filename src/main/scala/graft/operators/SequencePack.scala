@@ -127,14 +127,12 @@ object SequencePack {
     val spark = docs.sparkSession
     import spark.implicits._
     requireNoEmptyDocs(docs, nTokCol, "writePacked")
-    val staged = dir + ".__write__"
-    val sp = new org.apache.hadoop.fs.Path(staged)
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-    pack(docs, idCol, nTokCol, seqLen, buckets)
-      .write.mode("overwrite").parquet(s"$staged/contrib")
-    Seq((seqLen, buckets)).toDF("seq_len", "buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$staged/meta")
-    graft.sources.Tables.publish(spark, staged, dir)
+    graft.sources.Tables.replace(spark, dir) { staged =>
+      pack(docs, idCol, nTokCol, seqLen, buckets)
+        .write.mode("overwrite").parquet(s"$staged/contrib")
+      Seq((seqLen, buckets)).toDF("seq_len", "buckets").coalesce(1)
+        .write.mode("overwrite").parquet(s"$staged/meta")
+    }
   }
 
   /** Continue the persisted stream with `delta` (empty-doc-free, all

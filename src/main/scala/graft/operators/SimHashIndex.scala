@@ -24,8 +24,8 @@ import graft.sources.Tables
   * colliding documents), probes are O(delta + collisions) equi-joins
   * where only collided index rows leave the scan, appends are
   * O(|batch|) new files, deletes are [[graft.sources.Tombstones]]
-  * markers masked at probe time and applied physically by [[compact]]'s
-  * snapshot/carry staged publish.
+  * markers masked at probe time and applied physically by [[compact]]
+  * ([[graft.sources.Tables.replace]]).
   */
 object SimHashIndex {
 
@@ -111,20 +111,16 @@ object SimHashIndex {
     graft.sources.Tombstones.read(spark, path)
 
   /** Defragment append waves and apply pending deletes physically —
-    * [[LshIndex.compact]]'s snapshot/carry discipline: markers written
-    * mid-compaction ride into the published layout.
+    * [[LshIndex.compact]] for this family.
     */
   def compact(spark: SparkSession, path: String, idCol: String,
       targetFiles: Int = 1): Unit = {
-    val staged = path + ".__compact__"
     val base = spark.read.parquet(path)
     require(base.columns.contains(idCol),
       s"id column '$idCol' not in index schema ${base.columns.mkString(",")}")
-    val snap = graft.sources.Tombstones.fileSnapshot(spark, path)
     val live = graft.sources.Tombstones.filterLive(spark, path, base, idCol)
-    live.repartition(targetFiles)
-      .write.mode("overwrite").parquet(staged)
-    graft.sources.Tombstones.carryInto(spark, path, snap, staged)
-    Tables.publish(spark, staged, path)
+    Tables.replace(spark, path, live.inputFiles,
+        Seq(graft.sources.Tombstones.Dir))(
+      live.repartition(targetFiles).write.mode("overwrite").parquet(_))
   }
 }

@@ -57,9 +57,9 @@ import graft.sources.{Tables, Tombstones}
   *    from `doclens` at delete time, NOT at probe time) keeps n/avgdl
   *    exact — so the served scores equal an index built on the live
   *    set, which is exactly what the q160 oracle checks.
-  *  - [[compact]] applies markers physically through the crash-safe
-  *    staged publish, with the [[Tombstones.fileSnapshot]]/`carryInto`
-  *    discipline so deletes landing mid-compaction survive the swap.
+  *  - [[compact]] applies markers physically through
+  *    [[Tables.replace]], carrying `_tombstones` and [[StBkt]] so deletes
+  *    landing mid-compaction survive the swap.
   */
 object TextIndex {
 
@@ -131,45 +131,14 @@ object TextIndex {
     finally out.close()
   }
 
-  /** The stats partition's current part-file names — the [[compact]]/
-    * [[growBucketsIfHot]] rewrites snapshot this BEFORE reading the
-    * table, then [[carryLateStats]] copies any file that appeared since
-    * into the staged layout before the publish swap. Deletes are the
-    * one concurrent writer the layouts sanction, and a delete appends a
-    * negative stats row here: without the carry, a delete landing
-    * mid-rewrite would keep its tombstone (markers have their own
-    * snapshot/carry) but LOSE its totals correction with the old
-    * directory — served n/avgdl would silently drift from the live set.
-    * (The previous three-directory layout was immune only because its
-    * `stats/` dir sat outside the postings swap.)
+  /** The append-only subdirectories of the postings table a rewrite
+    * must carry ([[Tables.replace]]): deletes are the one concurrent
+    * writer the layout sanctions, and each appends a marker and a
+    * NEGATIVE stats row — without the carry a delete landing mid-rewrite
+    * would lose both with the old directory, and served n/avgdl would
+    * silently drift from the live set.
     */
-  private def statsFiles(spark: SparkSession, post: String): Set[String] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$post/bkt=$StBkt")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).toIndexedSeq.map(_.getPath.getName)
-      .filter(_.startsWith("part-")).toSet
-  }
-
-  private def carryLateStats(spark: SparkSession, post: String,
-      snapshot: Set[String], staged: String): Unit = {
-    val src = new org.apache.hadoop.fs.Path(s"$post/bkt=$StBkt")
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(src)) {
-      val late = fs.listStatus(src).toIndexedSeq
-        .filter(st => st.getPath.getName.startsWith("part-") &&
-          !snapshot.contains(st.getPath.getName))
-      if (late.nonEmpty) {
-        val dst = new org.apache.hadoop.fs.Path(s"$staged/bkt=$StBkt")
-        fs.mkdirs(dst)
-        late.foreach { st =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-            new org.apache.hadoop.fs.Path(dst, st.getPath.getName), false,
-            spark.sparkContext.hadoopConfiguration)
-        }
-      }
-    }
-  }
+  private val Appended = Seq(Tombstones.Dir, s"bkt=$StBkt")
 
   /** `(bkt, term, doc_id, tf, dl)` posting rows for a document batch —
     * one scan: tokenize, per-(doc, term) counts, and the doc length
@@ -244,27 +213,27 @@ object TextIndex {
     post.unionByName(dlRows).unionByName(stRow)
   }
 
-  /** Build the index for a corpus — ONE write job into the staged
-    * sibling, then the whole-directory swap ([[Tables.publish]]), so a
-    * crash mid-build never leaves postings without their totals (the
-    * [[IvfPq.writeIndex]] crash-consistency discipline).
+  /** Build the index for a corpus — ONE write job, swapped in whole by
+    * [[Tables.replace]], so a crash mid-build never leaves postings
+    * without their totals (the [[IvfPq.writeIndex]] crash-consistency
+    * discipline).
     */
   def write(docs: DataFrame, idCol: String, textCol: String,
       dir: String, buckets: Int = Buckets,
-      withPositions: Boolean = false): Unit = {
-    val spark = docs.sparkSession
-    val staged = dir + ".__stage__"
-    // NOT clustered by bucket before the partitioned write: the
-    // repartition shuffle measurably slows every build at gate scale
-    // (+1-3.5 s per write-heavy gate, round-11 measured) for a file-
-    // count concern that compact() already owns — it restores one file
-    // per bucket, and at 100 TB a build is followed by a compact as a
-    // matter of course
-    batchRows(docs, idCol, textCol, buckets, withPositions)
-      .write.mode("overwrite").partitionBy("bkt").parquet(s"$staged/postings")
-    writeBucketsFile(spark, s"$staged/postings", buckets, withPositions)
-    Tables.publish(spark, staged, dir)
-  }
+      withPositions: Boolean = false): Unit =
+    Tables.replace(docs.sparkSession, dir) { staged =>
+      // NOT clustered by bucket before the partitioned write: the
+      // repartition shuffle measurably slows every build at gate scale
+      // (+1-3.5 s per write-heavy gate, round-11 measured) for a file-
+      // count concern that compact() already owns — it restores one file
+      // per bucket, and at 100 TB a build is followed by a compact as a
+      // matter of course
+      batchRows(docs, idCol, textCol, buckets, withPositions)
+        .write.mode("overwrite").partitionBy("bkt")
+        .parquet(s"$staged/postings")
+      writeBucketsFile(docs.sparkSession, s"$staged/postings", buckets,
+        withPositions)
+    }
 
   /** Absorb a batch — O(|batch|) and ONE parquet commit: new posting
     * files into their bucket partitions, the batch's doclen files into
@@ -355,7 +324,7 @@ object TextIndex {
     * and they ride along untouched: they are already correct, additive,
     * deletes subtracted at delete time). Markers written while the
     * rewrite ran are carried into the published layout
-    * ([[Tombstones.carryInto]]) and keep masking — their doclen rows
+    * ([[Tables.replace]]) and keep masking — their doclen rows
     * also survive, correctly: a re-delete is refused while the marker
     * is pending, and the NEXT compact applies both sides at once. The
     * single publish swap clears the applied markers with the old
@@ -366,30 +335,25 @@ object TextIndex {
   def compact(spark: SparkSession, dir: String): Unit =
     compact(spark, dir, () => ())
 
-  /** Test seam: `midCompact` runs after the marker snapshot and the
-    * (eager) marker-file listing of the live read, before the staged
-    * rewrite materializes — the race window the snapshot/carry
-    * discipline covers.
+  /** Test seam: `midCompact` runs right after the rewrite's one listing
+    * (postings and markers), before the staged rewrite materializes —
+    * the window the carry covers.
     */
   private[graft] def compact(spark: SparkSession, dir: String,
       midCompact: () => Unit): Unit = {
     val post = s"$dir/postings"
-    val snap = Tombstones.fileSnapshot(spark, post)
-    val statsSnap = statsFiles(spark, post)
     val live = Tombstones.filterLive(spark, post,
       spark.read.parquet(post), "doc_id")
     midCompact()
-    val staged = post + ".__tmp__"
-    live.repartition(col("bkt"))
-      .write.mode("overwrite").partitionBy("bkt").parquet(staged)
     // the modulus and positional flag are unchanged by compaction but
-    // must travel with the staged layout — the publish swap replaces
-    // the whole directory
+    // must travel with the staged layout — the swap replaces the whole
+    // directory
     val (nb, withPos) = readLayout(spark, dir)
-    writeBucketsFile(spark, staged, nb, withPos)
-    Tombstones.carryInto(spark, post, snap, staged)
-    carryLateStats(spark, post, statsSnap, staged)
-    Tables.publish(spark, staged, post)
+    Tables.replace(spark, post, live.inputFiles, Appended) { staged =>
+      live.repartition(col("bkt"))
+        .write.mode("overwrite").partitionBy("bkt").parquet(staged)
+      writeBucketsFile(spark, staged, nb, withPos)
+    }
   }
 
   /** Skew-gated BUCKET growth — the when-to-rebucket decision leg for
@@ -399,8 +363,8 @@ object TextIndex {
     * per query term is one bucket directory, so a bucket that outgrew
     * `maxPostingsPerBucket` makes every probe of its terms scan that
     * much. Above the budget the postings rewrite under DOUBLE the
-    * modulus through the staged publish (snapshot/carry for mid-rebuild
-    * deletes; pending markers apply physically, like [[compact]]), and
+    * modulus through [[Tables.replace]] (markers ride along for the
+    * next [[compact]] to apply; mid-rebuild deletes are carried), and
     * the new modulus travels inside the published directory. Doubling
     * splits a bucket's VOCABULARY in half (expected); a single
     * ultra-hot TERM cannot be split by any modulus — its posting list
@@ -413,38 +377,43 @@ object TextIndex {
     * max_bucket_rows)`.
     */
   def growBucketsIfHot(spark: SparkSession, dir: String,
-      maxPostingsPerBucket: Long): DataFrame = {
+      maxPostingsPerBucket: Long): DataFrame =
+    growBucketsIfHot(spark, dir, maxPostingsPerBucket, () => ())
+
+  /** Test seam: `midGrow` runs right after the rewrite's one listing —
+    * the [[compact]] seam for this rewrite.
+    */
+  private[graft] def growBucketsIfHot(spark: SparkSession, dir: String,
+      maxPostingsPerBucket: Long, midGrow: () => Unit): DataFrame = {
     import spark.implicits._
     val post = s"$dir/postings"
     val (before, withPos) = readLayout(spark, dir)
+    val rows = spark.read.parquet(post)
+    midGrow()
     // signal over ALL posting rows (masked ones included: a probe's
     // bucket scan pays for tombstoned rows too until a compact drops
     // them) — but never the meta partitions, which no probe reads
-    val statsSnap = statsFiles(spark, post)
-    val rows = spark.read.parquet(post)
     val maxRows = rows.filter(col("bkt") >= 0)
       .groupBy(col("bkt")).agg(count(lit(1)).as("n"))
       .agg(coalesce(max(col("n")), lit(0L))).collect().head.getLong(0)
     val grow = maxRows > maxPostingsPerBucket
     if (grow) {
       val after = before * 2
-      val staged = post + ".__grow__"
       // purely physical: every row rides along (tombstone APPLICATION
       // is compact's job — applying here would strand stale doclen
-      // rows), and every marker file present at carry time — pending
-      // or written mid-rebuild — is copied into the staged layout
-      // (empty snapshot = carry all), so masking semantics and the
-      // delete lifecycle are untouched by the re-bucketing. Meta rows
-      // (bkt < 0) keep their reserved partitions — only term rows
-      // re-bucket under the doubled modulus.
-      rows.withColumn("bkt",
-          when(col("bkt") < 0, col("bkt")).otherwise(bkt(col("term"), after)))
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt").parquet(staged)
-      writeBucketsFile(spark, staged, after, withPos)
-      Tombstones.carryInto(spark, post, Set.empty, staged)
-      carryLateStats(spark, post, statsSnap, staged)
-      Tables.publish(spark, staged, post)
+      // rows), and every marker file is carried — `rows` reads none, so
+      // pending and mid-rebuild markers alike are late to it — so masking
+      // semantics and the delete lifecycle are untouched by the
+      // re-bucketing. Meta rows (bkt < 0) keep their reserved
+      // partitions — only term rows re-bucket under the doubled modulus.
+      Tables.replace(spark, post, rows.inputFiles, Appended) { staged =>
+        rows.withColumn("bkt",
+            when(col("bkt") < 0, col("bkt"))
+              .otherwise(bkt(col("term"), after)))
+          .repartition(col("bkt"))
+          .write.mode("overwrite").partitionBy("bkt").parquet(staged)
+        writeBucketsFile(spark, staged, after, withPos)
+      }
     }
     Seq((grow, before, if (grow) before * 2 else before, maxRows))
       .toDF("grown", "buckets_before", "buckets_after", "max_bucket_rows")

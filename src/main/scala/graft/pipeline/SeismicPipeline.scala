@@ -118,7 +118,7 @@ object SeismicPipeline {
       else Upsert.upsert(
         spark.read.parquet(silverP).select(silverNew.columns.toIndexedSeq.map(col): _*),
         silverNew, Seq("event_id"))
-    Tables.overwritePartitioned(merged, silverP, Seq("year", "month"))
+    Tables.overwrite(merged, silverP, Seq("year", "month"))
 
     // S8 watermark advance to max event time of the written batch
     val maxTs = graft.state.WatermarkStore.timestampAt(

@@ -21,7 +21,7 @@ import graft.sources.Snapshots
   *
   * At 100 TB the audit is one map-side-combinable scan of the BATCH
   * (never the table), the publish is [[Snapshots]]' overwrite-free
-  * version-dir + pointer flip, and the only driver state is the
+  * version dir + commit marker, and the only driver state is the
   * violation count. The served history keeps every refused batch OUT of
   * `DESCRIBE HISTORY` — versions are facts, not attempts.
   */

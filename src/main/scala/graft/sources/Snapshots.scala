@@ -8,17 +8,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * implied by its Delta storage, `VACUUM` at `TABLE OPTIMIZATION.py:136-144`)
   * re-expressed over vanilla Parquet.
   *
-  * Layout: each commit is a full snapshot directory `table/_v=N` plus an
-  * atomically-renamed pointer file `table/_LATEST` containing `N`. This is
-  * MVCC for the single-writer / many-reader regime the reference runs in
-  * (`Pipeline.json:22` `max_concurrent_runs: 1`):
+  * Layout: each commit is a full snapshot directory `table/_v=N` plus a
+  * commit marker file `table/_commit=N`, created put-if-absent once the
+  * snapshot is fully written; the latest version is the highest marked
+  * one. This is MVCC for the single-writer / many-reader regime the
+  * reference runs in (`Pipeline.json:22` `max_concurrent_runs: 1`):
   *
-  *  - readers resolve the pointer once and then scan an immutable
+  *  - readers resolve the latest marker once and then scan an immutable
   *    directory, so a concurrent overwrite NEVER disturbs a running read
   *    (the read-while-overwrite hazard [[Tables.overwrite]] solves with a
-  *    swap simply does not exist here);
-  *  - a crash between snapshot write and pointer rename leaves an orphan
+  *    swap simply does not exist here), and there is no instant at which
+  *    a committed table shows no version;
+  *  - a crash between snapshot write and marker create leaves an orphan
   *    `_v=N` directory that no reader can observe; [[vacuum]] collects it;
+  *  - two committers racing to the same version cannot both win: the
+  *    loser's marker create fails loudly;
   *  - time travel is `readVersion(path, n)`; retention is
   *    `vacuum(path, keepLast)`.
   *
@@ -30,7 +34,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Snapshots {
 
-  private val Pointer = "_LATEST"
+  private val CPrefix = "_commit="
   private val VPrefix = "_v="
 
   private def fs(spark: SparkSession, path: String): FileSystem =
@@ -38,37 +42,35 @@ object Snapshots {
 
   private def versionDir(path: String, v: Long) = new Path(s"$path/$VPrefix$v")
 
-  /** Latest committed version, or None for a table with no commits. */
-  def latestVersion(spark: SparkSession, path: String): Option[Long] = {
-    val f = fs(spark, path)
-    val p = new Path(s"$path/$Pointer")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val s = scala.io.Source.fromInputStream(in).mkString.trim
-        Some(s.toLong)
-      } finally in.close()
-    }
-  }
+  private[sources] def commitMarker(path: String, v: Long) =
+    new Path(s"$path/$CPrefix$v")
 
-  /** All snapshot directories present on disk (committed or orphaned). */
-  private def versionsOnDisk(spark: SparkSession, path: String): Seq[Long] = {
+  /** Version numbers of the root entries named `prefix<N>`, sorted. */
+  private def numbered(spark: SparkSession, path: String,
+      prefix: String): Seq[Long] = {
     val f = fs(spark, path)
     val root = new Path(path)
     if (!f.exists(root)) Seq.empty
     else
       f.listStatus(root).toSeq
         .map(_.getPath.getName)
-        .filter(_.startsWith(VPrefix))
-        .map(_.drop(VPrefix.length).toLong)
+        .filter(_.startsWith(prefix))
+        .map(_.drop(prefix.length).toLong)
         .sorted
   }
 
-  /** Commit `df` as the next version and move the pointer. Returns the new
-    * version number. The snapshot is fully materialized before the pointer
-    * rename, so readers see either the previous or the new version — never
-    * a partial directory.
+  /** Latest committed version, or None for a table with no commits. */
+  def latestVersion(spark: SparkSession, path: String): Option[Long] =
+    numbered(spark, path, CPrefix).lastOption
+
+  /** All snapshot directories present on disk (committed or orphaned). */
+  private def versionsOnDisk(spark: SparkSession, path: String): Seq[Long] =
+    numbered(spark, path, VPrefix)
+
+  /** Commit `df` as the next version. Returns the new version number.
+    * The snapshot is fully materialized before its commit marker exists,
+    * so readers see either the previous or the new version — never a
+    * partial directory.
     */
   def write(df: DataFrame, path: String): Long =
     commit(df.sparkSession, path)(dir =>
@@ -77,13 +79,13 @@ object Snapshots {
   /** Commit a version whose CONTENT an arbitrary writer produces —
     * partitioned layouts, multi-artifact directories — under the same
     * MVCC contract as [[write]]: `writer` receives the fresh version
-    * directory and must fully materialize it; the pointer flips only
-    * after it returns, so a reader resolves either the previous or the
-    * new version, never a partial one, and a crash mid-write leaves an
-    * orphan directory no reader can observe ([[vacuum]] collects it).
-    * This is how non-tabular artifacts version — e.g. an IVF index
-    * (quantizer + cell layout) published while searches pinned to the
-    * previous version keep serving ([[graft.operators.IvfAnn]], q124).
+    * directory and must fully materialize it; the commit marker is
+    * created only after it returns, so a reader resolves either the
+    * previous or the new version, never a partial one, and a crash
+    * mid-write leaves an orphan directory no reader can observe
+    * ([[vacuum]] collects it). This is how non-tabular artifacts
+    * version — e.g. an IVF index (quantizer + cell layout) published
+    * while searches pinned to the previous version keep serving ([[graft.operators.IvfAnn]], q124).
     */
   def commit(spark: SparkSession, path: String)(writer: String => Unit): Long = {
     val f = fs(spark, path)
@@ -92,14 +94,9 @@ object Snapshots {
     if (f.exists(dir))
       throw new java.io.IOException(s"version dir already exists: $dir")
     writer(dir.toString)
-    val tmp = new Path(s"$path/.$Pointer.tmp")
-    val out = f.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8"))
-    finally out.close()
-    val ptr = new Path(s"$path/$Pointer")
-    f.delete(ptr, false)
-    if (!f.rename(tmp, ptr))
-      throw new java.io.IOException(s"snapshot commit failed: $tmp -> $ptr")
+    // put-if-absent: a committer that raced this one to `next` and won
+    // makes this create throw, never a silent second commit
+    f.create(commitMarker(path, next), false).close()
     next
   }
 
@@ -129,7 +126,7 @@ object Snapshots {
     val f = fs(spark, path)
     val latest = latestVersion(spark, path)
     val rows = versionsOnDisk(spark, path)
-      .filter(v => latest.exists(v <= _)) // orphans past the pointer are invisible
+      .filter(v => latest.exists(v <= _)) // orphans past the latest are invisible
       .map { v =>
         val dir = versionDir(path, v)
         val files = f.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
@@ -168,7 +165,7 @@ object Snapshots {
 
   /** `VACUUM` analog: keep the newest `keepLast` committed versions,
     * delete everything older, plus any orphaned (uncommitted) snapshot
-    * directories newer than the pointer. The latest version is never
+    * directories newer than the latest. The latest version is never
     * deleted; `keepLast` is clamped to >= 1.
     */
   def vacuum(spark: SparkSession, path: String, keepLast: Int): Seq[Long] = {
@@ -177,7 +174,10 @@ object Snapshots {
     val keep = math.max(keepLast, 1)
     val victims = versionsOnDisk(spark, path).filter(v =>
       v <= latest - keep || v > latest)
-    victims.foreach(v => f.delete(versionDir(path, v), true))
+    victims.foreach { v =>
+      f.delete(commitMarker(path, v), false)
+      f.delete(versionDir(path, v), true)
+    }
     victims
   }
 }

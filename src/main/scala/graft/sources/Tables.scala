@@ -117,7 +117,7 @@ object Tables {
     spark.read.schema(schema).json(path)
 
   /** Does a table path exist? Also performs crash recovery: if a prior
-    * [[overwrite]] died between its two renames, the table survives only
+    * [[replace]] died between its two renames, the table survives only
     * at `path.__old__` — restore it before answering, so no caller can
     * mistake the crash window for "first write" and truncate the table.
     */
@@ -133,59 +133,91 @@ object Tables {
   def append(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).parquet(path)
 
-  /** Overwrite sink (reference: Delta overwrite, `03:113-117`, `05:79`...).
+  /** Overwrite sink (reference: Delta overwrite, `03:113-117`, `05:79`...),
+    * through [[replace]], so it is safe even when `path` is also an input
+    * of `df` (Spark cannot overwrite a directory it is lazily reading; the
+    * reference got read-while-overwrite for free from Delta MVCC).
+    * `partitionBy` gives the hive-style `key=value` layout of the
+    * reference's partitioned Delta tables (`TABLE OPTIMIZATION.py:33-97`):
+    * at 100 TB, time-partitioning a fact table buys PARTITION pruning
+    * (directories never listed) above row-group min/max pruning.
+    */
+  def overwrite(df: DataFrame, path: String,
+      partitionBy: Seq[String] = Nil): Unit =
+    replace(df.sparkSession, path)(
+      df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(_))
+
+  /** The one staged sibling [[replace]] writes into. */
+  def staged(path: String): String = path + ".__tmp__"
+
+  /** Replace the directory at `path` with what `writer` materializes into
+    * [[staged]]`(path)` — the one commit protocol every directory rewrite
+    * shares (table overwrites, index builds, compactions, rebuckets,
+    * retrains):
     *
-    * Safe even when `path` is also an input of `df`: Spark cannot overwrite a
-    * directory it is lazily reading (the reference got read-while-overwrite
-    * for free from Delta MVCC), so we materialize to a sibling temp dir and
-    * atomically swap. Single-writer semantics match the reference's
-    * `max_concurrent_runs: 1` (`Pipeline.json:22`).
+    *  1. a staged dir a crashed earlier rewrite left behind is cleared,
+    *     so it can never leak into this one;
+    *  2. `writer(stagedDir)` fully materializes the new content (any
+    *     layout: hive partitions, several artifacts, flag files);
+    *  3. every part file in `carry` — append-only subdirectories of
+    *     `path`, relative (`"_tombstones"`, `"bkt=-2"`; `""` is `path`
+    *     itself) — that is NOT in `listed` is copied into the same
+    *     subdirectory of the staged dir, so a tombstone marker or stats
+    *     row a concurrent writer appended after the rewrite read its
+    *     input survives the swap instead of vanishing with the old
+    *     directory;
+    *  4. the crash-safe rename chain swaps the staged dir in: the old
+    *     version survives as `path.__old__` until the new one is in
+    *     place, so a crash leaves one of them addressable, never neither
+    *     ([[exists]] recovers the interrupted case).
+    *
+    * `listed` must be the listing the rewrite READ, taken once: the input
+    * frame's `inputFiles` (Spark lists a file relation when the frame is
+    * created and scans exactly that listing). A file is then either
+    * rewritten or carried, never both and never neither. A carry baseline
+    * listed apart from the input reopens a window in which a file lands
+    * in both — a stats row counted twice.
+    *
+    * Concurrency contract: one rewriter per `path` at a time (the
+    * reference's `max_concurrent_runs: 1`, `Pipeline.json:22`); appends
+    * into `carry` directories may run concurrently; readers are lock-free
+    * throughout. One window remains: a file appended between step 3's
+    * listing and step 4's rename is lost with the old directory. A lost
+    * tombstone marker unmasks its id until the delete is repeated; a lost
+    * additive stats row (TextIndex `bkt=-2`) is permanent drift. Closing
+    * it needs put-if-absent commit files, not another carry.
     */
-  def overwrite(df: DataFrame, path: String): Unit = {
-    val tmp = path + ".__tmp__"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    publish(df.sparkSession, tmp, path)
-  }
-
-  /** Overwrite with a hive-style `key=value` partition layout — the
-    * [[overwrite]] swap semantics plus `partitionBy`. This is the
-    * reference's partitioned-Delta-table layer (partition maintenance in
-    * `TABLE OPTIMIZATION.py:33-97`): at 100 TB, time-partitioning a fact
-    * table buys PARTITION pruning (directories never listed) above
-    * row-group min/max pruning, so an incremental or year-scoped query
-    * touches only its slice regardless of total table size.
-    */
-  def overwritePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit = {
-    val tmp = path + ".__tmp__"
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-      .parquet(tmp)
-    publish(df.sparkSession, tmp, path)
-  }
-
-  /** Swap an already-materialized directory into place at `path` via the
-    * crash-safe rename chain. The staged directory moves wholesale, so any
-    * hive-style `key=value` partition layout inside it is preserved.
-    */
-  def publish(spark: SparkSession, stagedPath: String, path: String): Unit = {
+  def replace(spark: SparkSession, path: String,
+      listed: Iterable[String] = Nil, carry: Seq[String] = Nil)(
+      writer: String => Unit): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val src = new org.apache.hadoop.fs.Path(stagedPath)
-    val old = new org.apache.hadoop.fs.Path(path + ".__old__")
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(conf)
+    val src = new Path(staged(path))
+    val old = new Path(path + ".__old__")
+    fs.delete(src, true)
+    writer(src.toString)
+    val read = listed.map(f => new Path(f).toUri.getPath).toSet
+    def under(root: Path, sub: String) =
+      if (sub.isEmpty) root else new Path(root, sub)
+    for (sub <- carry; from = under(dst, sub) if fs.exists(from);
+         p <- fs.listStatus(from).map(_.getPath)
+         if p.getName.startsWith("part-") && !read(p.toUri.getPath)) {
+      val to = under(src, sub)
+      fs.mkdirs(to)
+      FileUtil.copy(fs, p, fs, new Path(to, p.getName), false, conf)
+    }
     // swap via a rename chain, CHECKING each rename (HDFS/S3A renames
-    // report failure by returning false, not by throwing): the previous
-    // table version survives as .__old__ until the new one is in place,
-    // so a crash leaves either the old or the new table addressable —
-    // never neither
+    // report failure by returning false, not by throwing)
     if (!fs.exists(dst) && fs.exists(old))
       fs.rename(old, dst) // recover a swap interrupted mid-rename
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"overwrite: could not stage $dst -> $old")
+      throw new java.io.IOException(s"replace: could not stage $dst -> $old")
     if (!fs.rename(src, dst)) {
       fs.rename(old, dst) // best-effort rollback
-      throw new java.io.IOException(s"overwrite: could not publish $src -> $dst")
+      throw new java.io.IOException(s"replace: could not publish $src -> $dst")
     }
     fs.delete(old, true)
   }

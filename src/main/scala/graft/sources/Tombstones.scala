@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,11 +23,9 @@ import org.apache.spark.sql.functions._
   *    [[unmark]] so a delete-then-readmit cycle serves the new rows
   *    instead of silently losing the document at the next compaction;
   *  - markers appended DURING a compaction survive it: compactors
-  *    snapshot the marker file list up front ([[fileSnapshot]]) and
-  *    carry any file that appeared since into the staged layout
-  *    ([[carryInto]]) before the publish swap. The residual window is
-  *    the swap's rename itself — covered by the layouts' documented
-  *    single-writer contract (readers stay lock-free throughout).
+  *    declare `_tombstones` as a carry directory of
+  *    [[Tables.replace]], which documents the protocol and its one
+  *    residual window.
   */
 object Tombstones {
 
@@ -36,7 +34,10 @@ object Tombstones {
     */
   val Col = "__deleted_id"
 
-  private val Dir = "_tombstones"
+  /** The marker subdirectory — the carry directory compactors declare
+    * to [[Tables.replace]].
+    */
+  val Dir = "_tombstones"
 
   /** Above this many marker BYTES on disk, [[filterLive]] stops
     * force-broadcasting and lets the planner choose (a bulk purge
@@ -74,9 +75,9 @@ object Tombstones {
   }
 
   /** Clear markers for RE-ADMITTED ids: rewrite the marker set minus
-    * `ids` through the crash-safe publish swap. Without this, a
-    * forgotten-then-reingested document's stale marker hides its new
-    * rows at probe time and the next compaction drops them physically
+    * `ids` through [[Tables.replace]] (markers written meanwhile are
+    * carried). Without this, a forgotten-then-reingested document's
+    * stale marker hides its new rows at probe time and the next compaction drops them physically
     * — a silent permanent loss (round-8 advice). O(markers), which is
     * bounded by compaction cadence; a no-op when no marker matches.
     *
@@ -96,47 +97,16 @@ object Tombstones {
       // and the common path must not rewrite the marker dir every batch
       if (!ts.join(doomed, Seq(Col), "left_semi").isEmpty) {
         val remaining = ts.join(doomed, Seq(Col), "left_anti")
-        if (remaining.isEmpty) {
-          // nothing left to mask — drop the marker dir entirely so
-          // readers keep the "None when nothing was deleted" contract
-          val dir = markerDir(layoutPath)
-          fs(spark, dir).delete(dir, true)
-        } else {
-          val staged = s"$layoutPath/$Dir.__new__"
-          remaining.write.mode("overwrite").parquet(staged)
-          Tables.publish(spark, staged, s"$layoutPath/$Dir")
+        Tables.replace(spark, markerDir(layoutPath).toString,
+            ts.inputFiles, carry = Seq("")) { staged =>
+          // nothing left to mask: a marker dir without part files keeps
+          // readers' "None when nothing was deleted" contract
+          val out = new Path(staged)
+          if (remaining.isEmpty) fs(spark, out).mkdirs(out)
+          else remaining.write.parquet(staged)
         }
       }
     }
-
-  /** Marker part-file names at a point in time — take this BEFORE a
-    * compaction reads the markers it will apply.
-    */
-  def fileSnapshot(spark: SparkSession, layoutPath: String): Set[String] =
-    partFiles(spark, layoutPath).map(_.getPath.getName).toSet
-
-  /** Copy marker files that appeared since `snapshot` into the STAGED
-    * layout's marker dir, so deletes written while a compaction was
-    * running survive its publish swap instead of vanishing with the
-    * old directory (the right-to-be-forgotten failure mode). Returns
-    * how many files were carried.
-    */
-  def carryInto(spark: SparkSession, layoutPath: String,
-      snapshot: Set[String], stagedPath: String): Int = {
-    val late = partFiles(spark, layoutPath)
-      .filterNot(st => snapshot.contains(st.getPath.getName))
-    if (late.nonEmpty) {
-      val dstDir = markerDir(stagedPath)
-      val f = fs(spark, dstDir)
-      f.mkdirs(dstDir)
-      late.foreach { st =>
-        FileUtil.copy(f, st.getPath, f,
-          new Path(dstDir, st.getPath.getName), false,
-          spark.sparkContext.hadoopConfiguration)
-      }
-    }
-    late.size
-  }
 
   /** `df` minus tombstoned rows: an anti-join on `idCol` against the
     * marker set — broadcast while the markers are small, planner's

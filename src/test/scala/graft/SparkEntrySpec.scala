@@ -32,10 +32,12 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("oracle SQL never references the staging temp-table names") {
-    // a copy-pasted oracle accidentally querying a __tmp__/__old__ path
-    // would pass locally and break under the driver's fresh DuckDB run
+    // a copy-pasted oracle accidentally querying a staged or __old__
+    // path would pass locally and break under the driver's fresh DuckDB
+    // run
+    val staged = graft.sources.Tables.staged("").stripPrefix(".")
     SparkEntry.oracleSql.foreach { case (name, sql) =>
-      assert(!sql.contains("__tmp__") && !sql.contains("__old__"), name)
+      assert(!sql.contains(staged) && !sql.contains("__old__"), name)
     }
   }
 }

@@ -53,7 +53,8 @@ class OptimizeSpec extends SparkTestBase {
     assert(after === before)
     // no staging dirs left behind
     val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
-    assert(!parent.exists(_.contains("__cluster_tmp__")))
+    assert(!parent.contains(
+      new java.io.File(graft.sources.Tables.staged(dir)).getName))
     assert(!parent.exists(_.contains("__old__")))
     // the layout's whole point: a partition-key predicate prunes the scan
     // to one directory (PartitionFilters, no data files from other years)

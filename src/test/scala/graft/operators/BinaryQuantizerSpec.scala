@@ -257,11 +257,12 @@ class BinaryQuantizerSpec extends SparkTestBase {
   test("a crashed write's leftover staged dir cannot poison the next " +
       "writeIndex; a rewrite replaces the index whole") {
     val idx = graft.Scratch.fresh("bq_stagedcrash") + "/idx"
-    val junk = new org.apache.hadoop.fs.Path(s"$idx.__write__/codes/junk")
+    val staged = graft.sources.Tables.staged(idx)
+    val junk = new org.apache.hadoop.fs.Path(s"$staged/codes/junk")
     val fs = junk.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(junk.getParent); fs.create(junk, true).close()
     BinaryQuantizer.writeIndex(corpus, "vec_id", "embedding", idx)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx.__write__")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(staged)),
       "the publish must consume the staged dir")
     assert(spark.read.parquet(s"$idx/codes").count() === corpus.count())
     BinaryQuantizer.writeIndex(corpus.limit(40), "vec_id", "embedding", idx)

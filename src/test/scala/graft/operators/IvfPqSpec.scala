@@ -369,10 +369,10 @@ class IvfPqSpec extends SparkTestBase {
     // a writeIndexResidual that died mid-build leaves a FLAGGED staged
     // dir behind; the next global build must clear it rather than
     // inherit the flag into its published layout
-    val staged = new org.apache.hadoop.fs.Path(
-      s"$idx.__write__/_residual_codes")
-    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(staged.getParent); fs.create(staged, true).close()
+    val staged = graft.sources.Tables.staged(idx)
+    val flag = new org.apache.hadoop.fs.Path(s"$staged/_residual_codes")
+    val fs = flag.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(flag.getParent); fs.create(flag, true).close()
     IvfPq.writeIndex(corpus, "vec_id", "embedding", idx,
       clusters = 16, m = M, dim = Dim, codes = 16)
     assert(IvfPq.searchIndex(spark, idx, "vec_id", queries, "qid", "qv",
@@ -381,7 +381,7 @@ class IvfPqSpec extends SparkTestBase {
       IvfPq.searchIndexResidual(spark, idx, "vec_id", queries, "qid", "qv",
         k = 3, nProbe = 4)
     }
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx.__write__")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(staged)),
       "the publish must consume the staged dir")
   }
 

@@ -94,11 +94,12 @@ class ScalarQuantizerSpec extends SparkTestBase {
   test("a crashed write's leftover staged dir cannot poison the next " +
       "writeIndex; a rewrite replaces the index whole") {
     val idx = graft.Scratch.fresh("sq_stagedcrash") + "/idx"
-    val staged = new org.apache.hadoop.fs.Path(s"$idx.__write__/codes/junk")
-    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(staged.getParent); fs.create(staged, true).close()
+    val staged = graft.sources.Tables.staged(idx)
+    val junk = new org.apache.hadoop.fs.Path(s"$staged/codes/junk")
+    val fs = junk.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(junk.getParent); fs.create(junk, true).close()
     ScalarQuantizer.writeIndex(corpus, "vec_id", "embedding", idx)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx.__write__")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(staged)),
       "the publish must consume the staged dir")
     val n0 = spark.read.parquet(s"$idx/codes").count()
     assert(n0 === corpus.count())

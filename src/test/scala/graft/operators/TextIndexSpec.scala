@@ -164,6 +164,27 @@ class TextIndexSpec extends SparkTestBase {
     assert(searchRows(idx) === searchRows(liveOnly))
   }
 
+  test("a delete at a rewrite's listing seam counts exactly once " +
+      "(compact, growBucketsIfHot)") {
+    import spark.implicits._
+    val liveOnly = graft.Scratch.fresh("ti_seam_live") + "/idx"
+    TextIndex.write(docs.filter(!col("doc_id").isin(1L, 4L)),
+      "doc_id", "text", liveOnly)
+    val ops: Seq[(String, (String, () => Unit) => Unit)] = Seq(
+      "compact" -> ((idx, seam) => TextIndex.compact(spark, idx, seam)),
+      "grow" -> ((idx, seam) => assert(TextIndex
+        .growBucketsIfHot(spark, idx, 8L, seam).head().getBoolean(0))))
+    ops.foreach { case (name, op) =>
+      val idx = graft.Scratch.fresh(s"ti_seam_$name") + "/idx"
+      TextIndex.write(docs, "doc_id", "text", idx)
+      TextIndex.delete(spark, idx, Seq(1L).toDF("doc_id"), "doc_id")
+      op(idx, () =>
+        TextIndex.delete(spark, idx, Seq(4L).toDF("doc_id"), "doc_id"))
+      assert(totalsRow(idx) === totalsRow(liveOnly), name)
+      assert(searchRows(idx) === searchRows(liveOnly), name)
+    }
+  }
+
   test("probe reads only the query terms' bucket partitions") {
     val idx = graft.Scratch.fresh("ti_prune") + "/idx"
     TextIndex.write(docs, "doc_id", "text", idx)

@@ -160,4 +160,24 @@ class SnapshotsSpec extends SparkTestBase {
       .as[Long].collect().contains(1L))
     assert(Snapshots.vacuum(spark, path, keepLast = 3) == Seq(1L))
   }
+
+  test("a commit whose version marker already exists fails loudly; the " +
+      "committed versions stay readable") {
+    import spark.implicits._
+    val path = tmpTable()
+    Snapshots.write(Seq((1, "a")).toDF("id", "s"), path)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    intercept[java.io.IOException] {
+      Snapshots.commit(spark, path) { dir =>
+        Seq((2, "b")).toDF("id", "s").write.parquet(dir)
+        // a racing committer claims version 1 first
+        fs.create(Snapshots.commitMarker(path, 1), false).close()
+      }
+    }
+    assert(Snapshots.readVersion(spark, path, 0).select("s").as[String]
+      .collect().toSeq == Seq("a"))
+    // the loser removed nothing: the winner's claim stands
+    assert(Snapshots.latestVersion(spark, path).contains(1L))
+  }
 }

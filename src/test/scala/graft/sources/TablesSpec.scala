@@ -57,7 +57,50 @@ class TablesSpec extends SparkTestBase {
     // staging artifacts cleaned up
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__tmp__")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(Tables.staged(dir))))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__old__")))
+  }
+
+  test("replace carries a late append-only file exactly once and never " +
+      "copies a listed one") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("carry").toString + "/t"
+    // a TextIndex-shaped table: data in bkt=0, additive stats in bkt=-2
+    Seq((0, 5L), (-2, 100L)).toDF("bkt", "n").write.partitionBy("bkt")
+      .parquet(dir)
+    val input = spark.read.parquet(dir) // the rewrite's one listing
+    // a concurrent writer appends a stats row after the listing
+    Seq((-2, -7L)).toDF("bkt", "n").write.mode("append").partitionBy("bkt")
+      .parquet(dir)
+    Tables.replace(spark, dir, input.inputFiles, Seq("bkt=-2"))(
+      input.write.partitionBy("bkt").parquet(_))
+    val stats = spark.read.parquet(dir).filter(col("bkt") === -2)
+      .select("n").as[Long].collect().sorted.toSeq
+    assert(stats === Seq(-7L, 100L))
+    assert(spark.read.parquet(dir).filter(col("bkt") === 0).count() === 1)
+    assert(new java.io.File(s"$dir/bkt=-2").list()
+      .count(_.startsWith("part-")) === 2)
+  }
+
+  test("no directory rewrite outside graft.sources forks replace's " +
+      "protocol") {
+    // a hand-rolled stage/carry/swap elsewhere would bypass the carry and
+    // the stale-stage clear: no rename-chain call, no staged-suffix literal
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.startsWith(root.resolve("graft/sources"))).toSeq
+    assert(files.size > 50, s"scanned only ${files.size} files under $root")
+    val suffix = """\.__\w+__""".r
+    val offending = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") &&
+        !code.startsWith("/*")
+      if code.contains("Tables.publish") || suffix.findFirstIn(code).nonEmpty
+    } yield s"$f:${i + 1}: $code"
+    assert(offending.isEmpty, offending.mkString("\n"))
   }
 }

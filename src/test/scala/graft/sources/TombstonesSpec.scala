@@ -32,30 +32,36 @@ class TombstonesSpec extends SparkTestBase {
     assert(live === Set(2L, 3L))
   }
 
+  private def markerFiles(path: String): Set[String] =
+    Option(new java.io.File(s"$path/${Tombstones.Dir}").list())
+      .map(_.filter(_.startsWith("part-")).toSet).getOrElse(Set.empty)
+
   test("unmark with no matching marker rewrites nothing") {
     val path = graft.Scratch.fresh("ts_unmark_noop") + "/layout"
     ids(1L).write.parquet(path)
     Tombstones.write(spark, path, ids(1L), "id")
-    val before = Tombstones.fileSnapshot(spark, path)
+    val before = markerFiles(path)
     Tombstones.unmark(spark, path, ids(7L, 8L), "id")
-    assert(Tombstones.fileSnapshot(spark, path) === before)
+    assert(markerFiles(path) === before)
     assert(markerSet(path) === Set(1L))
   }
 
-  test("carryInto ships only markers written after the snapshot") {
+  test("replace carries only markers written after the listing") {
     val path = graft.Scratch.fresh("ts_carry") + "/layout"
-    val staged = graft.Scratch.fresh("ts_carry") + "/staged"
     ids(1L, 2L, 3L).write.parquet(path)
-    ids(1L, 2L, 3L).write.parquet(staged)
     Tombstones.write(spark, path, ids(1L), "id")
-    // a compactor snapshots, reads, rewrites… meanwhile a delete lands
-    val snap = Tombstones.fileSnapshot(spark, path)
+    // a compactor lists and reads… meanwhile a delete lands
+    val live = Tombstones.filterLive(spark, path, spark.read.parquet(path),
+      "id")
     Tombstones.write(spark, path, ids(3L), "id")
-    val carried = Tombstones.carryInto(spark, path, snap, staged)
-    assert(carried === 1)
-    // the staged layout carries ONLY the late delete — the snapshot's
-    // markers were applied physically by the rewrite it shipped with
-    assert(markerSet(staged) === Set(3L))
+    Tables.replace(spark, path, live.inputFiles, Seq(Tombstones.Dir))(
+      live.write.parquet(_))
+    // the new layout carries ONLY the late delete — the listed markers
+    // were applied physically by the rewrite they shipped with
+    assert(markerSet(path) === Set(3L))
+    assert(markerFiles(path).size === 1)
+    assert(spark.read.parquet(path).collect().map(_.getLong(0)).toSet ===
+      Set(2L, 3L))
   }
 
   test("filterLive stops force-broadcasting past the marker byte bound") {

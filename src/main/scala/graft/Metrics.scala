@@ -1,9 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.graftglue.ListenerGlue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Execution-level metrics for one action: bytes scanned, bytes moved
@@ -26,13 +27,20 @@ final case class PlanMetrics(
     shuffleReadBytes: Long,
     spilledBytes: Long,
     jobs: Long = 0,
-    stages: Long = 0) {
+    stages: Long = 0,
+    spans: Seq[JobSpan] = Nil) {
   def pretty: String =
     f"wall=$wallSec%.2fs input=${inputBytes / 1e6}%.1fMB/" +
       f"$inputRecords%d rows shuffleWrite=${shuffleWriteBytes / 1e6}%.2fMB " +
       f"shuffleRead=${shuffleReadBytes / 1e6}%.2fMB " +
       f"spilled=${spilledBytes / 1e6}%.1fMB jobs=$jobs stages=$stages"
 }
+
+/** One job of a measured action: the call site that submitted it, the
+  * first line of its SQL execution's description when that differs from
+  * the call site (else ""), and its run time (-1 if it never ended).
+  */
+final case class JobSpan(id: Int, site: String, sql: String, seconds: Double)
 
 object Metrics {
 
@@ -46,11 +54,28 @@ object Metrics {
     val sw = new LongAdder
     val sr = new LongAdder
     val spill = new LongAdder
-    val jobs = new LongAdder
     val stages = new LongAdder
+    // per job: call site, SQL execution id, start time; end time
+    val started = new ConcurrentHashMap[Int, (String, String, Long)]()
+    val ended = new ConcurrentHashMap[Int, Long]()
+    val execs = new ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.increment()
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        started.put(j.jobId, (
+          prop("callSite.short")
+            .getOrElse(j.stageInfos.headOption.map(_.name).getOrElse("?")),
+          prop("spark.sql.execution.id").getOrElse("-"), j.time))
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        ended.put(j.jobId, j.time)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          execs.put(s.executionId.toString,
+            s.description.linesIterator.nextOption().getOrElse(""))
+        case _ => ()
+      }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         val m = s.stageInfo.taskMetrics
         if (m != null) {
@@ -70,7 +95,14 @@ object Metrics {
       action
       ListenerGlue.flush(sc) // async bus: drain before reading adders
     } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val spans = started.asScala.toSeq.sortBy(_._1).map {
+      case (id, (site, exec, start)) =>
+        JobSpan(id, site,
+          Option(execs.get(exec)).filter(_ != site).getOrElse(""),
+          ended.asScala.get(id).map(e => (e - start) / 1000.0).getOrElse(-1.0))
+    }
     PlanMetrics((System.nanoTime() - t0) / 1e9, input.sum(), inputRecs.sum(),
-      sw.sum(), sr.sum(), spill.sum(), jobs.sum(), stages.sum())
+      sw.sum(), sr.sum(), spill.sum(), spans.size.toLong, stages.sum(), spans)
   }
 }

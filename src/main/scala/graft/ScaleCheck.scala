@@ -197,10 +197,10 @@ object ScaleCheck {
 
       // ---- IVF+PQ residual index search: same fixed batch ----
       val pqDir = Scratch.fresh(s"scalecheck_ivfpq_$n") + "/idx"
-      IvfPq.writeIndexResidual(vecs, "vec_id", "embedding", pqDir,
-        clusters = 16, m = 8, dim = 64, codes = 16)
+      IvfPq.writeIndex(vecs, "vec_id", "embedding", pqDir,
+        clusters = 16, m = 8, dim = 64, codes = 16, residual = true)
       val mPq = Metrics.measure(spark) {
-        IvfPq.searchIndexResidual(spark, pqDir, "vec_id",
+        IvfPq.searchIndex(spark, pqDir, "vec_id",
           queries, "qid", "qv", k = 3, nProbe = 4).count()
         ()
       }

@@ -78,12 +78,6 @@ object Text {
   def bpeTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit(BpePattern), lit(0))).cast("long")
 
-  /** Punctuation character count (explicit class — identical semantics
-    * in Java regex and RE2).
-    */
-  def punctCount(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[.,!?;:]", ""))).cast("long")
-
   /** Stopword lists used for quality scoring and language ID. Tiny
     * hand-picked function-word sets — the standard n-gram/function-word
     * language-ID heuristic.

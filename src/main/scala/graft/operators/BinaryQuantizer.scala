@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * at the top is weak enough that binary is the PREFILTER tier — scan
   * the packed corpus for a `refine·k` Hamming shortlist, then fetch only
   * the shortlist's float vectors for the exact re-rank
-  * ([[searchRefined]], the [[IvfPq.searchIndexResidualRefined]] shape).
+  * ([[searchRefined]], the [[IvfPq.searchIndexRefined]] shape).
   * Everything here composes from builtin codegen functions (`zip_with`,
   * `bit_count`, `aggregate`) — no custom kernel needed because the hot
   * loop is one word wide per 64 dimensions.

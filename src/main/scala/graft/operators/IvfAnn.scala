@@ -277,20 +277,10 @@ object IvfAnn {
     * identical.
     */
   def compactCells(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String): Unit = {
-    val base = spark.read.parquet(path)
-    // `idCol` is explicit — inferring it from column position would
-    // silently anti-join tombstones against the wrong column on a
-    // reordered layout, permanently losing the deletes (round-8 advice);
-    // pending tombstones apply physically here
-    require(base.columns.contains(idCol),
-      s"id column '$idCol' not in layout schema ${base.columns.mkString(",")}")
-    val live = graft.sources.Tombstones.filterLive(spark, path, base, idCol)
-    graft.sources.Tables.replace(spark, path, live.inputFiles,
-        Seq(graft.sources.Tombstones.Dir))(
+      path: String, idCol: String): Unit =
+    graft.sources.Tombstones.compact(spark, path, idCol)((live, out) =>
       live.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(_))
-  }
+        .write.mode("overwrite").partitionBy("cell").parquet(out))
 
   /** LOGICAL delete from a cell layout — O(|deletes|), append-only
     * markers via the shared [[graft.sources.Tombstones]] mechanics:

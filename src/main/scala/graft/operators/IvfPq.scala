@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.CentroidState.Cent
@@ -14,127 +14,145 @@ import graft.operators.CentroidState.Cent
   * per-pair cost is `m` map lookups instead of a `dim`-float dot
   * product.
   *
-  * Both trained quantizers are driver-held [[CentroidState]] state, so
-  * the whole search is ONE corpus projection (coarse cell + PQ codes,
-  * both inline argmin expressions — the corpus is scanned once and never
-  * shuffled) joined against the broadcast probe set, then the
-  * bounded-heap top-k. At 10 B vectors the corpus side is stored
-  * bucketed by coarse cell with only `codes` (m bytes/vector) resident:
-  * a probe reads `nProbe` buckets of compressed codes — the float
-  * vectors are never touched (compose with
-  * [[ProductQuantizer.searchRefined]]'s exact re-rank to fetch just the
-  * final shortlist).
+  * Every entry point runs the same four steps: train (coarse Lloyd,
+  * then PQ Lloyd), encode (ONE corpus projection: coarse cell + PQ
+  * codes, both inline argmin expressions — the corpus is scanned once
+  * and never shuffled), probe (each query's `nProbe` cells with their
+  * ADC tables, broadcast), and score (the probe join on `cell`, the
+  * ADC sum, the bounded-heap top-k). At 10 B vectors the corpus side is
+  * stored bucketed by coarse cell with only `codes` (m bytes/vector)
+  * resident: a probe reads `nProbe` buckets of compressed codes — the
+  * float vectors are never touched until [[searchIndexRefined]]'s exact
+  * re-rank fetches just the final shortlist.
   *
-  * Codes are from GLOBAL codebooks (trained on whole vectors, not
-  * per-cell residuals): cells only prune, quantization error is
-  * cell-independent, and the q85 oracle replays both trainings
-  * unchanged.
+  * Two encodings share those steps (Jégou et al., "Product Quantization
+  * for Nearest Neighbor Search", TPAMI 2011 — FAISS `IndexIVFPQ`'s
+  * `by_residual`):
+  *  - GLOBAL (`residual = false`): codebooks train on whole vectors, so
+  *    cells only prune and quantization error is cell-independent (the
+  *    q85 oracle replays both trainings unchanged);
+  *  - RESIDUAL (IVFADC, `residual = true`): codebooks train on
+  *    `v − c(cell)`, so the codes spend their entropy on the within-cell
+  *    displacement the coarse quantizer leaves; each query computes one
+  *    ADC table PER PROBED CELL (`nProbe·m·codes` doubles — still
+  *    broadcast-sized) and the probe join pairs each encoded row with
+  *    its own cell's table. Residuals stay float and means decimal, so
+  *    the chain is SQL-replayable (q142's oracle).
+  *
+  * A persisted index records its encoding once, as the `_residual_codes`
+  * flag inside its directory; [[appendIndex]], [[searchIndex]] and
+  * [[retrainIfDrifted]] read it, so the codes are always scored and
+  * extended the way they were written.
   */
 object IvfPq {
 
+  /** Both trained quantizers and the encoding their codes use. */
+  private final case class Quantizers(coarse: Seq[Cent],
+      cb: IndexedSeq[Seq[Cent]], m: Int, dim: Int, residual: Boolean)
+
+  /** What PQ encodes for `vec` in `cell`: the vector itself, or its
+    * float residual under the cell's centroid.
+    */
+  private def pqInput(vec: Column, cell: Column, coarse: Seq[Cent],
+      residual: Boolean): Column =
+    if (!residual) vec
+    else zip_with(vec, element_at(CentroidState.cvecMap(coarse), cell),
+      (a, b) => a - b)
+
+  /** `(idCol, cell, pv)` — each vector's coarse cell and the vector PQ
+    * sees under it ([[pqInput]]).
+    */
+  private def pqRows(vecs: DataFrame, idCol: String, vecCol: String,
+      coarse: Seq[Cent], residual: Boolean): DataFrame =
+    vecs.select(col(idCol), col(vecCol),
+        CentroidState.nearestCell(col(vecCol), coarse).as("cell"))
+      .select(col(idCol), col("cell"),
+        pqInput(col(vecCol), col("cell"), coarse, residual).as("pv"))
+
+  /** The index's ONE corpus projection over [[pqRows]]:
+    * `(idCol, codes, cell)`.
+    */
+  private def encode(rows: DataFrame, idCol: String,
+      q: Quantizers): DataFrame =
+    rows.select(col(idCol),
+      ProductQuantizer.codesExpr(col("pv"), q.cb, q.m, q.dim).as("codes"),
+      col("cell"))
+
+  /** Coarse Lloyd, then PQ Lloyd over the corpus's [[pqRows]].
+    * @return the quantizers and the corpus [[encode]]d under them
+    */
+  private def train(corpus0: DataFrame, idCol: String, vecCol: String,
+      clusters: Int, m: Int, dim: Int, codes: Int, coarseIters: Int,
+      pqIters: Int, residual: Boolean): (Quantizers, DataFrame) = {
+    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
+    val corpus = CentroidState.ensureCached(corpus0)
+    val coarse = IvfAnn.lloyd(corpus, idCol, vecCol, clusters, coarseIters)
+    val rows0 = pqRows(corpus, idCol, vecCol, coarse, residual)
+    // residual rows feed PQ training and encoding, and nothing else —
+    // cached so the residuals are computed once
+    val rows = if (residual) CentroidState.ensureCached(rows0) else rows0
+    val q = Quantizers(coarse,
+      ProductQuantizer.lloyd(rows, idCol, "pv", m, dim, codes, pqIters),
+      m, dim, residual)
+    (q, encode(rows, idCol, q))
+  }
+
+  /** One row per (query, probed cell): `(qid, cell, tables)` with the
+    * query's ADC tables over [[pqInput]] in that cell; `ranked` adds each
+    * cell's 1-based `probe_rank` after `qid`.
+    */
+  private def probe(queries: DataFrame, qidCol: String, qvecCol: String,
+      q: Quantizers, nProbe: Int, ranked: Boolean = false): DataFrame = {
+    val cells = CentroidState.nearestCells(col(qvecCol), q.coarse, nProbe)
+    val rank = if (ranked) Seq((col("__pos") + 1).as("probe_rank")) else Nil
+    queries
+      .select(col(qidCol), col(qvecCol),
+        if (ranked) posexplode(cells).as(Seq("__pos", "cell"))
+        else explode(cells).as("cell"))
+      .select((col(qidCol) +: rank) ++ Seq(col("cell"),
+        ProductQuantizer.tablesExpr(
+          pqInput(col(qvecCol), col("cell"), q.coarse, q.residual),
+          q.cb, q.m, q.dim).as("tables")): _*)
+  }
+
+  /** Every (query, corpus row) pair sharing a probed cell, self-pairs
+    * dropped, scored by ADC. The probe side broadcasts within the
+    * [[IvfAnn.probeSide]] BYTE bound — each probe row carries a full
+    * `m × codes` ADC table, orders of magnitude heavier than IvfAnn's
+    * per-row vector — and degrades above it.
+    * @return (qid, [probe_rank,] neighbor, approx_dist)
+    */
+  private def score(probed: DataFrame, probeRows: Long, q: Quantizers,
+      codes: Int, encoded: DataFrame, qidCol: String,
+      idCol: String): DataFrame = {
+    val keys = probed.columns.toSeq.filterNot(Set("cell", "tables")).map(col)
+    IvfAnn.probeSide(probed, probeRows,
+        bytesPerRow = q.m.toLong * codes * 8L + 64L)
+      .join(encoded, "cell")
+      .filter(col(qidCol) =!= col(idCol))
+      .select(keys ++ Seq(col(idCol).as("neighbor"),
+        ProductQuantizer.adc(col("codes"), col("tables")).as("approx_dist")): _*)
+  }
+
+  private def topK(scored: DataFrame, qidCol: String, k: Int): DataFrame =
+    Dedup.topKPerKey(scored, Seq(qidCol),
+      Seq(col("approx_dist").asc, col("neighbor").asc), k)
+
   /** Top-`k` per query by ADC squared L2, scored only inside the
-    * query's `nProbe` nearest coarse cells.
+    * query's `nProbe` nearest coarse cells, under the chosen encoding.
     * @return (qid, neighbor, approx_dist)
     */
   def search(corpus0: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, clusters: Int, nProbe: Int, m: Int, dim: Int, codes: Int,
-      coarseIters: Int = 1, pqIters: Int = 1): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val corpus = CentroidState.ensureCached(corpus0)
-    val coarse = IvfAnn.lloyd(corpus, idCol, vecCol, clusters, coarseIters)
-    val cb = ProductQuantizer.lloyd(corpus, idCol, vecCol, m, dim, codes,
-      pqIters)
-    // one projection: coarse routing cell + PQ codes per corpus row
-    val encoded = corpus.select(col(idCol),
-      CentroidState.nearestCell(col(vecCol), coarse).as("cell"),
-      ProductQuantizer.codesExpr(col(vecCol), cb, m, dim).as("codes"))
-    // one projection per query row: probed cells + ADC distance tables
+      coarseIters: Int = 1, pqIters: Int = 1,
+      residual: Boolean = false): DataFrame = {
+    val (q, encoded) = train(corpus0, idCol, vecCol, clusters, m, dim,
+      codes, coarseIters, pqIters, residual)
     val qcached = CentroidState.ensureCached(queries)
-    val probed = qcached.select(col(qidCol),
-      explode(CentroidState.nearestCells(col(qvecCol), coarse, nProbe))
-        .as("cell"),
-      ProductQuantizer.tablesExpr(col(qvecCol), cb, m, dim).as("tables"))
-    // broadcast within the IvfAnn.probeSide BYTE bound — each probe row
-    // here carries a full m x codes ADC table, orders of magnitude
-    // heavier than IvfAnn's per-row vector — degrade above it
-    val scored = IvfAnn.probeSide(probed, qcached.count() * nProbe,
-        bytesPerRow = m.toLong * codes * 8L + 64L)
-      .join(encoded, "cell")
-      .filter(col(qidCol) =!= col(idCol))
-      .select(col(qidCol), col(idCol).as("neighbor"),
-        aggregate(
-          zip_with(col("codes"), col("tables"), (c, t) => element_at(t, c)),
-          lit(0.0), (acc, x) => acc + x).as("approx_dist"))
-    Dedup.topKPerKey(scored, Seq(qidCol),
-      Seq(col("approx_dist").asc, col("neighbor").asc), k)
+    topK(score(probe(qcached, qidCol, qvecCol, q, nProbe),
+      qcached.count() * nProbe, q, codes, encoded, qidCol, idCol), qidCol, k)
   }
-
-  /** Residual-encoded IVF+PQ — the FAISS `IVFx,PQy` default (IVFADC,
-    * Jégou et al., "Product Quantization for Nearest Neighbor Search",
-    * TPAMI 2011): PQ codebooks train on RESIDUALS `v − c(cell)` instead
-    * of whole vectors, so the codes spend their entropy on the
-    * within-cell displacement — the coarse quantizer already explains
-    * the between-cell variance that [[search]]'s global codebooks waste
-    * code range on. The cost structure is the classic IVFADC one: each
-    * query computes one ADC table PER PROBED CELL (its residual differs
-    * by cell), `nProbe·m·codes` doubles per query — still
-    * broadcast-sized; the probe join on `cell` pairs each encoded
-    * corpus row with exactly its own cell's table. Training, encoding,
-    * and search stay deterministic (float residuals, decimal means), so
-    * the whole chain is SQL-replayable (q142's oracle).
-    * @return (qid, neighbor, approx_dist)
-    */
-  def searchResidual(corpus0: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, clusters: Int, nProbe: Int, m: Int, dim: Int, codes: Int,
-      coarseIters: Int = 1, pqIters: Int = 1): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val corpus = CentroidState.ensureCached(corpus0)
-    val coarse = IvfAnn.lloyd(corpus, idCol, vecCol, clusters, coarseIters)
-    val cmap = CentroidState.cvecMap(coarse)
-    def residual(vec: org.apache.spark.sql.Column,
-        cell: org.apache.spark.sql.Column) =
-      zip_with(vec, element_at(cmap, cell), (a, b) => a - b)
-    // residual frame feeds PQ training, encoding, and nothing else —
-    // float-typed so the trained state is bit-replayable in SQL
-    val resid = CentroidState.ensureCached(
-      residualRows(corpus, idCol, vecCol, coarse))
-    val cb = ProductQuantizer.lloyd(resid, idCol, "rv", m, dim, codes,
-      pqIters)
-    val encoded = resid.select(col(idCol), col("cell"),
-      ProductQuantizer.codesExpr(col("rv"), cb, m, dim).as("codes"))
-    val qcached = CentroidState.ensureCached(queries)
-    val probed = qcached
-      .select(col(qidCol), col(qvecCol),
-        explode(CentroidState.nearestCells(col(qvecCol), coarse, nProbe))
-          .as("cell"))
-      .select(col(qidCol), col("cell"),
-        ProductQuantizer
-          .tablesExpr(residual(col(qvecCol), col("cell")), cb, m, dim)
-          .as("tables"))
-    val scored = IvfAnn.probeSide(probed, qcached.count() * nProbe,
-        bytesPerRow = m.toLong * codes * 8L + 64L)
-      .join(encoded, "cell")
-      .filter(col(qidCol) =!= col(idCol))
-      .select(col(qidCol), col(idCol).as("neighbor"),
-        aggregate(
-          zip_with(col("codes"), col("tables"), (c, t) => element_at(t, c)),
-          lit(0.0), (acc, x) => acc + x).as("approx_dist"))
-    Dedup.topKPerKey(scored, Seq(qidCol),
-      Seq(col("approx_dist").asc, col("neighbor").asc), k)
-  }
-
-  /** The composed index's ONE corpus projection: coarse routing cell +
-    * PQ codes per row — what [[writeIndex]] materializes and
-    * [[appendIndex]] computes for a delta.
-    */
-  private def encodedRows(vecs: DataFrame, idCol: String, vecCol: String,
-      coarse: Seq[Cent], cb: IndexedSeq[Seq[Cent]], m: Int,
-      dim: Int): DataFrame =
-    vecs.select(col(idCol),
-      ProductQuantizer.codesExpr(col(vecCol), cb, m, dim).as("codes"),
-      CentroidState.nearestCell(col(vecCol), coarse).as("cell"))
 
   /** Materialize a SELF-CONTAINED composed-index directory — the
     * 10 B-vector serving layout the class doc promises: `dir/cells`
@@ -142,73 +160,76 @@ object IvfPq {
     * cell (m bytes-scale codes resident, float vectors never stored),
     * `dir/coarse` and `dir/codebook` hold the two trained quantizers so
     * index and quantizers version together ([[IvfAnn.writeIndex]]
-    * rationale — separately-versioned quantizers silently lose recall).
+    * rationale — separately-versioned quantizers silently lose recall),
+    * and a residual index carries the `_residual_codes` flag.
     */
   def writeIndex(corpus0: DataFrame, idCol: String, vecCol: String,
       dir: String, clusters: Int, m: Int, dim: Int, codes: Int,
-      coarseIters: Int = 1, pqIters: Int = 1): Unit = {
+      coarseIters: Int = 1, pqIters: Int = 1,
+      residual: Boolean = false): Unit =
     // built into the staged sibling and swapped in whole
-    // ([[graft.sources.Tables.replace]]): overwriting a dir IN PLACE
-    // that previously held the OPPOSITE encoding had crash states where
-    // stale residual codes survived flagless (searchIndex silently
-    // accepted them) — staged, an interrupted (re)write leaves the
-    // previous index — flag, quantizers, and codes consistent with each
-    // other — fully addressable, never a half-overwritten mix of
-    // encodings (round-10 review)
+    // ([[graft.sources.Tables.replace]]): the flag travels with the
+    // staged dir, so an interrupted (re)write leaves the previous index
+    // — flag, quantizers, and codes consistent with each other — fully
+    // addressable, never codes of one encoding under the other's flag
     graft.sources.Tables.replace(corpus0.sparkSession, dir)(
-      buildGlobal(corpus0, idCol, vecCol, _, clusters, m, dim, codes,
-        coarseIters, pqIters))
-  }
+      build(corpus0, idCol, vecCol, _, clusters, m, dim, codes,
+        coarseIters, pqIters, residual))
 
-  private def buildGlobal(corpus0: DataFrame, idCol: String, vecCol: String,
+  private def build(corpus0: DataFrame, idCol: String, vecCol: String,
       out: String, clusters: Int, m: Int, dim: Int, codes: Int,
-      coarseIters: Int, pqIters: Int): Unit = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
+      coarseIters: Int, pqIters: Int, residual: Boolean): Unit = {
     val spark = corpus0.sparkSession
-    val corpus = CentroidState.ensureCached(corpus0)
-    val coarse = IvfAnn.lloyd(corpus, idCol, vecCol, clusters, coarseIters)
-    val cb = ProductQuantizer.lloyd(corpus, idCol, vecCol, m, dim, codes,
-      pqIters)
-    encodedRows(corpus, idCol, vecCol, coarse, cb, m, dim)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/cells")
-    CentroidState.toDF(spark, coarse).coalesce(1)
+    val (q, encoded) = train(corpus0, idCol, vecCol, clusters, m, dim,
+      codes, coarseIters, pqIters, residual)
+    // flag BEFORE the cells write: no staged state — and therefore no
+    // published state — ever holds residual codes unflagged
+    if (residual) {
+      val (p, fs) = residualFlag(spark, out)
+      fs.mkdirs(p.getParent); fs.create(p, true).close()
+    }
+    encoded.write.mode("overwrite").partitionBy("cell").parquet(s"$out/cells")
+    CentroidState.toDF(spark, q.coarse).coalesce(1)
       .write.mode("overwrite").parquet(s"$out/coarse")
-    ProductQuantizer.toDF(spark, cb).coalesce(1)
+    ProductQuantizer.toDF(spark, q.cb).coalesce(1)
       .write.mode("overwrite").parquet(s"$out/codebook")
   }
 
-  /** Load both quantizers back from the index dir (O(clusters·dim) +
-    * O(codes·dim) driver rows); `m`/`dim` are re-derived from the
-    * persisted codebook shape, so callers carry no sizing state.
+  /** Flag file marking a residual-encoded index directory. */
+  private def residualFlag(spark: SparkSession, dir: String) = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/_residual_codes")
+    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  /** Load both quantizers and the encoding back from the index dir
+    * (O(clusters·dim) + O(codes·dim) driver rows); `m`/`dim` are
+    * re-derived from the persisted codebook shape, so callers carry no
+    * sizing state.
     */
-  private def loadQuantizers(spark: SparkSession,
-      dir: String): (Seq[Cent], IndexedSeq[Seq[Cent]], Int, Int) = {
+  private def loadQuantizers(spark: SparkSession, dir: String): Quantizers = {
     val coarse = CentroidState.collect(spark.read.parquet(s"$dir/coarse"))
     val cbDf = spark.read.parquet(s"$dir/codebook")
     val m = cbDf.agg(max(col("m"))).head.getInt(0) + 1
     val cb = ProductQuantizer.collectCodebook(cbDf, m)
-    (coarse, cb, m, m * cb.head.head.cvec.length)
+    val (p, fs) = residualFlag(spark, dir)
+    Quantizers(coarse, cb, m, m * cb.head.head.cvec.length, fs.exists(p))
   }
 
   /** O(|delta|) incremental append — the composed index's day-2 story
     * ([[IvfAnn.appendPartitionedByCell]] plus encoding): each new
     * vector is routed by the STORED coarse quantizer and encoded with
-    * the STORED codebooks, landing as new files under its cell
-    * directory. No retrain, no rewrite; drift is bounded by retraining
-    * cadence exactly as for plain IVF ([[IvfAnn.driftReport]] applies
-    * unchanged — assignment is the same kernel). Stale tombstones for
-    * re-admitted ids are cleared (the [[graft.sources.Tombstones]]
-    * lifecycle contract).
+    * the STORED codebooks under the stored encoding, landing as new
+    * files under its cell directory. No retrain, no rewrite; drift is
+    * bounded by retraining cadence exactly as for plain IVF
+    * ([[IvfAnn.driftReport]] applies unchanged — assignment is the same
+    * kernel). Stale tombstones for re-admitted ids are cleared (the
+    * [[graft.sources.Tombstones]] lifecycle contract).
     */
   def appendIndex(delta: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
     val spark = delta.sparkSession
-    // appending RAW-encoded rows into a residual index would corrupt
-    // every later searchIndexResidual silently — same guard as the
-    // search entry points (round-9 advice)
-    requireEncoding(spark, dir, residual = false)
-    val (coarse, cb, m, dim) = loadQuantizers(spark, dir)
-    encodedRows(delta, idCol, vecCol, coarse, cb, m, dim)
+    val q = loadQuantizers(spark, dir)
+    encode(pqRows(delta, idCol, vecCol, q.coarse, q.residual), idCol, q)
       .write.mode("append").partitionBy("cell").parquet(s"$dir/cells")
     graft.sources.Tombstones.unmark(spark, s"$dir/cells", delta, idCol)
   }
@@ -226,200 +247,47 @@ object IvfPq {
   def tombstones(spark: SparkSession, dir: String): Option[DataFrame] =
     graft.sources.Tombstones.read(spark, s"$dir/cells")
 
-  /** Flag file marking a [[writeIndexResidual]] directory: the stored
-    * codes are residual-encoded and MUST be searched with per-cell
-    * residual ADC tables — a global-table search over residual codes
-    * (or vice versa) returns garbage silently, so both search entry
-    * points validate the flag.
-    */
-  private def residualFlag(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_residual_codes")
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-  }
-
-  private def requireEncoding(spark: SparkSession, dir: String,
-      residual: Boolean): Unit = {
-    val (p, fs) = residualFlag(spark, dir)
-    require(fs.exists(p) == residual,
-      if (residual) s"$dir stores GLOBAL-codebook codes — use searchIndex"
-      else s"$dir stores RESIDUAL codes — use searchIndexResidual")
-  }
-
-  /** [[writeIndex]] with RESIDUAL encoding ([[searchResidual]]'s
-    * contract, persisted): codebooks train on `v − c(cell)` and the
-    * stored codes are residuals — the persisted IVFADC index. The
-    * layout carries a `_residual_codes` flag so the search entry
-    * points cannot be mixed up silently.
-    */
-  def writeIndexResidual(corpus0: DataFrame, idCol: String, vecCol: String,
-      dir: String, clusters: Int, m: Int, dim: Int, codes: Int,
-      coarseIters: Int = 1, pqIters: Int = 1): Unit = {
-    // staged build + whole-dir swap — the [[writeIndex]] crash-
-    // consistency rationale; the flag travels with the staged dir so a
-    // published index is ALWAYS flag-consistent with its codes, even
-    // when this write replaces a global-coded index
-    graft.sources.Tables.replace(corpus0.sparkSession, dir)(
-      buildResidual(corpus0, idCol, vecCol, _, clusters, m, dim, codes,
-        coarseIters, pqIters))
-  }
-
-  private def buildResidual(corpus0: DataFrame, idCol: String,
-      vecCol: String, out: String, clusters: Int, m: Int, dim: Int,
-      codes: Int, coarseIters: Int, pqIters: Int): Unit = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val spark = corpus0.sparkSession
-    val corpus = CentroidState.ensureCached(corpus0)
-    val coarse = IvfAnn.lloyd(corpus, idCol, vecCol, clusters, coarseIters)
-    val resid = CentroidState.ensureCached(
-      residualRows(corpus, idCol, vecCol, coarse))
-    val cb = ProductQuantizer.lloyd(resid, idCol, "rv", m, dim, codes,
-      pqIters)
-    // flag BEFORE the cells write: no staged state — and therefore no
-    // published state — ever holds residual codes unflagged (searchIndex
-    // would accept them and return garbage silently — the failure the
-    // flag exists to stop)
-    locally { val (p, fs) = residualFlag(spark, out)
-      fs.mkdirs(p.getParent); fs.create(p, true).close() }
-    resid.select(col(idCol),
-        ProductQuantizer.codesExpr(col("rv"), cb, m, dim).as("codes"),
-        col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/cells")
-    CentroidState.toDF(spark, coarse).coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/coarse")
-    ProductQuantizer.toDF(spark, cb).coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/codebook")
-  }
-
-  /** `(idCol, cell, rv)` — each vector's assigned cell and float
-    * residual under it.
-    */
-  private def residualRows(vecs: DataFrame, idCol: String, vecCol: String,
-      coarse: Seq[Cent]): DataFrame = {
-    val cmap = CentroidState.cvecMap(coarse)
-    vecs.select(col(idCol), col(vecCol),
-        CentroidState.nearestCell(col(vecCol), coarse).as("cell"))
-      .select(col(idCol), col("cell"),
-        zip_with(col(vecCol), element_at(cmap, col("cell")),
-          (a, b) => a - b).as("rv"))
-  }
-
-  /** O(|delta|) append to a RESIDUAL index — route by the stored
-    * coarse quantizer, residual-encode with the stored codebooks,
-    * land as new files; stale tombstones for re-admitted ids clear.
-    */
-  def appendIndexResidual(delta: DataFrame, idCol: String, vecCol: String,
-      dir: String): Unit = {
-    val spark = delta.sparkSession
-    requireEncoding(spark, dir, residual = true)
-    val (coarse, cb, m, dim) = loadQuantizers(spark, dir)
-    residualRows(delta, idCol, vecCol, coarse)
-      .select(col(idCol),
-        ProductQuantizer.codesExpr(col("rv"), cb, m, dim).as("codes"),
-        col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/cells")
-    graft.sources.Tombstones.unmark(spark, s"$dir/cells", delta, idCol)
-  }
-
-  /** [[searchResidual]] against a [[writeIndexResidual]] directory:
-    * per-(query, probed cell) residual ADC tables, partition-pruned
-    * codes read, tombstone masking, bounded-heap top-k.
-    * @return (qid, neighbor, approx_dist)
-    */
-  def searchIndexResidual(spark: SparkSession, dir: String, idCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nProbe: Int): DataFrame = {
-    requireEncoding(spark, dir, residual = true)
-    val (coarse, cb, m, dim) = loadQuantizers(spark, dir)
-    val cmap = CentroidState.cvecMap(coarse)
-    val qcached = CentroidState.ensureCached(queries)
-    val probed = CentroidState.ensureCached(qcached
-      .select(col(qidCol), col(qvecCol),
-        explode(CentroidState.nearestCells(col(qvecCol), coarse, nProbe))
-          .as("cell"))
-      .select(col(qidCol), col("cell"),
-        ProductQuantizer.tablesExpr(
-          zip_with(col(qvecCol), element_at(cmap, col("cell")),
-            (a, b) => a - b), cb, m, dim).as("tables")))
-    val wanted = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val corpus = graft.sources.Tombstones.filterLive(spark, s"$dir/cells",
-      IvfAnn.readCells(spark, s"$dir/cells", wanted), idCol)
-    val scored = IvfAnn.probeSide(probed, qcached.count() * nProbe,
-        bytesPerRow = m.toLong * cb.head.size * 8L + 64L)
-      .join(corpus, "cell")
-      .filter(col(qidCol) =!= col(idCol))
-      .select(col(qidCol), col(idCol).as("neighbor"),
-        aggregate(
-          zip_with(col("codes"), col("tables"), (c, t) => element_at(t, c)),
-          lit(0.0), (acc, x) => acc + x).as("approx_dist"))
-    Dedup.topKPerKey(scored, Seq(qidCol),
-      Seq(col("approx_dist").asc, col("neighbor").asc), k)
-  }
-
-  /** [[searchIndexResidual]] + EXACT re-rank — the standard production
-    * retrieval config (FAISS index + refinement): the codes-only index
-    * scan prunes the corpus to a `refine·k` shortlist per query, and
-    * ONLY those rows' full float vectors are fetched from
-    * `corpus` (a hash join moving `refine·k·queries` rows — at 10 B
-    * vectors this is the only stage touching float data) and re-scored
-    * with the true squared L2, so quantization error affects which
-    * candidates make the shortlist but never their final order
-    * ([[ProductQuantizer.searchRefined]]'s contract, served from the
-    * persisted residual index).
-    * @return (qid, neighbor, dist2) — exact squared L2
-    */
-  def searchIndexResidualRefined(spark: SparkSession, dir: String,
-      idCol: String, vecCol: String, corpus: DataFrame,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nProbe: Int, refine: Int = 4): DataFrame = {
-    val shortlist = searchIndexResidual(spark, dir, idCol, queries,
-      qidCol, qvecCol, k = refine * k, nProbe = nProbe)
-    val exact = shortlist
-      .join(corpus.select(col(idCol).as("neighbor"), col(vecCol)),
-        "neighbor")
-      .join(queries.select(col(qidCol), col(qvecCol)), qidCol)
-      .select(col(qidCol), col("neighbor"),
-        (graft.functions.Vectors.dot(col(qvecCol), col(qvecCol))
-          + graft.functions.Vectors.dot(col(vecCol), col(vecCol))
-          - lit(2.0) * graft.functions.Vectors.dot(col(qvecCol), col(vecCol)))
-          .as("dist2"))
-    Dedup.topKPerKey(exact, Seq(qidCol),
-      Seq(col("dist2").asc, col("neighbor").asc), k)
-  }
-
-  /** [[search]] against a [[writeIndex]] directory: probed cells prune
-    * the codes READ to their files (partition pruning — I/O tracks
-    * `nProbe / clusters` of the index), scoring is ADC table lookups
-    * over codes only, pending deletes are masked, and the bounded-heap
-    * top-k finishes. The float corpus is never touched — this is the
-    * compressed-serving shape at 10 B vectors.
+  /** [[search]] against a [[writeIndex]] directory, under its stored
+    * encoding: probed cells prune the codes READ to their files
+    * (partition pruning — I/O tracks `nProbe / clusters` of the index),
+    * scoring is ADC table lookups over codes only, pending deletes are
+    * masked, and the bounded-heap top-k finishes. The float corpus is
+    * never touched — this is the compressed-serving shape at 10 B
+    * vectors.
     * @return (qid, neighbor, approx_dist)
     */
   def searchIndex(spark: SparkSession, dir: String, idCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nProbe: Int): DataFrame = {
-    requireEncoding(spark, dir, residual = false)
-    val (coarse, cb, m, dim) = loadQuantizers(spark, dir)
+    val q = loadQuantizers(spark, dir)
     val qcached = CentroidState.ensureCached(queries)
-    val probed = CentroidState.ensureCached(qcached.select(col(qidCol),
-      explode(CentroidState.nearestCells(col(qvecCol), coarse, nProbe))
-        .as("cell"),
-      ProductQuantizer.tablesExpr(col(qvecCol), cb, m, dim).as("tables")))
+    val probed = CentroidState.ensureCached(
+      probe(qcached, qidCol, qvecCol, q, nProbe))
     val wanted = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val corpus = graft.sources.Tombstones.filterLive(spark, s"$dir/cells",
       IvfAnn.readCells(spark, s"$dir/cells", wanted), idCol)
-    val scored = IvfAnn.probeSide(probed, qcached.count() * nProbe,
-        bytesPerRow = m.toLong * cb.head.size * 8L + 64L)
-      .join(corpus, "cell")
-      .filter(col(qidCol) =!= col(idCol))
-      .select(col(qidCol), col(idCol).as("neighbor"),
-        aggregate(
-          zip_with(col("codes"), col("tables"), (c, t) => element_at(t, c)),
-          lit(0.0), (acc, x) => acc + x).as("approx_dist"))
-    Dedup.topKPerKey(scored, Seq(qidCol),
-      Seq(col("approx_dist").asc, col("neighbor").asc), k)
+    topK(score(probed, qcached.count() * nProbe, q, q.cb.head.size, corpus,
+      qidCol, idCol), qidCol, k)
   }
+
+  /** [[searchIndex]] + EXACT re-rank — the standard production
+    * retrieval config (FAISS index + refinement): the codes-only index
+    * scan prunes the corpus to a `refine·k` shortlist per query, and
+    * ONLY those rows' full float vectors are fetched from `corpus` and
+    * re-scored with the true squared L2 ([[ProductQuantizer.rerank]]),
+    * so quantization error affects which candidates make the shortlist
+    * but never their final order.
+    * @return (qid, neighbor, dist2) — exact squared L2
+    */
+  def searchIndexRefined(spark: SparkSession, dir: String,
+      idCol: String, vecCol: String, corpus: DataFrame,
+      queries: DataFrame, qidCol: String, qvecCol: String,
+      k: Int, nProbe: Int, refine: Int = 4): DataFrame =
+    ProductQuantizer.rerank(
+      searchIndex(spark, dir, idCol, queries, qidCol, qvecCol,
+        k = refine * k, nProbe = nProbe),
+      corpus, idCol, vecCol, queries, qidCol, qvecCol, k)
 
   /** nProbe-vs-recall calibration for the residual-encoded composed
     * search — [[IvfAnn.recallSweep]]'s instrument for IVFADC: on the
@@ -441,28 +309,17 @@ object IvfPq {
       nQueries: Int, k: Int, clusters: Int, nProbes: Seq[Int],
       m: Int, dim: Int, codes: Int,
       coarseIters: Int = 1, pqIters: Int = 1): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    import graft.functions.Vectors
     val spark = corpus0.sparkSession
+    val (q, encoded) = train(corpus0, idCol, vecCol, clusters, m, dim,
+      codes, coarseIters, pqIters, residual = true)
     val corpus = CentroidState.ensureCached(corpus0)
-    val coarse = IvfAnn.lloyd(corpus, idCol, vecCol, clusters, coarseIters)
-    val cmap = CentroidState.cvecMap(coarse)
-    val resid = CentroidState.ensureCached(
-      residualRows(corpus, idCol, vecCol, coarse))
-    val cb = ProductQuantizer.lloyd(resid, idCol, "rv", m, dim, codes,
-      pqIters)
-    val encoded = resid.select(col(idCol), col("cell"),
-      ProductQuantizer.codesExpr(col("rv"), cb, m, dim).as("codes"))
     val queries = CentroidState.ensureCached(
       corpus.filter(col(idCol) < nQueries)
         .select(col(idCol).as("__qid"), col(vecCol).as("__qv")))
     // exact squared-L2 ground truth over the bounded sample
-    val d2 = Vectors.dot(col("__qv"), col("__qv")) +
-      Vectors.dot(col(vecCol), col(vecCol)) -
-      lit(2.0) * Vectors.dot(col("__qv"), col(vecCol))
     val bf = broadcast(queries).join(corpus, col("__qid") =!= col(idCol))
       .select(col("__qid").as("qid"), col(idCol).as("neighbor"),
-        d2.as("d2"))
+        ProductQuantizer.dist2(col("__qv"), col(vecCol)).as("d2"))
     val gt = Dedup.topKPerKey(bf, Seq("qid"),
         Seq(col("d2").asc, col("neighbor").asc), k)
       .select(col("qid"), col("neighbor"))
@@ -471,23 +328,10 @@ object IvfPq {
     // every narrower nProbe reuse it as a filter (q89's shape, with
     // per-(query, probed-cell) residual ADC tables)
     val maxProbe = nProbes.max
-    val probed = queries
-      .select(col("__qid"), col("__qv"),
-        posexplode(CentroidState.nearestCells(col("__qv"), coarse, maxProbe))
-          .as(Seq("__pos", "cell")))
-      .select(col("__qid"), (col("__pos") + 1).as("probe_rank"), col("cell"),
-        ProductQuantizer.tablesExpr(
-          zip_with(col("__qv"), element_at(cmap, col("cell")),
-            (a, b) => a - b), cb, m, dim).as("tables"))
-    val cand = IvfAnn.probeSide(probed, queries.count() * maxProbe,
-        bytesPerRow = m.toLong * codes * 8L + 64L)
-      .join(encoded, "cell")
-      .filter(col("__qid") =!= col(idCol))
-      .select(col("__qid").as("qid"), col("probe_rank"),
-        col(idCol).as("neighbor"),
-        aggregate(
-          zip_with(col("codes"), col("tables"), (c, t) => element_at(t, c)),
-          lit(0.0), (acc, x) => acc + x).as("approx_dist"))
+    val cand = score(probe(queries, "__qid", "__qv", q, maxProbe,
+        ranked = true), queries.count() * maxProbe, q, codes, encoded,
+        "__qid", idCol)
+      .withColumnRenamed("__qid", "qid")
     val sweepDf = spark.createDataFrame(nProbes.map(Tuple1(_)))
       .toDF("n_probe")
     val hits = Dedup.topKPerKey(
@@ -526,14 +370,13 @@ object IvfPq {
 
   /** Drift-GATED retrain of the persisted composed index — the
     * decision leg completing IvfPq's maintenance loop to parity with
-    * plain IVF ([[appendIndexResidual]] absorbs, [[IvfAnn.compactCells]]
+    * plain IVF ([[appendIndex]] absorbs, [[IvfAnn.compactCells]]
     * defragments `dir/cells`, [[driftReport]] measures, THIS acts):
     * when the corpus-wide drift ratio exceeds `tau`, BOTH quantizers
     * retrain on the full LIVE tagged corpus (pending tombstones apply
     * physically first; mid-retrain markers are carried) and the ENTIRE
     * index directory (cells + coarse + codebook + encoding flag)
-    * rebuilds under the dir's existing encoding — residual or global,
-    * read from the `_residual_codes` flag — through
+    * rebuilds under the dir's stored encoding through
     * [[graft.sources.Tables.replace]], so quantizers and codes can
     * never skew and the layout stays addressable throughout. Below
     * `tau` nothing is touched. The expensive path (two trainings + a
@@ -574,12 +417,8 @@ object IvfPq {
       val listed = full.inputFiles // before the build caches `full`
       graft.sources.Tables.replace(spark, dir, listed,
           Seq(s"cells/${graft.sources.Tombstones.Dir}")) { staged =>
-        if (residual)
-          buildResidual(full, idCol, vecCol, staged, clusters, m, dim,
-            codes, coarseIters, pqIters)
-        else
-          buildGlobal(full, idCol, vecCol, staged, clusters, m, dim, codes,
-            coarseIters, pqIters)
+        build(full, idCol, vecCol, staged, clusters, m, dim, codes,
+          coarseIters, pqIters, residual)
         midRetrain()
       }
       true

@@ -126,16 +126,9 @@ object LshIndex {
     * steady-state probe layout, see [[compactBucketed]].
     */
   def compact(spark: SparkSession, path: String, idCol: String,
-      targetFiles: Int = 1): Unit = {
-    val base = spark.read.parquet(path)
-    require(base.columns.contains(idCol),
-      s"id column '$idCol' not in index schema ${base.columns.mkString(",")}")
-    // pending tombstones apply physically here
-    val live = graft.sources.Tombstones.filterLive(spark, path, base, idCol)
-    Tables.replace(spark, path, live.inputFiles,
-        Seq(graft.sources.Tombstones.Dir))(
-      live.repartition(targetFiles).write.mode("overwrite").parquet(_))
-  }
+      targetFiles: Int = 1): Unit =
+    graft.sources.Tombstones.compact(spark, path, idCol)((live, out) =>
+      live.repartition(targetFiles).write.mode("overwrite").parquet(out))
 
   /** Compact the index into a catalog table BUCKETED by `(band, bkt)`
     * — the steady-state serving layout at 100 TB: the admission probe

@@ -160,16 +160,6 @@ object ProductQuantizer {
       codesExpr(col(vecCol), collectCodebook(codebook, m), m, dim)
         .as("codes"))
 
-  /** Per-query ADC tables: (qid, tables) with `tables[m][cell] =
-    * ||q_m − c||²` as an array (over subspaces, in order) of maps —
-    * also a pure projection.
-    */
-  def distTables(queries: DataFrame, qidCol: String, qvecCol: String,
-      codebook: DataFrame, m: Int, dim: Int): DataFrame =
-    queries.select(col(qidCol),
-      tablesExpr(col(qvecCol), collectCodebook(codebook, m), m, dim)
-        .as("tables"))
-
   /** End-to-end PQ search: top-`k` neighbours per query by approximate
     * (ADC) squared L2 distance. @return (qid, neighbor, approx_dist)
     */
@@ -186,20 +176,16 @@ object ProductQuantizer {
     val scored = encoded.crossJoin(broadcast(tables))
       .filter(col(qidCol) =!= col(idCol))
       .select(col(qidCol), col(idCol).as("neighbor"),
-        aggregate(
-          zip_with(col("codes"), col("tables"), (c, t) => element_at(t, c)),
-          lit(0.0), (acc, x) => acc + x).as("approx_dist"))
+        adc(col("codes"), col("tables")).as("approx_dist"))
     Dedup.topKPerKey(scored, Seq(qidCol),
       Seq(col("approx_dist").asc, col("neighbor").asc), k)
   }
 
   /** PQ shortlist → EXACT re-rank — the production composition: ADC
-    * over codes prunes the corpus to a `shortlist` of `refine · k`
-    * candidates per query (codes-only scan, zero shuffle), then only
-    * the shortlist's FULL vectors are fetched (a semi-join against the
-    * corpus — at 10 B vectors this is the only stage touching float
-    * data) and re-scored exactly. Approximation error then affects only
-    * which candidates make the shortlist, not their final order.
+    * over codes prunes the corpus to `refine · k` candidates per query
+    * (codes-only scan, zero shuffle), then [[rerank]] re-scores only
+    * those exactly. Approximation error then affects only which
+    * candidates make the shortlist, not their final order.
     * @return (qid, neighbor, dist2) — exact squared L2
     */
   def searchRefined(corpus0: DataFrame, idCol: String, vecCol: String,
@@ -209,13 +195,34 @@ object ProductQuantizer {
     val corpus = CentroidState.ensureCached(corpus0)
     val shortlist = search(corpus, idCol, vecCol, queries, qidCol, qvecCol,
       k = refine * k, m = m, dim = dim, codes = codes, iters = iters)
+    rerank(shortlist, corpus, idCol, vecCol, queries, qidCol, qvecCol, k)
+  }
+
+  /** ADC approximate squared L2 of a row's `codes` under a query's
+    * `tables`: the `m` table lookups summed left to right.
+    */
+  private[operators] def adc(codes: Column, tables: Column): Column =
+    aggregate(zip_with(codes, tables, (c, t) => element_at(t, c)),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** Exact squared L2 `q·q + v·v − 2·q·v`. */
+  private[operators] def dist2(q: Column, v: Column): Column =
+    Vectors.dot(q, q) + Vectors.dot(v, v) - lit(2.0) * Vectors.dot(q, v)
+
+  /** Exact re-rank of an ADC `shortlist` `(qid, neighbor, …)`: only the
+    * shortlisted rows' FULL vectors are fetched from `corpus` (a join
+    * moving `shortlist` rows — at 10 B vectors the only stage touching
+    * float data) and re-scored with [[dist2]], keeping the top `k`.
+    * @return (qid, neighbor, dist2)
+    */
+  private[operators] def rerank(shortlist: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, queries: DataFrame, qidCol: String,
+      qvecCol: String, k: Int): DataFrame = {
     val exact = shortlist
       .join(corpus.select(col(idCol).as("neighbor"), col(vecCol)), "neighbor")
       .join(queries.select(col(qidCol), col(qvecCol)), qidCol)
       .select(col(qidCol), col("neighbor"),
-        (Vectors.dot(col(qvecCol), col(qvecCol))
-          + Vectors.dot(col(vecCol), col(vecCol))
-          - lit(2.0) * Vectors.dot(col(qvecCol), col(vecCol))).as("dist2"))
+        dist2(col(qvecCol), col(vecCol)).as("dist2"))
     Dedup.topKPerKey(exact, Seq(qidCol),
       Seq(col("dist2").asc, col("neighbor").asc), k)
   }

@@ -114,13 +114,7 @@ object SimHashIndex {
     * [[LshIndex.compact]] for this family.
     */
   def compact(spark: SparkSession, path: String, idCol: String,
-      targetFiles: Int = 1): Unit = {
-    val base = spark.read.parquet(path)
-    require(base.columns.contains(idCol),
-      s"id column '$idCol' not in index schema ${base.columns.mkString(",")}")
-    val live = graft.sources.Tombstones.filterLive(spark, path, base, idCol)
-    Tables.replace(spark, path, live.inputFiles,
-        Seq(graft.sources.Tombstones.Dir))(
-      live.repartition(targetFiles).write.mode("overwrite").parquet(_))
-  }
+      targetFiles: Int = 1): Unit =
+    graft.sources.Tombstones.compact(spark, path, idCol)((live, out) =>
+      live.repartition(targetFiles).write.mode("overwrite").parquet(out))
 }

@@ -124,9 +124,6 @@ object Sketches {
   def cmsCol(h: Column, j: Int, w: Int): Column =
     ((lit(CmsA(j)) * h + CmsB(j)) % P % w).cast("int")
 
-  def cmsColSql(e: String, j: Int, w: Int): String =
-    s"CAST(((${CmsA(j)} * ($e) + ${CmsB(j)}) % $P) % $w AS INT)"
-
   /** Build a count-min sketch over a column of hashes: (j, c, cnt) —
     * `CmsRows · w` counters, each a plain SUM, so the sketch is exactly
     * order- and partition-invariant (unlike comparators like

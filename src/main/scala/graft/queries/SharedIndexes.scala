@@ -85,7 +85,7 @@ object SharedIndexes {
   def ivfCentroids(spark: SparkSession, idx: String): DataFrame =
     spark.read.parquet(s"$idx/centroids")
 
-  /** Residual IVFADC index ([[graft.operators.IvfPq.writeIndexResidual]])
+  /** Residual IVFADC index ([[graft.operators.IvfPq.writeIndex]])
     * over an embeddings slice. Consumers: q144/q146/q147/q148 v0/q150
     * (`base`), q148 v1 (`full`).
     */
@@ -95,9 +95,9 @@ object SharedIndexes {
     graft.Scratch.sharedBase(
       s"ivfpqres:$dir:$slice:c=$clusters:m=$m:d=$dim:k=$codes" +
         s":ci=$coarseIters:pi=$pqIters") { d =>
-      graft.operators.IvfPq.writeIndexResidual(embSlice(spark, dir, slice),
+      graft.operators.IvfPq.writeIndex(embSlice(spark, dir, slice),
         "vec_id", "embedding", s"$d/idx", clusters, m, dim, codes,
-        coarseIters, pqIters)
+        coarseIters, pqIters, residual = true)
     } + "/idx"
 
   /** Non-residual IVF+PQ index ([[graft.operators.IvfPq.writeIndex]])
@@ -126,7 +126,7 @@ object SharedIndexes {
 
   /** [[ivfPqResidual]]'s `base` generation with the `%5 === 0` delta
     * already absorbed through
-    * [[graft.operators.IvfPq.appendIndexResidual]] — the post-append
+    * [[graft.operators.IvfPq.appendIndex]] — the post-append
     * serving state q144 and q146 probe read-only.
     */
   def ivfPqResidualBaseDelta(spark: SparkSession, dir: String,
@@ -137,7 +137,7 @@ object SharedIndexes {
         s":ci=$coarseIters:pi=$pqIters") { d =>
       graft.Scratch.copyDir(ivfPqResidual(spark, dir, "base", clusters, m,
         dim, codes, coarseIters, pqIters), s"$d/idx")
-      graft.operators.IvfPq.appendIndexResidual(
+      graft.operators.IvfPq.appendIndex(
         embeddings(spark, dir).filter(col("vec_id") % 5 === 0),
         "vec_id", "embedding", s"$d/idx")
     } + "/idx"

@@ -1570,7 +1570,7 @@ object SimilarityQueries {
   }
 
   /** Residual-encoded IVF+PQ
-    * ([[graft.operators.IvfPq.searchResidual]]) — the FAISS `IVFx,PQy`
+    * ([[graft.operators.IvfPq.search]], `residual = true`) — the FAISS `IVFx,PQy`
     * default (IVFADC): PQ codebooks train on residuals `v − c(cell)`,
     * spending code entropy on within-cell displacement instead of the
     * between-cell variance the coarse quantizer already explains; each
@@ -1592,9 +1592,10 @@ object SimilarityQueries {
       val queries = corpus.filter(col("vec_id") < nQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.IvfPq
-        .searchResidual(corpus, "vec_id", "embedding", queries, "qid", "qv",
+        .search(corpus, "vec_id", "embedding", queries, "qid", "qv",
           k = k, clusters = clusters, nProbe = nProbe, m = m, dim = dim,
-          codes = codes, coarseIters = coarseIters, pqIters = pqIters)
+          codes = codes, coarseIters = coarseIters, pqIters = pqIters,
+          residual = true)
         .select(col("qid"), col("neighbor"),
           round(col("approx_dist") + lit(1e-9), 4).as("approx_dist"))
         .orderBy(col("qid"), col("approx_dist"), col("neighbor"))
@@ -1695,16 +1696,16 @@ object SimilarityQueries {
   /** The persisted RESIDUAL index with O(delta) maintenance — q138's
     * lifecycle applied to q142's encoding, i.e. the complete production
     * ANN artifact (a maintained on-disk IVFADC index):
-    * [[graft.operators.IvfPq.writeIndexResidual]] trains both
-    * quantizers on the BASE corpus and persists residual codes
-    * cell-partitioned; [[graft.operators.IvfPq.appendIndexResidual]]
-    * routes and residual-encodes the later delta through the STORED
-    * state; [[graft.operators.IvfPq.searchIndexResidual]] reads only
-    * probed cells' codes and scores with per-cell residual ADC tables.
-    * An `_residual_codes` flag makes the encoding part of the layout
-    * contract — mixing the search entry points fails fast instead of
-    * silently returning garbage. Oracle = the q142 residual chain
-    * under the q138 base/full split.
+    * [[graft.operators.IvfPq.writeIndex]] (`residual = true`) trains
+    * both quantizers on the BASE corpus and persists residual codes
+    * cell-partitioned; [[graft.operators.IvfPq.appendIndex]] routes and
+    * residual-encodes the later delta through the STORED state;
+    * [[graft.operators.IvfPq.searchIndex]] reads only probed cells'
+    * codes and scores with per-cell residual ADC tables. The
+    * `_residual_codes` flag makes the encoding part of the layout, so
+    * append and search always follow the encoding the index was written
+    * with. Oracle = the q142 residual chain under the q138 base/full
+    * split.
     */
   val ivfPqResidualIndex: QuerySpec = {
     val (clusters, nProbe, coarseIters) = (16, 4, 1)
@@ -1721,7 +1722,7 @@ object SimilarityQueries {
       val queries = Tables.load(spark, dir, "embeddings")
         .filter(col("vec_id") < nQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      graft.operators.IvfPq.searchIndexResidual(spark, idx, "vec_id",
+      graft.operators.IvfPq.searchIndex(spark, idx, "vec_id",
           queries, "qid", "qv", k = k, nProbe = nProbe)
         .select(col("qid"), col("neighbor"),
           round(col("approx_dist") + lit(1e-9), 4).as("approx_dist"))
@@ -1731,7 +1732,7 @@ object SimilarityQueries {
 
   /** The production retrieval composition served end-to-end from the
     * persisted residual index
-    * ([[graft.operators.IvfPq.searchIndexResidualRefined]]): the
+    * ([[graft.operators.IvfPq.searchIndexRefined]]): the
     * codes-only index scan (q144's write → append → probe chain) prunes
     * to a `refine·k` shortlist per query, and only the shortlist's full
     * float vectors are fetched and re-scored with the true squared L2 —
@@ -1773,7 +1774,7 @@ object SimilarityQueries {
         clusters, m, dim, codes, coarseIters, pqIters)
       val queries = all0.filter(col("vec_id") < nQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      graft.operators.IvfPq.searchIndexResidualRefined(spark, idx,
+      graft.operators.IvfPq.searchIndexRefined(spark, idx,
           "vec_id", "embedding", all0, queries, "qid", "qv",
           k = k, nProbe = nProbe, refine = refine)
         .select(col("qid"), col("neighbor"),
@@ -1787,8 +1788,8 @@ object SimilarityQueries {
     * parity leg: q121's staleness scenario run against q144's artifact.
     * The residual (IVFADC) index is built on the base corpus; a
     * +0.5-shifted delta (appended embeddings from a new encoder
-    * checkpoint) lands through [[graft.operators.IvfPq
-    * .appendIndexResidual]] WITHOUT retraining; the drift ratio — read
+    * checkpoint) lands through [[graft.operators.IvfPq.appendIndex]]
+    * WITHOUT retraining; the drift ratio — read
     * from the quantizer STORED IN the index (no caller-held state) —
     * blows through `tau = 3`, so BOTH quantizers retrain on the full
     * corpus and the whole index directory rebuilds through the staged
@@ -1827,8 +1828,8 @@ object SimilarityQueries {
       val idx = graft.Scratch.cloneBase(SharedIndexes.ivfPqResidual(
         spark, dir, "base", clusters, m, dim, codes, coarseIters, pqIters),
         "q147_ivfpq_res")
-      graft.operators.IvfPq.appendIndexResidual(delta, "vec_id",
-        "embedding", idx)
+      graft.operators.IvfPq.appendIndex(delta, "vec_id", "embedding",
+        idx)
       val tagged = graft.CacheScope.cache(
         base.withColumn("gen", lit("base"))
           .unionByName(delta.withColumn("gen", lit("delta"))))
@@ -1840,7 +1841,7 @@ object SimilarityQueries {
       require(retrained, "drift gate did not fire on a +0.5-shifted delta")
       val queries = tagged.filter(col("vec_id") < nQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      graft.operators.IvfPq.searchIndexResidual(spark, idx, "vec_id",
+      graft.operators.IvfPq.searchIndex(spark, idx, "vec_id",
           queries, "qid", "qv", k = k, nProbe = nProbe)
         .select(col("qid"), col("neighbor"),
           round(col("approx_dist") + lit(1e-9), 4).as("approx_dist"))
@@ -1892,7 +1893,7 @@ object SimilarityQueries {
       val v0 = writeV("base")
       val v1 = writeV("full")
       def searchV(v: Long, corpus: org.apache.spark.sql.DataFrame) =
-        graft.operators.IvfPq.searchIndexResidual(spark,
+        graft.operators.IvfPq.searchIndex(spark,
             Snapshots.versionPath(root, v), "vec_id",
             corpus.filter(col("vec_id") < nQ)
               .select(col("vec_id").as("qid"), col("embedding").as("qv")),
@@ -1916,8 +1917,8 @@ object SimilarityQueries {
     * for IVF+PQ): the delta generation arrives as three AvailableNow
     * micro-batches (`maxFilesPerTrigger=1`) and each `foreachBatch`
     * routes and residual-encodes its rows through the STORED quantizers
-    * ([[graft.operators.IvfPq.appendIndexResidual]]) — per-micro-batch
-    * O(batch) appends, encoding guard included, never a rewrite or
+    * ([[graft.operators.IvfPq.appendIndex]], encoding read from the
+    * index) — per-micro-batch O(batch) appends, never a rewrite or
     * retrain. Appends commute (each lands new code files under its
     * cells), so the index's end state is identical however the delta
     * was sliced, and the SAME oracle as q144 gates the streamed path: a
@@ -1950,7 +1951,7 @@ object SimilarityQueries {
         .option("maxFilesPerTrigger", 1).parquet(deltaDir)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.operators.IvfPq.appendIndexResidual(batch, "vec_id",
+          graft.operators.IvfPq.appendIndex(batch, "vec_id",
             "embedding", idx)
           ()
         }
@@ -1959,7 +1960,7 @@ object SimilarityQueries {
       q.awaitTermination()
       val queries = all0.filter(col("vec_id") < nQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      graft.operators.IvfPq.searchIndexResidual(spark, idx, "vec_id",
+      graft.operators.IvfPq.searchIndex(spark, idx, "vec_id",
           queries, "qid", "qv", k = k, nProbe = nProbe)
         .select(col("qid"), col("neighbor"),
           round(col("approx_dist") + lit(1e-9), 4).as("approx_dist"))

@@ -8,21 +8,26 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * implied by its Delta storage, `VACUUM` at `TABLE OPTIMIZATION.py:136-144`)
   * re-expressed over vanilla Parquet.
   *
-  * Layout: each commit is a full snapshot directory `table/_v=N` plus a
-  * commit marker file `table/_commit=N`, created put-if-absent once the
-  * snapshot is fully written; the latest version is the highest marked
-  * one. This is MVCC for the single-writer / many-reader regime the
-  * reference runs in (`Pipeline.json:22` `max_concurrent_runs: 1`):
+  * Layout: each commit attempt first claims its version with a
+  * put-if-absent `table/_claim=N` file, then writes the full snapshot
+  * directory `table/_v=N`, then creates the commit marker file
+  * `table/_commit=N`, also put-if-absent; the latest version is the
+  * highest marked one. This is MVCC for the single-writer / many-reader
+  * regime the reference runs in (`Pipeline.json:22`
+  * `max_concurrent_runs: 1`):
   *
   *  - readers resolve the latest marker once and then scan an immutable
   *    directory, so a concurrent overwrite NEVER disturbs a running read
   *    (the read-while-overwrite hazard [[Tables.overwrite]] solves with a
   *    swap simply does not exist here), and there is no instant at which
   *    a committed table shows no version;
-  *  - a crash between snapshot write and marker create leaves an orphan
-  *    `_v=N` directory that no reader can observe; [[vacuum]] collects it;
-  *  - two committers racing to the same version cannot both win: the
-  *    loser's marker create fails loudly;
+  *  - a crash between claim and marker create leaves an unmarked
+  *    attempt that no reader can observe; [[vacuum]] collects it;
+  *  - an attempt writes only into the version it claimed, and the next
+  *    version is one past every claim, snapshot and marker on disk, so
+  *    no attempt ever writes into another's directory: of two committers
+  *    that computed the same version, the loser's claim fails loudly
+  *    before its writer runs;
   *  - time travel is `readVersion(path, n)`; retention is
   *    `vacuum(path, keepLast)`.
   *
@@ -36,6 +41,7 @@ object Snapshots {
 
   private val CPrefix = "_commit="
   private val VPrefix = "_v="
+  private val KPrefix = "_claim="
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -45,27 +51,31 @@ object Snapshots {
   private[sources] def commitMarker(path: String, v: Long) =
     new Path(s"$path/$CPrefix$v")
 
-  /** Version numbers of the root entries named `prefix<N>`, sorted. */
+  private def claim(path: String, v: Long) = new Path(s"$path/$KPrefix$v")
+
+  /** Distinct version numbers of the root entries named `<prefix>N`
+    * for any of `prefixes`, sorted.
+    */
   private def numbered(spark: SparkSession, path: String,
-      prefix: String): Seq[Long] = {
+      prefixes: String*): Seq[Long] = {
     val f = fs(spark, path)
     val root = new Path(path)
     if (!f.exists(root)) Seq.empty
     else
       f.listStatus(root).toSeq
         .map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(_.drop(prefix.length).toLong)
-        .sorted
+        .flatMap(n =>
+          prefixes.find(n.startsWith).map(p => n.drop(p.length).toLong))
+        .distinct.sorted
   }
+
+  /** Committed versions, oldest first. */
+  private def marked(spark: SparkSession, path: String): Seq[Long] =
+    numbered(spark, path, CPrefix)
 
   /** Latest committed version, or None for a table with no commits. */
   def latestVersion(spark: SparkSession, path: String): Option[Long] =
-    numbered(spark, path, CPrefix).lastOption
-
-  /** All snapshot directories present on disk (committed or orphaned). */
-  private def versionsOnDisk(spark: SparkSession, path: String): Seq[Long] =
-    numbered(spark, path, VPrefix)
+    marked(spark, path).lastOption
 
   /** Commit `df` as the next version. Returns the new version number.
     * The snapshot is fully materialized before its commit marker exists,
@@ -89,13 +99,13 @@ object Snapshots {
     */
   def commit(spark: SparkSession, path: String)(writer: String => Unit): Long = {
     val f = fs(spark, path)
-    val next = latestVersion(spark, path).getOrElse(-1L) + 1
-    val dir = versionDir(path, next)
-    if (f.exists(dir))
-      throw new java.io.IOException(s"version dir already exists: $dir")
-    writer(dir.toString)
-    // put-if-absent: a committer that raced this one to `next` and won
-    // makes this create throw, never a silent second commit
+    val next = numbered(spark, path, CPrefix, VPrefix, KPrefix)
+      .lastOption.getOrElse(-1L) + 1
+    // put-if-absent claims: a committer that raced this one to `next`
+    // and won makes these creates throw, never a shared directory or a
+    // silent second commit
+    f.create(claim(path, next), false).close()
+    writer(versionDir(path, next).toString)
     f.create(commitMarker(path, next), false).close()
     next
   }
@@ -124,9 +134,9 @@ object Snapshots {
   def history(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val f = fs(spark, path)
-    val latest = latestVersion(spark, path)
-    val rows = versionsOnDisk(spark, path)
-      .filter(v => latest.exists(v <= _)) // orphans past the latest are invisible
+    val versions = marked(spark, path)
+    val latest = versions.lastOption
+    val rows = versions
       .map { v =>
         val dir = versionDir(path, v)
         val files = f.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
@@ -163,20 +173,23 @@ object Snapshots {
         from.exceptAll(to).withColumn("_change_type", lit("delete")))
   }
 
-  /** `VACUUM` analog: keep the newest `keepLast` committed versions,
-    * delete everything older, plus any orphaned (uncommitted) snapshot
-    * directories newer than the latest. The latest version is never
-    * deleted; `keepLast` is clamped to >= 1.
+  /** `VACUUM` analog: keep the newest `keepLast` committed versions and
+    * delete every other version on disk, committed or not — older
+    * versions and unmarked (crashed or failed) attempts alike. The
+    * latest version is never deleted; `keepLast` is clamped to >= 1.
+    * Run it with no commit in flight: an attempt still writing is
+    * unmarked too.
     */
   def vacuum(spark: SparkSession, path: String, keepLast: Int): Seq[Long] = {
     val f = fs(spark, path)
-    val latest = latestVersion(spark, path).getOrElse(return Seq.empty)
-    val keep = math.max(keepLast, 1)
-    val victims = versionsOnDisk(spark, path).filter(v =>
-      v <= latest - keep || v > latest)
+    val committed = marked(spark, path)
+    if (committed.isEmpty) return Seq.empty
+    val kept = committed.takeRight(math.max(keepLast, 1)).toSet
+    val victims = numbered(spark, path, VPrefix, KPrefix).filterNot(kept)
     victims.foreach { v =>
       f.delete(commitMarker(path, v), false)
       f.delete(versionDir(path, v), true)
+      f.delete(claim(path, v), false)
     }
     victims
   }

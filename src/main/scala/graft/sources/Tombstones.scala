@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * hidden-name exemption and emits the "All paths were ignored" WARN,
   * the [[graft.layout.StatsManifest]] rationale). Serving layers
   * anti-join the marker set at probe time (broadcast while the marker
-  * set is small — see [[MaxBroadcastBytes]]); compaction applies
-  * markers physically, and its publish swap replaces the whole
+  * set is small — see [[MaxBroadcastBytes]]); compaction ([[compact]])
+  * applies markers physically, and its publish swap replaces the whole
   * directory, clearing the markers with the old layout. The delete
   * path never rewrites data.
   *
@@ -107,6 +107,22 @@ object Tombstones {
         }
       }
     }
+
+  /** Apply the pending markers physically: the layout at `path` minus
+    * its tombstoned rows, laid out by `write(live, stagedDir)` and
+    * swapped in through [[Tables.replace]] (markers written meanwhile are
+    * carried). `idCol` is explicit — inferring it from column position
+    * would silently anti-join the markers against the wrong column on a
+    * reordered layout, permanently losing the deletes.
+    */
+  def compact(spark: SparkSession, path: String, idCol: String)(
+      write: (DataFrame, String) => Unit): Unit = {
+    val base = spark.read.parquet(path)
+    require(base.columns.contains(idCol),
+      s"id column '$idCol' not in layout schema ${base.columns.mkString(",")}")
+    val live = filterLive(spark, path, base, idCol)
+    Tables.replace(spark, path, live.inputFiles, Seq(Dir))(write(live, _))
+  }
 
   /** `df` minus tombstoned rows: an anti-join on `idCol` against the
     * marker set — broadcast while the markers are small, planner's

@@ -140,9 +140,9 @@ class IvfPqSpec extends SparkTestBase {
     val s = synth(480)
     val q = s.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val out = IvfPq.searchResidual(s, "vec_id", "embedding", q, "qid", "qv",
+    val out = IvfPq.search(s, "vec_id", "embedding", q, "qid", "qv",
         k = k, clusters = 16, nProbe = 2, m = M, dim = Dim, codes = 16,
-        coarseIters = 2, pqIters = 1)
+        coarseIters = 2, pqIters = 1, residual = true)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.length === 8 * k)
     val sameCluster = out.count { case (qid, nb) => qid % 16 == nb % 16 }
@@ -161,51 +161,45 @@ class IvfPqSpec extends SparkTestBase {
     val global = dists(IvfPq.search(s, "vec_id", "embedding", q, "qid", "qv",
       k = 3, clusters = 16, nProbe = 2, m = M, dim = Dim, codes = 16,
       coarseIters = 2, pqIters = 1))
-    val residual = dists(IvfPq.searchResidual(s, "vec_id", "embedding",
+    val residual = dists(IvfPq.search(s, "vec_id", "embedding",
       q, "qid", "qv", k = 3, clusters = 16, nProbe = 2, m = M, dim = Dim,
-      codes = 16, coarseIters = 2, pqIters = 1))
+      codes = 16, coarseIters = 2, pqIters = 1, residual = true))
     assert(global.nonEmpty && residual.nonEmpty)
     assert(global !== residual, "residual encoding produced identical " +
       "ADC distances to global-codebook encoding")
   }
 
-  test("persisted residual index reproduces in-memory residual search; " +
-      "mixed entry points fail fast") {
-    val idx = graft.Scratch.fresh("ivfpq_res_idx") + "/idx"
-    IvfPq.writeIndexResidual(corpus, "vec_id", "embedding", idx,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        math.rint(r.getDouble(2) * 1e6) / 1e6)).toSet
+  // rounded (qid, neighbor, approx_dist) rows of a search
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      math.rint(r.getDouble(2) * 1e6) / 1e6)).toSet
+
+  private def inMemory(residual: Boolean) =
+    rows(IvfPq.search(corpus, "vec_id", "embedding", queries, "qid", "qv",
+      k = 3, clusters = 16, nProbe = 4, m = M, dim = Dim, codes = 16,
+      residual = residual))
+
+  private def persisted(idx: String) =
+    rows(IvfPq.searchIndex(spark, idx, "vec_id", queries, "qid", "qv",
+      k = 3, nProbe = 4))
+
+  test("persisted index reproduces in-memory search under either encoding") {
     // training is deterministic, so the persisted path must equal the
-    // in-memory one bit-for-bit (same quantizers, same codes)
-    val persisted = rows(IvfPq.searchIndexResidual(spark, idx, "vec_id",
-      queries, "qid", "qv", k = 3, nProbe = 4))
-    val inMemory = rows(IvfPq.searchResidual(corpus, "vec_id", "embedding",
-      queries, "qid", "qv", k = 3, clusters = 16, nProbe = 4,
-      m = M, dim = Dim, codes = 16))
-    assert(persisted === inMemory)
-    // encoding is part of the layout contract: the global-codebook
-    // search must refuse a residual index (and vice versa), not return
-    // silently wrong distances
-    intercept[IllegalArgumentException] {
-      IvfPq.searchIndex(spark, idx, "vec_id", queries, "qid", "qv",
-        k = 3, nProbe = 4)
-    }
-    val globalIdx = graft.Scratch.fresh("ivfpq_glob_idx") + "/idx"
-    IvfPq.writeIndex(corpus, "vec_id", "embedding", globalIdx,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    intercept[IllegalArgumentException] {
-      IvfPq.searchIndexResidual(spark, globalIdx, "vec_id",
-        queries, "qid", "qv", k = 3, nProbe = 4)
+    // in-memory one bit-for-bit (same quantizers, same codes), and
+    // searchIndex must score each layout under the encoding it stores
+    for (residual <- Seq(true, false)) {
+      val idx = graft.Scratch.fresh(s"ivfpq_idx_$residual") + "/idx"
+      IvfPq.writeIndex(corpus, "vec_id", "embedding", idx,
+        clusters = 16, m = M, dim = Dim, codes = 16, residual = residual)
+      assert(persisted(idx) === inMemory(residual), s"residual=$residual")
     }
   }
 
   test("refined search over the residual index re-scores with TRUE L2") {
     val idx = graft.Scratch.fresh("ivfpq_refined") + "/idx"
-    IvfPq.writeIndexResidual(corpus, "vec_id", "embedding", idx,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    val out = IvfPq.searchIndexResidualRefined(spark, idx, "vec_id",
+    IvfPq.writeIndex(corpus, "vec_id", "embedding", idx,
+      clusters = 16, m = M, dim = Dim, codes = 16, residual = true)
+    val out = IvfPq.searchIndexRefined(spark, idx, "vec_id",
         "embedding", corpus, queries, "qid", "qv",
         k = 3, nProbe = 4, refine = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -224,41 +218,54 @@ class IvfPqSpec extends SparkTestBase {
 
   test("overwriting a residual dir with writeIndex clears the stale flag") {
     val idx = graft.Scratch.fresh("ivfpq_flagswap") + "/idx"
-    IvfPq.writeIndexResidual(corpus, "vec_id", "embedding", idx,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    // rebuild the SAME dir with global codebooks: the leftover
-    // _residual_codes flag must not survive — it would make searchIndex
-    // reject a valid index and searchIndexResidual silently accept
-    // global codes (round-9 advice)
+    IvfPq.writeIndex(corpus, "vec_id", "embedding", idx,
+      clusters = 16, m = M, dim = Dim, codes = 16, residual = true)
+    // rebuild the SAME dir with global codebooks: a leftover
+    // _residual_codes flag would make searchIndex score the global codes
+    // with residual tables
     IvfPq.writeIndex(corpus, "vec_id", "embedding", idx,
       clusters = 16, m = M, dim = Dim, codes = 16)
-    assert(IvfPq.searchIndex(spark, idx, "vec_id", queries, "qid", "qv",
-      k = 3, nProbe = 4).count() === 30L)
-    intercept[IllegalArgumentException] {
-      IvfPq.searchIndexResidual(spark, idx, "vec_id", queries, "qid", "qv",
-        k = 3, nProbe = 4)
-    }
+    assert(persisted(idx) === inMemory(residual = false))
   }
 
-  test("appendIndex refuses a residual index (encoding guard)") {
-    val idx = graft.Scratch.fresh("ivfpq_appguard") + "/idx"
-    IvfPq.writeIndexResidual(corpus, "vec_id", "embedding", idx,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    // raw-encoded rows appended into a residual layout would corrupt
-    // every later residual search silently — the append must fail fast
-    intercept[IllegalArgumentException] {
-      IvfPq.appendIndex(corpus.filter(col("vec_id") < 5),
-        "vec_id", "embedding", idx)
-    }
+  test("appendIndex into a residual index equals one-shot residual encoding") {
+    val base = corpus.filter(col("vec_id") % 5 =!= 0)
+    val delta = corpus.filter(col("vec_id") % 5 === 0)
+    val idx = graft.Scratch.fresh("ivfpq_res_inc") + "/idx"
+    IvfPq.writeIndex(base, "vec_id", "embedding", idx,
+      clusters = 16, m = M, dim = Dim, codes = 16, residual = true)
+    IvfPq.appendIndex(delta, "vec_id", "embedding", idx)
+    // one-shot reference under the same base-trained quantizers: the
+    // codebook trains on base residuals, and the whole corpus is
+    // residual-encoded in one batch
+    val cents = IvfAnn.centroids(base, "vec_id", "embedding",
+      clusters = 16, iters = 1)
+    def resid(d: org.apache.spark.sql.DataFrame) =
+      IvfAnn.assign(d, cents, "vec_id", "embedding").join(d, "vec_id")
+        .join(cents, "cell")
+        .select(col("vec_id"), col("cell"),
+          zip_with(col("embedding"), col("cvec"), (a, b) => a - b).as("rv"))
+    val cb = ProductQuantizer.train(resid(base), "vec_id", "rv",
+      m = M, dim = Dim, k = 16, iters = 1)
+    val oneShot = ProductQuantizer.encode(resid(corpus), "vec_id", "rv",
+        cb, M, Dim)
+      .join(IvfAnn.assign(corpus, cents, "vec_id", "embedding"), "vec_id")
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Int](1).toList, r.getInt(2))).toSet
+    val incremental = spark.read.parquet(s"$idx/cells")
+      .select(col("vec_id"), col("codes"), col("cell"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Int](1).toList, r.getInt(2))).toSet
+    assert(incremental.size === corpus.count() && incremental === oneShot)
   }
 
   test("residual index: delete -> compactCells -> search keeps masking " +
       "and the encoding flag survives") {
     import spark.implicits._
     val idx = graft.Scratch.fresh("ivfpq_res_compact") + "/idx"
-    IvfPq.writeIndexResidual(corpus, "vec_id", "embedding", idx,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    def neighbors() = IvfPq.searchIndexResidual(spark, idx, "vec_id",
+    IvfPq.writeIndex(corpus, "vec_id", "embedding", idx,
+      clusters = 16, m = M, dim = Dim, codes = 16, residual = true)
+    def neighbors() = IvfPq.searchIndex(spark, idx, "vec_id",
         queries, "qid", "qv", k = 3, nProbe = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         math.rint(r.getDouble(2) * 1e6) / 1e6)).toSet
@@ -267,16 +274,14 @@ class IvfPqSpec extends SparkTestBase {
     val masked = neighbors()
     // the shared cell compactor operates on the codes schema; the
     // _residual_codes flag lives OUTSIDE dir/cells, so the publish swap
-    // of the cell layout must leave the encoding contract intact
+    // of the cell layout must leave the encoding intact — a lost flag
+    // would score the residual codes with global tables and change
+    // every distance below
     IvfAnn.compactCells(spark, s"$idx/cells", "vec_id")
     assert(IvfPq.tombstones(spark, idx).isEmpty)
     assert(spark.read.parquet(s"$idx/cells")
       .filter(col("vec_id") === victim).count() === 0L)
     assert(neighbors() === masked)
-    intercept[IllegalArgumentException] {
-      IvfPq.searchIndex(spark, idx, "vec_id", queries, "qid", "qv",
-        k = 3, nProbe = 4)
-    }
   }
 
   test("retrainIfDrifted: un-drifted delta leaves the index untouched; " +
@@ -285,9 +290,9 @@ class IvfPqSpec extends SparkTestBase {
     val base = all.filter(col("vec_id") % 5 =!= 0)
     val sameDist = all.filter(col("vec_id") % 5 === 0)
     val idx = graft.Scratch.fresh("ivfpq_retrain") + "/idx"
-    IvfPq.writeIndexResidual(base, "vec_id", "embedding", idx,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    IvfPq.appendIndexResidual(sameDist, "vec_id", "embedding", idx)
+    IvfPq.writeIndex(base, "vec_id", "embedding", idx,
+      clusters = 16, m = M, dim = Dim, codes = 16, residual = true)
+    IvfPq.appendIndex(sameDist, "vec_id", "embedding", idx)
     def tag(d: org.apache.spark.sql.DataFrame, g: String) =
       d.withColumn("gen", lit(g))
     // same-distribution delta: ratio ~ 1 — below tau nothing moves
@@ -305,9 +310,9 @@ class IvfPqSpec extends SparkTestBase {
       transform(col("embedding"),
         x => (x.cast("double") + lit(0.5)).cast("float")).as("embedding"))
     val idx2 = graft.Scratch.fresh("ivfpq_retrain2") + "/idx"
-    IvfPq.writeIndexResidual(base, "vec_id", "embedding", idx2,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    IvfPq.appendIndexResidual(shifted, "vec_id", "embedding", idx2)
+    IvfPq.writeIndex(base, "vec_id", "embedding", idx2,
+      clusters = 16, m = M, dim = Dim, codes = 16, residual = true)
+    IvfPq.appendIndex(shifted, "vec_id", "embedding", idx2)
     assert(IvfPq.retrainIfDrifted(spark, idx2,
       tag(base, "base").unionByName(tag(shifted, "delta")),
       "gen", "vec_id", "embedding", clusters = 16, m = M, dim = Dim,
@@ -316,13 +321,10 @@ class IvfPqSpec extends SparkTestBase {
     // the post-drift corpus (training is deterministic), and it kept
     // its residual encoding through the staged publish
     val fromScratch = graft.Scratch.fresh("ivfpq_retrain_ref") + "/idx"
-    IvfPq.writeIndexResidual(base.unionByName(shifted), "vec_id",
-      "embedding", fromScratch, clusters = 16, m = M, dim = Dim, codes = 16)
-    def rows(dir: String) = IvfPq.searchIndexResidual(spark, dir, "vec_id",
-        queries, "qid", "qv", k = 3, nProbe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        math.rint(r.getDouble(2) * 1e6) / 1e6)).toSet
-    assert(rows(idx2) === rows(fromScratch))
+    IvfPq.writeIndex(base.unionByName(shifted), "vec_id", "embedding",
+      fromScratch, clusters = 16, m = M, dim = Dim, codes = 16,
+      residual = true)
+    assert(persisted(idx2) === persisted(fromScratch))
   }
 
   test("retrainIfDrifted applies pending deletes and carries mid-retrain " +
@@ -335,9 +337,9 @@ class IvfPqSpec extends SparkTestBase {
         transform(col("embedding"),
           x => (x.cast("double") + lit(0.5)).cast("float")).as("embedding"))
     val idx = graft.Scratch.fresh("ivfpq_retrain_ts") + "/idx"
-    IvfPq.writeIndexResidual(base, "vec_id", "embedding", idx,
-      clusters = 16, m = M, dim = Dim, codes = 16)
-    IvfPq.appendIndexResidual(shifted, "vec_id", "embedding", idx)
+    IvfPq.writeIndex(base, "vec_id", "embedding", idx,
+      clusters = 16, m = M, dim = Dim, codes = 16, residual = true)
+    IvfPq.appendIndex(shifted, "vec_id", "embedding", idx)
     // vec 1 is forgotten BEFORE the retrain: the rebuild reads the
     // caller's corpus (which still contains it), so without filterLive
     // the publish would resurrect it and destroy its marker
@@ -356,7 +358,7 @@ class IvfPqSpec extends SparkTestBase {
       "pre-retrain delete must be applied physically, not resurrected")
     assert(IvfPq.tombstones(spark, idx).isDefined,
       "the mid-retrain marker must survive the publish swap")
-    val served = IvfPq.searchIndexResidual(spark, idx, "vec_id",
+    val served = IvfPq.searchIndex(spark, idx, "vec_id",
         queries, "qid", "qv", k = 5, nProbe = 16)
       .collect().map(_.getLong(1)).toSet
     assert(!served.contains(1L) && !served.contains(2L),
@@ -366,7 +368,7 @@ class IvfPqSpec extends SparkTestBase {
   test("a crashed write's leftover staged dir cannot poison the next " +
       "writeIndex (flag travels with the staged publish)") {
     val idx = graft.Scratch.fresh("ivfpq_stagedcrash") + "/idx"
-    // a writeIndexResidual that died mid-build leaves a FLAGGED staged
+    // a residual writeIndex that died mid-build leaves a FLAGGED staged
     // dir behind; the next global build must clear it rather than
     // inherit the flag into its published layout
     val staged = graft.sources.Tables.staged(idx)
@@ -375,12 +377,7 @@ class IvfPqSpec extends SparkTestBase {
     fs.mkdirs(flag.getParent); fs.create(flag, true).close()
     IvfPq.writeIndex(corpus, "vec_id", "embedding", idx,
       clusters = 16, m = M, dim = Dim, codes = 16)
-    assert(IvfPq.searchIndex(spark, idx, "vec_id", queries, "qid", "qv",
-      k = 3, nProbe = 4).count() === 30L)
-    intercept[IllegalArgumentException] {
-      IvfPq.searchIndexResidual(spark, idx, "vec_id", queries, "qid", "qv",
-        k = 3, nProbe = 4)
-    }
+    assert(persisted(idx) === inMemory(residual = false))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(staged)),
       "the publish must consume the staged dir")
   }

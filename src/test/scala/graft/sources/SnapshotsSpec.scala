@@ -179,5 +179,31 @@ class SnapshotsSpec extends SparkTestBase {
       .collect().toSeq == Seq("a"))
     // the loser removed nothing: the winner's claim stands
     assert(Snapshots.latestVersion(spark, path).contains(1L))
+
+    // a racing committer that commits REAL rows while another commit is
+    // mid-write, both copying files into their version dir (the
+    // Scratch.copyDir writer of the q124/q148/q164 gates): each version
+    // must hold exactly its own committer's rows
+    val raced = tmpTable()
+    Snapshots.write(Seq((1, "a")).toDF("id", "s"), raced)
+    def staged(s: String) = {
+      val d = Files.createTempDirectory("graft_snap_src").toString + "/d"
+      Seq((2, s)).toDF("id", "s").write.parquet(d)
+      d
+    }
+    val (racerRows, firstRows) = (staged("racer"), staged("first"))
+    var racer = -1L
+    val first = Snapshots.commit(spark, raced) { dir =>
+      racer = Snapshots.commit(spark, raced)(
+        graft.Scratch.copyDir(racerRows, _))
+      graft.Scratch.copyDir(firstRows, dir)
+    }
+    def rows(v: Long) = Snapshots.readVersion(spark, raced, v)
+      .select("s").as[String].collect().toSeq
+    assert(racer !== first)
+    assert(rows(racer) == Seq("racer"))
+    assert(rows(first) == Seq("first"))
+    assert(Snapshots.history(spark, raced).select("version").as[Long]
+      .collect().sorted.toSeq == Seq(0L, 1L, 2L))
   }
 }

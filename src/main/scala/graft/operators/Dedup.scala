@@ -33,6 +33,16 @@ object Dedup {
       .drop("__rn")
   }
 
+  /** Keep-latest: one row per key, `orderCol` descending, ties broken by
+    * every remaining column descending — a total order within a key
+    * group, so identical duplicate rows tie harmlessly and differing
+    * ones resolve deterministically (the CDC dedup ahead of a MERGE,
+    * which needs unique source keys).
+    */
+  def keepLatest(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame =
+    keepFirst(df, keys, col(orderCol).desc +: df.columns.toSeq
+      .filterNot(c => keys.contains(c) || c == orderCol).map(col(_).desc))
+
   /** Same result as [[keepFirst]] with a single descending order column, but
     * expressed as an aggregation (`max_by` over a struct) so Catalyst can do
     * partial aggregation before the shuffle — the preferred shape at scale.

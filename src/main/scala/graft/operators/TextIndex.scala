@@ -277,7 +277,8 @@ object TextIndex {
         doomed0("doc_id") === ts(Tombstones.Col), "left_anti")
       case None => doomed0
     }
-    val hit = spark.read.parquet(s"$dir/postings")
+    val postings = spark.read.parquet(s"$dir/postings")
+    val hit = postings
       .filter(col("bkt") === DlBkt)
       .select(col("doc_id"), col("dl"))
       .join(broadcast(doomed), "doc_id")
@@ -288,7 +289,7 @@ object TextIndex {
     // (0, 0) row, which changes no sum — and only the marker write
     // stays gated on n > 0 (an empty marker dir would flip the
     // "None when nothing was deleted" probe contract).
-    val posN = if (readLayout(spark, dir)._2)
+    val posN = if (postings.columns.contains("pos"))
       Seq(lit(null).cast("array<int>").as("pos")) else Nil
     val obs = org.apache.spark.sql.Observation()
     hit.observe(obs, count(lit(1)).as("n"))
@@ -443,6 +444,26 @@ object TextIndex {
         sum(col("df")).cast("long").as("total_postings"))
   }
 
+  /** The live posting rows, projected to `cols`, of the terms in
+    * `queryTerms` (any frame with a `term` column) — the probe leg every
+    * query path shares: the query vocabulary's buckets are collected
+    * (bounded by the query batch contract, the discipline of the
+    * probed-cell collects in [[IvfAnn.searchPartitioned]]) and pushed as
+    * a literal `bkt IN` into the postings read, tombstoned docs are
+    * masked, and a broadcast join narrows the pruned rows to the exact
+    * terms.
+    */
+  private def probed(spark: SparkSession, dir: String, nb: Int,
+      queryTerms: DataFrame, cols: Seq[String]): DataFrame = {
+    val bkts = queryTerms.select(bkt(col("term"), nb).as("b")).distinct()
+      .collect().map(_.getInt(0)).toSeq
+    Tombstones.filterLive(spark, s"$dir/postings",
+        spark.read.parquet(s"$dir/postings")
+          .filter(col("bkt").isin(bkts: _*))
+          .select(cols.map(col): _*), "doc_id")
+      .join(broadcast(queryTerms.select(col("term")).distinct()), "term")
+  }
+
   /** BM25 top-k per query — the probe path. One signature scan of the
     * bounded query batch yields `(qid, term, qtf)`; the postings read is
     * partition-pruned to the query terms' buckets (literal `bkt IN`
@@ -466,23 +487,13 @@ object TextIndex {
           explode(Text.tokens(col(textCol))).as("term"))
         .groupBy(col("qid"), col("term"))
         .agg(count(lit(1)).as("qtf")))
-    // bounded by the query batch contract — same discipline as the
-    // probed-cell collects in IvfAnn.searchPartitioned; the modulus
-    // comes from the layout itself (growBucketsIfHot may have changed it)
-    val nb = readBuckets(spark, dir)
-    val bkts = qt.select(bkt(col("term"), nb).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val qTerms = qt.select(col("term")).distinct()
-    val post = graft.CacheScope.cache(
-      Tombstones.filterLive(spark, s"$dir/postings",
-          spark.read.parquet(s"$dir/postings")
-            .filter(col("bkt").isin(bkts: _*))
-            // project away the single-table meta columns (n_docs/sum_dl
-            // would collide with the stats crossJoin below) and anything
-            // else the scorer never reads — §2.3 project-before-exchange
-            .select(col("term"), col("doc_id"), col("tf"), col("dl")),
-          "doc_id")
-        .join(broadcast(qTerms), "term"))
+    // the modulus comes from the layout itself (growBucketsIfHot may
+    // have changed it); the projection drops the single-table meta
+    // columns (n_docs/sum_dl would collide with the stats crossJoin
+    // below) and anything else the scorer never reads — §2.3
+    // project-before-exchange
+    val post = graft.CacheScope.cache(probed(spark, dir,
+      readBuckets(spark, dir), qt, Seq("term", "doc_id", "tf", "dl")))
     val dfr = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = totals(spark, dir)
 
@@ -542,14 +553,7 @@ object TextIndex {
       queries.select(col(qidCol).as("qid"),
         posexplode(Text.tokens(col(textCol))).as(Seq("slot", "term"))))
     val qlen = qslots.groupBy(col("qid")).agg(count(lit(1)).as("m"))
-    val bkts = qslots.select(bkt(col("term"), nb).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val qTerms = qslots.select(col("term")).distinct()
-    val post = Tombstones.filterLive(spark, s"$dir/postings",
-        spark.read.parquet(s"$dir/postings")
-          .filter(col("bkt").isin(bkts: _*))
-          .select(col("term"), col("doc_id"), col("pos")), "doc_id")
-      .join(broadcast(qTerms), "term")
+    val post = probed(spark, dir, nb, qslots, Seq("term", "doc_id", "pos"))
     qslots.join(post, "term")
       .select(col("qid"), col("doc_id"), col("slot"),
         explode(col("pos")).as("p"))
@@ -591,13 +595,7 @@ object TextIndex {
       queries.select(col(qidCol).as("qid"),
         explode(array_distinct(Text.tokens(col(textCol)))).as("term")))
     val qm = qterms.groupBy(col("qid")).agg(count(lit(1)).as("m"))
-    val bkts = qterms.select(bkt(col("term"), nb).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val post = Tombstones.filterLive(spark, s"$dir/postings",
-        spark.read.parquet(s"$dir/postings")
-          .filter(col("bkt").isin(bkts: _*))
-          .select(col("term"), col("doc_id"), col("pos")), "doc_id")
-      .join(broadcast(qterms.select(col("term")).distinct()), "term")
+    val post = probed(spark, dir, nb, qterms, Seq("term", "doc_id", "pos"))
     val tp = graft.CacheScope.cache(
       qterms.join(post, "term")
         .select(col("qid"), col("doc_id"), col("term"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+import graft.sources.Tables
+
 /** Delta-style MERGE upsert rewritten for plain Spark (SURVEY.md §2a S7, §2c J5).
   *
   * Reference: `MERGE INTO silver USING updates ON t.event_id = s.event_id
@@ -23,6 +25,23 @@ object Upsert {
     target
       .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(updates)
+
+  /** [[upsert]] `updates` into the parquet table at `path` and write the
+    * result back through [[Tables.overwrite]] (hive-partitioned by
+    * `partitionBy`). Only a table [[Tables.exists]] reports absent —
+    * after its crash recovery — is a first write: a table a crashed
+    * rewrite left at its old-side name is restored and merged into, so
+    * the crash window can never truncate it to the new batch.
+    */
+  def upsertInto(updates: DataFrame, path: String, keys: Seq[String],
+      partitionBy: Seq[String] = Nil): Unit = {
+    val spark = updates.sparkSession
+    val merged =
+      if (!Tables.exists(spark, path)) updates
+      else upsert(spark.read.parquet(path)
+        .select(updates.columns.toIndexedSeq.map(col): _*), updates, keys)
+    Tables.overwrite(merged, path, partitionBy)
+  }
 
   /** [[upsert]] with automatic schema evolution — Delta's
     * `mergeSchema`/`autoMerge` behavior: updates may ADD columns (target

@@ -66,11 +66,8 @@ object SeismicPipeline {
         countIfExists(goldPath(workDir)), wm)
     }
 
-    // W1 dedup-keep-latest within the increment; tiebreak over every
-    // remaining column so equal-ts duplicates resolve deterministically
-    val deduped = Dedup.keepFirst(increment, Seq("event_id"),
-      col("ts").desc +: increment.columns.toSeq
-        .filterNot(c => c == "event_id" || c == "ts").map(col(_).desc))
+    // W1 dedup-keep-latest within the increment
+    val deduped = Dedup.keepLatest(increment, Seq("event_id"), "ts")
 
     // P4 validation/clamp (value plays depth-km: null→0, clamp [0, 300])
     val validated = deduped.withColumn("value_clean",
@@ -113,12 +110,7 @@ object SeismicPipeline {
     // this pipeline's own next incremental merge — prunes to matching
     // partition directories instead of scanning the whole table
     val silverP = silverPath(workDir)
-    val merged =
-      if (!Tables.exists(spark, silverP)) silverNew
-      else Upsert.upsert(
-        spark.read.parquet(silverP).select(silverNew.columns.toIndexedSeq.map(col): _*),
-        silverNew, Seq("event_id"))
-    Tables.overwrite(merged, silverP, Seq("year", "month"))
+    Upsert.upsertInto(silverNew, silverP, Seq("event_id"), Seq("year", "month"))
 
     // S8 watermark advance to max event time of the written batch
     val maxTs = graft.state.WatermarkStore.timestampAt(

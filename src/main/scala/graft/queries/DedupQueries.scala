@@ -839,40 +839,20 @@ object DedupQueries {
     // wave appends its admitted band rows)
     val path = graft.Scratch.cloneBase(
       SharedIndexes.lshBase80(spark, dir), "q143_lsh_index")
-    // one file per wave, mtimes ascending: micro-batch order = arrival order
-    val wavesDir = root + "/waves"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(wavesDir))
-    SeqWaves.zipWithIndex.foreach { case ((lo, hi), i) =>
-      val tmp = root + s"/wave_tmp$i"
-      docs.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select(col("doc_id"), col("sh"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      val dst = java.nio.file.Paths.get(wavesDir, f"wave$i%04d.parquet")
-      java.nio.file.Files.move(part.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(
-          1700000000000L + i * 60000L))
-    }
+    // one micro-batch per wave, in arrival order
     val statsBuf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val q = spark.readStream
-      .schema(spark.read.parquet(s"$wavesDir/wave0000.parquet").schema)
-      .option("maxFilesPerTrigger", 1).parquet(wavesDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cand = LshIndex.candidates(spark, path, batch, "doc_id", "sh")
-        val stats = waveStats(docs, batch, cand, batchId.toInt + 1)
-        LshIndex.append(
-          batch.join(stats.filter(col("admitted")).select(col("doc_id")),
-            Seq("doc_id"), "left_semi"),
-          "doc_id", "sh", path)
-        statsBuf += stats
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.Replay.files(root,
+      docs.select(col("doc_id"), col("sh"),
+        graft.streaming.Replay.ranges(col("bucket"), SeqWaves).as("wave")),
+      "wave", SeqWaves.size) { (batch, batchId) =>
+      val cand = LshIndex.candidates(spark, path, batch, "doc_id", "sh")
+      val stats = waveStats(docs, batch, cand, batchId.toInt + 1)
+      LshIndex.append(
+        batch.join(stats.filter(col("admitted")).select(col("doc_id")),
+          Seq("doc_id"), "left_semi"),
+        "doc_id", "sh", path)
+      statsBuf += stats
+    }
     val after = spark.read.parquet(path)
       .agg(count(lit(1)).as("index_rows_after"))
     statsBuf.reduce(_ unionByName _)

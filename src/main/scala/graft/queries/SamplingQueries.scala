@@ -933,44 +933,21 @@ object SamplingQueries {
     val packed = root + "/packed"
     SequencePack.writePacked(docs.filter(col("doc_id") < 200),
       "doc_id", "n_tokens", SeqLen, packed, buckets = 8)
-    // stage the delta as three strictly-increasing key ranges, one file
-    // each, with staggered mtimes so the file source replays them in
-    // arrival order
-    val conf = spark.sparkContext.hadoopConfiguration
-    val streamDir = new org.apache.hadoop.fs.Path(root + "/stream")
-    val fs = streamDir.getFileSystem(conf)
-    fs.mkdirs(streamDir)
     // thirds of the remaining id range, so every batch is non-trivial
     // at any fixture SF (empty batches are legal — appendPacked no-ops
-    // — but a gate should exercise real ones)
+    // — but a gate should exercise real ones); the three strictly
+    // increasing key ranges replay in arrival order
     val maxId = docs.agg(max(col("doc_id"))).collect().head.getLong(0)
     val step = math.max(1L, (maxId - 200L) / 3 + 1)
     val bounds = Seq(
       (200L, 200L + step), (200L + step, 200L + 2 * step),
       (200L + 2 * step, Long.MaxValue))
-    bounds.zipWithIndex.foreach { case ((lo, hi), i) =>
-      val tmp = root + s"/stage$i"
-      docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.globStatus(
-        new org.apache.hadoop.fs.Path(tmp + "/part-*.parquet")).head.getPath
-      val dst = new org.apache.hadoop.fs.Path(streamDir, f"batch$i%04d.parquet")
-      require(fs.rename(part, dst), s"could not stage $part")
-      fs.setTimes(dst, 1700000000000L + i * 60000L, -1)
+    graft.streaming.Replay.files(root,
+      docs.withColumn("wave",
+        graft.streaming.Replay.ranges(col("doc_id"), bounds)),
+      "wave", bounds.size) { (batch, _) =>
+      SequencePack.appendPacked(batch, "doc_id", "n_tokens", packed)
     }
-    val q = spark.readStream
-      .schema(spark.read.parquet(streamDir.toString).schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("latestFirst", "false")
-      .parquet(streamDir.toString)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        SequencePack.appendPacked(batch, "doc_id", "n_tokens", packed)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     SequencePack.readPacked(spark, packed)
       .orderBy(col("seq_id"), col("doc_id"))
   }

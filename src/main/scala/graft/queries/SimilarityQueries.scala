@@ -463,24 +463,15 @@ object SimilarityQueries {
       val idx = SharedIndexes.ivfIndex(spark, dir, "base", clusters, iters)
       val cents = SharedIndexes.ivfCentroids(spark, idx)
       val path = graft.Scratch.cloneBase(s"$idx/cells", "q119_ivf_cells")
-      // re-materialize the delta as 3 files so AvailableNow +
-      // maxFilesPerTrigger=1 yields three REAL micro-batches
-      val deltaDir = root + "/delta"
-      all0.filter(col("vec_id") % 5 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .repartition(3).write.mode("overwrite").parquet(deltaDir)
-      val q = spark.readStream
-        .schema(spark.read.parquet(deltaDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(deltaDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.operators.IvfAnn
-            .appendPartitionedByCell(batch, "vec_id", "embedding", cents, path)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      // the delta replays as three REAL micro-batches
+      graft.streaming.Replay.files(root,
+        all0.filter(col("vec_id") % 5 === 0)
+          .select(col("vec_id"), col("embedding"),
+            pmod(hash(col("vec_id")), lit(3)).as("wave")),
+        "wave", 3) { (batch, _) =>
+        graft.operators.IvfAnn
+          .appendPartitionedByCell(batch, "vec_id", "embedding", cents, path)
+      }
       val queries = all0.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.IvfAnn
@@ -1940,24 +1931,14 @@ object SimilarityQueries {
       val idx = graft.Scratch.cloneBase(SharedIndexes.ivfPqResidual(
         spark, dir, "base", clusters, m, dim, codes, coarseIters, pqIters),
         "q150_ivfpq_res")
-      // re-materialize the delta as 3 files so AvailableNow +
-      // maxFilesPerTrigger=1 yields three REAL micro-batches
-      val deltaDir = root + "/delta"
-      all0.filter(col("vec_id") % 5 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .repartition(3).write.mode("overwrite").parquet(deltaDir)
-      val q = spark.readStream
-        .schema(spark.read.parquet(deltaDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(deltaDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.operators.IvfPq.appendIndex(batch, "vec_id",
-            "embedding", idx)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      // the delta replays as three REAL micro-batches
+      graft.streaming.Replay.files(root,
+        all0.filter(col("vec_id") % 5 === 0)
+          .select(col("vec_id"), col("embedding"),
+            pmod(hash(col("vec_id")), lit(3)).as("wave")),
+        "wave", 3) { (batch, _) =>
+        graft.operators.IvfPq.appendIndex(batch, "vec_id", "embedding", idx)
+      }
       val queries = all0.filter(col("vec_id") < nQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.IvfPq.searchIndex(spark, idx, "vec_id",

@@ -595,28 +595,19 @@ object SketchQueries {
     val toks = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .transform(graft.CacheScope.cache)
-    // re-materialize as 4 files so AvailableNow + maxFilesPerTrigger=1
-    // yields four REAL micro-batches (the fixture table is one file)
-    val streamDir = graft.Scratch.fresh("q111") + "/docs"
-    toks.repartition(4).write.mode("overwrite").parquet(streamDir)
+    // the fixture table replays as four REAL micro-batches
     val acc = scala.collection.mutable.ArrayBuffer[(Int, Int, Long)]()
-    val q = spark.readStream
-      .schema(spark.read.parquet(streamDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(streamDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val cells = Sketches.cmsBuild(
-            batch.select(explode(Text.tokens(col("text"))).as("tok"))
-              .select(Sketches.uniformHash(col("tok")).as("h")),
-            "h", CmsW)
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-        acc.synchronized { acc ++= cells }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.Replay.files(graft.Scratch.fresh("q111"),
+      toks.withColumn("wave", pmod(hash(col("doc_id")), lit(4))),
+      "wave", 4) { (batch, _) =>
+      val cells = Sketches.cmsBuild(
+          batch.select(explode(Text.tokens(col("text"))).as("tok"))
+            .select(Sketches.uniformHash(col("tok")).as("h")),
+          "h", CmsW)
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      acc.synchronized { acc ++= cells }
+    }
     val maintained = Sketches.cmsMerge(Seq(
       spark.createDataFrame(acc.toSeq).toDF("j", "c", "cnt")))
     val allToks = toks
@@ -749,29 +740,20 @@ object SketchQueries {
           StructField("est_batch", DoubleType),
           StructField("agree", BooleanType))))
     } else {
-      // re-materialize as 4 files so AvailableNow + maxFilesPerTrigger=1
-      // yields four REAL micro-batches (the fixture table is one file)
-      val streamDir = graft.Scratch.fresh("q105") + "/prices"
-      li.repartition(4).write.mode("overwrite").parquet(streamDir)
+      // the price column replays as four REAL micro-batches
       val acc =
         scala.collection.mutable.ArrayBuffer[(Int, Double, Double, Long)]()
-      val q = spark.readStream
-        .schema(spark.read.parquet(streamDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(streamDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val rows = Sketches
-            .histBucketize(batch, "l_extendedprice", HistW,
-              g.getDouble(0), g.getDouble(1))
-            .collect()
-            .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2),
-              r.getLong(3)))
-          acc.synchronized { acc ++= rows }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      graft.streaming.Replay.files(graft.Scratch.fresh("q105"),
+        li.withColumn("wave", pmod(hash(col("l_extendedprice")), lit(4))),
+        "wave", 4) { (batch, _) =>
+        val rows = Sketches
+          .histBucketize(batch, "l_extendedprice", HistW,
+            g.getDouble(0), g.getDouble(1))
+          .collect()
+          .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2),
+            r.getLong(3)))
+        acc.synchronized { acc ++= rows }
+      }
       val maintained = spark.createDataFrame(acc.toSeq)
         .toDF("bucket", "vmin", "vmax", "cnt")
       val est = Sketches

@@ -1,15 +1,15 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.QuerySpec
 import graft.sources.Tables
-import graft.streaming.StreamingPipeline
+import graft.streaming.{Replay, StreamingPipeline}
 
-/** Structured Streaming surfaced into the oracle gate: the stream runs to
-  * completion over the same parquet the oracle reads (file source +
-  * `Trigger.AvailableNow`, memory sink), so a STREAMED windowed
+/** Structured Streaming surfaced into the oracle gate: each stateful
+  * stream runs to completion over the same parquet the oracle reads
+  * ([[graft.streaming.Replay.drain]]: file source, `Trigger.AvailableNow`,
+  * memory sink, fixture-sized state stores), so a STREAMED windowed
   * aggregation hash-compares against a BATCH DuckDB query — the
   * stream/batch equivalence that makes the Kappa-style reuse of these
   * operators trustworthy. Decimal-backed sums make the equivalence exact:
@@ -17,42 +17,6 @@ import graft.streaming.StreamingPipeline
   * would expose.
   */
 object StreamingQueries {
-
-  /** Run `body` with the STATEFUL-stream state partition count pinned
-    * (restored after). Stateful operators shard their state store by
-    * `spark.sql.shuffle.partitions` at first start, AQE is off in
-    * streaming, and production pins the value in the checkpoint forever
-    * (it cannot change without a state rebuild) — so it is a deliberate
-    * per-job deployment parameter sized to STATE volume, never derived
-    * from the executor count. The gates' fixture state is O(100–1k)
-    * keys; 8 stores is already generous (each store pays checkpoint
-    * fsync + provider init per micro-batch, measured 2.4 s → 1.2 s on
-    * q56/q95 vs 32 stores). Cluster runs override via
-    * SPARK_GRAFT_STREAM_STATE_PARTITIONS.
-    *
-    * SIZING RULE (SCALING.md "Stateful-stream state partitions"):
-    * partitions ≈ ceil(expected live state bytes / target store size),
-    * with 0.5–2 GB per RocksDB store the healthy range, rounded up to
-    * a multiple of the executor core count for even task placement —
-    * e.g. ~1 TB of live session state → ~1024 partitions. NEVER leave
-    * a 100 TB deployment on this fixture default: 8 stores holding
-    * billions of keys means ~all state in 8 tasks. The default here is
-    * deliberately fixture-sized, not scale-neutral, because the value
-    * is pinned into the checkpoint at first start and a too-large
-    * default costs per-batch fsync overhead forever.
-    */
-  private def withStatePartitions[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val Key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.getOption(Key)
-    spark.conf.set(Key,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(Key, v)
-      case None => spark.conf.unset(Key)
-    }
-  }
 
   /** Tumbling 1-hour per-type counts computed by a STREAM, verified
     * against the batch oracle (`window(ts, '1 hour').start` is the
@@ -67,29 +31,14 @@ object StreamingQueries {
       |GROUP BY 1, 2
       |ORDER BY window_start, event_type""".stripMargin
   ) { (spark, dir) =>
-    // explicit schema: a streaming source cannot infer one (ts arrives as
-    // nanosecond Long, normalized exactly like Tables.load)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // the fixture table is a single FILE; the streaming file source lists
-    // a DIRECTORY, so stream the parent with a name filter
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    // event-time must be session-zoned TIMESTAMP for withWatermark —
-    // normalize whichever flavor the fixture stores (nanos Long or NTZ)
-    val ev = Tables.tsToTimestamp(raw)
     // complete mode: every window survives to the final table, matching
     // the batch oracle (the watermark only bounds append-mode eviction)
-    val sink = "q56_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = StreamingPipeline.windowedCounts(ev, "1 hour", "1 hour")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    Replay.drain(spark, dir, "events", "complete") { raw =>
+      // event-time must be session-zoned TIMESTAMP for withWatermark —
+      // normalize whichever flavor the fixture stores (nanos Long or NTZ)
+      StreamingPipeline.windowedCounts(Tables.tsToTimestamp(raw),
+        "1 hour", "1 hour")
     }
-    spark.table(sink)
       .select(col("window_start"), col("event_type"), col("n_events"),
         round(col("sum_value") + lit(1e-9), 2).as("sum_value"))
       .orderBy(col("window_start"), col("event_type"))
@@ -185,31 +134,19 @@ object StreamingQueries {
       |ORDER BY user_id, start_ts""".stripMargin
   ) { (spark, dir) =>
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    // withWatermark requires session-zoned TIMESTAMP event time
-    val ev = Tables.tsToTimestamp(raw)
-    val sessions = graft.streaming.Sessionize.sessionize(
-      ev.filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id"), col("ts"),
-          coalesce(col("value"), lit(0.0)).as("value"))
-        .as[graft.streaming.Sessionize.SessionEvent],
-      gapSeconds = 1800,
-      // park the watermark far before the fixture: no timeout may fire,
-      // so emissions are exactly the later-event-closed sessions
-      delayThreshold = "3650 days")
-    val sink = "q94_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = sessions.toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    Replay.drain(spark, dir, "events", "append") { raw =>
+      // withWatermark requires session-zoned TIMESTAMP event time
+      val ev = Tables.tsToTimestamp(raw)
+      graft.streaming.Sessionize.sessionize(
+        ev.filter(col("user_id").isNotNull && col("ts").isNotNull)
+          .select(col("user_id"), col("ts"),
+            coalesce(col("value"), lit(0.0)).as("value"))
+          .as[graft.streaming.Sessionize.SessionEvent],
+        gapSeconds = 1800,
+        // park the watermark far before the fixture: no timeout may fire,
+        // so emissions are exactly the later-event-closed sessions
+        delayThreshold = "3650 days").toDF()
     }
-    spark.table(sink)
       .select(col("user_id"), col("start_ts"), col("end_ts"),
         col("n_events"))
       .orderBy(col("user_id"), col("start_ts"))
@@ -252,39 +189,22 @@ object StreamingQueries {
       |FROM g WHERE purchase_id IS NOT NULL
       |ORDER BY user_id, ts, purchase_id""".stripMargin
   ) { (spark, dir) =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val ev =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sink = "q95_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      withStatePartitions(spark) {
-        val query = graft.streaming.ClickFunnel(
-            ev.filter(col("user_id").isNotNull && col("ts").isNotNull)
-              .filter(col("event_type").isin("click", "purchase")))
-          .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      spark.table(sink)
-        .select(col("user_id"), col("purchase_id"), col("ts"),
-          col("clicks_before"))
-        .orderBy(col("user_id"), col("ts"), col("purchase_id"))
-    } finally saved match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
+    Replay.drain(spark, dir, "events", "append",
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    ) { raw =>
+      val ev =
+        if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+          raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        else raw
+      graft.streaming.ClickFunnel(
+          ev.filter(col("user_id").isNotNull && col("ts").isNotNull)
+            .filter(col("event_type").isin("click", "purchase")))
+        .toDF()
     }
+      .select(col("user_id"), col("purchase_id"), col("ts"),
+        col("clicks_before"))
+      .orderBy(col("user_id"), col("ts"), col("purchase_id"))
   }
 
   val all: Seq[QuerySpec] = Seq(streamWindowCounts, sessionWindow,

@@ -761,22 +761,12 @@ object TextQueries {
     // gate appends the streamed delta in place)
     val idx = graft.Scratch.cloneBase(
       SharedIndexes.textModBase(spark, dir, 3), "q162_text")
-    // re-materialize the delta as 3 files so AvailableNow +
-    // maxFilesPerTrigger=1 yields three REAL micro-batches
-    val deltaDir = root + "/delta"
-    docs.filter(col("doc_id") % 3 === 0)
-      .repartition(3).write.mode("overwrite").parquet(deltaDir)
-    val q = spark.readStream
-      .schema(spark.read.parquet(deltaDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(deltaDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.operators.TextIndex.append(batch, "doc_id", "text", idx)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // the delta replays as three REAL micro-batches
+    graft.streaming.Replay.files(root, docs.filter(col("doc_id") % 3 === 0)
+        .withColumn("wave", pmod(hash(col("doc_id")), lit(3))),
+      "wave", 3) { (batch, _) =>
+      graft.operators.TextIndex.append(batch, "doc_id", "text", idx)
+    }
     graft.operators.TextIndex.searchTopK(spark, idx,
       docs.filter(col("doc_id") < 6)
         .select(col("doc_id").as("qid"), col("text")),
@@ -1560,24 +1550,14 @@ object TextQueries {
       QualityClassifier.writeModel(idx,
         feats.filter(col("doc_id") % 4 === 0),
         labels.filter(col("doc_id") % 4 === 0), "doc_id", "label")
-      // re-materialize the delta as 3 files so AvailableNow +
-      // maxFilesPerTrigger=1 yields three REAL micro-batches
-      val deltaDir = root + "/delta"
-      docs.filter(col("doc_id") % 4 === 2)
-        .repartition(3).write.mode("overwrite").parquet(deltaDir)
-      val q = spark.readStream
-        .schema(spark.read.parquet(deltaDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(deltaDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          QualityClassifier.appendModel(spark, idx,
-            QualityClassifier.features(batch, "doc_id", "text"),
-            batch.select(col("doc_id"), col("label")), "doc_id", "label")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      // the delta replays as three REAL micro-batches
+      graft.streaming.Replay.files(root, docs.filter(col("doc_id") % 4 === 2)
+          .withColumn("wave", pmod(hash(col("doc_id")), lit(3))),
+        "wave", 3) { (batch, _) =>
+        QualityClassifier.appendModel(spark, idx,
+          QualityClassifier.features(batch, "doc_id", "text"),
+          batch.select(col("doc_id"), col("label")), "doc_id", "label")
+      }
       QualityClassifier.scoreIndexed(spark, idx,
           feats.filter(col("doc_id") % 2 === 1), "doc_id")
         .join(labels, "doc_id")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Upsert
+import graft.operators.{Dedup, Upsert}
 import graft.sources.Tables
 
 /** Structured Streaming re-expression of the reference's watermark-batch
@@ -105,32 +105,15 @@ object StreamingPipeline {
     events.join(broadcast(dim), Seq(joinKey), "left")
 
   /** foreachBatch MERGE-upsert into a parquet path keyed by `keys` —
-    * the streaming twin of the silver-layer upsert. Each batch is
-    * deduplicated to one row per key (latest ts wins) before the merge,
+    * the streaming twin of the silver-layer upsert, through the same
+    * [[Upsert.upsertInto]]. Each batch is deduplicated to one row per
+    * key first ([[graft.operators.Dedup.keepLatest]] on `orderCol`),
     * matching Delta MERGE's unique-source requirement.
     */
   def upsertSink(stream: DataFrame, targetPath: String, keys: Seq[String],
       orderCol: String = "ts"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
-      // total order within a key group: orderCol first, then every
-      // remaining column descending — identical duplicate rows tie
-      // harmlessly, differing ones resolve deterministically
-      val tieBreak = batch.columns.toSeq
-        .filterNot(c => keys.contains(c) || c == orderCol)
-        .map(col(_).desc)
-      val latest = graft.operators.Dedup.keepFirst(batch, keys,
-        col(orderCol).desc +: tieBreak)
-      // only a genuinely ABSENT target means "first batch"; any read
-      // error on an existing path must propagate, not truncate the table
-      val p = new org.apache.hadoop.fs.Path(targetPath)
-      val exists =
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      val merged =
-        if (!exists) latest
-        else Upsert.upsert(
-          spark.read.parquet(targetPath).select(latest.columns.toIndexedSeq.map(col): _*),
-          latest, keys)
-      Tables.overwrite(merged, targetPath)
+      Upsert.upsertInto(Dedup.keepLatest(batch, keys, orderCol),
+        targetPath, keys)
     }
 }

@@ -174,4 +174,30 @@ class StreamingPipelineSpec extends SparkTestBase {
       assert(out === Set(("u1", "e2", 5.0), ("u2", "e3", 7.0)))
     } finally q.stop()
   }
+
+  test("upsertSink merges into a table a crashed replace left at its " +
+      "old-side name instead of truncating it") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    withTempDir("upsert_crash") { base =>
+      val target = s"$base/t"
+      Seq(ev("e1", "2024-01-01 10:00:00", u = "u1"),
+        ev("e2", "2024-01-01 10:05:00", u = "u2")).toDF()
+        .write.parquet(target)
+      // the crash window inside Tables.replace: the live table has been
+      // renamed aside and the new one not yet published
+      Files.move(java.nio.file.Paths.get(target),
+        java.nio.file.Paths.get(target + ".__old__"))
+      val input = MemoryStream[Ev]
+      val q = StreamingPipeline.upsertSink(input.toDF(), target, Seq("user_id"))
+        .outputMode("update").start()
+      try {
+        input.addData(ev("e3", "2024-01-01 11:00:00", u = "u3"))
+        q.processAllAvailable()
+      } finally q.stop()
+      val out = spark.read.parquet(target)
+        .select("user_id", "event_id").as[(String, String)].collect().toSet
+      assert(out === Set(("u1", "e1"), ("u2", "e2"), ("u3", "e3")))
+    }
+  }
 }

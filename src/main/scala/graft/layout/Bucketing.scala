@@ -105,7 +105,7 @@ object Bucketing {
         spark.catalog.tableExists(staged))
       spark.sql(s"ALTER TABLE `$staged` RENAME TO `$table`")
     // unreachable from the swap's own crash states (staging completes
-    // before any rename) but mirrors Tables.replace's recovery: never
+    // before any rename), kept as a guard: never
     // drop the only surviving generation
     if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(old))
       spark.sql(s"ALTER TABLE `$old` RENAME TO `$table`")

@@ -27,7 +27,7 @@ object Optimize {
     */
   def cluster(spark: SparkSession, path: String, clusterCols: Seq[String],
       targetFiles: Int, partitionCols: Seq[String] = Nil): Unit = {
-    val df = spark.read.parquet(path)
+    val df = graft.sources.Tables.read(spark, path)
     val clustered = df
       .repartitionByRange(targetFiles, clusterCols.map(col): _*)
       .sortWithinPartitions(clusterCols.map(col): _*)
@@ -82,7 +82,7 @@ object Optimize {
   def clusterZ(spark: SparkSession, path: String,
       a: (String, Double, Double), b: (String, Double, Double),
       targetFiles: Int, bits: Int = 16): Unit = {
-    val df = spark.read.parquet(path)
+    val df = graft.sources.Tables.read(spark, path)
     val z = zvalue((col(a._1), a._2, a._3), (col(b._1), b._2, b._3), bits)
     val clustered = df
       .withColumn("__z", z)
@@ -93,21 +93,12 @@ object Optimize {
   }
 
   /** File-level stats for a table path — the `DESCRIBE DETAIL`
-    * numFiles/sizeInBytes analog (S12, `TABLE OPTIMIZATION.py:24-28`).
+    * numFiles/sizeInBytes analog (S12, `TABLE OPTIMIZATION.py:24-28`),
+    * read from the table's latest snapshot, not a directory walk.
     */
   def describeDetail(spark: SparkSession, path: String): (Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recursive: partitioned tables keep their files under key=value
-    // subdirectories, which a flat listStatus would report as (0, 0)
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) { n += 1; bytes += f.getLen }
-    }
-    (n, bytes)
+    val files = graft.sources.Tables.at(spark, path).files
+    (files.size.toLong, files.map(_.size).sum)
   }
 
   /** `ANALYZE TABLE … COMPUTE STATISTICS` on a path-backed table

@@ -269,7 +269,7 @@ object BinaryQuantizer {
     * words, `dir/mids` the midrange thresholds — thresholds version
     * WITH the codes (the [[ScalarQuantizer.writeIndex]] rationale:
     * separately-versioned thresholds silently decode garbage), and the
-    * whole dir lands through the staged publish swap. The index stores
+    * whole index lands in one commit. The index stores
     * NO floats: it is the 64×-compressed prefilter tier; exact re-rank
     * fetches the shortlist's vectors from the caller's primary store
     * ([[searchIndexRefined]]).
@@ -277,13 +277,14 @@ object BinaryQuantizer {
   def writeIndex(corpus0: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
     val spark = corpus0.sparkSession
-    graft.sources.Tables.replace(spark, dir) { staged =>
+    val s = graft.sources.Tables.root(spark, dir)
+    graft.sources.Tables.commit(s, "write") { tx =>
+      tx.remove(s.files)
       val corpus = CentroidState.ensureCached(corpus0)
       val mid = mids(ScalarQuantizer.train(corpus, vecCol))
-      corpus.select(col(idCol), packed(col(vecCol), mid).as("bw"))
-        .write.mode("overwrite").parquet(s"$staged/codes")
-      midsToDF(spark, mid).coalesce(1)
-        .write.mode("overwrite").parquet(s"$staged/mids")
+      tx.put(s.table("codes"),
+        corpus.select(col(idCol), packed(col(vecCol), mid).as("bw")))
+      tx.put(s.table("mids"), midsToDF(spark, mid).coalesce(1))
     }
   }
 
@@ -294,11 +295,13 @@ object BinaryQuantizer {
     */
   def appendIndex(delta: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
-    val spark = delta.sparkSession
-    val mid = loadMids(spark, dir)
-    delta.select(col(idCol), packed(col(vecCol), mid).as("bw"))
-      .write.mode("append").parquet(s"$dir/codes")
-    graft.sources.Tombstones.unmark(spark, s"$dir/codes", delta, idCol)
+    val s = graft.sources.Tables.root(delta.sparkSession, dir)
+    val mid = loadMids(s)
+    graft.sources.Tables.commit(s, "append") { tx =>
+      tx.put(s.table("codes"),
+        delta.select(col(idCol), packed(col(vecCol), mid).as("bw")))
+      graft.sources.Tombstones.unmark(tx, s.table("codes"), delta, idCol)
+    }
   }
 
   /** Hamming top-k served codes-only from the persisted index (floats
@@ -314,9 +317,10 @@ object BinaryQuantizer {
   private def searchIndex(spark: SparkSession, dir: String, idCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, qRows: Long): DataFrame = {
-    val mid = loadMids(spark, dir)
-    val codes = graft.sources.Tombstones.filterLive(spark, s"$dir/codes",
-      spark.read.parquet(s"$dir/codes"), idCol)
+    val s = graft.sources.Tables.root(spark, dir)
+    val mid = loadMids(s)
+    val codes = graft.sources.Tombstones.filterLive(s.table("codes"),
+      s.table("codes").df, idCol)
     scoreHamming(codes, mid, idCol, queries, qidCol, qvecCol, k, qRows)
   }
 
@@ -331,7 +335,7 @@ object BinaryQuantizer {
       primary: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, refine: Int): DataFrame = {
-    val dim = loadMids(spark, dir).length
+    val dim = loadMids(graft.sources.Tables.root(spark, dir)).length
     val qRows = queries.count()
     val shortIds = graft.CacheScope.cache(
       searchIndex(spark, dir, idCol, queries, qidCol, qvecCol, k * refine,
@@ -354,9 +358,8 @@ object BinaryQuantizer {
     mid.zipWithIndex.map { case (m, i) => (i, m) }.toDF("pos", "mid")
   }
 
-  private def loadMids(spark: SparkSession,
-      dir: String): IndexedSeq[Double] =
-    spark.read.parquet(s"$dir/mids")
+  private def loadMids(s: graft.sources.Snapshot): IndexedSeq[Double] =
+    s.table("mids").df
       .collect().map(r => (r.getInt(0), r.getDouble(1)))
       .sortBy(_._1).map(_._2).toIndexedSeq
 }

@@ -115,8 +115,8 @@ object BpeTrainer {
   }
 
   /** Persist a trained merge table as the tokenizer ARTIFACT — ordered
-    * `(ord, x, y, cnt)` rows through the staged-publish swap (an
-    * interrupted rewrite leaves any previous tokenizer addressable).
+    * `(ord, x, y, cnt)` rows in one commit (an interrupted rewrite
+    * leaves any previous tokenizer serving).
     * The artifact is O(rounds) rows: the whole tokenizer ships as a
     * table small enough to broadcast, version, and diff like any other
     * model state here.
@@ -127,14 +127,17 @@ object BpeTrainer {
     val rows = merges.zipWithIndex
       .map { case (m, i) => (i, m.x, m.y, m.count) }
       .toDF("ord", "x", "y", "cnt").coalesce(1)
-    graft.sources.Tables.replace(spark, dir)(staged =>
-      rows.write.mode("overwrite").parquet(s"$staged/merges"))
+    val s = graft.sources.Tables.root(spark, dir)
+    graft.sources.Tables.commit(s, "write") { tx =>
+      tx.remove(s.files)
+      tx.put(s.table("merges"), rows)
+    }
   }
 
   /** The stored merge table, in training order. */
   def readMerges(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[Merge] =
-    spark.read.parquet(s"$dir/merges")
+    graft.sources.Tables.read(spark, s"$dir/merges")
       .orderBy(col("ord"))
       .collect()
       .map(r => Merge(r.getString(1), r.getString(2), r.getLong(3)))

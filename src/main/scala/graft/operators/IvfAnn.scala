@@ -233,9 +233,9 @@ object IvfAnn {
   def writePartitionedByCell(corpus: DataFrame, idCol: String,
       vecCol: String, cents: DataFrame, path: String): Unit = {
     val cs = CentroidState.collect(cents)
-    corpus.select(col(idCol), col(vecCol),
-        CentroidState.nearestCell(col(vecCol), cs).as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+    graft.sources.Tables.overwrite(corpus.select(col(idCol), col(vecCol),
+      CentroidState.nearestCell(col(vecCol), cs).as("cell")), path,
+      Seq("cell"))
   }
 
   /** Incrementally append a delta batch to an existing
@@ -244,7 +244,8 @@ object IvfAnn {
     * projection as [[assign]]) and its rows land as new files under the
     * matching `cell=` directories. This is how a production index
     * absorbs a day's new embeddings at 10 B-vector scale — an
-    * O(|delta|) append, zero corpus rewrite, zero quantizer retrain —
+    * O(|delta|) append in one commit, zero corpus rewrite, zero
+    * quantizer retrain —
     * and searches over the layout see old and new vectors uniformly
     * because partition pruning is directory-based, not file-based.
     * Centroid drift is bounded by retraining cadence, the classical
@@ -254,21 +255,23 @@ object IvfAnn {
   def appendPartitionedByCell(delta: DataFrame, idCol: String,
       vecCol: String, cents: DataFrame, path: String): Unit = {
     val cs = CentroidState.collect(cents)
-    delta.select(col(idCol), col(vecCol),
-        CentroidState.nearestCell(col(vecCol), cs).as("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-    // a forgotten-then-readmitted vector must serve its NEW rows — a
-    // stale tombstone would mask them at probe time and the next
-    // compaction would drop them physically (round-8 advice)
-    graft.sources.Tombstones.unmark(delta.sparkSession, path, delta, idCol)
+    val t = graft.sources.Tables.at(delta.sparkSession, path)
+    graft.sources.Tables.commit(t.snap, "append") { tx =>
+      tx.put(t, delta.select(col(idCol), col(vecCol),
+        CentroidState.nearestCell(col(vecCol), cs).as("cell")), Seq("cell"))
+      // a forgotten-then-readmitted vector must serve its NEW rows — a
+      // stale tombstone would mask them at probe time and the next
+      // compaction would drop them physically (round-8 advice)
+      graft.sources.Tombstones.unmark(tx, t, delta, idCol)
+    }
   }
 
   /** Compact a cell layout in place: every cell's rows are rewritten
     * as ONE file (a `repartition` on `cell` puts each cell wholly in
-    * one task, so `partitionBy` emits one file per cell directory),
-    * then swapped in by [[graft.sources.Tables.replace]] — the layout
-    * stays addressable (old or new, never neither) throughout, and
-    * markers written meanwhile are carried. This is the third leg of
+    * one task, so `partitionBy` emits one file per cell directory) in
+    * one commit ([[graft.sources.Tombstones.compact]]) — readers see the
+    * old or the new files, never neither, and markers committed
+    * meanwhile survive. This is the third leg of
     * index maintenance: [[appendPartitionedByCell]] absorbs deltas as
     * small files, probe I/O degrades with file COUNT (per-file
     * open/footer cost), and periodic compaction restores
@@ -278,16 +281,14 @@ object IvfAnn {
     */
   def compactCells(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String): Unit =
-    graft.sources.Tombstones.compact(spark, path, idCol)((live, out) =>
-      live.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(out))
+    graft.sources.Tombstones.compact(spark, path, idCol, Seq("cell"))(
+      _.repartition(col("cell")))
 
   /** LOGICAL delete from a cell layout — O(|deletes|), append-only
     * markers via the shared [[graft.sources.Tombstones]] mechanics:
     * [[searchPartitioned]] anti-joins them at probe time, and the next
-    * [[compactCells]] applies them PHYSICALLY (its publish swap
-    * replaces the directory, clearing the markers with the old
-    * layout). This is the right-to-be-forgotten shape at 10 B vectors:
+    * [[compactCells]] applies them PHYSICALLY (and removes the markers
+    * it applied). This is the right-to-be-forgotten shape at 10 B vectors:
     * the delete path never rewrites the corpus, and the serving
     * penalty — one broadcast anti-join against the (small) tombstone
     * set — is bounded by compaction cadence, exactly like small-file
@@ -308,7 +309,7 @@ object IvfAnn {
     */
   def readCells(spark: org.apache.spark.sql.SparkSession, path: String,
       cells: Seq[Int]): DataFrame =
-    spark.read.parquet(path).filter(col("cell").isin(cells: _*))
+    graft.sources.Tables.read(spark, path).filter(col("cell").isin(cells: _*))
 
   /** End-to-end IVF search AGAINST the on-disk layout: the query
     * batch's probed cells are computed from the trained centroids
@@ -341,8 +342,9 @@ object IvfAnn {
       .collect().map(_.getInt(0)).toSeq
     // pending logical deletes are filtered at probe time — a broadcast
     // anti-join against the (small, compaction-bounded) tombstone set
+    val t = graft.sources.Tables.at(spark, path)
     val corpus = graft.sources.Tombstones
-      .filterLive(spark, path, readCells(spark, path, wanted), idCol)
+      .filterLive(t, t.df.filter(col("cell").isin(wanted: _*)), idCol)
       .withColumn("__n", Vectors.norm(col(vecCol)))
     val scored = probeSide(probed, qcached.count() * nProbe,
         bytesPerRow = cs.head.cvec.length * 4L + 64L)
@@ -368,7 +370,7 @@ object IvfAnn {
   def writeIndex(corpus: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, dir: String): Unit = {
     writePartitionedByCell(corpus, idCol, vecCol, cents, s"$dir/cells")
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    graft.sources.Tables.overwrite(cents.coalesce(1), s"$dir/centroids")
   }
 
   /** Search a [[writeIndex]] directory: the quantizer loads from the
@@ -381,7 +383,7 @@ object IvfAnn {
       idCol: String, vecCol: String, queries: DataFrame, qidCol: String,
       qvecCol: String, k: Int, nProbe: Int): DataFrame =
     searchPartitioned(spark, s"$dir/cells",
-      spark.read.parquet(s"$dir/centroids"), idCol, vecCol,
+      graft.sources.Tables.read(spark, s"$dir/centroids"), idCol, vecCol,
       queries, qidCol, qvecCol, k, nProbe)
 
   /** Index-staleness telemetry — the WHEN-to-retrain signal that closes
@@ -459,17 +461,16 @@ object IvfAnn {
     * defragments, [[driftReport]] measures, THIS acts): compute the
     * corpus-wide drift ratio from the per-cell report, and when it
     * exceeds `tau`, retrain the quantizer on the full LIVE tagged
-    * corpus and rewrite the cell layout at `path` through the same
-    * crash-safe staged-publish swap as [[compactCells]] (the layout
-    * stays addressable — old or new, never neither). Below `tau`
+    * corpus and rewrite the cell layout at `path` in one commit, like
+    * [[compactCells]] (readers see old or new, never neither). Below `tau`
     * nothing is touched and the existing centroids come back.
     *
     * The rebuild sources vectors from the CALLER's corpus, which may
     * still hold logically deleted ids — pending tombstones apply
     * physically before training and re-encode ([[deleteFromCells]]
     * markers must neither shape the retrained centroids nor be
-    * resurrected into the new layout), and markers that arrive while
-    * the retrain runs are carried ([[graft.sources.Tables.replace]]).
+    * resurrected into the new layout), and markers committed while the
+    * retrain runs survive it ([[graft.sources.Tables.commit]]).
     *
     * Retraining costs what [[centroids]] + [[writePartitionedByCell]]
     * cost — `iters` corpus scans and one partitioned rewrite — which is
@@ -485,8 +486,8 @@ object IvfAnn {
     retrainIfDrifted(spark, path, tagged, genCol, idCol, vecCol, cents,
       clusters, iters, tau, () => ())
 
-  /** Test seam: `midRetrain` runs after the rebuilt layout materializes
-    * and before the publish swap — the marker-carry race window.
+  /** Test seam: `midRetrain` runs after the rebuilt layout is staged
+    * and before the commit — the window a concurrent delete can land in.
     */
   private[graft] def retrainIfDrifted(spark: org.apache.spark.sql.SparkSession,
       path: String, tagged: DataFrame, genCol: String, idCol: String,
@@ -495,16 +496,15 @@ object IvfAnn {
     val ratio = globalDriftRatio(driftReport(tagged, genCol, vecCol, cents))
     if (!ratio.exists(_ > tau)) (cents, false)
     else {
-      val full = graft.sources.Tombstones.filterLive(spark, path,
+      val t = graft.sources.Tables.at(spark, path)
+      val full = graft.sources.Tombstones.filterLive(t,
         tagged.select(col(idCol), col(vecCol)), idCol)
-      val listed = full.inputFiles // before training can cache `full`
       val retrained = centroids(full, idCol, vecCol, clusters, iters)
       val cs = CentroidState.collect(retrained)
-      graft.sources.Tables.replace(spark, path, listed,
-          Seq(graft.sources.Tombstones.Dir)) { staged =>
-        full.select(col(idCol), col(vecCol),
-            CentroidState.nearestCell(col(vecCol), cs).as("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(staged)
+      graft.sources.Tables.commit(t.snap, "retrain") { tx =>
+        tx.remove(t.tree)
+        tx.put(t, full.select(col(idCol), col(vecCol),
+          CentroidState.nearestCell(col(vecCol), cs).as("cell")), Seq("cell"))
         midRetrain()
       }
       (retrained, true)

@@ -39,10 +39,11 @@ import graft.operators.CentroidState.Cent
   *    its own cell's table. Residuals stay float and means decimal, so
   *    the chain is SQL-replayable (q142's oracle).
   *
-  * A persisted index records its encoding once, as the `_residual_codes`
-  * flag inside its directory; [[appendIndex]], [[searchIndex]] and
-  * [[retrainIfDrifted]] read it, so the codes are always scored and
-  * extended the way they were written.
+  * A persisted index records its encoding once, as the `residual`
+  * property of its `cells` table in the index's log; [[appendIndex]],
+  * [[searchIndex]] and [[retrainIfDrifted]] read it from the snapshot
+  * they resolved, so the codes are always scored and extended the way
+  * they were written.
   */
 object IvfPq {
 
@@ -161,58 +162,50 @@ object IvfPq {
     * `dir/coarse` and `dir/codebook` hold the two trained quantizers so
     * index and quantizers version together ([[IvfAnn.writeIndex]]
     * rationale — separately-versioned quantizers silently lose recall),
-    * and a residual index carries the `_residual_codes` flag.
+    * and the encoding is the `residual` property of `cells` in the log.
     */
   def writeIndex(corpus0: DataFrame, idCol: String, vecCol: String,
       dir: String, clusters: Int, m: Int, dim: Int, codes: Int,
       coarseIters: Int = 1, pqIters: Int = 1,
-      residual: Boolean = false): Unit =
-    // built into the staged sibling and swapped in whole
-    // ([[graft.sources.Tables.replace]]): the flag travels with the
-    // staged dir, so an interrupted (re)write leaves the previous index
-    // — flag, quantizers, and codes consistent with each other — fully
-    // addressable, never codes of one encoding under the other's flag
-    graft.sources.Tables.replace(corpus0.sparkSession, dir)(
-      build(corpus0, idCol, vecCol, _, clusters, m, dim, codes,
-        coarseIters, pqIters, residual))
+      residual: Boolean = false): Unit = {
+    // ONE commit replaces the whole index, so an interrupted (re)write
+    // leaves the previous index — encoding, quantizers, and codes
+    // consistent with each other — serving, never codes of one encoding
+    // under the other's flag
+    val s = graft.sources.Tables.root(corpus0.sparkSession, dir)
+    graft.sources.Tables.commit(s, "write") { tx =>
+      tx.remove(s.files)
+      build(tx, corpus0, idCol, vecCol, clusters, m, dim, codes,
+        coarseIters, pqIters, residual)
+    }
+  }
 
-  private def build(corpus0: DataFrame, idCol: String, vecCol: String,
-      out: String, clusters: Int, m: Int, dim: Int, codes: Int,
-      coarseIters: Int, pqIters: Int, residual: Boolean): Unit = {
+  private def build(tx: graft.sources.Txn, corpus0: DataFrame,
+      idCol: String, vecCol: String, clusters: Int, m: Int, dim: Int,
+      codes: Int, coarseIters: Int, pqIters: Int, residual: Boolean): Unit = {
     val spark = corpus0.sparkSession
     val (q, encoded) = train(corpus0, idCol, vecCol, clusters, m, dim,
       codes, coarseIters, pqIters, residual)
-    // flag BEFORE the cells write: no staged state — and therefore no
-    // published state — ever holds residual codes unflagged
-    if (residual) {
-      val (p, fs) = residualFlag(spark, out)
-      fs.mkdirs(p.getParent); fs.create(p, true).close()
-    }
-    encoded.write.mode("overwrite").partitionBy("cell").parquet(s"$out/cells")
-    CentroidState.toDF(spark, q.coarse).coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/coarse")
-    ProductQuantizer.toDF(spark, q.cb).coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/codebook")
+    tx.put(tx.read.table("cells"), encoded, Seq("cell"),
+      Map("residual" -> residual.toString))
+    tx.put(tx.read.table("coarse"),
+      CentroidState.toDF(spark, q.coarse).coalesce(1))
+    tx.put(tx.read.table("codebook"),
+      ProductQuantizer.toDF(spark, q.cb).coalesce(1))
   }
 
-  /** Flag file marking a residual-encoded index directory. */
-  private def residualFlag(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_residual_codes")
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-  }
-
-  /** Load both quantizers and the encoding back from the index dir
-    * (O(clusters·dim) + O(codes·dim) driver rows); `m`/`dim` are
-    * re-derived from the persisted codebook shape, so callers carry no
-    * sizing state.
+  /** Load both quantizers and the encoding back from one snapshot of
+    * the index (O(clusters·dim) + O(codes·dim) driver rows); `m`/`dim`
+    * are re-derived from the persisted codebook shape, so callers carry
+    * no sizing state.
     */
-  private def loadQuantizers(spark: SparkSession, dir: String): Quantizers = {
-    val coarse = CentroidState.collect(spark.read.parquet(s"$dir/coarse"))
-    val cbDf = spark.read.parquet(s"$dir/codebook")
-    val m = cbDf.agg(max(col("m"))).head.getInt(0) + 1
+  private def loadQuantizers(s: graft.sources.Snapshot): Quantizers = {
+    val coarse = CentroidState.collect(s.table("coarse").df)
+    val cbDf = s.table("codebook").df
+    val m = cbDf.agg(max(col("m"))).head().getInt(0) + 1
     val cb = ProductQuantizer.collectCodebook(cbDf, m)
-    val (p, fs) = residualFlag(spark, dir)
-    Quantizers(coarse, cb, m, m * cb.head.head.cvec.length, fs.exists(p))
+    Quantizers(coarse, cb, m, m * cb.head.head.cvec.length,
+      s.table("cells").prop("residual").contains("true"))
   }
 
   /** O(|delta|) incremental append — the composed index's day-2 story
@@ -227,11 +220,14 @@ object IvfPq {
     */
   def appendIndex(delta: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
-    val spark = delta.sparkSession
-    val q = loadQuantizers(spark, dir)
-    encode(pqRows(delta, idCol, vecCol, q.coarse, q.residual), idCol, q)
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/cells")
-    graft.sources.Tombstones.unmark(spark, s"$dir/cells", delta, idCol)
+    val s = graft.sources.Tables.root(delta.sparkSession, dir)
+    val q = loadQuantizers(s)
+    val cells = s.table("cells")
+    graft.sources.Tables.commit(s, "append") { tx =>
+      tx.put(cells, encode(pqRows(delta, idCol, vecCol, q.coarse,
+        q.residual), idCol, q), Seq("cell"))
+      graft.sources.Tombstones.unmark(tx, cells, delta, idCol)
+    }
   }
 
   /** LOGICAL delete from the composed index — O(|deletes|) markers on
@@ -259,14 +255,16 @@ object IvfPq {
   def searchIndex(spark: SparkSession, dir: String, idCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nProbe: Int): DataFrame = {
-    val q = loadQuantizers(spark, dir)
+    val s = graft.sources.Tables.root(spark, dir)
+    val q = loadQuantizers(s)
     val qcached = CentroidState.ensureCached(queries)
     val probed = CentroidState.ensureCached(
       probe(qcached, qidCol, qvecCol, q, nProbe))
     val wanted = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val corpus = graft.sources.Tombstones.filterLive(spark, s"$dir/cells",
-      IvfAnn.readCells(spark, s"$dir/cells", wanted), idCol)
+    val cells = s.table("cells")
+    val corpus = graft.sources.Tombstones.filterLive(cells,
+      cells.df.filter(col("cell").isin(wanted: _*)), idCol)
     topK(score(probed, qcached.count() * nProbe, q, q.cb.head.size, corpus,
       qidCol, idCol), qidCol, k)
   }
@@ -366,7 +364,7 @@ object IvfPq {
   def driftReport(spark: SparkSession, dir: String, tagged: DataFrame,
       genCol: String, vecCol: String): DataFrame =
     IvfAnn.driftReport(tagged, genCol, vecCol,
-      spark.read.parquet(s"$dir/coarse"))
+      graft.sources.Tables.read(spark, s"$dir/coarse"))
 
   /** Drift-GATED retrain of the persisted composed index — the
     * decision leg completing IvfPq's maintenance loop to parity with
@@ -374,11 +372,11 @@ object IvfPq {
     * defragments `dir/cells`, [[driftReport]] measures, THIS acts):
     * when the corpus-wide drift ratio exceeds `tau`, BOTH quantizers
     * retrain on the full LIVE tagged corpus (pending tombstones apply
-    * physically first; mid-retrain markers are carried) and the ENTIRE
-    * index directory (cells + coarse + codebook + encoding flag)
-    * rebuilds under the dir's stored encoding through
-    * [[graft.sources.Tables.replace]], so quantizers and codes can
-    * never skew and the layout stays addressable throughout. Below
+    * physically first; mid-retrain markers survive) and the ENTIRE
+    * index (cells + coarse + codebook + encoding) rebuilds under its
+    * stored encoding in one commit ([[graft.sources.Tables.commit]]),
+    * so quantizers and codes can never skew and readers see the old or
+    * the new index throughout. Below
     * `tau` nothing is touched. The expensive path (two trainings + a
     * full re-encode) hides behind the O(corpus-scan) telemetry, exactly like
     * [[IvfAnn.retrainIfDrifted]].
@@ -392,8 +390,8 @@ object IvfPq {
     retrainIfDrifted(spark, dir, tagged, genCol, idCol, vecCol, clusters,
       m, dim, codes, coarseIters, pqIters, tau, () => ())
 
-  /** Test seam: `midRetrain` runs after the staged index materializes
-    * and before the publish swap — the marker-carry race window.
+  /** Test seam: `midRetrain` runs after the rebuilt index is staged and
+    * before the commit — the window a concurrent delete can land in.
     */
   private[graft] def retrainIfDrifted(spark: SparkSession, dir: String,
       tagged: DataFrame, genCol: String, idCol: String, vecCol: String,
@@ -404,21 +402,19 @@ object IvfPq {
       driftReport(spark, dir, tagged, genCol, vecCol))
     if (!ratio.exists(_ > tau)) false
     else {
-      val (p, fsF) = residualFlag(spark, dir)
-      val residual = fsF.exists(p)
+      val s = graft.sources.Tables.root(spark, dir)
+      val cells = s.table("cells")
       // the rebuild sources vectors from the CALLER's corpus, which may
       // still hold logically deleted ids — pending markers apply
       // physically BEFORE training and re-encode (deleted vectors must
       // neither shape the quantizers nor be resurrected into the new
-      // cells), and markers that arrive while the retrain runs are
-      // carried into the staged cell layout
-      val full = graft.sources.Tombstones.filterLive(spark, s"$dir/cells",
+      // cells), and markers committed while the retrain runs survive it
+      val full = graft.sources.Tombstones.filterLive(cells,
         tagged.select(col(idCol), col(vecCol)), idCol)
-      val listed = full.inputFiles // before the build caches `full`
-      graft.sources.Tables.replace(spark, dir, listed,
-          Seq(s"cells/${graft.sources.Tombstones.Dir}")) { staged =>
-        build(full, idCol, vecCol, staged, clusters, m, dim, codes,
-          coarseIters, pqIters, residual)
+      graft.sources.Tables.commit(s, "retrain") { tx =>
+        tx.remove(s.files)
+        build(tx, full, idCol, vecCol, clusters, m, dim, codes,
+          coarseIters, pqIters, cells.prop("residual").contains("true"))
         midRetrain()
       }
       true

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Tables, Tombstones}
 
 /** Persisted MinHash-LSH band index with O(delta) incremental
   * maintenance — the dedup-index counterpart of [[IvfAnn]]'s cell
@@ -50,7 +50,7 @@ object LshIndex {
       .select(col(idCol), col("bk.band").as("band"), col("bk.bkt").as("bkt"))
   }
 
-  /** Materialize the index for a corpus (crash-safe overwrite swap). */
+  /** Materialize the index for a corpus (one overwrite commit). */
   def write(corpus: DataFrame, idCol: String, shCol: String,
       path: String): Unit =
     Tables.overwrite(bandRows(corpus, idCol, shCol), path)
@@ -78,46 +78,50 @@ object LshIndex {
     * against the (compaction-bounded) tombstone set.
     */
   def candidates(spark: SparkSession, path: String, delta: DataFrame,
-      idCol: String, shCol: String): DataFrame =
-    probe(graft.sources.Tombstones
-        .filterLive(spark, path, spark.read.parquet(path), idCol),
-      delta, idCol, shCol).distinct()
+      idCol: String, shCol: String): DataFrame = {
+    val t = Tables.at(spark, path)
+    probe(Tombstones.filterLive(t, t.df, idCol), delta, idCol, shCol)
+      .distinct()
+  }
 
   /** LOGICAL delete of documents from the index — the shared
     * [[graft.sources.Tombstones]] mechanics: O(|deletes|) append-only
     * markers. [[candidates]] skips tombstoned docs at probe time — a
     * forgotten document must stop blocking new admissions IMMEDIATELY,
     * not at compaction cadence — and the next [[compact]] drops their
-    * band rows physically (its publish swap clears the markers with
-    * the old directory). The right-to-be-forgotten shape for the dedup
+    * band rows physically (and removes the markers it applied in the
+    * same commit). The right-to-be-forgotten shape for the dedup
     * index: the delete path never rewrites the corpus.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit =
-    graft.sources.Tombstones.write(spark, path, ids, idCol)
+    Tombstones.write(spark, path, ids, idCol)
 
   /** The index's pending tombstones (None when nothing was deleted). */
   def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    graft.sources.Tombstones.read(spark, path)
+    Tombstones.read(spark, path)
 
   /** Append a batch's band rows to the index — O(|batch|), new files
-    * only, no rewrite. Caller admits the batch first (see
+    * only, no rewrite, one commit. Caller admits the batch first (see
     * [[candidates]] + Jaccard verify). Any stale tombstone matching a
-    * batch id is cleared ([[graft.sources.Tombstones.unmark]]): a
-    * forgotten-then-readmitted document must serve its NEW band rows,
-    * not stay masked until a compaction silently drops them.
+    * batch id is cleared in the same commit
+    * ([[graft.sources.Tombstones.unmark]]): a forgotten-then-readmitted
+    * document must serve its NEW band rows, not stay masked until a
+    * compaction silently drops them.
     */
   def append(batch: DataFrame, idCol: String, shCol: String,
       path: String): Unit = {
-    Tables.append(bandRows(batch, idCol, shCol), path)
-    graft.sources.Tombstones
-      .unmark(batch.sparkSession, path, batch, idCol)
+    val t = Tables.at(batch.sparkSession, path)
+    Tables.commit(t.snap, "append") { tx =>
+      tx.put(t, bandRows(batch, idCol, shCol))
+      Tombstones.unmark(tx, t, batch, idCol)
+    }
   }
 
   /** Compact the index: per-batch appends accumulate one small file
     * each, and probe cost degrades with file COUNT (open/footer per
     * file) long before it degrades with rows. The rewrite coalesces to
-    * `targetFiles` and swaps in via [[Tables.replace]] —
+    * `targetFiles` in one commit ([[Tombstones.compact]]) —
     * the [[IvfAnn.compactCells]] discipline for the dedup index
     * (content untouched, spec-asserted). `idCol` names the id column
     * explicitly — inferring it from column position would silently
@@ -127,8 +131,7 @@ object LshIndex {
     */
   def compact(spark: SparkSession, path: String, idCol: String,
       targetFiles: Int = 1): Unit =
-    graft.sources.Tombstones.compact(spark, path, idCol)((live, out) =>
-      live.repartition(targetFiles).write.mode("overwrite").parquet(out))
+    Tombstones.compact(spark, path, idCol)(_.repartition(targetFiles))
 
   /** Compact the index into a catalog table BUCKETED by `(band, bkt)`
     * — the steady-state serving layout at 100 TB: the admission probe
@@ -143,10 +146,11 @@ object LshIndex {
     */
   def compactBucketed(spark: SparkSession, path: String, table: String,
       buckets: Int, idCol: String): Unit = {
-    val base = spark.read.parquet(path)
+    val t = Tables.at(spark, path)
+    val base = t.df
     require(base.columns.contains(idCol),
       s"id column '$idCol' not in index schema ${base.columns.mkString(",")}")
-    val live = graft.sources.Tombstones.filterLive(spark, path, base, idCol)
+    val live = Tombstones.filterLive(t, base, idCol)
     graft.layout.Bucketing
       .writeBucketedBy(live, table, Seq("band", "bkt"), buckets)
   }
@@ -185,10 +189,11 @@ object LshIndex {
     * reads from the table it replaces, it materializes under a staged
     * catalog name and swaps in by rename
     * ([[graft.layout.Bucketing.writeBucketedBySwap]]). Pending
-    * tombstones apply physically to both tiers; markers that arrive
-    * while the rollover runs are carried into the truncated ingest dir
-    * ([[Tables.replace]]) so [[candidatesHybrid]] keeps masking them in
-    * either tier.
+    * tombstones apply physically to both tiers. The truncate is one
+    * commit removing exactly the ingest files and markers the rollover
+    * read, so band rows appended and markers committed while it runs
+    * stay in the ingest tier, where [[candidatesHybrid]] serves and
+    * applies them to either tier.
     *
     * Crash/retry contract: a rollover interrupted mid-swap is recovered
     * by [[graft.layout.Bucketing.recoverSwap]] (called here before the
@@ -206,12 +211,13 @@ object LshIndex {
 
   /** Test seam: `midRollover` runs after the new bulk generation is
     * materialized (live read done) and before the ingest tier
-    * truncates — the race window the marker carry covers.
+    * truncates — the window a concurrent append or delete can land in.
     */
   private[graft] def compactBucketedAndTruncate(spark: SparkSession,
       path: String, table: String, buckets: Int, idCol: String,
       midRollover: () => Unit): Unit = {
-    val pathRows = spark.read.parquet(path)
+    val t = Tables.at(spark, path)
+    val pathRows = t.df
     require(pathRows.columns.contains(idCol),
       s"id column '$idCol' not in index schema ${pathRows.columns.mkString(",")}")
     // a crashed earlier swap may have left the bulk under its staged
@@ -223,8 +229,7 @@ object LshIndex {
       if (spark.catalog.tableExists(table)) Some(spark.table(table)) else None
     val all = bulk.fold(pathRows)(_.unionByName(pathRows))
     // pending tombstones apply physically here — to BOTH tiers
-    val live = graft.sources.Tombstones.filterLive(spark, path, all, idCol)
-    val listed = live.inputFiles // before the swap moves the bulk's files
+    val live = Tombstones.filterLive(t, all, idCol)
     if (bulk.isEmpty)
       graft.layout.Bucketing
         .writeBucketedBy(live, table, Seq("band", "bkt"), buckets)
@@ -232,8 +237,8 @@ object LshIndex {
       graft.layout.Bucketing
         .writeBucketedBySwap(live, table, Seq("band", "bkt"), buckets)
     midRollover()
-    Tables.replace(spark, path, listed, Seq(graft.sources.Tombstones.Dir))(
-      pathRows.limit(0).coalesce(1).write.mode("overwrite").parquet(_))
+    Tables.commit(t.snap, "rollover")(
+      _.remove(t.files ++ Tombstones.markers(t).files))
   }
 
   /** Per-doc shingle arrays minus corpus-wide HOT shingles (document
@@ -265,7 +270,7 @@ object LshIndex {
     * buckets — its exact probe-join cost) is computed from the index
     * rows alone, one O(index) groupBy with no corpus access. When it
     * exceeds `pairBudget`, the index rebuilds over [[dfCapShingles]]
-    * shingle sets and swaps in through [[Tables.replace]];
+    * shingle sets in one commit ([[Tables.commit]]);
     * below budget nothing is touched. The expensive path hides behind
     * the cheap telemetry — q121's discipline.
     * @return (candidate_pairs observed, whether a rebuild ran)
@@ -276,13 +281,14 @@ object LshIndex {
     rebucketIfSkewed(spark, path, corpus, idCol, shCol, capDf, pairBudget,
       () => ())
 
-  /** Test seam: `midRebuild` runs after the rebuilt rows materialize
-    * and before the publish swap — the marker-carry race window.
+  /** Test seam: `midRebuild` runs after the rebuilt rows are staged
+    * and before the commit — the window a concurrent delete can land in.
     */
   private[graft] def rebucketIfSkewed(spark: SparkSession, path: String,
       corpus: DataFrame, idCol: String, shCol: String,
       capDf: Long, pairBudget: Long, midRebuild: () => Unit): (Long, Boolean) = {
-    val pairs = spark.read.parquet(path)
+    val t = Tables.at(spark, path)
+    val pairs = t.df
       .groupBy(col("band"), col("bkt")).agg(count(lit(1)).as("s"))
       .agg(coalesce(sum(expr("(s * (s - 1)) div 2")), lit(0L)))
       .head.getLong(0)
@@ -290,14 +296,12 @@ object LshIndex {
     else {
       // the rebuild sources band rows from the CALLER's corpus, which
       // may still hold logically deleted docs — pending markers apply
-      // physically here, or the swap would resurrect forgotten
+      // physically here, or the rebuild would resurrect forgotten
       // documents and destroy their markers (round-9 advice)
-      val live = graft.sources.Tombstones.filterLive(spark, path,
-        bandRows(dfCapShingles(corpus, idCol, shCol, capDf), idCol, shCol),
-        idCol)
-      Tables.replace(spark, path, live.inputFiles,
-          Seq(graft.sources.Tombstones.Dir)) { staged =>
-        live.write.mode("overwrite").parquet(staged)
+      Tables.commit(t.snap, "rebucket") { tx =>
+        tx.remove(t.files ++ Tombstones.markers(t).files)
+        tx.put(t, Tombstones.filterLive(t, bandRows(
+          dfCapShingles(corpus, idCol, shCol, capDf), idCol, shCol), idCol))
         midRebuild()
       }
       (pairs, true)
@@ -316,7 +320,6 @@ object LshIndex {
     */
   def candidatesHybrid(spark: SparkSession, table: String, path: String,
       delta: DataFrame, idCol: String, shCol: String): DataFrame = {
-    import graft.sources.Tombstones
     // ONE MinHash scan of the delta probes BOTH tiers: the band-rows
     // frame is cached (registered in CacheScope) and reused — the
     // delta's signature scan is the dominant per-row admission cost
@@ -324,10 +327,10 @@ object LshIndex {
     // would forfeit the bucketed side's exchange-free plan.
     graft.layout.Bucketing.recoverSwap(spark, table)
     val dBand = graft.CacheScope.cache(bandRows(delta, idCol, shCol))
-    probeBands(dBand,
-        Tombstones.filterLive(spark, path, spark.table(table), idCol), idCol)
-      .unionByName(probeBands(dBand,
-        Tombstones.filterLive(spark, path, spark.read.parquet(path), idCol),
+    val t = Tables.at(spark, path)
+    probeBands(dBand, Tombstones.filterLive(t, spark.table(table), idCol),
+        idCol)
+      .unionByName(probeBands(dBand, Tombstones.filterLive(t, t.df, idCol),
         idCol))
       .distinct()
   }

@@ -117,13 +117,17 @@ object QualityClassifier {
       totalsRow(feats, labels, idCol, labelCol))
 
   /** Atomic two-artifact publish: one snapshot version holds counts AND
-    * totals; its commit marker makes both visible together.
+    * totals (one commit of the version's own log), and the version's
+    * entry in the model's log makes both visible together.
     */
   private def publish(spark: SparkSession, dir: String,
       counts: DataFrame, totals: DataFrame): Unit = {
     graft.sources.Snapshots.commit(spark, dir) { vp =>
-      counts.write.parquet(s"$vp/counts")
-      totals.write.parquet(s"$vp/totals")
+      val s = graft.sources.Tables.root(spark, vp)
+      graft.sources.Tables.commit(s, "publish") { tx =>
+        tx.put(s.table("counts"), counts)
+        tx.put(s.table("totals"), totals)
+      }
     }
     ()
   }
@@ -138,10 +142,10 @@ object QualityClassifier {
   }
 
   def readCounts(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${pinned(spark, dir)}/counts")
+    graft.sources.Tables.read(spark, s"${pinned(spark, dir)}/counts")
 
   def readTotals(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${pinned(spark, dir)}/totals")
+    graft.sources.Tables.read(spark, s"${pinned(spark, dir)}/totals")
 
   /** O(delta) admission of a labeled batch: counts add. */
   def appendModel(spark: SparkSession, dir: String, feats: DataFrame,
@@ -177,8 +181,8 @@ object QualityClassifier {
         sum(col("pdocs")).as("pdocs"), sum(col("ndocs")).as("ndocs"))
     // the new version derives from reading version N while WRITING
     // version N+1 — immutable inputs, so there is no read-while-replace
-    // hazard to stage around, and a crash mid-write leaves only an
-    // orphan _v directory no reader resolves
+    // hazard, and a crash mid-write leaves only an uncommitted _v
+    // directory no reader resolves
     publish(spark, dir, counts, totals)
   }
 
@@ -190,9 +194,9 @@ object QualityClassifier {
       idCol: String): DataFrame = {
     // resolve the version ONCE: counts and totals come from the same
     // immutable version even if a publish lands mid-query
-    val vp = pinned(spark, dir)
-    val totals = spark.read.parquet(s"$vp/totals")
-    score(feats, spark.read.parquet(s"$vp/counts"),
+    val vp = graft.sources.Tables.root(spark, pinned(spark, dir))
+    val totals = vp.table("totals").df
+    score(feats, vp.table("counts").df,
         totals.select(col("ptot"), col("ntot")), idCol)
       .crossJoin(broadcast(totals.select(
         log10(col("pdocs").cast("double") / col("ndocs")).as("prior"))))

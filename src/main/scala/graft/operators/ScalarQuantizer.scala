@@ -27,7 +27,7 @@ import graft.expressions.NativeKernels
   * stats version with the codes, O(|delta|) appends encode through the
   * STORED stats (the clamp absorbs out-of-range drift), deletes are
   * [[graft.sources.Tombstones]] markers, and (re)writes go through the
-  * crash-safe staged publish.
+  * one-commit publish ([[graft.sources.Tables.commit]]).
   */
 object ScalarQuantizer {
 
@@ -97,21 +97,20 @@ object ScalarQuantizer {
   /** Persist the index: `dir/codes` holds the encoded corpus,
     * `dir/stats` the quantization ranges — stats version WITH the codes
     * (the [[IvfAnn.writeIndex]] rationale: separately-versioned stats
-    * silently decode garbage), and the whole dir lands through the
-    * staged publish swap so an interrupted (re)write leaves the
-    * previous index fully addressable ([[IvfPq.writeIndex]]
-    * discipline).
+    * silently decode garbage), and the whole index lands in one commit
+    * so an interrupted (re)write leaves the previous index serving
+    * ([[IvfPq.writeIndex]] discipline).
     */
   def writeIndex(corpus0: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
     val spark = corpus0.sparkSession
-    graft.sources.Tables.replace(spark, dir) { staged =>
+    val s = graft.sources.Tables.root(spark, dir)
+    graft.sources.Tables.commit(s, "write") { tx =>
+      tx.remove(s.files)
       val corpus = CentroidState.ensureCached(corpus0)
       val stats = train(corpus, vecCol)
-      encoded(corpus, idCol, vecCol, stats)
-        .write.mode("overwrite").parquet(s"$staged/codes")
-      statsToDF(spark, stats).coalesce(1)
-        .write.mode("overwrite").parquet(s"$staged/stats")
+      tx.put(s.table("codes"), encoded(corpus, idCol, vecCol, stats))
+      tx.put(s.table("stats"), statsToDF(spark, stats).coalesce(1))
     }
   }
 
@@ -124,11 +123,12 @@ object ScalarQuantizer {
     */
   def appendIndex(delta: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
-    val spark = delta.sparkSession
-    val stats = loadStats(spark, dir)
-    encoded(delta, idCol, vecCol, stats)
-      .write.mode("append").parquet(s"$dir/codes")
-    graft.sources.Tombstones.unmark(spark, s"$dir/codes", delta, idCol)
+    val s = graft.sources.Tables.root(delta.sparkSession, dir)
+    val stats = loadStats(s)
+    graft.sources.Tables.commit(s, "append") { tx =>
+      tx.put(s.table("codes"), encoded(delta, idCol, vecCol, stats))
+      graft.sources.Tombstones.unmark(tx, s.table("codes"), delta, idCol)
+    }
   }
 
   /** Search the persisted index: codes-only scan (the float corpus is
@@ -138,9 +138,10 @@ object ScalarQuantizer {
   def searchIndex(spark: SparkSession, dir: String, idCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int): DataFrame = {
-    val stats = loadStats(spark, dir)
-    val codes = graft.sources.Tombstones.filterLive(spark, s"$dir/codes",
-      spark.read.parquet(s"$dir/codes"), idCol)
+    val s = graft.sources.Tables.root(spark, dir)
+    val stats = loadStats(s)
+    val codes = graft.sources.Tombstones.filterLive(s.table("codes"),
+      s.table("codes").df, idCol)
     scoreCodes(codes, stats, idCol, queries, qidCol, qvecCol, k)
   }
 
@@ -162,8 +163,8 @@ object ScalarQuantizer {
       .toDF("pos", "lo", "range")
   }
 
-  private def loadStats(spark: SparkSession, dir: String): Stats = {
-    val rows = spark.read.parquet(s"$dir/stats")
+  private def loadStats(s: graft.sources.Snapshot): Stats = {
+    val rows = s.table("stats").df
       .collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)

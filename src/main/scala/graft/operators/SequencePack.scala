@@ -118,42 +118,39 @@ object SequencePack {
   }
 
   /** Pack `docs` from offset 0 and persist as the stream's base
-    * (staged-publish swap — an interrupted write leaves any previous
-    * layout addressable). Input must be empty-doc-free
-    * ([[requireNoEmptyDocs]]).
+    * (one commit — an interrupted write leaves any previous layout
+    * serving). Input must be empty-doc-free ([[requireNoEmptyDocs]]).
     */
   def writePacked(docs: DataFrame, idCol: String, nTokCol: String,
       seqLen: Int, dir: String, buckets: Int = 32): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
     requireNoEmptyDocs(docs, nTokCol, "writePacked")
-    graft.sources.Tables.replace(spark, dir) { staged =>
-      pack(docs, idCol, nTokCol, seqLen, buckets)
-        .write.mode("overwrite").parquet(s"$staged/contrib")
-      Seq((seqLen, buckets)).toDF("seq_len", "buckets").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staged/meta")
+    val s = graft.sources.Tables.root(spark, dir)
+    graft.sources.Tables.commit(s, "write") { tx =>
+      tx.remove(s.files)
+      tx.put(s.table("contrib"), pack(docs, idCol, nTokCol, seqLen, buckets))
+      tx.put(s.table("meta"),
+        Seq((seqLen, buckets)).toDF("seq_len", "buckets").coalesce(1))
     }
   }
 
   /** Continue the persisted stream with `delta` (empty-doc-free, all
     * keys strictly above the stored frontier — fails fast otherwise).
     * O(delta): two column-pruned tail aggregates plus packing and
-    * appending the batch's contribution rows. The batch lands as a
-    * plain multi-file append — same per-batch commit exposure as every
-    * other O(delta) append family here (TextIndex postings, IVF cell
-    * files): a driver crash mid-commit can leave part of ONE batch
-    * visible, which the monotone-key contract then surfaces loudly
-    * (the retry's lower keys trip the frontier check) rather than
-    * silently double-admitting. What the derived-from-data tail
-    * ELIMINATES is the other, quieter failure: a separate running
+    * appending the batch's contribution rows in one commit, so a
+    * crash leaves the batch wholly absent or wholly visible; a retry of
+    * a committed batch trips the monotone-key frontier check loudly
+    * rather than silently double-admitting. What the derived-from-data
+    * tail ELIMINATES is the other, quieter failure: a separate running
     * total drifting from the rows actually stored.
     */
   def appendPacked(delta: DataFrame, idCol: String, nTokCol: String,
       dir: String): Unit = {
-    val spark = delta.sparkSession
-    val meta = spark.read.parquet(s"$dir/meta").collect().head
+    val s = graft.sources.Tables.root(delta.sparkSession, dir)
+    val meta = s.table("meta").df.collect().head
     val (seqLen, buckets) = (meta.getInt(0), meta.getInt(1))
-    val tail = spark.read.parquet(s"$dir/contrib")
+    val tail = s.table("contrib").df
       .agg(max(col("end_off")).as("t"), max(col(idCol)).as("k"))
       .collect().head
     // an all-empty-docs base leaves no contributions: the stream starts
@@ -178,12 +175,12 @@ object SequencePack {
       s"appendPacked needs all delta keys above the stored frontier " +
         s"$frontier (stream order is monotone by contract); got min " +
         s"${low.getLong(0)}")
-    pack(delta, idCol, nTokCol, seqLen, buckets, base)
-      .write.mode("append").parquet(s"$dir/contrib")
+    graft.sources.Tables.commit(s, "append")(_.put(s.table("contrib"),
+      pack(delta, idCol, nTokCol, seqLen, buckets, base)))
   }
 
   /** The stream's contribution rows (all batches). */
   def readPacked(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    spark.read.parquet(s"$dir/contrib")
+    graft.sources.Tables.read(spark, s"$dir/contrib")
 }

@@ -25,7 +25,7 @@ import graft.sources.Tables
   * where only collided index rows leave the scan, appends are
   * O(|batch|) new files, deletes are [[graft.sources.Tombstones]]
   * markers masked at probe time and applied physically by [[compact]]
-  * ([[graft.sources.Tables.replace]]).
+  * in one commit ([[graft.sources.Tables.commit]]).
   */
 object SimHashIndex {
 
@@ -71,8 +71,11 @@ object SimHashIndex {
     */
   def append(batch: DataFrame, idCol: String, hsCol: String,
       path: String): Unit = {
-    Tables.append(bandRows(batch, idCol, hsCol), path)
-    graft.sources.Tombstones.unmark(batch.sparkSession, path, batch, idCol)
+    val t = Tables.at(batch.sparkSession, path)
+    Tables.commit(t.snap, "append") { tx =>
+      tx.put(t, bandRows(batch, idCol, hsCol))
+      graft.sources.Tombstones.unmark(tx, t, batch, idCol)
+    }
   }
 
   /** Probe the index with a delta batch: distinct
@@ -84,8 +87,8 @@ object SimHashIndex {
     */
   def candidates(spark: SparkSession, path: String, delta: DataFrame,
       idCol: String, hsCol: String, maxHamming: Int = 2): DataFrame = {
-    val index = graft.sources.Tombstones.filterLive(spark, path,
-      spark.read.parquet(path), idCol)
+    val t = Tables.at(spark, path)
+    val index = graft.sources.Tombstones.filterLive(t, t.df, idCol)
     bandRows(delta, idCol, hsCol).as("d")
       .join(index.as("c"),
         col("d.j") === col("c.j") &&
@@ -115,6 +118,6 @@ object SimHashIndex {
     */
   def compact(spark: SparkSession, path: String, idCol: String,
       targetFiles: Int = 1): Unit =
-    graft.sources.Tombstones.compact(spark, path, idCol)((live, out) =>
-      live.repartition(targetFiles).write.mode("overwrite").parquet(out))
+    graft.sources.Tombstones.compact(spark, path, idCol)(
+      _.repartition(targetFiles))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Stable, Text}
-import graft.sources.{Tables, Tombstones}
+import graft.sources.{Table, Tables, Tombstones}
 
 /** Persisted BM25 inverted index with O(delta) incremental maintenance —
   * the KEYWORD-retrieval tier beside the vector families ([[IvfAnn]],
@@ -15,8 +15,9 @@ import graft.sources.{Tables, Tombstones}
   * leg of hybrid retrieval (reference scope: the corpus-curation north
   * star; the reference itself has no retrieval surface at all).
   *
-  * Layout under `dir` — ONE partitioned table, `postings/`, so every
-  * lifecycle op is a single parquet commit (round-13: the previous
+  * Layout under `dir` — ONE partitioned table, `postings/`, with its own
+  * commit log (`postings/_log`, [[Tables.commit]]), so every lifecycle op
+  * is a single commit (round-13: the previous
   * three-directory layout cost each streamed [[append]] 3 write jobs —
   * postings + doclens + stats — per micro-batch; at 100 TB that is 3
   * object-store commits where 1 suffices, and at gate scale it was the
@@ -29,9 +30,9 @@ import graft.sources.{Tables, Tombstones}
   *    corpus size. `dl` (document token length) is denormalized into
   *    the posting row — the classic inverted-file trick that makes
   *    scoring a single equi-join with zero side lookups. The bucket
-  *    modulus itself lives in `postings/_buckets` (self-describing
-  *    layout — [[growBucketsIfHot]] can change it, and it must move
-  *    atomically with the rows it bucketed).
+  *    modulus and the positional flag are properties of the table in
+  *    its log (self-describing layout — [[growBucketsIfHot]] can change
+  *    the modulus, and it moves atomically with the rows it bucketed).
   *  - partition `bkt = -1` ([[DlBkt]]) — doclen rows `(doc_id, dl)`,
   *    consulted only by [[delete]] to price a forgotten document's
   *    stats correction; never read at probe time (probes prune to
@@ -52,14 +53,17 @@ import graft.sources.{Tables, Tombstones}
   *    doc's old and new postings side by side would corrupt tf/df
   *    rather than be absorbed by a DISTINCT the way the dedup families'
   *    candidate joins absorb duplicate band rows. Compact first.
-  *  - [[delete]] is O(|deletes|): a marker masks the doc's postings at
-  *    probe time immediately, and one negative `stats` row (priced
-  *    from `doclens` at delete time, NOT at probe time) keeps n/avgdl
-  *    exact — so the served scores equal an index built on the live
-  *    set, which is exactly what the q160 oracle checks.
-  *  - [[compact]] applies markers physically through
-  *    [[Tables.replace]], carrying `_tombstones` and [[StBkt]] so deletes
-  *    landing mid-compaction survive the swap.
+  *  - [[delete]] is O(|deletes|) and ONE commit: a marker masks the
+  *    doc's postings at probe time immediately, and one negative `stats`
+  *    row (priced from `doclens` at delete time, NOT at probe time)
+  *    keeps n/avgdl exact — so the served scores equal an index built on
+  *    the live set, which is exactly what the q160 oracle checks. A
+  *    delete that hits nothing commits nothing.
+  *  - [[compact]] and [[growBucketsIfHot]] rewrite exactly the files
+  *    they read in one commit, so a delete or an append landing
+  *    mid-rewrite survives it (its files are ones the rewrite never
+  *    read). Appends must not run during a grow: their rows would be
+  *    bucketed under the modulus the grow replaces.
   */
 object TextIndex {
 
@@ -88,57 +92,30 @@ object TextIndex {
   private def bkt(term: Column, buckets: Int): Column =
     pmod(xxhash64(term), lit(buckets.toLong)).cast("int")
 
-  /** The layout's bucket modulus AND positional flag live IN the
-    * postings directory (`postings/_buckets`: line 1 the modulus, line
-    * 2 `pos=true|false`) so they travel atomically with every publish
-    * swap — a probe or append computing `bkt` with a stale modulus
-    * would prune the WRONG directories and silently miss postings, and
-    * sniffing the positional flag from parquet footers cost an extra
-    * file-listing pass per append/phrase/proximity call on an index
-    * that can hold millions of files at 100 TB (round-11 advice). A
-    * layout written before the flag existed (modulus-only `_buckets`)
-    * falls back to the old one-time schema sniff — assuming
-    * non-positional would let appends write `pos`-less rows into a
-    * positional directory and turn phrase probes away from an index
-    * that actually has positions.
+  /** The postings table of the index at `dir` (its latest snapshot). */
+  private def table(spark: SparkSession, dir: String): Table =
+    Tables.at(spark, s"$dir/postings")
+
+  /** The layout's bucket modulus and positional flag — properties of the
+    * postings table in its log, so they move atomically with every
+    * commit that changes them: a probe or append computing `bkt` with a
+    * stale modulus would prune the WRONG directories and silently miss
+    * postings.
     */
-  def readLayout(spark: SparkSession, dir: String): (Int, Boolean) = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/postings/_buckets")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"$dir/postings/_buckets missing — not a " +
-      "TextIndex layout (or a pre-modulus one; rebuild via write())")
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in).getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
-    val withPos =
-      if (lines.exists(_.startsWith("pos="))) lines.contains("pos=true")
-      else spark.read.parquet(s"$dir/postings").schema.fieldNames
-        .contains("pos")
-    (lines.head.toInt, withPos)
+  private def layout(t: Table): (Int, Boolean) = {
+    val nb = t.prop("buckets").getOrElse(throw new IllegalArgumentException(
+      s"${t.path} is not a TextIndex layout (rebuild via write())"))
+    (nb.toInt, t.prop("positional").contains("true"))
   }
+
+  def layout(spark: SparkSession, dir: String): (Int, Boolean) =
+    layout(table(spark, dir))
 
   def readBuckets(spark: SparkSession, dir: String): Int =
-    readLayout(spark, dir)._1
+    layout(spark, dir)._1
 
-  private def writeBucketsFile(spark: SparkSession, postingsDir: String,
-      buckets: Int, withPositions: Boolean): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$postingsDir/_buckets")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(s"$buckets\npos=$withPositions\n".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** The append-only subdirectories of the postings table a rewrite
-    * must carry ([[Tables.replace]]): deletes are the one concurrent
-    * writer the layout sanctions, and each appends a marker and a
-    * NEGATIVE stats row — without the carry a delete landing mid-rewrite
-    * would lose both with the old directory, and served n/avgdl would
-    * silently drift from the live set.
-    */
-  private val Appended = Seq(Tombstones.Dir, s"bkt=$StBkt")
+  private def props(buckets: Int, withPositions: Boolean) =
+    Map("buckets" -> buckets.toString, "positional" -> withPositions.toString)
 
   /** `(bkt, term, doc_id, tf, dl)` posting rows for a document batch —
     * one scan: tokenize, per-(doc, term) counts, and the doc length
@@ -213,27 +190,27 @@ object TextIndex {
     post.unionByName(dlRows).unionByName(stRow)
   }
 
-  /** Build the index for a corpus — ONE write job, swapped in whole by
-    * [[Tables.replace]], so a crash mid-build never leaves postings
-    * without their totals (the [[IvfPq.writeIndex]] crash-consistency
-    * discipline).
+  /** Build the index for a corpus — ONE write job and ONE commit that
+    * replaces any previous index whole, so a crash mid-build never
+    * leaves postings without their totals (the [[IvfPq.writeIndex]]
+    * crash-consistency discipline).
     */
   def write(docs: DataFrame, idCol: String, textCol: String,
       dir: String, buckets: Int = Buckets,
-      withPositions: Boolean = false): Unit =
-    Tables.replace(docs.sparkSession, dir) { staged =>
+      withPositions: Boolean = false): Unit = {
+    val t = table(docs.sparkSession, dir)
+    Tables.commit(t.snap, "write") { tx =>
+      tx.remove(t.tree)
       // NOT clustered by bucket before the partitioned write: the
       // repartition shuffle measurably slows every build at gate scale
       // (+1-3.5 s per write-heavy gate, round-11 measured) for a file-
       // count concern that compact() already owns — it restores one file
       // per bucket, and at 100 TB a build is followed by a compact as a
       // matter of course
-      batchRows(docs, idCol, textCol, buckets, withPositions)
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$staged/postings")
-      writeBucketsFile(docs.sparkSession, s"$staged/postings", buckets,
-        withPositions)
+      tx.put(t, batchRows(docs, idCol, textCol, buckets, withPositions),
+        Seq("bkt"), props(buckets, withPositions))
     }
+  }
 
   /** Absorb a batch — O(|batch|) and ONE parquet commit: new posting
     * files into their bucket partitions, the batch's doclen files into
@@ -243,8 +220,8 @@ object TextIndex {
     */
   def append(batch: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = {
-    val spark = batch.sparkSession
-    Tombstones.read(spark, s"$dir/postings").foreach { ts =>
+    val t = table(batch.sparkSession, dir)
+    Tombstones.read(t).foreach { ts =>
       val pending = ts.join(
         batch.select(col(idCol).as(Tombstones.Col)).distinct(),
         Seq(Tombstones.Col), "left_semi")
@@ -256,54 +233,55 @@ object TextIndex {
     // the layout self-describes its encoding: a positional index's
     // appended rows must carry positions too, or a later phrase probe
     // would silently miss the appended docs
-    val (nb, withPos) = readLayout(spark, dir)
-    batchRows(batch, idCol, textCol, nb, withPos)
-      .write.mode("append").partitionBy("bkt").parquet(s"$dir/postings")
+    val (nb, withPos) = layout(t)
+    Tables.commit(t.snap, "append")(
+      _.put(t, batchRows(batch, idCol, textCol, nb, withPos), Seq("bkt")))
   }
 
-  /** Forget documents — O(|deletes|): tombstone markers mask the docs'
-    * postings at probe time IMMEDIATELY, and one negative stats row
-    * (the docs' count and summed length, looked up in the [[DlBkt]]
-    * doclen partition now so probes never pay for it) keeps served
-    * n/avgdl equal to the live set's. Ids already marked are skipped,
-    * so a repeated delete cannot double-subtract; ids never indexed
-    * contribute nothing.
+  /** Forget documents — O(|deletes|) and ONE commit: tombstone markers
+    * mask the docs' postings at probe time IMMEDIATELY, and one negative
+    * stats row (the docs' count and summed length, looked up in the
+    * [[DlBkt]] doclen partition now so probes never pay for it) keeps
+    * served n/avgdl equal to the live set's. Ids already marked are
+    * skipped, so a repeated delete cannot double-subtract; ids never
+    * indexed contribute nothing, and a delete that hits nothing commits
+    * nothing.
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String): Unit = {
+    val t = table(spark, dir)
     val doomed0 = ids.select(col(idCol).as("doc_id")).distinct()
-    val doomed = Tombstones.read(spark, s"$dir/postings") match {
+    val doomed = Tombstones.read(t) match {
       case Some(ts) => doomed0.join(ts,
         doomed0("doc_id") === ts(Tombstones.Col), "left_anti")
       case None => doomed0
     }
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = t.df
     val hit = postings
       .filter(col("bkt") === DlBkt)
       .select(col("doc_id"), col("dl"))
       .join(broadcast(doomed), "doc_id")
       .transform(graft.CacheScope.cache)
-    // the hit count rides the stats write as an OBSERVED metric instead
-    // of its own count action (round-13 §1.2): the negative totals row
-    // is written unconditionally — a no-op delete appends an additive
-    // (0, 0) row, which changes no sum — and only the marker write
-    // stays gated on n > 0 (an empty marker dir would flip the
-    // "None when nothing was deleted" probe contract).
+    // the hit count rides the stats row's staging as an OBSERVED metric
+    // instead of its own count action (round-13 §1.2); a delete that hit
+    // nothing drops the staged (0, 0) row and commits nothing
     val posN = if (postings.columns.contains("pos"))
       Seq(lit(null).cast("array<int>").as("pos")) else Nil
     val obs = org.apache.spark.sql.Observation()
-    hit.observe(obs, count(lit(1)).as("n"))
-      .agg((-count(lit(1))).cast("long").as("n_docs"),
-        (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
-      .select(Seq(lit(StBkt).as("bkt"),
-        lit(null).cast("string").as("term"),
-        lit(null).cast("long").as("doc_id"),
-        lit(null).cast("long").as("tf"),
-        lit(null).cast("long").as("dl")) ++ posN ++
-        Seq(col("n_docs"), col("sum_dl")): _*)
-      .write.mode("append").partitionBy("bkt").parquet(s"$dir/postings")
-    if (obs.get("n").asInstanceOf[Long] > 0L)
-      Tombstones.write(spark, s"$dir/postings", hit, "doc_id")
+    Tables.commit(t.snap, "delete") { tx =>
+      tx.put(t, hit.observe(obs, count(lit(1)).as("n"))
+        .agg((-count(lit(1))).cast("long").as("n_docs"),
+          (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
+        .select(Seq(lit(StBkt).as("bkt"),
+          lit(null).cast("string").as("term"),
+          lit(null).cast("long").as("doc_id"),
+          lit(null).cast("long").as("tf"),
+          lit(null).cast("long").as("dl")) ++ posN ++
+          Seq(col("n_docs"), col("sum_dl")): _*), Seq("bkt"))
+      if (obs.get("n").asInstanceOf[Long] > 0L)
+        Tombstones.put(tx, t, hit, "doc_id")
+      else tx.cancel()
+    }
     graft.CacheScope.release(hit)
   }
 
@@ -313,47 +291,41 @@ object TextIndex {
     * rows read, never a corpus scan.
     */
   def totals(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/postings")
-      .filter(col("bkt") === StBkt)
+    totals(table(spark, dir))
+
+  private def totals(t: Table): DataFrame =
+    t.df.filter(col("bkt") === StBkt)
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),
         sum(col("sum_dl")).cast("long").as("sum_dl"))
 
   /** Apply pending tombstones physically and restore one file per
-    * bucket: ONE staged rewrite of the whole table drops marked docs'
+    * bucket: ONE commit rewrites the files it read, dropping marked docs'
     * posting AND doclen rows together (one marker set, one pass — the
     * stats rows carry a NULL doc_id so no marker can ever match them
     * and they ride along untouched: they are already correct, additive,
-    * deletes subtracted at delete time). Markers written while the
-    * rewrite ran are carried into the published layout
-    * ([[Tables.replace]]) and keep masking — their doclen rows
-    * also survive, correctly: a re-delete is refused while the marker
-    * is pending, and the NEXT compact applies both sides at once. The
-    * single publish swap clears the applied markers with the old
-    * directory; postings and doclens can never be staged against
-    * different marker sets (the hazard the previous two-directory
-    * layout had to order its publishes around).
+    * deletes subtracted at delete time), and removes the markers it
+    * applied. A delete committed while the rewrite ran is files the
+    * rewrite never read, so its marker and stats row survive and keep
+    * masking — its doclen rows also survive, correctly: a re-delete is
+    * refused while the marker is pending, and the NEXT compact applies
+    * both sides at once. Postings and doclens can never be rewritten
+    * against different marker sets.
     */
   def compact(spark: SparkSession, dir: String): Unit =
     compact(spark, dir, () => ())
 
-  /** Test seam: `midCompact` runs right after the rewrite's one listing
-    * (postings and markers), before the staged rewrite materializes —
-    * the window the carry covers.
+  /** Test seam: `midCompact` runs after the rewrite staged its files and
+    * before it commits — the whole window a concurrent delete can land
+    * in between the rewrite's read and its commit.
     */
   private[graft] def compact(spark: SparkSession, dir: String,
       midCompact: () => Unit): Unit = {
-    val post = s"$dir/postings"
-    val live = Tombstones.filterLive(spark, post,
-      spark.read.parquet(post), "doc_id")
-    midCompact()
-    // the modulus and positional flag are unchanged by compaction but
-    // must travel with the staged layout — the swap replaces the whole
-    // directory
-    val (nb, withPos) = readLayout(spark, dir)
-    Tables.replace(spark, post, live.inputFiles, Appended) { staged =>
-      live.repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt").parquet(staged)
-      writeBucketsFile(spark, staged, nb, withPos)
+    val t = table(spark, dir)
+    Tables.commit(t.snap, "compact") { tx =>
+      tx.remove(t.files ++ Tombstones.markers(t).files)
+      tx.put(t, Tombstones.filterLive(t, t.df, "doc_id")
+        .repartition(col("bkt")), Seq("bkt"))
+      midCompact()
     }
   }
 
@@ -364,9 +336,9 @@ object TextIndex {
     * per query term is one bucket directory, so a bucket that outgrew
     * `maxPostingsPerBucket` makes every probe of its terms scan that
     * much. Above the budget the postings rewrite under DOUBLE the
-    * modulus through [[Tables.replace]] (markers ride along for the
-    * next [[compact]] to apply; mid-rebuild deletes are carried), and
-    * the new modulus travels inside the published directory. Doubling
+    * modulus in one commit (markers stay for the next [[compact]] to
+    * apply; mid-rebuild deletes survive), which also records the new
+    * modulus. Doubling
     * splits a bucket's VOCABULARY in half (expected); a single
     * ultra-hot TERM cannot be split by any modulus — its posting list
     * is irreducible probe cost (cap-df pruning is a different, score-
@@ -381,15 +353,15 @@ object TextIndex {
       maxPostingsPerBucket: Long): DataFrame =
     growBucketsIfHot(spark, dir, maxPostingsPerBucket, () => ())
 
-  /** Test seam: `midGrow` runs right after the rewrite's one listing —
-    * the [[compact]] seam for this rewrite.
+  /** Test seam: `midGrow` runs right after the rewrite resolved its
+    * snapshot — the [[compact]] seam for this rewrite.
     */
   private[graft] def growBucketsIfHot(spark: SparkSession, dir: String,
       maxPostingsPerBucket: Long, midGrow: () => Unit): DataFrame = {
     import spark.implicits._
-    val post = s"$dir/postings"
-    val (before, withPos) = readLayout(spark, dir)
-    val rows = spark.read.parquet(post)
+    val t = table(spark, dir)
+    val (before, withPos) = layout(t)
+    val rows = t.df
     midGrow()
     // signal over ALL posting rows (masked ones included: a probe's
     // bucket scan pays for tombstoned rows too until a compact drops
@@ -402,18 +374,16 @@ object TextIndex {
       val after = before * 2
       // purely physical: every row rides along (tombstone APPLICATION
       // is compact's job — applying here would strand stale doclen
-      // rows), and every marker file is carried — `rows` reads none, so
-      // pending and mid-rebuild markers alike are late to it — so masking
-      // semantics and the delete lifecycle are untouched by the
-      // re-bucketing. Meta rows (bkt < 0) keep their reserved
-      // partitions — only term rows re-bucket under the doubled modulus.
-      Tables.replace(spark, post, rows.inputFiles, Appended) { staged =>
-        rows.withColumn("bkt",
+      // rows), and no marker file is removed, so masking semantics and
+      // the delete lifecycle are untouched by the re-bucketing. Meta rows
+      // (bkt < 0) keep their reserved partitions — only term rows
+      // re-bucket under the doubled modulus.
+      Tables.commit(t.snap, "grow") { tx =>
+        tx.remove(t.files)
+        tx.put(t, rows.withColumn("bkt",
             when(col("bkt") < 0, col("bkt"))
               .otherwise(bkt(col("term"), after)))
-          .repartition(col("bkt"))
-          .write.mode("overwrite").partitionBy("bkt").parquet(staged)
-        writeBucketsFile(spark, staged, after, withPos)
+          .repartition(col("bkt")), Seq("bkt"), props(after, withPos))
       }
     }
     Seq((grow, before, if (grow) before * 2 else before, maxRows))
@@ -431,11 +401,11 @@ object TextIndex {
     */
   def healthReport(spark: SparkSession, dir: String,
       hotFrac: Double): DataFrame = {
-    val live = Tombstones.filterLive(spark, s"$dir/postings",
-      spark.read.parquet(s"$dir/postings").filter(col("bkt") >= 0),
+    val t = table(spark, dir)
+    val live = Tombstones.filterLive(t, t.df.filter(col("bkt") >= 0),
       "doc_id")
     val dfr = live.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    dfr.crossJoin(broadcast(totals(spark, dir)))
+    dfr.crossJoin(broadcast(totals(t)))
       .agg(count(lit(1)).cast("long").as("vocab"),
         max(col("df")).cast("long").as("max_df"),
         sum(when(col("df").cast("double") >
@@ -453,13 +423,11 @@ object TextIndex {
     * masked, and a broadcast join narrows the pruned rows to the exact
     * terms.
     */
-  private def probed(spark: SparkSession, dir: String, nb: Int,
-      queryTerms: DataFrame, cols: Seq[String]): DataFrame = {
-    val bkts = queryTerms.select(bkt(col("term"), nb).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    Tombstones.filterLive(spark, s"$dir/postings",
-        spark.read.parquet(s"$dir/postings")
-          .filter(col("bkt").isin(bkts: _*))
+  private def probed(t: Table, queryTerms: DataFrame,
+      cols: Seq[String]): DataFrame = {
+    val bkts = queryTerms.select(bkt(col("term"), layout(t)._1).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    Tombstones.filterLive(t, t.df.filter(col("bkt").isin(bkts: _*))
           .select(cols.map(col): _*), "doc_id")
       .join(broadcast(queryTerms.select(col("term")).distinct()), "term")
   }
@@ -487,15 +455,16 @@ object TextIndex {
           explode(Text.tokens(col(textCol))).as("term"))
         .groupBy(col("qid"), col("term"))
         .agg(count(lit(1)).as("qtf")))
-    // the modulus comes from the layout itself (growBucketsIfHot may
-    // have changed it); the projection drops the single-table meta
-    // columns (n_docs/sum_dl would collide with the stats crossJoin
-    // below) and anything else the scorer never reads — §2.3
-    // project-before-exchange
-    val post = graft.CacheScope.cache(probed(spark, dir,
-      readBuckets(spark, dir), qt, Seq("term", "doc_id", "tf", "dl")))
+    // ONE snapshot serves the probe, its modulus (growBucketsIfHot may
+    // have changed it) and the stats; the projection drops the
+    // single-table meta columns (n_docs/sum_dl would collide with the
+    // stats crossJoin below) and anything else the scorer never reads —
+    // §2.3 project-before-exchange
+    val t = table(spark, dir)
+    val post = graft.CacheScope.cache(probed(t, qt,
+      Seq("term", "doc_id", "tf", "dl")))
     val dfr = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = totals(spark, dir)
+    val stats = totals(t)
 
     val nD = col("n_docs").cast("double")
     val idf = log(lit(1.0) +
@@ -546,14 +515,14 @@ object TextIndex {
     */
   def phraseSearch(spark: SparkSession, dir: String, queries: DataFrame,
       qidCol: String, textCol: String): DataFrame = {
-    val (nb, withPos) = readLayout(spark, dir)
-    require(withPos,
+    val t = table(spark, dir)
+    require(layout(t)._2,
       "phraseSearch needs a positional layout: write(..., withPositions = true)")
     val qslots = graft.CacheScope.cache(
       queries.select(col(qidCol).as("qid"),
         posexplode(Text.tokens(col(textCol))).as(Seq("slot", "term"))))
     val qlen = qslots.groupBy(col("qid")).agg(count(lit(1)).as("m"))
-    val post = probed(spark, dir, nb, qslots, Seq("term", "doc_id", "pos"))
+    val post = probed(t, qslots, Seq("term", "doc_id", "pos"))
     qslots.join(post, "term")
       .select(col("qid"), col("doc_id"), col("slot"),
         explode(col("pos")).as("p"))
@@ -588,14 +557,14 @@ object TextIndex {
     */
   def proximitySearch(spark: SparkSession, dir: String, queries: DataFrame,
       qidCol: String, textCol: String, window: Int): DataFrame = {
-    val (nb, withPos) = readLayout(spark, dir)
-    require(withPos,
+    val t = table(spark, dir)
+    require(layout(t)._2,
       "proximitySearch needs a positional layout: write(..., withPositions = true)")
     val qterms = graft.CacheScope.cache(
       queries.select(col(qidCol).as("qid"),
         explode(array_distinct(Text.tokens(col(textCol)))).as("term")))
     val qm = qterms.groupBy(col("qid")).agg(count(lit(1)).as("m"))
-    val post = probed(spark, dir, nb, qterms, Seq("term", "doc_id", "pos"))
+    val post = probed(t, qterms, Seq("term", "doc_id", "pos"))
     val tp = graft.CacheScope.cache(
       qterms.join(post, "term")
         .select(col("qid"), col("doc_id"), col("term"),

@@ -27,20 +27,20 @@ object Upsert {
       .unionByName(updates)
 
   /** [[upsert]] `updates` into the parquet table at `path` and write the
-    * result back through [[Tables.overwrite]] (hive-partitioned by
-    * `partitionBy`). Only a table [[Tables.exists]] reports absent —
-    * after its crash recovery — is a first write: a table a crashed
-    * rewrite left at its old-side name is restored and merged into, so
-    * the crash window can never truncate it to the new batch.
+    * result back as ONE commit that replaces the files it read
+    * (hive-partitioned by `partitionBy`). Only a table whose log holds
+    * no entry is a first write: a crashed earlier rewrite left no entry
+    * and so cannot truncate the table to the new batch.
     */
   def upsertInto(updates: DataFrame, path: String, keys: Seq[String],
       partitionBy: Seq[String] = Nil): Unit = {
-    val spark = updates.sparkSession
-    val merged =
-      if (!Tables.exists(spark, path)) updates
-      else upsert(spark.read.parquet(path)
-        .select(updates.columns.toIndexedSeq.map(col): _*), updates, keys)
-    Tables.overwrite(merged, path, partitionBy)
+    val t = Tables.at(updates.sparkSession, path)
+    Tables.commit(t.snap, "merge") { tx =>
+      tx.remove(t.tree)
+      tx.put(t, if (!t.exists) updates
+        else upsert(t.df.select(updates.columns.toIndexedSeq.map(col): _*),
+          updates, keys), partitionBy)
+    }
   }
 
   /** [[upsert]] with automatic schema evolution — Delta's

@@ -60,7 +60,7 @@ object SeismicPipeline {
       // no-op run; silver/gold may not exist yet if the very first run
       // saw no data past the seed watermark
       def countIfExists(path: String): Long =
-        if (Tables.exists(spark, path)) spark.read.parquet(path).count()
+        if (Tables.exists(spark, path)) Tables.read(spark, path).count()
         else 0L
       return RunSummary(0L, countIfExists(silverPath(workDir)),
         countIfExists(goldPath(workDir)), wm)
@@ -118,7 +118,7 @@ object SeismicPipeline {
     store.advance("silver_events", "event_time", maxTs, newCount)
 
     // A1/A2 gold build over the FULL silver table
-    val silver = spark.read.parquet(silverP)
+    val silver = Tables.read(spark, silverP)
     val gold = silver
       .groupBy(col("band_code"), col("year"), col("month"))
       .agg(
@@ -132,6 +132,6 @@ object SeismicPipeline {
     Tables.overwrite(gold, goldPath(workDir))
 
     RunSummary(newCount, silver.count(),
-      spark.read.parquet(goldPath(workDir)).count(), maxTs)
+      Tables.read(spark, goldPath(workDir)).count(), maxTs)
   }
 }

@@ -543,7 +543,7 @@ object DedupQueries {
       delta.join(perDoc.filter(col("admitted")).select(col("doc_id")),
         Seq("doc_id"), "left_semi"),
       "doc_id", "sh", path)
-    val after = spark.read.parquet(path)
+    val after = Tables.read(spark, path)
       .agg(count(lit(1)).as("index_rows_after"))
     perDoc.crossJoin(broadcast(after)).orderBy(col("doc_id"))
   }
@@ -804,7 +804,7 @@ object DedupQueries {
           "doc_id", "sh", path)
         stats
       }
-      val after = spark.read.parquet(path)
+      val after = Tables.read(spark, path)
         .agg(count(lit(1)).as("index_rows_after"))
       perWave.reduce(_ unionByName _)
         .crossJoin(broadcast(after))
@@ -853,7 +853,7 @@ object DedupQueries {
         "doc_id", "sh", path)
       statsBuf += stats
     }
-    val after = spark.read.parquet(path)
+    val after = Tables.read(spark, path)
       .agg(count(lit(1)).as("index_rows_after"))
     statsBuf.reduce(_ unionByName _)
       .crossJoin(broadcast(after))
@@ -878,7 +878,7 @@ object DedupQueries {
     * (corpus-wide hot shingles are boilerplate — they collapse
     * signature variance and concentrate docs into few hot buckets; docs
     * with ONLY hot shingles drop out, carrying no content to dedup by),
-    * and the publish swap makes the rollover crash-safe. The oracle
+    * and the one-commit rebuild makes it crash-safe. The oracle
     * computes the same signal, replays BOTH the original and the
     * df-capped chains, and selects per the gate's decision — so the
     * conditional itself is part of the hash-matched contract. Output:
@@ -937,7 +937,7 @@ object DedupQueries {
       SharedIndexes.lshFull(spark, dir), "q145_lsh_index")
     val (beforePairs, rebuilt) = LshIndex.rebucketIfSkewed(spark, path,
       docs, "doc_id", "sh", RebucketCapDf, RebucketPairBudget)
-    spark.read.parquet(path)
+    Tables.read(spark, path)
       .groupBy(col("band"), col("bkt")).agg(count(lit(1)).as("s"))
       .groupBy(col("band").cast("long").as("band"))
       .agg(count(lit(1)).as("n_buckets"),
@@ -999,7 +999,7 @@ object DedupQueries {
     }
     // the index is the UNION of both tiers — count rows across them
     val after = spark.table(table).select(col("doc_id"))
-      .unionByName(spark.read.parquet(path).select(col("doc_id")))
+      .unionByName(Tables.read(spark, path).select(col("doc_id")))
       .agg(count(lit(1)).as("index_rows_after"))
     perWave.reduce(_ unionByName _)
       .crossJoin(broadcast(after))
@@ -1056,7 +1056,7 @@ object DedupQueries {
       stats
     }
     val after = spark.table(table).select(col("doc_id"))
-      .unionByName(spark.read.parquet(path).select(col("doc_id")))
+      .unionByName(Tables.read(spark, path).select(col("doc_id")))
       .agg(count(lit(1)).as("index_rows_after"))
     perWave.reduce(_ unionByName _)
       .crossJoin(broadcast(after))
@@ -1070,14 +1070,14 @@ object DedupQueries {
     * the delta batch's admission runs twice: phase `tombstone`
     * (markers anti-joined at probe time) and phase `compacted` (after
     * [[graft.operators.LshIndex.compact]] dropped the forgotten band
-    * rows physically and the publish swap cleared the markers). Both
+    * rows physically and removed the markers it applied). Both
     * phases must hash-match ONE oracle probing only the SURVIVING
     * corpus — the consequential behavior: a delta doc whose only
     * near-duplicate was forgotten is now ADMITTED (a forgotten doc
     * must stop blocking admissions immediately, not at compaction
     * cadence), and `index_rows_after` read from disk post-compaction
     * proves the physical application. The tombstone-phase stats are
-    * materialized before compaction swaps the directory under them
+    * materialized before compaction deletes the files under them
     * (q129's discipline).
     */
   val lshForget: QuerySpec = QuerySpec.sql(
@@ -1157,9 +1157,9 @@ object DedupQueries {
         .withColumn("admitted", col("n_dups") === 0L)
     }
     val served = graft.CacheScope.cacheTruncated(admission("tombstone"))
-    served.count() // pin BEFORE compaction swaps the directory
+    served.count() // pin BEFORE compaction deletes the files it read
     LshIndex.compact(spark, path, "doc_id")
-    val after = spark.read.parquet(path)
+    val after = Tables.read(spark, path)
       .agg(count(lit(1)).as("index_rows_after"))
     served.unionByName(admission("compacted"))
       .crossJoin(broadcast(after))
@@ -1173,7 +1173,7 @@ object DedupQueries {
     * a time: per-gram distinct-doc counts over disjoint slices are
     * additive (each doc lives in exactly one slice), so each wave
     * merges its counts into the state with one groupBy-sum and a
-    * crash-safe overwrite swap — the sketch-maintenance pattern
+    * crash-safe overwrite commit — the sketch-maintenance pattern
     * (q105/q111) applied to the dedup model, O(slice grams) per wave
     * with no corpus recompute. The gate thresholds the MAINTAINED
     * state and scrubs through it — and its oracle is BYTE-IDENTICAL to
@@ -1198,11 +1198,11 @@ object DedupQueries {
           "doc_id", "toks", SpanN)
         val merged =
           if (i == 0) inc
-          else spark.read.parquet(state).unionByName(inc)
+          else Tables.read(spark, state).unionByName(inc)
             .groupBy(col("g")).agg(sum(col("df")).as("df"))
-        Tables.overwrite(merged, state) // safe: staged-temp + swap
+        Tables.overwrite(merged, state) // safe: replaces the files it read
       }
-    val hot = spark.read.parquet(state)
+    val hot = Tables.read(spark, state)
       .filter(col("df") >= SpanHotDf).select(col("g"))
     SpanScrub.scrubWith(docs.drop("bucket"), "doc_id", "toks", SpanN, hot)
       .select(col("doc_id"), col("n_tokens"), col("n_removed"),

@@ -110,7 +110,7 @@ object LayoutQueries {
     * + in-place price updates) as v1, and read `diff(v0, v1)` back off
     * disk. The oracle never sees the snapshot directory — it recomputes
     * both versions from `orders` and replays the diff as `EXCEPT ALL`
-    * both ways, so the gate proves write → pointer-swap → time-travel
+    * both ways, so the gate proves write → log commit → time-travel
     * read → row-level diff end-to-end. An update surfaces as its
     * delete+insert pair (the MERGE-over-snapshots semantics).
     */

@@ -83,7 +83,7 @@ object SharedIndexes {
 
   /** Centroid frame of a [[graft.operators.IvfAnn.writeIndex]] layout. */
   def ivfCentroids(spark: SparkSession, idx: String): DataFrame =
-    spark.read.parquet(s"$idx/centroids")
+    graft.sources.Tables.read(spark, s"$idx/centroids")
 
   /** Residual IVFADC index ([[graft.operators.IvfPq.writeIndex]])
     * over an embeddings slice. Consumers: q144/q146/q147/q148 v0/q150

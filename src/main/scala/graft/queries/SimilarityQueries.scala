@@ -1188,12 +1188,12 @@ object SimilarityQueries {
     * path — and the search runs twice: phase `tombstone` (markers
     * anti-joined at probe time) and phase `compacted` (after
     * [[graft.operators.IvfAnn.compactCells]] rewrote the cells without
-    * the deleted rows and the publish swap cleared the markers). Both
+    * the deleted rows and removed the markers it applied). Both
     * phases must hash-match ONE oracle: the unrolled-Lloyd search over
     * the full-corpus-trained quantizer scoring only surviving vectors
     * (deleted vectors still shaped the centroids — deletes don't
     * retrain). The tombstone-phase frame is materialized BEFORE the
-    * compaction swaps the directory under it, the ordering a real
+    * compaction deletes the files under it, the ordering a real
     * serving layer gets from snapshot versioning (q124).
     */
   val ivfDelete: QuerySpec = {
@@ -1222,8 +1222,8 @@ object SimilarityQueries {
         .searchPartitioned(spark, path, cents, "vec_id", "embedding",
           queries, "qid", "qv", k = k, nProbe = nProbe)
         .withColumn("phase", lit(phase))
-      // materialize the tombstone-phase result BEFORE compaction swaps
-      // the directory out from under its (lazy) file scan
+      // materialize the tombstone-phase result BEFORE compaction deletes
+      // the files under its (lazy) file scan
       val served = graft.CacheScope.cacheTruncated(searchNow("tombstone"))
       served.count()
       graft.operators.IvfAnn.compactCells(spark, path, "vec_id")
@@ -1693,9 +1693,9 @@ object SimilarityQueries {
     * residual-encodes the later delta through the STORED state;
     * [[graft.operators.IvfPq.searchIndex]] reads only probed cells'
     * codes and scores with per-cell residual ADC tables. The
-    * `_residual_codes` flag makes the encoding part of the layout, so
-    * append and search always follow the encoding the index was written
-    * with. Oracle = the q142 residual chain under the q138 base/full
+    * `residual` property in the index's log makes the encoding part of
+    * the layout, so append and search always follow the encoding the
+    * index was written with. Oracle = the q142 residual chain under the q138 base/full
     * split.
     */
   val ivfPqResidualIndex: QuerySpec = {

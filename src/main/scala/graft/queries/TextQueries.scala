@@ -1324,8 +1324,8 @@ object TextQueries {
     * oracle replays (the q160/q153/q157 lifecycle-invisibility contract,
     * here for a MODEL: right-to-be-forgotten reaches the filter itself,
     * not just the corpus — a gradient-trained filter would retrain).
-    * Both state tables (≤1024-row counts + 1-row totals) swap through
-    * the staged publish, so serving never sees a half-updated model.
+    * Both state tables (≤1024-row counts + 1-row totals) publish as one
+    * snapshot version, so serving never sees a half-updated model.
     */
   val nbMaintained: QuerySpec = {
     val thr = 300L

@@ -1,14 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table helpers (SURVEY.md §2a S4–S6, S9–S10).
   *
   * The reference stores every layer as a Delta table and scans with
   * `spark.table(name)` (`03_bronze_processing.py:20`,
-  * `04_silver_transformation.py:33`). We use plain parquet directories keyed
-  * by table name, which is what the driver testdata ships
-  * (`NAME.parquet` under each `/root/testdata/sfN` directory).
+  * `04_silver_transformation.py:33`). The fixtures are plain parquet
+  * directories ([[load]]); every table and index the engine
+  * writes is a directory with a Delta-style commit log (`_log`, see
+  * [[commit]]): its files sit at their final hive-style paths, and a
+  * read ([[read]]) takes its schema and file list from the log.
   */
 object Tables {
 
@@ -116,109 +118,83 @@ object Tables {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Does a table path exist? Also performs crash recovery: if a prior
-    * [[replace]] died between its two renames, the table survives only
-    * at `path.__old__` — restore it before answering, so no caller can
-    * mistake the crash window for "first write" and truncate the table.
+  /** The managed table at `path`: `path` itself when it holds a `_log`;
+    * otherwise a table of its parent's log when the parent holds one
+    * (`dir/cells` of an index root `dir`); otherwise a new root at
+    * `path`, empty until its first commit (a directory with no log holds
+    * no table, whatever files it holds).
     */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".__old__")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dst) && fs.exists(old)) fs.rename(old, dst)
-    fs.exists(dst)
+  def at(spark: SparkSession, path: String): Table = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(Log.dir(path)) && p.getParent != null &&
+        fs.exists(Log.dir(p.getParent.toString)))
+      Log.snapshot(spark, p.getParent.toString).table(p.getName)
+    else Log.snapshot(spark, path).table("")
   }
 
-  /** Append sink (reference: Delta append, `02_ingestion.py:214-217`). */
-  def append(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
+  /** The latest snapshot of the root at exactly `root`. */
+  def root(spark: SparkSession, root: String): Snapshot =
+    Log.snapshot(spark, root)
 
-  /** Overwrite sink (reference: Delta overwrite, `03:113-117`, `05:79`...),
-    * through [[replace]], so it is safe even when `path` is also an input
-    * of `df` (Spark cannot overwrite a directory it is lazily reading; the
-    * reference got read-while-overwrite for free from Delta MVCC).
+  /** The one read of a managed table: its latest snapshot's files under
+    * the schema its log records.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = at(spark, path).df
+
+  /** Does the latest snapshot hold a table at `path`? Answered from the
+    * log: a crashed commit left no entry, so it is not mistaken for a
+    * table (nor a table for "first write").
+    */
+  def exists(spark: SparkSession, path: String): Boolean =
+    at(spark, path).exists
+
+  /** Run `body` as one commit against the snapshot `s` —
+    * the one commit protocol every table and index write shares:
+    *
+    *  1. `body` stages new files ([[Txn.put]]) and names the files of
+    *     the read snapshot they replace ([[Txn.remove]]);
+    *  2. the staged files move to their final hive-style paths under
+    *     the root (invisible until the entry names them);
+    *  3. `_log/<n>.json` is created put-if-absent and whole (its
+    *     `commitInfo` line last); if `n` was taken
+    *     meanwhile the commit retries at `n + 1` — unless that entry
+    *     removed a file this one removes too, which fails this commit
+    *     loudly and deletes its new files;
+    *  4. the files it removed are deleted.
+    *
+    * A rewrite removes exactly the files it read, so a concurrent append
+    * (a delete's marker and stats row included) is never lost: it is an
+    * add the rewrite never removes. Appends never conflict, and of two
+    * rewrites of the same files only one can win. Readers resolve a
+    * snapshot once and scan immutable files, lock-free.
+    */
+  def commit(s: Snapshot, op: String)(body: Txn => Unit): Long =
+    Log.commit(s, op)(body)
+
+  /** Append sink (reference: Delta append, `02_ingestion.py:214-217`). */
+  def append(df: DataFrame, path: String,
+      partitionBy: Seq[String] = Nil): Unit = {
+    val t = at(df.sparkSession, path)
+    commit(t.snap, "append")(_.put(t, df, partitionBy))
+  }
+
+  /** Overwrite sink (reference: Delta overwrite, `03:113-117`, `05:79`...):
+    * one commit that replaces every file of the table (and of the tables
+    * nested under it, such as its tombstones) with `df` — safe even when
+    * `df` reads `path` itself, since the old files stay until the commit
+    * (the read-while-overwrite the reference got from Delta MVCC).
     * `partitionBy` gives the hive-style `key=value` layout of the
     * reference's partitioned Delta tables (`TABLE OPTIMIZATION.py:33-97`):
     * at 100 TB, time-partitioning a fact table buys PARTITION pruning
-    * (directories never listed) above row-group min/max pruning.
+    * above row-group min/max pruning.
     */
   def overwrite(df: DataFrame, path: String,
-      partitionBy: Seq[String] = Nil): Unit =
-    replace(df.sparkSession, path)(
-      df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(_))
-
-  /** The one staged sibling [[replace]] writes into. */
-  def staged(path: String): String = path + ".__tmp__"
-
-  /** Replace the directory at `path` with what `writer` materializes into
-    * [[staged]]`(path)` — the one commit protocol every directory rewrite
-    * shares (table overwrites, index builds, compactions, rebuckets,
-    * retrains):
-    *
-    *  1. a staged dir a crashed earlier rewrite left behind is cleared,
-    *     so it can never leak into this one;
-    *  2. `writer(stagedDir)` fully materializes the new content (any
-    *     layout: hive partitions, several artifacts, flag files);
-    *  3. every part file in `carry` — append-only subdirectories of
-    *     `path`, relative (`"_tombstones"`, `"bkt=-2"`; `""` is `path`
-    *     itself) — that is NOT in `listed` is copied into the same
-    *     subdirectory of the staged dir, so a tombstone marker or stats
-    *     row a concurrent writer appended after the rewrite read its
-    *     input survives the swap instead of vanishing with the old
-    *     directory;
-    *  4. the crash-safe rename chain swaps the staged dir in: the old
-    *     version survives as `path.__old__` until the new one is in
-    *     place, so a crash leaves one of them addressable, never neither
-    *     ([[exists]] recovers the interrupted case).
-    *
-    * `listed` must be the listing the rewrite READ, taken once: the input
-    * frame's `inputFiles` (Spark lists a file relation when the frame is
-    * created and scans exactly that listing). A file is then either
-    * rewritten or carried, never both and never neither. A carry baseline
-    * listed apart from the input reopens a window in which a file lands
-    * in both — a stats row counted twice.
-    *
-    * Concurrency contract: one rewriter per `path` at a time (the
-    * reference's `max_concurrent_runs: 1`, `Pipeline.json:22`); appends
-    * into `carry` directories may run concurrently; readers are lock-free
-    * throughout. One window remains: a file appended between step 3's
-    * listing and step 4's rename is lost with the old directory. A lost
-    * tombstone marker unmasks its id until the delete is repeated; a lost
-    * additive stats row (TextIndex `bkt=-2`) is permanent drift. Closing
-    * it needs put-if-absent commit files, not another carry.
-    */
-  def replace(spark: SparkSession, path: String,
-      listed: Iterable[String] = Nil, carry: Seq[String] = Nil)(
-      writer: String => Unit): Unit = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(path)
-    val fs = dst.getFileSystem(conf)
-    val src = new Path(staged(path))
-    val old = new Path(path + ".__old__")
-    fs.delete(src, true)
-    writer(src.toString)
-    val read = listed.map(f => new Path(f).toUri.getPath).toSet
-    def under(root: Path, sub: String) =
-      if (sub.isEmpty) root else new Path(root, sub)
-    for (sub <- carry; from = under(dst, sub) if fs.exists(from);
-         p <- fs.listStatus(from).map(_.getPath)
-         if p.getName.startsWith("part-") && !read(p.toUri.getPath)) {
-      val to = under(src, sub)
-      fs.mkdirs(to)
-      FileUtil.copy(fs, p, fs, new Path(to, p.getName), false, conf)
+      partitionBy: Seq[String] = Nil): Unit = {
+    val t = at(df.sparkSession, path)
+    commit(t.snap, "overwrite") { tx =>
+      tx.remove(t.tree)
+      tx.put(t, df, partitionBy)
     }
-    // swap via a rename chain, CHECKING each rename (HDFS/S3A renames
-    // report failure by returning false, not by throwing)
-    if (!fs.exists(dst) && fs.exists(old))
-      fs.rename(old, dst) // recover a swap interrupted mid-rename
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"replace: could not stage $dst -> $old")
-    if (!fs.rename(src, dst)) {
-      fs.rename(old, dst) // best-effort rollback
-      throw new java.io.IOException(s"replace: could not publish $src -> $dst")
-    }
-    fs.delete(old, true)
   }
 }

@@ -28,16 +28,12 @@ class WatermarkStore(spark: SparkSession, path: String) {
     StructField("last_updated", TimestampType, nullable = false),
     StructField("records_processed", LongType, nullable = false)))
 
-  // Tables.exists also recovers state stranded at path.__old__ by a
-  // crash inside Tables.overwrite — a plain fs.exists would mistake that
-  // window for "no state" and the next advance would truncate every
-  // table's watermark
-  private def exists: Boolean = Tables.exists(spark, path)
-
-  def all(): DataFrame =
-    if (exists) spark.read.parquet(path)
+  def all(): DataFrame = {
+    val t = Tables.at(spark, path)
+    if (t.exists) t.df
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], schema)
+  }
 
   /** Current watermark for a table, seeding `default` on first sight
     * (reference fallback-seed behavior, `02_ingestion.py:81-94`).

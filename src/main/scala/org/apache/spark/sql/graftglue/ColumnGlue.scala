@@ -30,4 +30,11 @@ object ColumnGlue {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `schema` with every field, element and value nullable — what a
+    * file-source read reports for any stored schema
+    * (`StructType.asNullable` is `private[spark]`).
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }

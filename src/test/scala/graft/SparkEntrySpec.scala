@@ -32,12 +32,11 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("oracle SQL never references the staging temp-table names") {
-    // a copy-pasted oracle accidentally querying a staged or __old__
-    // path would pass locally and break under the driver's fresh DuckDB
-    // run
-    val staged = graft.sources.Tables.staged("").stripPrefix(".")
+    // a copy-pasted oracle accidentally querying a commit's staging
+    // directory or a table's log would pass locally and break when the
+    // oracle runs against a fresh output directory
     SparkEntry.oracleSql.foreach { case (name, sql) =>
-      assert(!sql.contains(staged) && !sql.contains("__old__"), name)
+      assert(!sql.contains("_stage-") && !sql.contains("_log/"), name)
     }
   }
 }

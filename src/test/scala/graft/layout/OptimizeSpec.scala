@@ -5,14 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.sources.Tables
 
 class OptimizeSpec extends SparkTestBase {
 
   test("cluster compacts to the target file count and range-sorts rows") {
     import spark.implicits._
     val dir = Files.createTempDirectory("opt").toString + "/t"
-    (1 to 10000).map(i => ((i * 7919) % 10000, s"v$i"))
-      .toDF("k", "v").repartition(16).write.parquet(dir)
+    Tables.overwrite((1 to 10000).map(i => ((i * 7919) % 10000, s"v$i"))
+      .toDF("k", "v").repartition(16), dir)
     assert(Optimize.describeDetail(spark, dir)._1 === 16L)
 
     Optimize.cluster(spark, dir, Seq("k"), targetFiles = 2)
@@ -34,9 +35,8 @@ class OptimizeSpec extends SparkTestBase {
   test("cluster with partitionCols preserves the hive layout and the data") {
     import spark.implicits._
     val dir = Files.createTempDirectory("optp").toString + "/t"
-    (1 to 5000).map(i => ((i * 7919) % 5000, i % 3, s"v$i"))
-      .toDF("k", "year", "v").repartition(8)
-      .write.partitionBy("year").parquet(dir)
+    Tables.overwrite((1 to 5000).map(i => ((i * 7919) % 5000, i % 3, s"v$i"))
+      .toDF("k", "year", "v").repartition(8), dir, Seq("year"))
     val before = spark.read.parquet(dir)
       .select("k", "year", "v").collect().map(_.toString).sorted
 
@@ -51,11 +51,9 @@ class OptimizeSpec extends SparkTestBase {
     val after = spark.read.parquet(dir)
       .select("k", "year", "v").collect().map(_.toString).sorted
     assert(after === before)
-    // no staging dirs left behind
-    val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
-    assert(!parent.contains(
-      new java.io.File(graft.sources.Tables.staged(dir)).getName))
-    assert(!parent.exists(_.contains("__old__")))
+    // no staging dirs left behind: the log holds only its entries
+    assert(new java.io.File(s"$dir/_log").list()
+      .forall(_.matches("""\.?\d+\.json(\.crc)?""")))
     // the layout's whole point: a partition-key predicate prunes the scan
     // to one directory (PartitionFilters, no data files from other years)
     val pruned = spark.read.parquet(dir).filter(col("year") === 1)
@@ -68,7 +66,7 @@ class OptimizeSpec extends SparkTestBase {
   test("analyze records row count and size in the catalog") {
     import spark.implicits._
     val dir = Files.createTempDirectory("an").toString + "/t"
-    (1 to 500).toDF("x").write.parquet(dir)
+    Tables.overwrite((1 to 500).toDF("x"), dir)
     val (rows, bytes) = Optimize.analyze(spark, dir, "opt_spec_t")
     assert(rows === Some(BigInt(500)))
     assert(bytes.exists(_ > 0))

@@ -33,8 +33,8 @@ class ZOrderSpec extends SparkTestBase {
       (pmod(col("id") * 7919, lit(18000)) / 100.0 - 90.0).as("lat"),
       (pmod(col("id") * 104729, lit(36000)) / 100.0 - 180.0).as("lon"),
       col("id").as("payload"))
-    df.write.parquet(s"$root/lex")
-    df.write.parquet(s"$root/zord")
+    graft.sources.Tables.overwrite(df, s"$root/lex")
+    graft.sources.Tables.overwrite(df, s"$root/zord")
     Optimize.cluster(spark, s"$root/lex", Seq("lat", "lon"), targetFiles = 16)
     Optimize.clusterZ(spark, s"$root/zord",
       ("lat", -90.0, 90.0), ("lon", -180.0, 180.0), targetFiles = 16)

@@ -312,7 +312,7 @@ class IvfCellLayoutSpec extends SparkTestBase {
       CentroidState.nearestCell(col("embedding"), cs).as("cell"))
     val expected = {
       val alt = root + "_expected"
-      assigned.write.mode("overwrite").partitionBy("cell").parquet(alt)
+      graft.sources.Tables.overwrite(assigned, alt, Seq("cell"))
       canon(IvfAnn.searchPartitioned(spark, alt, cents, "vec_id",
         "embedding", queries, "qid", "qv", k = 5, nProbe = 2))
     }

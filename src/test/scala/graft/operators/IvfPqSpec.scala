@@ -368,18 +368,19 @@ class IvfPqSpec extends SparkTestBase {
   test("a crashed write's leftover staged dir cannot poison the next " +
       "writeIndex (flag travels with the staged publish)") {
     val idx = graft.Scratch.fresh("ivfpq_stagedcrash") + "/idx"
-    // a residual writeIndex that died mid-build leaves a FLAGGED staged
-    // dir behind; the next global build must clear it rather than
-    // inherit the flag into its published layout
-    val staged = graft.sources.Tables.staged(idx)
-    val flag = new org.apache.hadoop.fs.Path(s"$staged/_residual_codes")
-    val fs = flag.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(flag.getParent); fs.create(flag, true).close()
+    // a residual writeIndex that died mid-build leaves its staging
+    // directory (codes of the other encoding) under the log; the next
+    // global build must neither serve those files nor inherit the
+    // encoding — the flag travels only with a published entry
+    val junk = new org.apache.hadoop.fs.Path(
+      s"$idx/_log/_stage-crashed/1/cell=0/part-00000-junk.parquet")
+    val fs = junk.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(junk.getParent); fs.create(junk, true).close()
     IvfPq.writeIndex(corpus, "vec_id", "embedding", idx,
       clusters = 16, m = M, dim = Dim, codes = 16)
     assert(persisted(idx) === inMemory(residual = false))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(staged)),
-      "the publish must consume the staged dir")
+    assert(!graft.sources.Tables.read(spark, s"$idx/cells").inputFiles
+      .exists(_.contains("_stage-")), "the publish must ignore the stage")
   }
 
   test("recallSweepResidual: recall is monotone in nProbe, bounded by truth") {

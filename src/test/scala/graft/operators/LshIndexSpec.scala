@@ -158,7 +158,7 @@ class LshIndexSpec extends SparkTestBase {
       LshIndex.compactBucketedAndTruncate(spark, path, table,
         buckets = 4, "doc_id")
       // ingest tier is empty (schema preserved), bulk holds everything
-      assert(spark.read.parquet(path).count() === 0L)
+      assert(graft.sources.Tables.read(spark, path).count() === 0L)
       assert(spark.table(table).count() === 2L * MinHashLSH.Bands)
       def hybrid(probe: org.apache.spark.sql.DataFrame) =
         LshIndex.candidatesHybrid(spark, table, path, probe, "doc_id", "sh")
@@ -206,7 +206,7 @@ class LshIndexSpec extends SparkTestBase {
       // bulk with only the appends, un-indexing the compacted corpus)
       LshIndex.compactBucketedAndTruncate(spark, path, table,
         buckets = 4, "doc_id")
-      assert(spark.read.parquet(path).count() === 0L)
+      assert(graft.sources.Tables.read(spark, path).count() === 0L)
       assert(spark.table(table).count() === 3L * MinHashLSH.Bands)
       def hybrid(probe: org.apache.spark.sql.DataFrame) =
         LshIndex.candidatesHybrid(spark, table, path, probe, "doc_id", "sh")
@@ -244,7 +244,8 @@ class LshIndexSpec extends SparkTestBase {
       // renamed away — `table` does not exist. The pre-fix retry saw
       // tableExists=false, took the empty-bulk branch, and rebuilt the
       // bulk from the ingest tier alone — un-indexing docs 10/11.
-      val fold = spark.table(table).unionByName(spark.read.parquet(path))
+      val fold = spark.table(table)
+        .unionByName(graft.sources.Tables.read(spark, path))
       graft.layout.Bucketing.writeBucketedBy(fold, table + "__staged",
         Seq("band", "bkt"), 4)
       spark.sql(s"ALTER TABLE `$table` RENAME TO `${table}__old`")
@@ -252,7 +253,7 @@ class LshIndexSpec extends SparkTestBase {
       // the retry must recover the staged generation before deciding
       LshIndex.compactBucketedAndTruncate(spark, path, table,
         buckets = 4, "doc_id")
-      assert(spark.read.parquet(path).count() === 0L)
+      assert(graft.sources.Tables.read(spark, path).count() === 0L)
       def hybrid(probe: org.apache.spark.sql.DataFrame) =
         LshIndex.candidatesHybrid(spark, table, path, probe, "doc_id", "sh")
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -295,6 +296,41 @@ class LshIndexSpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(!cand.exists(_._2 == 10L),
         "a delete written during the rollover must keep masking the bulk")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+  }
+
+  test("an append and a delete landing mid-rollover both survive it") {
+    val path = graft.Scratch.fresh("lshindex_rollover_append") + "/idx"
+    LshIndex.write(withSh(Seq(
+      10L -> "shared text body one two three four five six seven",
+      11L -> "unrelated corpus document about entirely other things here")),
+      "doc_id", "sh", path)
+    val table = "lsh_rollover_append_bulk"
+    import spark.implicits._
+    try {
+      // both land after the rollover read the ingest tier and built the
+      // new bulk, before its truncate commits
+      LshIndex.compactBucketedAndTruncate(spark, path, table,
+        buckets = 4, "doc_id", () => {
+          LshIndex.append(withSh(Seq(
+            30L -> "a wholly new document admitted during the rollover")),
+            "doc_id", "sh", path)
+          LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id")
+        })
+      assert(graft.sources.Tables.read(spark, path).select("doc_id")
+        .as[Long].collect().toSeq === Seq.fill(MinHashLSH.Bands)(30L),
+        "the mid-rollover append must stay in the ingest tier")
+      assert(LshIndex.tombstones(spark, path).map(_.as[Long].collect().toSeq)
+        .contains(Seq(10L)), "the mid-rollover marker must survive")
+      val cand = LshIndex.candidatesHybrid(spark, table, path, withSh(Seq(
+          20L -> "shared text body one two three four five six seven",
+          40L -> "a wholly new document admitted during the rollover")),
+          "doc_id", "sh")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(cand.contains((40L, 30L)))
+      assert(!cand.exists(_._2 == 10L))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }

@@ -94,13 +94,15 @@ class ScalarQuantizerSpec extends SparkTestBase {
   test("a crashed write's leftover staged dir cannot poison the next " +
       "writeIndex; a rewrite replaces the index whole") {
     val idx = graft.Scratch.fresh("sq_stagedcrash") + "/idx"
-    val staged = graft.sources.Tables.staged(idx)
-    val junk = new org.apache.hadoop.fs.Path(s"$staged/codes/junk")
+    // a commit killed before its log entry leaves its staging directory
+    // (and a garbage file in it) under the log
+    val junk = new org.apache.hadoop.fs.Path(
+      s"$idx/_log/_stage-crashed/1/part-00000-junk.parquet")
     val fs = junk.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(junk.getParent); fs.create(junk, true).close()
     ScalarQuantizer.writeIndex(corpus, "vec_id", "embedding", idx)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(staged)),
-      "the publish must consume the staged dir")
+    assert(!graft.sources.Tables.read(spark, s"$idx/codes").inputFiles
+      .exists(_.contains("_stage-")), "the publish must ignore the stage")
     val n0 = spark.read.parquet(s"$idx/codes").count()
     assert(n0 === corpus.count())
     // rewriting over an existing index goes through the same swap: the

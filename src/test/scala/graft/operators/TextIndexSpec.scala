@@ -24,7 +24,8 @@ class TextIndexSpec extends SparkTestBase {
   private def liveIds(dir: String): Set[Long] = {
     val post = spark.read.parquet(s"$dir/postings")
       .filter(col("bkt") >= 0)
-    Tombstones.filterLive(spark, s"$dir/postings", post, "doc_id")
+    Tombstones.filterLive(graft.sources.Tables.at(spark, s"$dir/postings"),
+      post, "doc_id")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
   }
 
@@ -325,18 +326,18 @@ class TextIndexSpec extends SparkTestBase {
     assert(searchRows(idx) === masked)
   }
 
-  test("positional flag lives in the layout metadata and survives " +
-      "grow + compact; a pre-flag one-line file reads non-positional") {
+  test("positional flag lives in the layout's log and survives " +
+      "grow + compact; a non-positional build reads non-positional") {
     import spark.implicits._
     val idx = graft.Scratch.fresh("ti_layout") + "/idx"
     TextIndex.write(docs, "doc_id", "text", idx, withPositions = true)
-    assert(TextIndex.readLayout(spark, idx) === (TextIndex.Buckets, true))
+    assert(TextIndex.layout(spark, idx) === (TextIndex.Buckets, true))
     // the flag travels through every layout-rewriting lifecycle verb
     TextIndex.growBucketsIfHot(spark, idx, 8L)
-    assert(TextIndex.readLayout(spark, idx) === (TextIndex.Buckets * 2, true))
+    assert(TextIndex.layout(spark, idx) === (TextIndex.Buckets * 2, true))
     TextIndex.delete(spark, idx, Seq(2L).toDF("doc_id"), "doc_id")
     TextIndex.compact(spark, idx)
-    assert(TextIndex.readLayout(spark, idx) === (TextIndex.Buckets * 2, true))
+    assert(TextIndex.layout(spark, idx) === (TextIndex.Buckets * 2, true))
     // appends into a positional layout keep carrying positions (the
     // flag, not a parquet-footer sniff, decides)
     TextIndex.append(Seq((100L, "alpha beta alpha")).toDF("doc_id", "text"),
@@ -348,13 +349,7 @@ class TextIndexSpec extends SparkTestBase {
     // non-positional build reads as such…
     val idx2 = graft.Scratch.fresh("ti_layout2") + "/idx"
     TextIndex.write(docs, "doc_id", "text", idx2)
-    assert(TextIndex.readLayout(spark, idx2) === (TextIndex.Buckets, false))
-    // …and a legacy one-line _buckets file (pre-flag layout) does too
-    val p = new org.apache.hadoop.fs.Path(s"$idx2/postings/_buckets")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write("64\n".getBytes("UTF-8")); out.close()
-    assert(TextIndex.readLayout(spark, idx2) === (64, false))
+    assert(TextIndex.layout(spark, idx2) === (TextIndex.Buckets, false))
   }
 
   test("single-table layout: one directory, meta rows in reserved " +
@@ -462,25 +457,6 @@ class TextIndexSpec extends SparkTestBase {
     assert(e.getMessage.contains("positional"))
   }
 
-  test("pre-flag layouts (modulus-only _buckets) fall back to the " +
-      "schema sniff instead of reading as non-positional") {
-    import spark.implicits._
-    val idx = graft.Scratch.fresh("ti_preflag") + "/idx"
-    TextIndex.write(Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"),
-      "doc_id", "text", idx, withPositions = true)
-    // simulate a layout written before the pos= flag existed: strip the
-    // flag line, keep the modulus
-    val p = new org.apache.hadoop.fs.Path(s"$idx/postings/_buckets")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val buckets = TextIndex.readBuckets(spark, idx)
-    val out = fs.create(p, true)
-    try out.write(s"$buckets\n".getBytes("UTF-8")) finally out.close()
-    assert(TextIndex.readLayout(spark, idx) === ((buckets, true)),
-      "legacy positional layout must still read as positional")
-    // and the phrase path keeps serving it
-    assert(phraseHits(idx, Seq((0L, "alpha beta"))) === Map((0L, 1L) -> 1L))
-  }
-
   test("proximity probe: tightest span, window gate, order-free") {
     import spark.implicits._
     val d = Seq(
@@ -519,5 +495,77 @@ class TextIndexSpec extends SparkTestBase {
     assert(Tombstones.read(spark, s"$idx/postings").isEmpty)
     assert(phraseHits(idx, Seq((0L, "p q r"))) === before)
     assert(before === Map((0L, 1L) -> 1L, (0L, 2L) -> 1L))
+  }
+
+  private def logVersion(dir: String): Long =
+    graft.sources.Tables.at(spark, s"$dir/postings").snap.version
+
+  test("a real delete is ONE commit (marker and stats row together); a " +
+      "no-op delete commits nothing") {
+    import spark.implicits._
+    val idx = graft.Scratch.fresh("ti_delete_commit") + "/idx"
+    TextIndex.write(docs, "doc_id", "text", idx)
+    val liveOnly = graft.Scratch.fresh("ti_delete_commit_live") + "/idx"
+    TextIndex.write(docs.filter(col("doc_id") =!= 3L), "doc_id", "text",
+      liveOnly)
+    val v0 = logVersion(idx)
+    TextIndex.delete(spark, idx, Seq(3L).toDF("doc_id"), "doc_id")
+    assert(logVersion(idx) === v0 + 1)
+    val entry = graft.sources.Tables.at(spark, s"$idx/postings").snap
+      .log.last._2
+    assert(entry.operation === "delete")
+    assert(entry.tables.toSet === Set("", Tombstones.Dir))
+    assert(totalsRow(idx) === totalsRow(liveOnly))
+    // ids never indexed, and ids already marked: nothing to commit
+    TextIndex.delete(spark, idx, Seq(3L, 999999L).toDF("doc_id"), "doc_id")
+    TextIndex.delete(spark, idx, Seq.empty[Long].toDF("doc_id"), "doc_id")
+    assert(logVersion(idx) === v0 + 1)
+    assert(totalsRow(idx) === totalsRow(liveOnly))
+    assert(searchRows(idx) === searchRows(liveOnly))
+  }
+
+  test("a delete between a compact's read and its commit survives it: " +
+      "totals and probes equal a fresh write over the live set") {
+    import spark.implicits._
+    val idx = graft.Scratch.fresh("ti_mid_commit") + "/idx"
+    TextIndex.write(docs, "doc_id", "text", idx)
+    TextIndex.delete(spark, idx, Seq(1L).toDF("doc_id"), "doc_id")
+    TextIndex.compact(spark, idx, midCompact = () =>
+      TextIndex.delete(spark, idx, Seq(4L, 7L).toDF("doc_id"), "doc_id"))
+    val liveOnly = graft.Scratch.fresh("ti_mid_commit_live") + "/idx"
+    TextIndex.write(docs.filter(!col("doc_id").isin(1L, 4L, 7L)),
+      "doc_id", "text", liveOnly)
+    assert(totalsRow(idx) === totalsRow(liveOnly))
+    assert(searchRows(idx, k = 10) === searchRows(liveOnly, k = 10))
+    assert(Tombstones.read(spark, s"$idx/postings").map(_.count())
+      .contains(2L))
+  }
+
+  test("two compacts racing from one snapshot: the second fails loudly " +
+      "and the winner's snapshot serves with none of its files") {
+    import spark.implicits._
+    val idx = graft.Scratch.fresh("ti_race2") + "/idx"
+    TextIndex.write(docs, "doc_id", "text", idx)
+    TextIndex.delete(spark, idx, Seq(2L).toDF("doc_id"), "doc_id")
+    val before = searchRows(idx)
+    val err = intercept[java.io.IOException](
+      TextIndex.compact(spark, idx, midCompact = () =>
+        TextIndex.compact(spark, idx)))
+    assert(err.getMessage.contains("already removed"), err.getMessage)
+    assert(searchRows(idx) === before)
+    // exactly the winner's files are on disk: the loser deleted its own
+    val t = graft.sources.Tables.at(spark, s"$idx/postings")
+    assert(parquetFiles(s"$idx/postings") === t.files.map(_.path).toSet)
+    assert(t.snap.log.last._2.operation === "compact")
+  }
+
+  private def parquetFiles(root: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Paths.get(root)
+    val s = java.nio.file.Files.walk(base)
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(base.relativize(_).toString).toSet
+    finally s.close()
   }
 }

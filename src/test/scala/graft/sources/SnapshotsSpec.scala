@@ -147,6 +147,17 @@ class SnapshotsSpec extends SparkTestBase {
     assert(Snapshots.vacuum(spark, path, keepLast = 3) == Seq(1L))
   }
 
+  test("a commit whose writer writes no file fails loudly and publishes " +
+      "no version") {
+    import spark.implicits._
+    val path = tmpTable()
+    Snapshots.write(Seq((1, "a")).toDF("id", "s"), path)
+    intercept[IllegalArgumentException](Snapshots.commit(spark, path)(_ => ()))
+    assert(Snapshots.latestVersion(spark, path).contains(0L))
+    assert(Snapshots.read(spark, path).select("s").as[String].collect()
+      .toSeq == Seq("a"))
+  }
+
   test("an orphaned snapshot dir (crash before pointer move) is invisible and vacuumed") {
     import spark.implicits._
     val path = tmpTable()
@@ -161,25 +172,9 @@ class SnapshotsSpec extends SparkTestBase {
     assert(Snapshots.vacuum(spark, path, keepLast = 3) == Seq(1L))
   }
 
-  test("a commit whose version marker already exists fails loudly; the " +
-      "committed versions stay readable") {
+  test("a commit whose log version is taken meanwhile moves to the next " +
+      "one; every committed version stays readable") {
     import spark.implicits._
-    val path = tmpTable()
-    Snapshots.write(Seq((1, "a")).toDF("id", "s"), path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    intercept[java.io.IOException] {
-      Snapshots.commit(spark, path) { dir =>
-        Seq((2, "b")).toDF("id", "s").write.parquet(dir)
-        // a racing committer claims version 1 first
-        fs.create(Snapshots.commitMarker(path, 1), false).close()
-      }
-    }
-    assert(Snapshots.readVersion(spark, path, 0).select("s").as[String]
-      .collect().toSeq == Seq("a"))
-    // the loser removed nothing: the winner's claim stands
-    assert(Snapshots.latestVersion(spark, path).contains(1L))
-
     // a racing committer that commits REAL rows while another commit is
     // mid-write, both copying files into their version dir (the
     // Scratch.copyDir writer of the q124/q148/q164 gates): each version
@@ -188,7 +183,7 @@ class SnapshotsSpec extends SparkTestBase {
     Snapshots.write(Seq((1, "a")).toDF("id", "s"), raced)
     def staged(s: String) = {
       val d = Files.createTempDirectory("graft_snap_src").toString + "/d"
-      Seq((2, s)).toDF("id", "s").write.parquet(d)
+      Tables.overwrite(Seq((2, s)).toDF("id", "s"), d)
       d
     }
     val (racerRows, firstRows) = (staged("racer"), staged("first"))
@@ -205,5 +200,7 @@ class SnapshotsSpec extends SparkTestBase {
     assert(rows(first) == Seq("first"))
     assert(Snapshots.history(spark, raced).select("version").as[Long]
       .collect().sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(Snapshots.latestVersion(spark, raced).contains(first))
+    assert(rows(0) == Seq("a"))
   }
 }

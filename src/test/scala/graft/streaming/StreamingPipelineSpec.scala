@@ -175,19 +175,23 @@ class StreamingPipelineSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("upsertSink merges into a table a crashed replace left at its " +
-      "old-side name instead of truncating it") {
+  test("upsertSink merges into the committed table after a rewrite " +
+      "that died before its commit instead of truncating it") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     withTempDir("upsert_crash") { base =>
       val target = s"$base/t"
-      Seq(ev("e1", "2024-01-01 10:00:00", u = "u1"),
-        ev("e2", "2024-01-01 10:05:00", u = "u2")).toDF()
-        .write.parquet(target)
-      // the crash window inside Tables.replace: the live table has been
-      // renamed aside and the new one not yet published
-      Files.move(java.nio.file.Paths.get(target),
-        java.nio.file.Paths.get(target + ".__old__"))
+      graft.sources.Tables.overwrite(Seq(ev("e1", "2024-01-01 10:00:00",
+        u = "u1"), ev("e2", "2024-01-01 10:05:00", u = "u2")).toDF(), target)
+      // a rewrite of the table dies after staging its files, before its
+      // log entry: the table must still read as its committed snapshot
+      val t = graft.sources.Tables.at(spark, target)
+      intercept[RuntimeException](graft.sources.Tables.commit(t.snap, "merge") {
+        tx =>
+          tx.remove(t.files)
+          tx.put(t, Seq(ev("e9", "2024-01-01 12:00:00", u = "u9")).toDF())
+          throw new RuntimeException("crashed before the commit")
+      })
       val input = MemoryStream[Ev]
       val q = StreamingPipeline.upsertSink(input.toDF(), target, Seq("user_id"))
         .outputMode("update").start()

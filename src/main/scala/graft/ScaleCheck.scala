@@ -154,15 +154,12 @@ object ScaleCheck {
       jline("lsh_admission_plain", n, corpusRows, mLsh, collisions)
       // bucketed steady-state probe (q140 shape): the index side scans
       // pre-clustered — only the delta (and the verify legs) shuffle
-      val lshTable = s"scalecheck_lsh_bulk_$n"
-      LshIndex.compactBucketed(spark, lshPath, lshTable, buckets = 16,
-        "doc_id")
+      LshIndex.compactBucketed(spark, lshPath, buckets = 16, "doc_id")
       val mLshB = Metrics.measure(spark) {
-        admission(LshIndex.candidatesBucketed(spark, lshTable, delta,
+        admission(LshIndex.candidatesBucketed(spark, lshPath, delta,
           "doc_id", "sh"))
       }
       jline("lsh_admission_bucketed", n, corpusRows, mLshB, collisions)
-      spark.sql(s"DROP TABLE IF EXISTS `$lshTable`")
 
       // ---- SimHash Hamming-ball admission (q156 shape) ----
       // band rows are 3 per doc regardless of document size; the probe

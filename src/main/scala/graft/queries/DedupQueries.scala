@@ -496,7 +496,7 @@ object DedupQueries {
 
   /** Shared Spark-side admission pipeline for q125/q140: build the
     * on-disk index from the corpus split, probe the delta through
-    * `probe` (plain path vs bucketed table — the only difference
+    * `probe` (ingest tier vs bucketed bulk tier — the only difference
     * between the two gates), Jaccard-verify collided docs only, append
     * the admitted band rows, and report per-doc stats plus the on-disk
     * row count read back AFTER the append.
@@ -558,7 +558,7 @@ object DedupQueries {
 
   /** q125's admission run against the BUCKETED steady-state serving
     * layout ([[graft.operators.LshIndex.compactBucketed]]): the index
-    * is compacted into a catalog table bucketed by the probe keys
+    * is compacted into its bulk tier, bucketed by the probe keys
     * `(band, bkt)`, and the delta probes it exchange-free on the index
     * side ([[graft.operators.LshIndex.candidatesBucketed]];
     * `LshIndexSpec` pins the plan) — at 100 TB this is the difference
@@ -571,12 +571,11 @@ object DedupQueries {
   val lshBucketedAdmission: QuerySpec = QuerySpec.sql(
     "q140_lsh_bucketed", lshIndexAppendSql
   ) { (spark, dir) =>
-    val table = "q140_lsh_index_bucketed"
     lshAdmissionRun(spark, dir, "q140", (path, delta) => {
       graft.operators.LshIndex
-        .compactBucketed(spark, path, table, buckets = 16, "doc_id")
+        .compactBucketed(spark, path, buckets = 16, "doc_id")
       graft.operators.LshIndex
-        .candidatesBucketed(spark, table, delta, "doc_id", "sh")
+        .candidatesBucketed(spark, path, delta, "doc_id", "sh")
     })
   }
 
@@ -955,8 +954,8 @@ object DedupQueries {
   /** Two-tier (lambda) serving for the dedup index
     * ([[graft.operators.LshIndex.compactBucketedAndTruncate]] +
     * [[graft.operators.LshIndex.candidatesHybrid]]): the compacted
-    * bulk lives in the `(band, bkt)`-bucketed catalog table — the
-    * exchange-free probe side q140 pins — while the ingest path dir is
+    * bulk lives in the `(band, bkt)`-bucketed bulk tier — the
+    * exchange-free probe side q140 pins — while the ingest tier is
     * truncated to EMPTY and receives each wave's admitted band rows;
     * every probe spans BOTH tiers. This is the steady-state continuous-
     * ingest shape at 100 TB: the corpus-sized side never moves, the
@@ -965,7 +964,7 @@ object DedupQueries {
     * oracle is the q131 sequential recurrence over this wave split —
     * the recurrence has no notion of tiers, so a hash-equal row set
     * proves the two-tier layout changes NOTHING about admission
-    * semantics while `index_rows_after` (table + path rows read back
+    * semantics while `index_rows_after` (bulk + ingest rows read back
     * from both tiers) proves the rollover/append bookkeeping.
     */
   val lshTieredServing: QuerySpec = QuerySpec.sql(
@@ -978,18 +977,12 @@ object DedupQueries {
     // the mutable ingest tier (rolled over, then appended into)
     val path = graft.Scratch.cloneBase(
       SharedIndexes.lshBase80(spark, dir), "q141_lsh_delta")
-    val table = "q141_lsh_bulk"
-    // the rollover folds an EXISTING bulk table into the new generation
-    // (steady-state semantics), so a re-run in the same session must
-    // clear last run's table the way Scratch.fresh clears the path tier
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    // rollover: bulk -> bucketed table, ingest tier truncated to empty
-    LshIndex.compactBucketedAndTruncate(spark, path, table,
-      buckets = 16, "doc_id")
+    // rollover: the index folds into the bucketed bulk tier, the ingest
+    // tier is truncated to empty
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 16, "doc_id")
     val perWave = TieredWaves.zipWithIndex.map { case ((lo, hi), i) =>
       val wave = docs.filter(col("bucket") >= lo && col("bucket") < hi)
-      val cand = LshIndex.candidatesHybrid(spark, table, path, wave,
-        "doc_id", "sh")
+      val cand = LshIndex.candidatesHybrid(spark, path, wave, "doc_id", "sh")
       val stats = waveStats(docs, wave, cand, i + 1)
       LshIndex.append(
         wave.join(stats.filter(col("admitted")).select(col("doc_id")),
@@ -998,8 +991,7 @@ object DedupQueries {
       stats
     }
     // the index is the UNION of both tiers — count rows across them
-    val after = spark.table(table).select(col("doc_id"))
-      .unionByName(Tables.read(spark, path).select(col("doc_id")))
+    val after = LshIndex.rows(spark, path)
       .agg(count(lit(1)).as("index_rows_after"))
     perWave.reduce(_ unionByName _)
       .crossJoin(broadcast(after))
@@ -1011,7 +1003,7 @@ object DedupQueries {
     * three-wave recurrence runs with a
     * [[graft.operators.LshIndex.compactBucketedAndTruncate]] rollover
     * BETWEEN every wave, so rollovers #2 and #3 exercise the N>1 fold
-    * (`table ∪ path` → new bulk generation, staged catalog rename).
+    * (`bulk ∪ ingest` → new bulk generation, in one commit).
     * This is the gate for the round-9 verdict's lifecycle defect: with
     * a rollover that compacts only the ingest tier, rollover #2 wipes
     * the corpus and wave-1 admissions from the bulk — wave-2/3 docs
@@ -1031,15 +1023,11 @@ object DedupQueries {
     // the mutable ingest tier (rolled over, then appended into)
     val path = graft.Scratch.cloneBase(
       SharedIndexes.lshBase80(spark, dir), "q149_lsh_delta")
-    val table = "q149_lsh_bulk"
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
     // rollover #1: the whole corpus folds into the bucketed bulk
-    LshIndex.compactBucketedAndTruncate(spark, path, table,
-      buckets = 16, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 16, "doc_id")
     val perWave = SeqWaves.zipWithIndex.map { case ((lo, hi), i) =>
       val wave = docs.filter(col("bucket") >= lo && col("bucket") < hi)
-      val cand = LshIndex.candidatesHybrid(spark, table, path, wave,
-        "doc_id", "sh")
+      val cand = LshIndex.candidatesHybrid(spark, path, wave, "doc_id", "sh")
       val stats = waveStats(docs, wave, cand, i + 1)
       LshIndex.append(
         wave.join(stats.filter(col("admitted")).select(col("doc_id")),
@@ -1051,12 +1039,11 @@ object DedupQueries {
       // the last wave: its rows serve from the ingest tier, which the
       // final two-tier count reads back anyway)
       if (i < SeqWaves.length - 1)
-        LshIndex.compactBucketedAndTruncate(spark, path, table,
-          buckets = 16, "doc_id")
+        LshIndex.compactBucketedAndTruncate(spark, path, buckets = 16,
+          "doc_id")
       stats
     }
-    val after = spark.table(table).select(col("doc_id"))
-      .unionByName(Tables.read(spark, path).select(col("doc_id")))
+    val after = LshIndex.rows(spark, path)
       .agg(count(lit(1)).as("index_rows_after"))
     perWave.reduce(_ unionByName _)
       .crossJoin(broadcast(after))

@@ -13,6 +13,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -26,11 +27,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final case class AddFile(table: String, path: String, size: Long,
     modificationTime: Long, partitionValues: Map[String, String])
 
+/** A table's files hash-bucketed (and sorted) by `columns` into `count`
+  * buckets, the bucket id in each file's name: a scan plans the table
+  * clustered by `columns`, so a join on them moves only its other side.
+  */
+final case class Bucketing(count: Int, columns: Seq[String])
+
 /** A table's schema as a read returns it (data columns, then partition
-  * columns), its partition columns and its layout properties.
+  * columns), its partition columns, its layout properties and its
+  * bucketing.
   */
 final case class TableMeta(table: String, schema: String,
-    partitionColumns: Seq[String], properties: Map[String, String])
+    partitionColumns: Seq[String], properties: Map[String, String],
+    bucketing: Option[Bucketing] = None)
 
 /** The per-operation record of one commit. */
 final case class CommitInfo(operation: String, timestamp: Long,
@@ -69,9 +78,9 @@ final case class Table(snap: Snapshot, name: String) {
   def sub(child: String): Table = Table(snap, Log.child(name, child))
   def path: String = Log.child(snap.root, name)
 
-  /** The table as a DataFrame over exactly its files: the schema comes
-    * from the log and the partition values from the files' paths, so
-    * nothing is listed or inferred.
+  /** The table as a DataFrame over exactly its files: the schema and
+    * bucketing come from the log and the partition values from the
+    * files' paths, so nothing is listed or inferred.
     */
   def df: DataFrame = {
     val spark = snap.spark
@@ -84,8 +93,9 @@ final case class Table(snap: Snapshot, name: String) {
         f.modificationTime, fs.makeQualified(new Path(snap.root, f.path)))))
     spark.baseRelationToDataFrame(HadoopFsRelation(index,
       index.partitionSchema, StructType(schema.filterNot(f =>
-        m.partitionColumns.contains(f.name))), None, new ParquetFileFormat,
-      Map.empty)(spark))
+        m.partitionColumns.contains(f.name))),
+      m.bucketing.map(b => BucketSpec(b.count, b.columns, b.columns)),
+      new ParquetFileFormat, Map.empty)(spark))
   }
 }
 
@@ -135,22 +145,36 @@ final class Txn private[sources] (val read: Snapshot, op: String) {
   /** Commit nothing: the operation found it had nothing to do. */
   def cancel(): Unit = cancelled = true
 
-  /** Stage `df` as new files of `t`, hive-partitioned by `partitionBy`;
-    * `props` update the table's layout properties.
+  /** Stage `df` as new files of `t`, hive-partitioned by `partitionBy`
+    * and, given a `bucketing`, bucketed by it; `props` update the table's
+    * layout properties.
     */
   def put(t: Table, df: DataFrame, partitionBy: Seq[String] = Nil,
-      props: Map[String, String] = Map.empty): Unit = {
+      props: Map[String, String] = Map.empty,
+      bucketing: Option[Bucketing] = None): Unit = {
     puts += 1
     val out = new Path(stage, puts.toString)
     val obs = Observation()
-    df.observe(obs, count(lit(1)).as("n"))
-      .write.partitionBy(partitionBy: _*).parquet(out.toString)
+    val w = df.observe(obs, count(lit(1)).as("n"))
+      .write.partitionBy(partitionBy: _*)
+    bucketing match {
+      case None => w.parquet(out.toString)
+      case Some(b) =>
+        // a path write cannot bucket: the files go through a transient
+        // external catalog table over the stage directory, whose drop
+        // leaves them in place
+        val name = s"graft_put_${UUID.randomUUID.toString.replace("-", "")}"
+        try w.bucketBy(b.count, b.columns.head, b.columns.tail: _*)
+          .sortBy(b.columns.head, b.columns.tail: _*)
+          .format("parquet").option("path", out.toString).saveAsTable(name)
+        finally read.spark.sql(s"DROP TABLE IF EXISTS `$name`")
+    }
     rows += obs.get("n").asInstanceOf[Long]
     staged ++= Log.scan(fs, out, t.name)
     metas(t.name) = TableMeta(t.name, asNullable(StructType(df.schema
       .filterNot(f => partitionBy.contains(f.name)) ++
       partitionBy.map(df.schema(_)))).json, partitionBy,
-      t.meta.fold(Map.empty[String, String])(_.properties) ++ props)
+      t.meta.fold(Map.empty[String, String])(_.properties) ++ props, bucketing)
   }
 
   /** Add the files a writer already wrote in `t`'s directory (a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.functions.Text
+import graft.sources.Tables
 
 class LshIndexSpec extends SparkTestBase {
 
@@ -113,9 +114,8 @@ class LshIndexSpec extends SparkTestBase {
     val docs = (0L until 40L).map(i =>
       i -> s"document number $i body with distinct words w$i x$i y$i z$i")
     LshIndex.write(withSh(docs), "doc_id", "sh", path)
-    val table = "lsh_idx_bucketed_spec"
     try {
-      LshIndex.compactBucketed(spark, path, table, buckets = 8, "doc_id")
+      LshIndex.compactBucketed(spark, path, buckets = 8, "doc_id")
       val delta = withSh(Seq(
         100L -> "document number 7 body with distinct words w7 x7 y7 z7",
         101L -> "a wholly novel document that matches nothing in the index"))
@@ -124,7 +124,7 @@ class LshIndexSpec extends SparkTestBase {
       // LARGE-delta shape: only the delta shuffles into the index's
       // bucket layout
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cand = LshIndex.candidatesBucketed(spark, table, delta,
+      val cand = LshIndex.candidatesBucketed(spark, path, delta,
         "doc_id", "sh")
       val plan = cand.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
@@ -140,11 +140,14 @@ class LshIndexSpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === want)
       assert(got.contains((100L, 7L)) && !got.exists(_._1 == 101L))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
+
+  private def hybrid(path: String, probe: org.apache.spark.sql.DataFrame) =
+    LshIndex.candidatesHybrid(spark, path, probe, "doc_id", "sh")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def bulk(path: String) = Tables.read(spark, s"$path/${LshIndex.Bulk}")
 
   test("two-tier rollover: truncated ingest path + bucketed bulk serve " +
       "as one index") {
@@ -153,36 +156,33 @@ class LshIndexSpec extends SparkTestBase {
       10L -> "shared text body one two three four five six seven",
       11L -> "unrelated corpus document about entirely other things here"))
     LshIndex.write(corpus, "doc_id", "sh", path)
-    val table = "lsh_tiered_spec_bulk"
-    try {
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 4, "doc_id")
-      // ingest tier is empty (schema preserved), bulk holds everything
-      assert(graft.sources.Tables.read(spark, path).count() === 0L)
-      assert(spark.table(table).count() === 2L * MinHashLSH.Bands)
-      def hybrid(probe: org.apache.spark.sql.DataFrame) =
-        LshIndex.candidatesHybrid(spark, table, path, probe, "doc_id", "sh")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val dupOf10 = withSh(Seq(
-        20L -> "shared text body one two three four five six seven"))
-      assert(hybrid(dupOf10).contains((20L, 10L)),
-        "bulk-tier rows must serve after the rollover")
-      // a post-rollover admission lands in the path tier…
-      LshIndex.append(
-        withSh(Seq(30L -> "a wholly new document admitted after rollover")),
-        "doc_id", "sh", path)
-      val dupOf30 = withSh(Seq(
-        40L -> "a wholly new document admitted after rollover"))
-      assert(hybrid(dupOf30).contains((40L, 30L)),
-        "delta-tier rows must serve immediately")
-      // …and a post-rollover delete masks BULK rows too
-      import spark.implicits._
-      LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id")
-      assert(!hybrid(dupOf10).exists(_._2 == 10L),
-        "a delete after the rollover must mask the bulk tier")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    // ingest tier is empty (schema preserved), bulk holds everything
+    assert(Tables.read(spark, path).count() === 0L)
+    assert(bulk(path).count() === 2L * MinHashLSH.Bands)
+    val dupOf10 = withSh(Seq(
+      20L -> "shared text body one two three four five six seven"))
+    assert(hybrid(path, dupOf10).contains((20L, 10L)),
+      "bulk-tier rows must serve after the rollover")
+    // a post-rollover admission lands in the path tier…
+    LshIndex.append(
+      withSh(Seq(30L -> "a wholly new document admitted after rollover")),
+      "doc_id", "sh", path)
+    val dupOf30 = withSh(Seq(
+      40L -> "a wholly new document admitted after rollover"))
+    assert(hybrid(path, dupOf30).contains((40L, 30L)),
+      "delta-tier rows must serve immediately")
+    // …and a post-rollover delete masks BULK rows too
+    import spark.implicits._
+    LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id")
+    assert(!hybrid(path, dupOf10).exists(_._2 == 10L),
+      "a delete after the rollover must mask the bulk tier")
+    // a fresh build replaces both tiers
+    LshIndex.write(withSh(Seq(
+      50L -> "a rebuilt index holding one document only")), "doc_id", "sh", path)
+    assert(bulk(path).count() === 0L)
+    assert(hybrid(path, withSh(Seq(
+      60L -> "a rebuilt index holding one document only"))) === Set((60L, 50L)))
   }
 
   test("second rollover folds BOTH tiers into the new bulk generation") {
@@ -191,84 +191,70 @@ class LshIndexSpec extends SparkTestBase {
       10L -> "shared text body one two three four five six seven",
       11L -> "unrelated corpus document about entirely other things here"))
     LshIndex.write(corpus, "doc_id", "sh", path)
-    val table = "lsh_rollover2_bulk"
-    try {
-      // rollover #1: path holds the whole index (the q141 shape)
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 4, "doc_id")
-      // an admission wave lands in the truncated ingest tier…
-      LshIndex.append(
-        withSh(Seq(30L -> "a wholly new document admitted after rollover")),
-        "doc_id", "sh", path)
-      // …then rollover #2 — the steady state the API exists for: the
-      // bulk table must come out as tier-1 ∪ tier-2, not just the
-      // ingest-tier rows (round-9 verdict: the old code overwrote the
-      // bulk with only the appends, un-indexing the compacted corpus)
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 4, "doc_id")
-      assert(graft.sources.Tables.read(spark, path).count() === 0L)
-      assert(spark.table(table).count() === 3L * MinHashLSH.Bands)
-      def hybrid(probe: org.apache.spark.sql.DataFrame) =
-        LshIndex.candidatesHybrid(spark, table, path, probe, "doc_id", "sh")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      // a dup of a TIER-1 doc must still be refused after rollover #2
-      assert(hybrid(withSh(Seq(
-          20L -> "shared text body one two three four five six seven")))
-        .contains((20L, 10L)),
-        "rollover #2 must keep serving docs compacted by rollover #1")
-      // and the wave admitted between the rollovers serves from the bulk
-      assert(hybrid(withSh(Seq(
-          40L -> "a wholly new document admitted after rollover")))
-        .contains((40L, 30L)))
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    // rollover #1: path holds the whole index (the q141 shape)
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    // an admission wave lands in the truncated ingest tier…
+    LshIndex.append(
+      withSh(Seq(30L -> "a wholly new document admitted after rollover")),
+      "doc_id", "sh", path)
+    // …then rollover #2 — the steady state the API exists for: the
+    // bulk must come out as tier-1 ∪ tier-2, not just the ingest-tier
+    // rows (round-9 verdict: the old code overwrote the bulk with only
+    // the appends, un-indexing the compacted corpus)
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    assert(Tables.read(spark, path).count() === 0L)
+    assert(bulk(path).count() === 3L * MinHashLSH.Bands)
+    // a dup of a TIER-1 doc must still be refused after rollover #2
+    assert(hybrid(path, withSh(Seq(
+        20L -> "shared text body one two three four five six seven")))
+      .contains((20L, 10L)),
+      "rollover #2 must keep serving docs compacted by rollover #1")
+    // and the wave admitted between the rollovers serves from the bulk
+    assert(hybrid(path, withSh(Seq(
+        40L -> "a wholly new document admitted after rollover")))
+      .contains((40L, 30L)))
   }
 
-  test("a rollover retry after a swap crash recovers the staged bulk " +
-      "instead of rebuilding it from the ingest tier") {
-    val path = graft.Scratch.fresh("lshindex_swapcrash") + "/idx"
-    val corpus = withSh(Seq(
+  test("a failed rollover changes no tier or catalog; its retry serves all") {
+    val path = graft.Scratch.fresh("lshindex_rollover_fail") + "/idx"
+    def catalog() = spark.catalog.listTables().collect().map(_.name).toSet
+    val tables = catalog()
+    LshIndex.write(withSh(Seq(
       10L -> "shared text body one two three four five six seven",
-      11L -> "unrelated corpus document about entirely other things here"))
-    LshIndex.write(corpus, "doc_id", "sh", path)
-    val table = "lsh_swapcrash_bulk"
-    try {
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 4, "doc_id")
-      LshIndex.append(
-        withSh(Seq(30L -> "a wholly new document admitted after rollover")),
-        "doc_id", "sh", path)
-      // simulate rollover #2 crashing in the swap's middle window: the
-      // fold (bulk ∪ wave) is fully staged and the old bulk has been
-      // renamed away — `table` does not exist. The pre-fix retry saw
-      // tableExists=false, took the empty-bulk branch, and rebuilt the
-      // bulk from the ingest tier alone — un-indexing docs 10/11.
-      val fold = spark.table(table)
-        .unionByName(graft.sources.Tables.read(spark, path))
-      graft.layout.Bucketing.writeBucketedBy(fold, table + "__staged",
-        Seq("band", "bkt"), 4)
-      spark.sql(s"ALTER TABLE `$table` RENAME TO `${table}__old`")
-      assert(!spark.catalog.tableExists(table))
-      // the retry must recover the staged generation before deciding
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 4, "doc_id")
-      assert(graft.sources.Tables.read(spark, path).count() === 0L)
-      def hybrid(probe: org.apache.spark.sql.DataFrame) =
-        LshIndex.candidatesHybrid(spark, table, path, probe, "doc_id", "sh")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(hybrid(withSh(Seq(
-          20L -> "shared text body one two three four five six seven")))
-        .contains((20L, 10L)),
-        "tier-1 docs must survive a crash-interrupted rollover")
-      assert(hybrid(withSh(Seq(
-          40L -> "a wholly new document admitted after rollover")))
-        .contains((40L, 30L)),
-        "the staged wave must survive the recovery")
-    } finally {
-      Seq(table, table + "__staged", table + "__old")
-        .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
+      11L -> "unrelated corpus document about entirely other things here")),
+      "doc_id", "sh", path)
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    assert(catalog() === tables, "a rollover must register no catalog table")
+    LshIndex.append(withSh(Seq(
+      30L -> "a wholly new document admitted after rollover",
+      31L -> "another admitted document that is later forgotten")),
+      "doc_id", "sh", path)
+    import spark.implicits._
+    LshIndex.delete(spark, path, Seq(31L).toDF("doc_id"), "doc_id")
+    def state() = (
+      Tables.read(spark, path).collect().map(_.toString).sorted.toSeq,
+      LshIndex.tombstones(spark, path).map(_.as[Long].collect().toSeq),
+      Tables.at(spark, s"$path/${LshIndex.Bulk}").files.map(_.path).sorted)
+    val before = state()
+    intercept[IllegalStateException] {
+      LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id",
+        () => throw new IllegalStateException("crash before the publish"))
     }
+    assert(state() === before,
+      "ingest rows, markers and the bulk generation must be unchanged")
+    assert(catalog() === tables)
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    assert(catalog() === tables)
+    assert(Tables.read(spark, path).count() === 0L)
+    assert(LshIndex.tombstones(spark, path).isEmpty)
+    assert(bulk(path).select("doc_id").distinct().as[Long].collect().toSet
+      === Set(10L, 11L, 30L))
+    val cand = hybrid(path, withSh(Seq(
+      20L -> "shared text body one two three four five six seven",
+      21L -> "unrelated corpus document about entirely other things here",
+      40L -> "a wholly new document admitted after rollover")))
+    assert(Set((20L, 10L), (21L, 11L), (40L, 30L)).subsetOf(cand),
+      "the retry must serve every tier-1 doc and the folded wave")
   }
 
   test("a delete landing mid-rollover survives the truncate publish") {
@@ -277,28 +263,17 @@ class LshIndexSpec extends SparkTestBase {
       10L -> "shared text body one two three four five six seven",
       11L -> "unrelated corpus document about entirely other things here"))
     LshIndex.write(corpus, "doc_id", "sh", path)
-    val table = "lsh_rollover_race_bulk"
     import spark.implicits._
-    try {
-      // the delete lands AFTER the live read built the new bulk but
-      // BEFORE the truncate publishes — the exact window where the old
-      // code dropped the marker with the swapped-out directory
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 4, "doc_id",
-        () => LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"),
-          "doc_id"))
-      assert(LshIndex.tombstones(spark, path).isDefined,
-        "the mid-rollover marker must be carried into the truncated tier")
-      val cand = LshIndex.candidatesHybrid(spark, table, path,
-          withSh(Seq(
-            20L -> "shared text body one two three four five six seven")),
-          "doc_id", "sh")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(!cand.exists(_._2 == 10L),
-        "a delete written during the rollover must keep masking the bulk")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    // the delete lands AFTER the live read staged the new bulk but
+    // BEFORE the rollover publishes
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id",
+      () => LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id"))
+    assert(LshIndex.tombstones(spark, path).isDefined,
+      "the mid-rollover marker must survive the rollover")
+    val cand = hybrid(path, withSh(Seq(
+      20L -> "shared text body one two three four five six seven")))
+    assert(!cand.exists(_._2 == 10L),
+      "a delete written during the rollover must keep masking the bulk")
   }
 
   test("an append and a delete landing mid-rollover both survive it") {
@@ -307,33 +282,26 @@ class LshIndexSpec extends SparkTestBase {
       10L -> "shared text body one two three four five six seven",
       11L -> "unrelated corpus document about entirely other things here")),
       "doc_id", "sh", path)
-    val table = "lsh_rollover_append_bulk"
     import spark.implicits._
-    try {
-      // both land after the rollover read the ingest tier and built the
-      // new bulk, before its truncate commits
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 4, "doc_id", () => {
-          LshIndex.append(withSh(Seq(
-            30L -> "a wholly new document admitted during the rollover")),
-            "doc_id", "sh", path)
-          LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id")
-        })
-      assert(graft.sources.Tables.read(spark, path).select("doc_id")
-        .as[Long].collect().toSeq === Seq.fill(MinHashLSH.Bands)(30L),
-        "the mid-rollover append must stay in the ingest tier")
-      assert(LshIndex.tombstones(spark, path).map(_.as[Long].collect().toSeq)
-        .contains(Seq(10L)), "the mid-rollover marker must survive")
-      val cand = LshIndex.candidatesHybrid(spark, table, path, withSh(Seq(
-          20L -> "shared text body one two three four five six seven",
-          40L -> "a wholly new document admitted during the rollover")),
-          "doc_id", "sh")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(cand.contains((40L, 30L)))
-      assert(!cand.exists(_._2 == 10L))
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    // both land after the rollover read the ingest tier and staged the
+    // new bulk, before it commits
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id",
+      () => {
+        LshIndex.append(withSh(Seq(
+          30L -> "a wholly new document admitted during the rollover")),
+          "doc_id", "sh", path)
+        LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id")
+      })
+    assert(Tables.read(spark, path).select("doc_id")
+      .as[Long].collect().toSeq === Seq.fill(MinHashLSH.Bands)(30L),
+      "the mid-rollover append must stay in the ingest tier")
+    assert(LshIndex.tombstones(spark, path).map(_.as[Long].collect().toSeq)
+      .contains(Seq(10L)), "the mid-rollover marker must survive")
+    val cand = hybrid(path, withSh(Seq(
+      20L -> "shared text body one two three four five six seven",
+      40L -> "a wholly new document admitted during the rollover")))
+    assert(cand.contains((40L, 30L)))
+    assert(!cand.exists(_._2 == 10L))
   }
 
   test("rebuild applies pending tombstones and carries mid-rebuild deletes") {
@@ -378,17 +346,14 @@ class LshIndexSpec extends SparkTestBase {
     LshIndex.write(withSh(Seq(
         10L -> "shared text body one two three four five six seven")),
       "doc_id", "sh", path)
-    val table = "lsh_hybrid_once_bulk"
     try {
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 4, "doc_id")
+      LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
       LshIndex.append(
         withSh(Seq(30L -> "a wholly new document admitted after rollover")),
         "doc_id", "sh", path)
       val delta = withSh(Seq(
         20L -> "shared text body one two three four five six seven"))
-      val cand = LshIndex.candidatesHybrid(spark, table, path, delta,
-        "doc_id", "sh")
+      val cand = LshIndex.candidatesHybrid(spark, path, delta, "doc_id", "sh")
       // both tier probes must read the CACHED band-rows frame — the
       // delta's MinHash signature scan is the dominant admission cost
       // and used to run once per tier (round-9 verdict #4)
@@ -398,10 +363,7 @@ class LshIndexSpec extends SparkTestBase {
         s"both tiers must probe the cached delta band rows:\n$plan")
       assert(cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         .contains((20L, 10L)))
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      graft.CacheScope.releaseAll()
-    }
+    } finally graft.CacheScope.releaseAll()
   }
 
   test("hybrid probe keeps the bulk table exchange-free") {
@@ -409,30 +371,25 @@ class LshIndexSpec extends SparkTestBase {
     val docs = (0L until 40L).map(i =>
       i -> s"document number $i body with distinct words w$i x$i y$i z$i")
     LshIndex.write(withSh(docs), "doc_id", "sh", path)
-    val table = "lsh_hybrid_pin_bulk"
+    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 8, "doc_id")
+    LshIndex.append(
+      withSh(Seq(50L -> "a post rollover admission with words v50 u50")),
+      "doc_id", "sh", path)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      LshIndex.compactBucketedAndTruncate(spark, path, table,
-        buckets = 8, "doc_id")
-      LshIndex.append(
-        withSh(Seq(50L -> "a post rollover admission with words v50 u50")),
-        "doc_id", "sh", path)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val delta = withSh(Seq(
         100L -> "document number 7 body with distinct words w7 x7 y7 z7"))
-      val plan = LshIndex.candidatesHybrid(spark, table, path, delta,
+      val plan = LshIndex.candidatesHybrid(spark, path, delta,
         "doc_id", "sh").queryExecution.executedPlan.toString
-      // exchanges with the table side co-located: delta into the table's
+      // exchanges with the bulk side co-located: delta into the bulk's
       // bucket layout (1), both sides of the path-tier join (2), the
-      // closing distinct (1) = 4. A shuffling table side makes it 5.
+      // closing distinct (1) = 4. A shuffling bulk side makes it 5.
       val exchanges = "Exchange".r.findAllIn(plan).length
       assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
       assert(exchanges <= 4,
         s"bulk table side of the hybrid probe must not shuffle " +
           s"($exchanges exchanges):\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
   test("rebucketIfSkewed: below budget nothing moves; above it hot " +

@@ -250,19 +250,42 @@ class TablesSpec extends SparkTestBase {
     graft.CacheScope.releaseAll()
   }
 
+  test("joining two same-bucketed tables plans no shuffle exchange") {
+    import spark.implicits._
+    val facts = (1 to 10000).map(i => (i % 500, s"f$i")).toDF("k", "payload")
+    val dims = (0 until 500).map(i => (i, s"d$i")).toDF("k", "attr")
+    val t = Tables.at(spark, graft.Scratch.fresh("bucketed_join"))
+    Tables.commit(t.snap, "write") { tx =>
+      tx.put(t.sub("facts"), facts, bucketing = Some(Bucketing(8, Seq("k"))))
+      tx.put(t.sub("dims"), dims, bucketing = Some(Bucketing(8, Seq("k"))))
+    }
+    // disable auto-broadcast so the join would otherwise shuffle
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val s = Tables.root(spark, t.path)
+      val joined = s.table("facts").df.join(s.table("dims").df, "k")
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        s"expected exchange-free bucketed join, got:\n$plan")
+      assert(joined.count() === 10000)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
   test("no code outside graft.sources reads or writes parquet paths " +
       "directly or forks the commit protocol") {
     // a managed directory read by listing, or written around the log,
     // would bypass the log's snapshot: no parquet read/write call, no
-    // rename-chain suffix and no marker file name in operators,
-    // pipeline, state or queries
+    // rename-chain suffix, no marker file name and no catalog table
+    // (created, read, renamed or dropped) in operators, pipeline, state
+    // or queries
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     val files = Seq("operators", "pipeline", "state", "queries")
       .flatMap(d => Files.walk(root.resolve(d)).iterator.asScala)
       .filter(_.toString.endsWith(".scala"))
     assert(files.size > 50, s"scanned only ${files.size} files under $root")
-    val banned = Seq(".parquet(", "__tmp__", "__old__", "_claim=", "_commit=")
+    val banned = Seq(".parquet(", "__tmp__", "__old__", "_claim=", "_commit=",
+      "saveAsTable", "bucketBy", "spark.table(", "DROP TABLE", "ALTER TABLE")
     val offending = for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex

@@ -21,26 +21,31 @@ import graft.sources.Tables
   */
 object Upsert {
 
+  // a left-anti join ignores duplicate keys on its right side, so the key
+  // side of the anti-joins below is not deduplicated first
   def upsert(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame =
     target
-      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .join(updates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(updates)
 
   /** [[upsert]] `updates` into the parquet table at `path` and write the
     * result back as ONE commit that replaces the files it read
     * (hive-partitioned by `partitionBy`). Only a table whose log holds
     * no entry is a first write: a crashed earlier rewrite left no entry
-    * and so cannot truncate the table to the new batch.
+    * and so cannot truncate the table to the new batch. Returns the rows
+    * of the rewritten table, as its commit observed them.
     */
   def upsertInto(updates: DataFrame, path: String, keys: Seq[String],
-      partitionBy: Seq[String] = Nil): Unit = {
+      partitionBy: Seq[String] = Nil): Long = {
     val t = Tables.at(updates.sparkSession, path)
+    var rows = 0L
     Tables.commit(t.snap, "merge") { tx =>
       tx.remove(t.tree)
-      tx.put(t, if (!t.exists) updates
+      rows = tx.put(t, if (!t.exists) updates
         else upsert(t.df.select(updates.columns.toIndexedSeq.map(col): _*),
           updates, keys), partitionBy)
     }
+    rows
   }
 
   /** [[upsert]] with automatic schema evolution — Delta's
@@ -53,7 +58,7 @@ object Upsert {
   def upsertEvolve(target: DataFrame, updates: DataFrame,
       keys: Seq[String]): DataFrame =
     target
-      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .join(updates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(updates, allowMissingColumns = true)
 
   /** Full MERGE with a tombstone flag — `WHEN MATCHED AND s.deleted THEN
@@ -71,7 +76,7 @@ object Upsert {
     // one anti-join against ALL changed keys: updates replace, tombstones
     // remove — either way the target's old row must not survive
     target
-      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .join(updates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(live)
   }
 }

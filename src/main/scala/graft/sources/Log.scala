@@ -147,11 +147,12 @@ final class Txn private[sources] (val read: Snapshot, op: String) {
 
   /** Stage `df` as new files of `t`, hive-partitioned by `partitionBy`
     * and, given a `bucketing`, bucketed by it; `props` update the table's
-    * layout properties.
+    * layout properties. Returns the rows written, observed by the write
+    * itself (and recorded in the commit's `rows`).
     */
   def put(t: Table, df: DataFrame, partitionBy: Seq[String] = Nil,
       props: Map[String, String] = Map.empty,
-      bucketing: Option[Bucketing] = None): Unit = {
+      bucketing: Option[Bucketing] = None): Long = {
     puts += 1
     val out = new Path(stage, puts.toString)
     val obs = Observation()
@@ -169,12 +170,14 @@ final class Txn private[sources] (val read: Snapshot, op: String) {
           .format("parquet").option("path", out.toString).saveAsTable(name)
         finally read.spark.sql(s"DROP TABLE IF EXISTS `$name`")
     }
-    rows += obs.get("n").asInstanceOf[Long]
+    val n = obs.get("n").asInstanceOf[Long]
+    rows += n
     staged ++= Log.scan(fs, out, t.name)
     metas(t.name) = TableMeta(t.name, asNullable(StructType(df.schema
       .filterNot(f => partitionBy.contains(f.name)) ++
       partitionBy.map(df.schema(_)))).json, partitionBy,
       t.meta.fold(Map.empty[String, String])(_.properties) ++ props, bucketing)
+    n
   }
 
   /** Add the files a writer already wrote in `t`'s directory (a

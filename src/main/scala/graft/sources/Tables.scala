@@ -24,9 +24,12 @@ object Tables {
     * natively as TIMESTAMP_NTZ and which passes through unchanged —
     * DuckDB reads the same file as its (naive) TIMESTAMP, so values and
     * types line up with the oracle with no conversion at all.
+    *
+    * The scan gets its schema from [[fixture]], so loading a fixture
+    * starts no Spark job.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = fixture(spark, s"$sfDir/$name.parquet")
     df.schema.find(_.name == "ts") match {
       case Some(f) if f.dataType == org.apache.spark.sql.types.LongType =>
         // integer DIV — epoch nanos exceed double precision, so `/` (which
@@ -35,6 +38,41 @@ object Tables {
           org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
       case _ => df
     }
+  }
+
+  /** `spark.read.parquet(path)` under the schema its inference would
+    * pick, read on the driver. Without schema merging, inference
+    * samples one file and starts a Spark job to read its footer; this
+    * reads the footer of that same file directly: `path` itself when it
+    * is a file, else the first data file by path among the directory's
+    * entries that Spark's listing keeps (no leading `_` or `.`, no
+    * `._COPYING_` suffix).
+    *
+    * A directory holding a parquet summary file (`_common_metadata` or
+    * `_metadata`, which inference samples first), subdirectories (a
+    * partitioned layout) or no data file, and a missing path, are read
+    * as before, so they infer, or fail with Spark's own error.
+    */
+  private def fixture(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sampled = scala.util.Try(fs.getFileStatus(p)).toOption.flatMap { st =>
+      if (st.isFile) Some(st)
+      else {
+        val all = fs.listStatus(p)
+        val entries = all.filterNot { e =>
+          val n = e.getPath.getName
+          n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")
+        }
+        if (all.exists(e => Set("_common_metadata", "_metadata")(
+            e.getPath.getName)) || entries.exists(_.isDirectory)) None
+        else entries.sortBy(_.getPath.toString).headOption
+      }
+    }
+    sampled.fold(spark.read.parquet(path))(f => spark.read
+      .schema(org.apache.spark.sql.graftglue.ColumnGlue.footerSchema(spark, f))
+      .parquet(path))
   }
 
   /** Normalize an event-time column to session-zoned TimestampType for
@@ -71,7 +109,7 @@ object Tables {
   def loadEventsSince(spark: SparkSession, sfDir: String,
       watermark: java.sql.Timestamp): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, lit}
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = fixture(spark, s"$sfDir/events.parquet")
     raw.schema.find(_.name == "ts") match {
       case Some(f) if f.dataType == org.apache.spark.sql.types.LongType =>
         val wmNanos = watermark.getTime * 1000000L +
@@ -187,14 +225,16 @@ object Tables {
     * `partitionBy` gives the hive-style `key=value` layout of the
     * reference's partitioned Delta tables (`TABLE OPTIMIZATION.py:33-97`):
     * at 100 TB, time-partitioning a fact table buys PARTITION pruning
-    * above row-group min/max pruning.
+    * above row-group min/max pruning. Returns the rows written.
     */
   def overwrite(df: DataFrame, path: String,
-      partitionBy: Seq[String] = Nil): Unit = {
+      partitionBy: Seq[String] = Nil): Long = {
     val t = at(df.sparkSession, path)
+    var rows = 0L
     commit(t.snap, "overwrite") { tx =>
       tx.remove(t.tree)
-      tx.put(t, df, partitionBy)
+      rows = tx.put(t, df, partitionBy)
     }
+    rows
   }
 }

@@ -115,5 +115,6 @@ object StreamingPipeline {
     stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       Upsert.upsertInto(Dedup.keepLatest(batch, keys, orderCol),
         targetPath, keys)
+      ()
     }
 }

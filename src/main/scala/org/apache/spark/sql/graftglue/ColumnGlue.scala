@@ -1,9 +1,15 @@
 package org.apache.spark.sql.graftglue
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge between [[Column]] and Catalyst [[Expression]] for custom
   * expressions. Spark 4's `ExpressionUtils` is `private[sql]`, so this
@@ -35,6 +41,20 @@ object ColumnGlue {
     * file-source read reports for any stored schema
     * (`StructType.asNullable` is `private[spark]`).
     */
-  def asNullable(schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = schema.asNullable
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
+  /** The Spark schema of the parquet file `file`, read from its footer
+    * on the driver and converted the way schema inference converts the
+    * file it samples: a schema Spark stored in the footer wins, else the
+    * parquet schema under the session's settings (nanos as long, NTZ
+    * inference, binary as string).
+    */
+  def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, state.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
 }

@@ -5,8 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.sources.Tables
+import graft.state.WatermarkStore
 
 class SeismicPipelineSpec extends SparkTestBase {
+
+  /** Spark jobs of one increment into existing silver (deterministic);
+    * a budget may only go down.
+    */
+  private val IncrementJobBudget = 14
 
   test("full run, idempotent re-run, and watermark advance") {
     val work = Files.createTempDirectory("pipe").toString
@@ -26,6 +33,44 @@ class SeismicPipelineSpec extends SparkTestBase {
     assert(r2.silverRows === r1.silverRows)
     assert(r2.goldRows === r1.goldRows)
     assert(r2.watermark === r1.watermark)
+  }
+
+  test("an increment into existing silver stays within its job budget " +
+      "and reports the counts its commits observed") {
+    withTempDir("pipe4") { work =>
+      val events = spark.read.parquet(s"$sfDir/events.parquet")
+      val ts = events.select("ts").orderBy("ts").collect().map(_.get(0))
+      val cutoff = ts(ts.length / 2)
+      // a correction: an id of the first slice lands again 40 days after
+      // the newest event, so it moves to another month
+      val moved = events.filter(col("ts") === lit(ts.head)).limit(1)
+      val movedId = moved.select("event_id").head().getLong(0)
+      val correction = moved.withColumn("ts",
+        lit(ts.last) + expr("INTERVAL 40 DAYS"))
+      val landing = s"$work/land/events.parquet"
+      events.filter(col("ts") <= lit(cutoff)).write.parquet(landing)
+      SeismicPipeline.runIncremental(spark, s"$work/land", work)
+      events.filter(col("ts") > lit(cutoff)).unionByName(correction)
+        .write.mode("append").parquet(landing)
+
+      var r: SeismicPipeline.RunSummary = null
+      val m = graft.Metrics.measure(spark) {
+        r = SeismicPipeline.runIncremental(spark, s"$work/land", work)
+      }
+      val silver = Tables.read(spark, SeismicPipeline.silverPath(work))
+      val gold = Tables.read(spark, SeismicPipeline.goldPath(work))
+      assert(m.jobs <= IncrementJobBudget,
+        m.spans.map(j => s"${j.site} ${j.sql}").mkString("\n"))
+      assert(r.silverRows === silver.count())
+      assert(r.goldRows === gold.count())
+      assert(r.watermark === WatermarkStore.timestampAt(spark.read
+        .parquet(landing).agg(max("ts")).head(), 0))
+      val row = silver.filter(col("event_id") === movedId).collect()
+      assert(row.length === 1)
+      assert(WatermarkStore.timestampAt(row.head,
+        row.head.fieldIndex("event_time")) === r.watermark)
+      assert(gold.agg(sum("total_events")).head().getLong(0) === r.silverRows)
+    }
   }
 
   test("silver is hive-partitioned by (year, month) and a year predicate " +

@@ -271,6 +271,59 @@ class TablesSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
+  test("fixture loads take the schema inference would pick, with no job") {
+    import spark.implicits._
+    def expected(path: String): StructType =
+      StructType(spark.read.parquet(path).schema.map(f =>
+        if (f.name == "ts" && f.dataType == LongType)
+          f.copy(dataType = TimestampType) else f))
+    def check(dir: String, name: String): Unit = {
+      var got: StructType = null
+      val m = graft.Metrics.measure(spark) {
+        got = Tables.load(spark, dir, name).schema
+      }
+      assert(m.jobs === 0, s"$dir/$name: ${m.spans.map(_.site)}")
+      assert(got === expected(s"$dir/$name.parquet"), s"$dir/$name")
+    }
+    Tables.fixtureTables.foreach(check(sfDir, _))
+    withTempDir("footers") { d =>
+      // a Spark-written directory: _SUCCESS, checksums, several parts
+      Tables.load(spark, sfDir, "orders").repartition(3)
+        .write.parquet(s"$d/spark/orders.parquet")
+      assert(new java.io.File(s"$d/spark/orders.parquet").list()
+        .count(_.startsWith("part-")) === 3)
+      check(s"$d/spark", "orders")
+      // a landing directory of one-file slices whose schemas differ: the
+      // first by path decides, whichever was written first
+      val land = Files.createDirectories(
+        java.nio.file.Paths.get(s"$d/land/events.parquet"))
+      Seq(2 -> Seq("a", "b", "c"), 0 -> Seq("a", "b"), 1 -> Seq("a"))
+        .foreach { case (k, cols) =>
+          val out = s"$d/slice$k"
+          Seq((1L, "x", 2.0)).toDF("a", "b", "c").select(cols.map(col): _*)
+            .coalesce(1).write.parquet(out)
+          val part = new java.io.File(out).listFiles()
+            .find(_.getName.startsWith("part-")).get.toPath
+          Files.copy(part, land.resolve(f"slice_$k%05d.parquet"))
+        }
+      check(s"$d/land", "events")
+      assert(Tables.load(spark, s"$d/land", "events").columns.toSeq ===
+        Seq("a", "b"))
+      // a summary file, which inference samples before any data file:
+      // read as before, so the schema is still Spark's own
+      Files.copy(land.resolve("slice_00002.parquet"),
+        land.resolve("_common_metadata"))
+      val summarized = Tables.load(spark, s"$d/land", "events").schema
+      assert(summarized === expected(s"$d/land/events.parquet"))
+      assert(summarized.fieldNames.toSeq === Seq("a", "b", "c"))
+      // no data file: Spark's own inference error, as before
+      Files.createDirectories(java.nio.file.Paths.get(s"$d/empty/t.parquet"))
+      Files.createFile(java.nio.file.Paths.get(s"$d/empty/t.parquet/_SUCCESS"))
+      intercept[org.apache.spark.sql.AnalysisException](
+        Tables.load(spark, s"$d/empty", "t"))
+    }
+  }
+
   test("no code outside graft.sources reads or writes parquet paths " +
       "directly or forks the commit protocol") {
     // a managed directory read by listing, or written around the log,

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{Stable, Text}
 import graft.sources.{Table, Tables, Tombstones}
@@ -25,14 +28,15 @@ import graft.sources.{Table, Tables, Tombstones}
   *  - bucket partitions `bkt >= 0` — `(term, doc_id, tf, dl)` posting
   *    rows, `bkt = pmod(xxhash64(term), Buckets)`: a probe touches only
   *    its query terms' bucket DIRECTORIES (partition pruning — the
-  *    probed bucket ids are collected from the bounded query batch and
-  *    pushed as literals), so probe I/O tracks query vocabulary, never
-  *    corpus size. `dl` (document token length) is denormalized into
-  *    the posting row — the classic inverted-file trick that makes
-  *    scoring a single equi-join with zero side lookups. The bucket
-  *    modulus and the positional flag are properties of the table in
-  *    its log (self-describing layout — [[growBucketsIfHot]] can change
-  *    the modulus, and it moves atomically with the rows it bucketed).
+  *    probed bucket ids are computed on the driver from the bounded
+  *    query batch and pushed as literals), so probe I/O tracks query
+  *    vocabulary, never corpus size. `dl` (document token length) is
+  *    denormalized into the posting row — the classic inverted-file
+  *    trick that makes scoring a single equi-join with zero side
+  *    lookups. The bucket modulus and the positional flag are
+  *    properties of the table in its log (self-describing layout —
+  *    [[growBucketsIfHot]] can change the modulus, and it moves
+  *    atomically with the rows it bucketed).
   *  - partition `bkt = -1` ([[DlBkt]]) — doclen rows `(doc_id, dl)`,
   *    consulted only by [[delete]] to price a forgotten document's
   *    stats correction; never read at probe time (probes prune to
@@ -414,92 +418,122 @@ object TextIndex {
         sum(col("df")).cast("long").as("total_postings"))
   }
 
-  /** The live posting rows, projected to `cols`, of the terms in
-    * `queryTerms` (any frame with a `term` column) — the probe leg every
-    * query path shares: the query vocabulary's buckets are collected
-    * (bounded by the query batch contract, the discipline of the
-    * probed-cell collects in [[IvfAnn.searchPartitioned]]) and pushed as
-    * a literal `bkt IN` into the postings read, tombstoned docs are
-    * masked, and a broadcast join narrows the pruned rows to the exact
-    * terms.
+  /** The query batch tokenized once, on the driver: the `qid` field (so
+    * frames built from the rows keep its type) and `(qid, tokens)` per
+    * query row, a null text having no tokens. A query batch is bounded
+    * by contract, and a projection over a local batch folds into a
+    * local relation, so the collect starts no job.
     */
-  private def probed(t: Table, queryTerms: DataFrame,
-      cols: Seq[String]): DataFrame = {
-    val bkts = queryTerms.select(bkt(col("term"), layout(t)._1).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    Tombstones.filterLive(t, t.df.filter(col("bkt").isin(bkts: _*))
-          .select(cols.map(col): _*), "doc_id")
-      .join(broadcast(queryTerms.select(col("term")).distinct()), "term")
+  private def queryTokens(queries: DataFrame, qidCol: String,
+      textCol: String): (StructField, Seq[(Any, Seq[String])]) = {
+    val q = queries.select(col(qidCol).as("qid"),
+      Text.tokens(col(textCol)).as("tk"))
+    (q.schema("qid"), q.collect().toSeq.map(r =>
+      (r.get(0), if (r.isNullAt(1)) Nil else r.getSeq[String](1))))
   }
 
-  /** BM25 top-k per query — the probe path. One signature scan of the
-    * bounded query batch yields `(qid, term, qtf)`; the postings read is
-    * partition-pruned to the query terms' buckets (literal `bkt IN`
-    * pushed from the collected — bounded — query vocabulary) and then
-    * narrowed to the exact terms by a broadcast join; per-term document
-    * frequency aggregates that already-pruned frame, so NOTHING in the
-    * probe scales with corpus size except the probed posting lists
-    * themselves. Scores sum per (query, doc) through [[Stable]]'s
-    * decimal grid (partition-order-invariant despite the float `ln`),
-    * and top-k per query runs on the bounded-heap
-    * [[graft.plans.TopKPerKeyPlan]] operator — no full per-query sort.
+  /** A local frame of `rows`: broadcasting it starts no job. */
+  private def local(spark: SparkSession, fields: Seq[StructField],
+      rows: Seq[Product]): DataFrame =
+    spark.createDataFrame(rows.map(Row.fromTuple).asJava, StructType(fields))
+
+  private def counts[K](keys: Seq[K]): Seq[(K, Long)] =
+    keys.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq
+
+  private val termField = StructField("term", StringType)
+
+  /** The live posting rows, projected to `cols`, of `terms` — the probe
+    * leg every query path shares. The terms' bucket ids come from the
+    * layout's `bkt` expression over a local frame of the terms (it
+    * folds, so no job), and the postings read is pruned by literals:
+    * `bkt IN (…)` selects the bucket directories and `term IN (…)` the
+    * exact terms, both pushed into the scan. Tombstoned docs are masked.
+    */
+  private def probed(t: Table, terms: Seq[String],
+      cols: Seq[String]): DataFrame = {
+    val spark = t.snap.spark
+    import spark.implicits._
+    val bkts = terms.toDF("term").select(bkt(col("term"), layout(t)._1))
+      .collect().map(_.getInt(0)).distinct.toSeq
+    Tombstones.filterLive(t, t.df
+        .filter(col("bkt").isin(bkts: _*) && col("term").isin(terms: _*))
+        .select(cols.map(col): _*), "doc_id")
+  }
+
+  /** BM25 top-k per query — the probe path, planned on the driver from
+    * the bounded query batch. The batch is tokenized once on the driver
+    * ([[queryTokens]]), which counts `qtf` and hands `(qid, term, qtf)`
+    * back as a local frame; the postings read is pruned to the query
+    * terms by literals ([[probed]]); per-term document frequency is one
+    * `count(1) OVER (PARTITION BY term)` over the pruned live rows; and
+    * the corpus stats `(n_docs, sum_dl)` of the same snapshot are
+    * collected once and bound as double literals. NOTHING in the probe
+    * scales with corpus size except the probed posting lists
+    * themselves, and the call registers no [[graft.CacheScope]] entry.
+    * Scores sum per (query, doc) through [[Stable]]'s decimal grid
+    * (partition-order-invariant despite the float `ln`), and top-k per
+    * query runs on the bounded-heap [[graft.plans.TopKPerKeyPlan]]
+    * operator, whose `qid` partitioning the rank window reuses.
     *
     * Output: `(qid, rank, doc_id, bm25)`, rank 1..k by (score desc,
-    * doc_id), bm25 rounded to 4 decimals.
+    * doc_id), bm25 rounded to 4 decimals; `qid` keeps the input
+    * column's type.
     */
   def searchTopK(spark: SparkSession, dir: String, queries: DataFrame,
       qidCol: String, textCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qt = graft.CacheScope.cache(
-      queries.select(col(qidCol).as("qid"),
-          explode(Text.tokens(col(textCol))).as("term"))
-        .groupBy(col("qid"), col("term"))
-        .agg(count(lit(1)).as("qtf")))
+    val (qid, toks) = queryTokens(queries, qidCol, textCol)
+    val qtf = counts(toks.flatMap { case (q, ts) => ts.map(q -> _) })
+    val qt = local(spark, Seq(qid, termField,
+        StructField("qtf", LongType, nullable = false)),
+      qtf.map { case ((q, term), n) => (q, term, n) })
     // ONE snapshot serves the probe, its modulus (growBucketsIfHot may
-    // have changed it) and the stats; the projection drops the
-    // single-table meta columns (n_docs/sum_dl would collide with the
-    // stats crossJoin below) and anything else the scorer never reads —
-    // §2.3 project-before-exchange
+    // have changed it) and the stats
     val t = table(spark, dir)
-    val post = graft.CacheScope.cache(probed(t, qt,
-      Seq("term", "doc_id", "tf", "dl")))
-    val dfr = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = totals(t)
+    // the stats rows (O(operations)) collected in one job and summed
+    // here: a global aggregate would cost a second job; null when the
+    // table holds no stats row, as in [[totals]]
+    val st = t.df.filter(col("bkt") === StBkt)
+      .select(col("n_docs"), col("sum_dl")).collect()
+    def total(i: Int): Column = lit(st.filterNot(_.isNullAt(i))
+      .map(_.getLong(i)).reduceOption(_ + _).map(Long.box).orNull)
+      .cast("double")
+    val post = probed(t, qtf.map(_._1._2).distinct,
+        Seq("term", "doc_id", "tf", "dl"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
 
-    val nD = col("n_docs").cast("double")
+    val nD = total(0)
     val idf = log(lit(1.0) +
       (nD - col("df").cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5)))
     val tfNorm = (col("tf").cast("double") * lit(K1 + 1)) /
       (col("tf").cast("double") + lit(K1) *
         (lit(1 - B) + lit(B) * col("dl").cast("double") * nD /
-          col("sum_dl").cast("double")))
-    val scored = qt.join(post, "term").join(broadcast(dfr), "term")
-      .crossJoin(broadcast(stats))
+          total(1)))
+    val scored = post.join(broadcast(qt), "term")
       .select(col("qid"), col("doc_id"),
         (col("qtf").cast("double") * idf * tfNorm).as("c"))
       .groupBy(col("qid"), col("doc_id"))
       .agg(Stable.sumD(col("c")).as("score"))
-    val top = Dedup.topKPerKey(scored, Seq("qid"),
-      Seq(col("score").desc, col("doc_id").asc), k)
-    // qt/post stay registered in CacheScope until the caller's
-    // releaseAll() — releasing here would unpersist before the caller
-    // materializes the (lazy) result and recompute both scans
-    top
+    Dedup.topKPerKey(scored, Seq("qid"),
+        Seq(col("score").desc, col("doc_id").asc), k)
       .withColumn("rank", row_number().over(Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("doc_id"))).cast("long"))
       .select(col("qid"), col("rank"), col("doc_id"),
         round(col("score") + lit(1e-9), 4).as("bm25"))
-      .orderBy(col("qid"), col("rank"))
+      // at most k rows per query: one partition sorts them with no range
+      // exchange (whose bounds cost a sampling job of their own)
+      .coalesce(1).sortWithinPartitions(col("qid"), col("rank"))
   }
 
   /** Exact-phrase probe over a POSITIONAL layout — the decontamination
     * primitive bag-of-words BM25 cannot express ("does this eval
     * question appear VERBATIM in the corpus?"). Fails fast unless the
     * index was written `withPositions = true`. The probe keeps
-    * [[searchTopK]]'s shape — bucket-pruned postings read, broadcast
-    * term narrowing, tombstone mask — so cost is O(query-vocabulary
-    * posting lists + their position arrays), never a corpus scan.
+    * [[searchTopK]]'s shape — query slots and lengths planned on the
+    * driver, the postings read pruned by bucket and term literals,
+    * tombstone mask — so cost is O(query-vocabulary posting lists +
+    * their position arrays), never a corpus scan.
     *
     * Adjacency is position arithmetic, not a self-join per term pair:
     * phrase slot `i` matching at token offset `p` anchors candidate
@@ -518,11 +552,17 @@ object TextIndex {
     val t = table(spark, dir)
     require(layout(t)._2,
       "phraseSearch needs a positional layout: write(..., withPositions = true)")
-    val qslots = graft.CacheScope.cache(
-      queries.select(col(qidCol).as("qid"),
-        posexplode(Text.tokens(col(textCol))).as(Seq("slot", "term"))))
-    val qlen = qslots.groupBy(col("qid")).agg(count(lit(1)).as("m"))
-    val post = probed(t, qslots, Seq("term", "doc_id", "pos"))
+    // slot = the term's 0-based offset in its query (posexplode's pos)
+    val (qid, toks) = queryTokens(queries, qidCol, textCol)
+    val slots = toks.flatMap { case (q, ts) =>
+      ts.zipWithIndex.map { case (term, i) => (q, i, term) } }
+    val qslots = local(spark, Seq(qid,
+        StructField("slot", IntegerType, nullable = false), termField), slots)
+    val qlen = local(spark, Seq(qid,
+        StructField("m", LongType, nullable = false)),
+      counts(slots.map(_._1)))
+    val post = probed(t, slots.map(_._3).distinct,
+      Seq("term", "doc_id", "pos"))
     qslots.join(post, "term")
       .select(col("qid"), col("doc_id"), col("slot"),
         explode(col("pos")).as("p"))
@@ -560,11 +600,14 @@ object TextIndex {
     val t = table(spark, dir)
     require(layout(t)._2,
       "proximitySearch needs a positional layout: write(..., withPositions = true)")
-    val qterms = graft.CacheScope.cache(
-      queries.select(col(qidCol).as("qid"),
-        explode(array_distinct(Text.tokens(col(textCol)))).as("term")))
-    val qm = qterms.groupBy(col("qid")).agg(count(lit(1)).as("m"))
-    val post = probed(t, qterms, Seq("term", "doc_id", "pos"))
+    val (qid, toks) = queryTokens(queries, qidCol, textCol)
+    val pairs = toks.flatMap { case (q, ts) => ts.distinct.map(q -> _) }
+    val qterms = local(spark, Seq(qid, termField), pairs)
+    val qm = local(spark, Seq(qid,
+        StructField("m", LongType, nullable = false)),
+      counts(pairs.map(_._1)))
+    val post = probed(t, pairs.map(_._2).distinct,
+      Seq("term", "doc_id", "pos"))
     val tp = graft.CacheScope.cache(
       qterms.join(post, "term")
         .select(col("qid"), col("doc_id"), col("term"),

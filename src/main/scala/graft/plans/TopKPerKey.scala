@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 
 /** Whole-operator Catalyst tier (builder preference (c)): per-key top-k
@@ -44,6 +44,11 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
     k: Int, partial: Boolean, child: SparkPlan) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
+
+  // rows stay in their input partition (`preservesPartitioning` below),
+  // so a window over the same keys after the final stage needs no
+  // second exchange
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) Seq(UnspecifiedDistribution)

@@ -54,15 +54,15 @@ class WatermarkStore(spark: SparkSession, path: String) {
     val now = new Timestamp(System.currentTimeMillis())
     val prior = all()
     val others = prior.filter(col("table_name") =!= tableName)
-    val prevProcessed = prior
-      .filter(col("table_name") === tableName)
-      .select("records_processed")
-      .collect().headOption.map(_.getLong(0)).getOrElse(0L)
-    val updated = spark.createDataFrame(
-      java.util.List.of(
-        Row(tableName, watermarkColumn, newValue, now,
-          prevProcessed + records)),
-      schema)
+    // the prior count is folded into the overwrite's own plan (a global
+    // aggregate yields one row even when the table has no such row), so
+    // advancing costs no collect of its own
+    val updated = prior.filter(col("table_name") === tableName)
+      .agg(coalesce(sum(col("records_processed")), lit(0L)).as("prev"))
+      .select(lit(tableName).as("table_name"),
+        lit(watermarkColumn).as("watermark_column"),
+        lit(newValue).as("watermark_value"), lit(now).as("last_updated"),
+        (col("prev") + lit(records)).as("records_processed"))
     Tables.overwrite(others.unionByName(updated), path)
   }
 }

@@ -80,7 +80,6 @@ class CacheScopeSpec extends SparkTestBase {
     "q158_bq_recall",      // ranked-exact + ground-truth caches
     "q159_ann_routed",     // shared ranked frame + calibration caches
     "q160_bm25_index",     // docs cache through write/append/forget/search
-    "q161_hybrid_rrf",     // docs + embeddings caches across both legs
     "q162_bm25_stream",    // docs cache through streamed appends
     "q163_bm25_health",    // docs cache through the gated bucket growth
     "q164_bm25_versioned", // docs cache across both index versions
@@ -97,9 +96,8 @@ class CacheScopeSpec extends SparkTestBase {
     "q178_authority_canonical", // signature + pair + PR edge/degree caches
     "q179_wap_publish",    // poisoned-orders cache across the admissions
     "q181_topic_profile",  // embeddings + assignment caches
-    "q182_hybrid_persisted", // embeddings + both persisted legs' probe caches
-    "q183_phrase_probe",   // query-slot cache through the phrase probe
-    "q184_proximity_probe", // query-term + probed-position caches
+    "q182_hybrid_persisted", // embeddings + the vector leg's probe caches
+    "q184_proximity_probe", // probed-position cache
     "q187_scd2_merge",     // shared change-log cache across build + merge
     "q188_crossmodal_rrf", // IvfAnn corpus + query caches on the media leg
     "q196_bpe_encode",     // per-round segmentation caches (train before encode)

@@ -396,6 +396,69 @@ class TextIndexSpec extends SparkTestBase {
     assert(liveIds(idx) === Set(1L, 3L))
   }
 
+  /** Spark jobs of one `searchTopK(...).collect()` over a local query
+    * batch, on an index with an append and a pending delete
+    * (deterministic); a budget may only go down.
+    */
+  private val SearchJobBudget = 7
+
+  test("a search over a local query batch stays within its job budget, " +
+      "registers no engine cache, and serves a live-set rebuild") {
+    import spark.implicits._
+    val idx = graft.Scratch.fresh("ti_budget") + "/idx"
+    TextIndex.write(docs.filter(col("doc_id") % 3 =!= 0),
+      "doc_id", "text", idx)
+    TextIndex.append(docs.filter(col("doc_id") % 3 === 0),
+      "doc_id", "text", idx)
+    TextIndex.delete(spark, idx, Seq(3L).toDF("doc_id"), "doc_id")
+    val qs = queries(5).collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq.toDF("qid", "text")
+    def search(dir: String) =
+      TextIndex.searchTopK(spark, dir, qs, "qid", "text", 4).collect().toSeq
+    val caches = graft.CacheScope.activeCount
+    var rows: Seq[org.apache.spark.sql.Row] = Nil
+    val m = graft.Metrics.measure(spark) { rows = search(idx) }
+    assert(m.jobs <= SearchJobBudget,
+      m.spans.map(j => s"${j.site} ${j.sql}").mkString("\n"))
+    assert(graft.CacheScope.activeCount === caches)
+    val liveOnly = graft.Scratch.fresh("ti_budget_live") + "/idx"
+    TextIndex.write(docs.filter(col("doc_id") =!= 3L), "doc_id", "text",
+      liveOnly)
+    assert(rows.nonEmpty)
+    assert(rows === search(liveOnly))
+  }
+
+  test("search edge inputs: null text, unindexed terms, an empty batch " +
+      "and an Int qid column") {
+    import spark.implicits._
+    val idx = graft.Scratch.fresh("ti_edges") + "/idx"
+    TextIndex.write(docs, "doc_id", "text", idx)
+    def search(qs: DataFrame) =
+      TextIndex.searchTopK(spark, idx, qs, "qid", "text", 3)
+    val texts = queries(3).collect().map(r => (r.getLong(0), r.getString(1)))
+    val plain = search(texts.toSeq.toDF("qid", "text")).collect().toSeq
+    assert(plain.map(_.getLong(0)).toSet === Set(0L, 1L, 2L))
+    // a null text and a query of unindexed terms score nothing, and
+    // leave the other queries' rows as they were
+    val mixed = (texts.map { case (q, t) => (q, Option(t)) } ++ Seq(
+        (7L, None), (8L, Some("zzqx0 zzqx1 zzqx1"))))
+      .toSeq.toDF("qid", "text")
+    assert(search(mixed).collect().toSeq === plain)
+    // an empty batch: no rows, the same schema
+    val empty = search(Seq.empty[(Long, String)].toDF("qid", "text"))
+    assert(empty.collect().isEmpty)
+    assert(empty.schema === search(texts.toSeq.toDF("qid", "text")).schema)
+    // an Int qid keeps its type and serves the same rows
+    val intQ = search(texts.map { case (q, t) => (q.toInt, t) }.toSeq
+      .toDF("qid", "text"))
+    assert(intQ.schema("qid").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+    assert(intQ.collect().map(r => (r.getInt(0).toLong, r.getLong(1),
+        r.getLong(2), r.getDouble(3))).toSeq ===
+      plain.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))))
+  }
+
   // --- positional layout / phrase probe ----------------------------------
 
   private def phraseHits(idx: String, qs: Seq[(Long, String)])
@@ -431,6 +494,16 @@ class TextIndexSpec extends SparkTestBase {
     val idx = graft.Scratch.fresh("ti_phrase_rep") + "/idx"
     TextIndex.write(d, "doc_id", "text", idx, withPositions = true)
     assert(phraseHits(idx, Seq((0L, "a b a"))) === Map((0L, 1L) -> 1L))
+    // an Int qid keeps its type; a null text and an unindexed term
+    // match nothing
+    val qs = Seq((0, Some("a b a")), (1, Some("b a")), (2, None),
+      (3, Some("a zz"))).toDF("qid", "text")
+    val out = TextIndex.phraseSearch(spark, idx, qs, "qid", "text")
+    assert(out.schema("qid").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+    assert(out.collect().map(r => (r.getInt(0), r.getLong(1)) ->
+      r.getLong(2)).toMap === Map((0, 1L) -> 1L, (1, 1L) -> 1L))
+    assert(phraseHits(idx, Nil).isEmpty)
   }
 
   test("phrase probe: appends inherit the positional encoding; " +
@@ -479,6 +552,20 @@ class TextIndexSpec extends SparkTestBase {
         window = 8)
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
     assert(one === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    // an Int qid keeps its type; a repeated term counts once toward the
+    // terms a window must cover; a null text and an empty batch match
+    // nothing
+    val qs = Seq((0, Some("beta alpha beta")), (1, None))
+      .toDF("qid", "text")
+    val out = TextIndex.proximitySearch(spark, idx, qs, "qid", "text",
+      window = 8)
+    assert(out.schema("qid").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+    assert(out.collect().map(r => (r.getInt(0), r.getLong(1)) ->
+      r.getLong(2)).toMap === got.map { case (d, s) => (0, d) -> s })
+    assert(TextIndex.proximitySearch(spark, idx,
+      Seq.empty[(Long, String)].toDF("qid", "text"), "qid", "text",
+      window = 8).collect().isEmpty)
     graft.CacheScope.releaseAll()
   }
 

@@ -13,7 +13,7 @@ class SeismicPipelineSpec extends SparkTestBase {
   /** Spark jobs of one increment into existing silver (deterministic);
     * a budget may only go down.
     */
-  private val IncrementJobBudget = 14
+  private val IncrementJobBudget = 13
 
   test("full run, idempotent re-run, and watermark advance") {
     val work = Files.createTempDirectory("pipe").toString

@@ -83,4 +83,25 @@ class TopKPerKeySpec extends SparkTestBase {
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(out === Set((1, 10), (1, 20), (2, 5)))
   }
+
+  test("a rank window on the top-k key reuses the final stage's " +
+      "partitioning: one key exchange") {
+    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val order = Seq(col("ts").desc, col("event_id").desc)
+    val ranked = Dedup.topKPerKey(ev, Seq("user_id"), order, 3)
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id")).orderBy(order: _*)))
+    val plan = ranked.queryExecution.executedPlan.toString
+    assert(plan.contains("Window"), plan)
+    assert("Exchange hashpartitioning\\(user_id".r.findAllIn(plan).size === 1,
+      plan)
+    // and the ranks are the window formulation's
+    val viaWindow = ev.withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id")).orderBy(order: _*)))
+      .filter(col("rank") <= 3)
+    assert(ranked.collect().map(_.toString).sorted.toSeq ===
+      viaWindow.collect().map(_.toString).sorted.toSeq)
+  }
 }

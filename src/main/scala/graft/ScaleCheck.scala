@@ -152,12 +152,12 @@ object ScaleCheck {
         admission(LshIndex.candidates(spark, lshPath, delta, "doc_id", "sh"))
       }
       jline("lsh_admission_plain", n, corpusRows, mLsh, collisions)
-      // bucketed steady-state probe (q140 shape): the index side scans
-      // pre-clustered — only the delta (and the verify legs) shuffle
-      LshIndex.compactBucketed(spark, lshPath, buckets = 16, "doc_id")
+      // bucketed steady-state probe (q140 shape): after a rollover the
+      // index side scans pre-clustered — only the delta (and the verify
+      // legs) shuffle
+      LshIndex.compactBucketedAndTruncate(spark, lshPath, "doc_id")
       val mLshB = Metrics.measure(spark) {
-        admission(LshIndex.candidatesBucketed(spark, lshPath, delta,
-          "doc_id", "sh"))
+        admission(LshIndex.candidates(spark, lshPath, delta, "doc_id", "sh"))
       }
       jline("lsh_admission_bucketed", n, corpusRows, mLshB, collisions)
 
@@ -180,13 +180,12 @@ object ScaleCheck {
       val vecRows = vecs.count()
       val cents = IvfAnn.centroids(vecs, "vec_id", "embedding",
         clusters = 16, iters = 1)
-      val ivfPath = Scratch.fresh(s"scalecheck_ivf_$n") + "/cells"
-      IvfAnn.writePartitionedByCell(vecs, "vec_id", "embedding", cents,
-        ivfPath)
+      val ivfPath = Scratch.fresh(s"scalecheck_ivf_$n") + "/idx"
+      IvfAnn.writeIndex(vecs, "vec_id", "embedding", cents, ivfPath)
       val queries = vecs.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val mIvf = Metrics.measure(spark) {
-        IvfAnn.searchPartitioned(spark, ivfPath, cents, "vec_id",
+        IvfAnn.searchIndex(spark, ivfPath, "vec_id",
           "embedding", queries, "qid", "qv", k = 3, nProbe = 4).count()
         ()
       }

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
 import graft.operators.CentroidState.Cent
+import graft.sources.{Tables, Tombstones, Txn}
 
 /** IVF (inverted-file) approximate nearest neighbour — the scale path
   * past sign-bucket LSH (SCALING.md "Dedup / similarity"): a coarse
@@ -31,9 +32,16 @@ import graft.operators.CentroidState.Cent
   *    bounded-heap reduction applies before the one remaining shuffle.
   *
   * At 10 B vectors: centroids are O(clusters·dim) — always driver/
-  * broadcast-sized; the corpus is written bucketed by cell so a probe
-  * reads `nProbe` buckets; raising `clusters` keeps cell size constant as
+  * broadcast-sized; the corpus is written partitioned by cell so a probe
+  * reads `nProbe` cells; raising `clusters` keeps cell size constant as
   * the corpus grows (clusters ≈ sqrt(n) is the classical sizing).
+  *
+  * A persisted index is ONE log root (the [[IvfPq]] shape): its `cells`
+  * and `centroids` are two tables of that root, so [[writeIndex]],
+  * [[appendIndex]], [[deleteFromIndex]], [[compactIndex]] and
+  * [[retrainIfDrifted]] are each one commit, and every lifecycle call
+  * and [[searchIndex]] reads the quantizer and the cells from one
+  * snapshot — no caller carries centroids.
   */
 object IvfAnn {
 
@@ -221,110 +229,123 @@ object IvfAnn {
       .orderBy(col("n_probe"))
   }
 
-  /** Materialize an assigned corpus hive-partitioned by `cell` — the
-    * physical layout behind the sizing claim above ("the corpus is
-    * written bucketed by cell so a probe reads `nProbe` buckets"): with
-    * one directory per cell, a probe's scan prunes to exactly its
-    * probed cells' FILES (spec-asserted on the file set, not the plan
-    * string), turning `nProbe / clusters` from a compute ratio into an
-    * I/O ratio. At 10 B vectors with clusters ≈ sqrt(n), each cell is a
-    * few thousand vectors — a handful of parquet files per probe.
+  /** The index's cell layout and quantizer: two tables of one log root.
+    * `cells` holds the assigned corpus `(id, vec, cell)` hive-partitioned
+    * by `cell` — one directory per cell, so a probe's scan prunes to
+    * exactly its probed cells' FILES (spec-asserted on the file set, not
+    * the plan string), turning `nProbe / clusters` from a compute ratio
+    * into an I/O ratio. At 10 B vectors with clusters ≈ sqrt(n), each
+    * cell is a few thousand vectors — a handful of parquet files per
+    * probe. `centroids` holds the quantizer that assigned them.
     */
-  def writePartitionedByCell(corpus: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame, path: String): Unit = {
-    val cs = CentroidState.collect(cents)
-    graft.sources.Tables.overwrite(corpus.select(col(idCol), col(vecCol),
-      CentroidState.nearestCell(col(vecCol), cs).as("cell")), path,
-      Seq("cell"))
+  private val Cells = "cells"
+  private val Centroids = "centroids"
+
+  private def assigned(vecs: DataFrame, idCol: String, vecCol: String,
+      cs: Seq[Cent]): DataFrame =
+    vecs.select(col(idCol), col(vecCol),
+      CentroidState.nearestCell(col(vecCol), cs).as("cell"))
+
+  /** Stage the whole index — `vecs` assigned under `cents`, and `cents`
+    * itself — in `tx`, replacing every file of the snapshot it read.
+    */
+  private def put(tx: Txn, vecs: DataFrame, idCol: String, vecCol: String,
+      cents: DataFrame): Unit = {
+    tx.remove(tx.read.files)
+    tx.put(tx.read.table(Cells), assigned(vecs, idCol, vecCol,
+      CentroidState.collect(cents)), Seq("cell"))
+    tx.put(tx.read.table(Centroids), cents.coalesce(1))
   }
 
-  /** Incrementally append a delta batch to an existing
-    * [[writePartitionedByCell]] layout WITHOUT retraining: each new
-    * vector is assigned to its nearest EXISTING centroid (the same pure
-    * projection as [[assign]]) and its rows land as new files under the
-    * matching `cell=` directories. This is how a production index
-    * absorbs a day's new embeddings at 10 B-vector scale — an
-    * O(|delta|) append in one commit, zero corpus rewrite, zero
-    * quantizer retrain —
-    * and searches over the layout see old and new vectors uniformly
-    * because partition pruning is directory-based, not file-based.
-    * Centroid drift is bounded by retraining cadence, the classical
-    * IVF maintenance trade (re-run [[centroids]] +
-    * [[writePartitionedByCell]] when recall decays).
+  /** Write a SELF-CONTAINED index root at `dir`: the cell layout AND the
+    * quantizer that produced it, in ONE commit — the serving layer needs
+    * both, and versioning them separately invites quantizer/layout skew
+    * (a search against cells written under other centroids probes the
+    * wrong cells and silently loses recall). Combined with
+    * [[graft.sources.Snapshots.commit]] this is zero-downtime index
+    * publishing: each retrain commits a full index version while
+    * searches pinned to the previous version keep serving (q124).
     */
-  def appendPartitionedByCell(delta: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame, path: String): Unit = {
-    val cs = CentroidState.collect(cents)
-    val t = graft.sources.Tables.at(delta.sparkSession, path)
-    graft.sources.Tables.commit(t.snap, "append") { tx =>
-      tx.put(t, delta.select(col(idCol), col(vecCol),
-        CentroidState.nearestCell(col(vecCol), cs).as("cell")), Seq("cell"))
-      // a forgotten-then-readmitted vector must serve its NEW rows — a
-      // stale tombstone would mask them at probe time and the next
-      // compaction would drop them physically (round-8 advice)
-      graft.sources.Tombstones.unmark(tx, t, delta, idCol)
+  def writeIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      cents: DataFrame, dir: String): Unit = {
+    val s = Tables.root(corpus.sparkSession, dir)
+    Tables.commit(s, "write")(put(_, corpus, idCol, vecCol, cents))
+  }
+
+  /** Incrementally append a delta batch WITHOUT retraining, in one
+    * commit: each new vector is assigned to its nearest STORED centroid
+    * (the same pure projection as [[assign]]) and its rows land as new
+    * files under the matching `cell=` directories. This is how a
+    * production index absorbs a day's new embeddings at 10 B-vector
+    * scale — O(|delta|), zero corpus rewrite, zero quantizer retrain —
+    * and searches see old and new vectors uniformly because partition
+    * pruning is directory-based, not file-based. Centroid drift is
+    * bounded by retraining cadence, the classical IVF maintenance trade
+    * ([[retrainIfDrifted]]). A forgotten-then-readmitted vector serves
+    * its NEW rows: its stale tombstone is cleared in the same commit.
+    */
+  def appendIndex(delta: DataFrame, idCol: String, vecCol: String,
+      dir: String): Unit = {
+    val s = Tables.root(delta.sparkSession, dir)
+    val cells = s.table(Cells)
+    val cs = CentroidState.collect(s.table(Centroids).df)
+    Tables.commit(s, "append") { tx =>
+      tx.put(cells, assigned(delta, idCol, vecCol, cs), Seq("cell"))
+      Tombstones.unmark(tx, cells, delta, idCol)
     }
   }
 
-  /** Compact a cell layout in place: every cell's rows are rewritten
-    * as ONE file (a `repartition` on `cell` puts each cell wholly in
-    * one task, so `partitionBy` emits one file per cell directory) in
-    * one commit ([[graft.sources.Tombstones.compact]]) — readers see the
-    * old or the new files, never neither, and markers committed
-    * meanwhile survive. This is the third leg of
-    * index maintenance: [[appendPartitionedByCell]] absorbs deltas as
-    * small files, probe I/O degrades with file COUNT (per-file
-    * open/footer cost), and periodic compaction restores
-    * one-file-per-cell without touching centroids or assignments. Content is untouched by construction —
-    * the spec asserts file counts drop and search results are
-    * identical.
+  /** LOGICAL delete — O(|deletes|), append-only markers on `cells` via
+    * the shared [[graft.sources.Tombstones]] mechanics: [[searchIndex]]
+    * anti-joins them at probe time, and the next [[compactIndex]]
+    * applies them PHYSICALLY (and removes the markers it applied). This
+    * is the right-to-be-forgotten shape at 10 B vectors: the delete path
+    * never rewrites the corpus, and the serving penalty — one broadcast
+    * anti-join against the (small) tombstone set — is bounded by
+    * compaction cadence, exactly like small-file growth under
+    * [[appendIndex]].
     */
-  def compactCells(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String): Unit =
-    graft.sources.Tombstones.compact(spark, path, idCol, Seq("cell"))(
+  def deleteFromIndex(spark: SparkSession, dir: String, ids: DataFrame,
+      idCol: String): Unit =
+    Tombstones.write(spark, s"$dir/$Cells", ids, idCol)
+
+  /** The index's pending tombstones (None when nothing was deleted). */
+  def tombstones(spark: SparkSession, dir: String): Option[DataFrame] =
+    Tombstones.read(spark, s"$dir/$Cells")
+
+  /** Compact the `cells` table of an index root — this family's and
+    * [[IvfPq]]'s, which share the layout — in one commit
+    * ([[graft.sources.Tombstones.compact]]): every cell's live rows are
+    * rewritten as ONE file (a `repartition` on `cell` puts each cell
+    * wholly in one task, so `partitionBy` emits one file per cell
+    * directory), the markers it read are removed, and markers committed
+    * meanwhile survive. Appends accumulate small files and probe I/O
+    * degrades with file COUNT (per-file open/footer cost); compaction
+    * restores one file per cell without touching centroids or
+    * assignments (spec-asserted: file counts drop, search results are
+    * identical).
+    */
+  def compactIndex(spark: SparkSession, dir: String, idCol: String): Unit =
+    Tombstones.compact(spark, s"$dir/$Cells", idCol, Seq("cell"))(
       _.repartition(col("cell")))
 
-  /** LOGICAL delete from a cell layout — O(|deletes|), append-only
-    * markers via the shared [[graft.sources.Tombstones]] mechanics:
-    * [[searchPartitioned]] anti-joins them at probe time, and the next
-    * [[compactCells]] applies them PHYSICALLY (and removes the markers
-    * it applied). This is the right-to-be-forgotten shape at 10 B vectors:
-    * the delete path never rewrites the corpus, and the serving
-    * penalty — one broadcast anti-join against the (small) tombstone
-    * set — is bounded by compaction cadence, exactly like small-file
-    * growth under [[appendPartitionedByCell]].
+  /** Search an index root: the quantizer and the cells come from one
+    * snapshot. The query batch's probed cells are computed from the
+    * stored centroids (pure projection), their union prunes the cells
+    * READ to those cells' files (≤ `queries · nProbe` cells, bounded by
+    * `clusters`), pending deletes are masked, and scoring proceeds
+    * exactly as [[search]] — same probe-side broadcast guard, same
+    * custom top-k. This is the shape a 10 B-vector deployment runs: I/O
+    * tracks the probe set, not the corpus; results are spec-asserted
+    * equal to the in-memory [[search]].
+    *
+    * @return (qid, neighbor, cosine)
     */
-  def deleteFromCells(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, idCol: String): Unit =
-    graft.sources.Tombstones.write(spark, path, ids, idCol)
-
-  /** The layout's pending tombstones (None when nothing was deleted). */
-  def tombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] =
-    graft.sources.Tombstones.read(spark, path)
-
-  /** Scan ONLY the given cells' partitions of a
-    * [[writePartitionedByCell]] layout (partition pruning does the
-    * file-set restriction; nothing else is read).
-    */
-  def readCells(spark: org.apache.spark.sql.SparkSession, path: String,
-      cells: Seq[Int]): DataFrame =
-    graft.sources.Tables.read(spark, path).filter(col("cell").isin(cells: _*))
-
-  /** End-to-end IVF search AGAINST the on-disk layout: the query
-    * batch's probed cells are computed from the trained centroids
-    * (pure projection), their union prunes the corpus READ to those
-    * cells' files (≤ `queries · nProbe` cells, bounded by `clusters`),
-    * and scoring proceeds exactly as [[search]] — same probe-side
-    * broadcast guard, same custom top-k. This is the shape a 10 B-
-    * vector deployment runs: I/O tracks the probe set, not the corpus;
-    * results are spec-asserted equal to the in-memory [[search]].
-    */
-  def searchPartitioned(spark: org.apache.spark.sql.SparkSession,
-      path: String, cents: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
+  def searchIndex(spark: SparkSession, dir: String, idCol: String,
+      vecCol: String, queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nProbe: Int): DataFrame = {
-    val cs = CentroidState.collect(cents)
+    val s = Tables.root(spark, dir)
+    val cs = CentroidState.collect(s.table(Centroids).df)
     val qcached = CentroidState.ensureCached(queries)
     // persist the probed frame: the wanted-cell collect below and the
     // scored join both read it, and without the cache each would re-run
@@ -342,9 +363,9 @@ object IvfAnn {
       .collect().map(_.getInt(0)).toSeq
     // pending logical deletes are filtered at probe time — a broadcast
     // anti-join against the (small, compaction-bounded) tombstone set
-    val t = graft.sources.Tables.at(spark, path)
-    val corpus = graft.sources.Tombstones
-      .filterLive(t, t.df.filter(col("cell").isin(wanted: _*)), idCol)
+    val cells = s.table(Cells)
+    val corpus = Tombstones
+      .filterLive(cells, cells.df.filter(col("cell").isin(wanted: _*)), idCol)
       .withColumn("__n", Vectors.norm(col(vecCol)))
     val scored = probeSide(probed, qcached.count() * nProbe,
         bytesPerRow = cs.head.cvec.length * 4L + 64L)
@@ -357,38 +378,9 @@ object IvfAnn {
       Seq(col("cosine").desc, col("neighbor").asc), k)
   }
 
-  /** Write a SELF-CONTAINED index directory: the cell layout AND the
-    * quantizer that produced it travel together (`dir/cells`,
-    * `dir/centroids`) — the serving layer needs both, and versioning
-    * them separately invites quantizer/layout skew (a search against
-    * cells written under other centroids probes the wrong cells and
-    * silently loses recall). Combined with
-    * [[graft.sources.Snapshots.commit]] this is zero-downtime index
-    * publishing: each retrain commits a full index version while
-    * searches pinned to the previous version keep serving (q124).
-    */
-  def writeIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, dir: String): Unit = {
-    writePartitionedByCell(corpus, idCol, vecCol, cents, s"$dir/cells")
-    graft.sources.Tables.overwrite(cents.coalesce(1), s"$dir/centroids")
-  }
-
-  /** Search a [[writeIndex]] directory: the quantizer loads from the
-    * index itself (O(clusters) driver rows), then the search runs
-    * against the colocated cell layout — same probe-side broadcast
-    * guard, partition pruning, and custom top-k as
-    * [[searchPartitioned]].
-    */
-  def searchIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      idCol: String, vecCol: String, queries: DataFrame, qidCol: String,
-      qvecCol: String, k: Int, nProbe: Int): DataFrame =
-    searchPartitioned(spark, s"$dir/cells",
-      graft.sources.Tables.read(spark, s"$dir/centroids"), idCol, vecCol,
-      queries, qidCol, qvecCol, k, nProbe)
-
   /** Index-staleness telemetry — the WHEN-to-retrain signal that closes
-    * the maintenance loop ([[appendPartitionedByCell]] appends without
-    * retraining; [[compactCells]] defragments; this reports when the
+    * the maintenance loop ([[appendIndex]] appends without
+    * retraining; [[compactIndex]] defragments; this reports when the
     * quantizer itself has gone stale): per cell, the mean squared L2
     * distance to the assigned centroid for each generation in `genCol`
     * (`base` = the training generation, `delta` = appended batches),
@@ -457,57 +449,55 @@ object IvfAnn {
   }
 
   /** Drift-GATED retrain — the decision leg that closes the maintenance
-    * loop ([[appendPartitionedByCell]] absorbs, [[compactCells]]
-    * defragments, [[driftReport]] measures, THIS acts): compute the
-    * corpus-wide drift ratio from the per-cell report, and when it
-    * exceeds `tau`, retrain the quantizer on the full LIVE tagged
-    * corpus and rewrite the cell layout at `path` in one commit, like
-    * [[compactCells]] (readers see old or new, never neither). Below `tau`
-    * nothing is touched and the existing centroids come back.
+    * loop ([[appendIndex]] absorbs, [[compactIndex]] defragments,
+    * [[driftReport]] measures, THIS acts): compute the corpus-wide drift
+    * ratio of `tagged` against the index's STORED centroids, and when it
+    * exceeds `tau`, retrain the quantizer on the full LIVE tagged corpus
+    * and replace cells AND centroids in one commit, as
+    * [[IvfPq.retrainIfDrifted]] does — readers see the old index or the
+    * new one, never new cells under old centroids. Below `tau` nothing
+    * is touched.
     *
     * The rebuild sources vectors from the CALLER's corpus, which may
     * still hold logically deleted ids — pending tombstones apply
-    * physically before training and re-encode ([[deleteFromCells]]
-    * markers must neither shape the retrained centroids nor be
-    * resurrected into the new layout), and markers committed while the
-    * retrain runs survive it ([[graft.sources.Tables.commit]]).
+    * physically before training and re-assignment
+    * ([[deleteFromIndex]] markers must neither shape the retrained
+    * centroids nor be resurrected into the new layout), and markers
+    * committed while the retrain runs survive it
+    * ([[graft.sources.Tables.commit]]).
     *
-    * Retraining costs what [[centroids]] + [[writePartitionedByCell]]
-    * cost — `iters` corpus scans and one partitioned rewrite — which is
-    * exactly why it hides behind the ratio gate instead of running on
-    * every append.
+    * Retraining costs what [[centroids]] + [[writeIndex]] cost — `iters`
+    * corpus scans and one partitioned rewrite — which is exactly why it
+    * hides behind the ratio gate instead of running on every append.
     *
-    * @return (centroids now governing `path`, whether a retrain ran)
+    * @return whether a retrain ran
     */
-  def retrainIfDrifted(spark: org.apache.spark.sql.SparkSession,
-      path: String, tagged: DataFrame, genCol: String, idCol: String,
-      vecCol: String, cents: DataFrame, clusters: Int, iters: Int,
-      tau: Double): (DataFrame, Boolean) =
-    retrainIfDrifted(spark, path, tagged, genCol, idCol, vecCol, cents,
-      clusters, iters, tau, () => ())
+  def retrainIfDrifted(spark: SparkSession, dir: String, tagged: DataFrame,
+      genCol: String, idCol: String, vecCol: String, clusters: Int,
+      iters: Int, tau: Double): Boolean =
+    retrainIfDrifted(spark, dir, tagged, genCol, idCol, vecCol, clusters,
+      iters, tau, () => ())
 
-  /** Test seam: `midRetrain` runs after the rebuilt layout is staged
-    * and before the commit — the window a concurrent delete can land in.
+  /** Test seam: `midRetrain` runs after the rebuilt index is staged and
+    * before the commit — the window a concurrent delete can land in.
     */
-  private[graft] def retrainIfDrifted(spark: org.apache.spark.sql.SparkSession,
-      path: String, tagged: DataFrame, genCol: String, idCol: String,
-      vecCol: String, cents: DataFrame, clusters: Int, iters: Int,
-      tau: Double, midRetrain: () => Unit): (DataFrame, Boolean) = {
-    val ratio = globalDriftRatio(driftReport(tagged, genCol, vecCol, cents))
-    if (!ratio.exists(_ > tau)) (cents, false)
+  private[graft] def retrainIfDrifted(spark: SparkSession, dir: String,
+      tagged: DataFrame, genCol: String, idCol: String, vecCol: String,
+      clusters: Int, iters: Int, tau: Double,
+      midRetrain: () => Unit): Boolean = {
+    val s = Tables.root(spark, dir)
+    val ratio = globalDriftRatio(
+      driftReport(tagged, genCol, vecCol, s.table(Centroids).df))
+    if (!ratio.exists(_ > tau)) false
     else {
-      val t = graft.sources.Tables.at(spark, path)
-      val full = graft.sources.Tombstones.filterLive(t,
+      val full = Tombstones.filterLive(s.table(Cells),
         tagged.select(col(idCol), col(vecCol)), idCol)
       val retrained = centroids(full, idCol, vecCol, clusters, iters)
-      val cs = CentroidState.collect(retrained)
-      graft.sources.Tables.commit(t.snap, "retrain") { tx =>
-        tx.remove(t.tree)
-        tx.put(t, full.select(col(idCol), col(vecCol),
-          CentroidState.nearestCell(col(vecCol), cs).as("cell")), Seq("cell"))
+      Tables.commit(s, "retrain") { tx =>
+        put(tx, full, idCol, vecCol, retrained)
         midRetrain()
       }
-      (retrained, true)
+      true
     }
   }
 }

@@ -43,7 +43,9 @@ import graft.operators.CentroidState.Cent
   * property of its `cells` table in the index's log; [[appendIndex]],
   * [[searchIndex]] and [[retrainIfDrifted]] read it from the snapshot
   * they resolved, so the codes are always scored and extended the way
-  * they were written.
+  * they were written. The index is one log root, like [[IvfAnn]]'s,
+  * and its `cells` table is laid out as IvfAnn's is, so
+  * [[IvfAnn.compactIndex]] compacts either.
   */
 object IvfPq {
 
@@ -209,7 +211,7 @@ object IvfPq {
   }
 
   /** O(|delta|) incremental append — the composed index's day-2 story
-    * ([[IvfAnn.appendPartitionedByCell]] plus encoding): each new
+    * ([[IvfAnn.appendIndex]] plus encoding): each new
     * vector is routed by the STORED coarse quantizer and encoded with
     * the STORED codebooks under the stored encoding, landing as new
     * files under its cell directory. No retrain, no rewrite; drift is
@@ -232,8 +234,8 @@ object IvfPq {
 
   /** LOGICAL delete from the composed index — O(|deletes|) markers on
     * the cell layout; [[searchIndex]] masks them at probe time and the
-    * next [[IvfAnn.compactCells]] over `dir/cells` applies them
-    * physically.
+    * next [[IvfAnn.compactIndex]] of `dir` (the two families share the
+    * `cells` layout) applies them physically.
     */
   def deleteFromIndex(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String): Unit =
@@ -368,7 +370,7 @@ object IvfPq {
 
   /** Drift-GATED retrain of the persisted composed index — the
     * decision leg completing IvfPq's maintenance loop to parity with
-    * plain IVF ([[appendIndex]] absorbs, [[IvfAnn.compactCells]]
+    * plain IVF ([[appendIndex]] absorbs, [[IvfAnn.compactIndex]]
     * defragments `dir/cells`, [[driftReport]] measures, THIS acts):
     * when the corpus-wide drift ratio exceeds `tau`, BOTH quantizers
     * retrain on the full LIVE tagged corpus (pending tombstones apply

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Bucketing, Tables, Tombstones}
+import graft.sources.{Bucketing, Table, Tables, Tombstones}
 
 /** Persisted MinHash-LSH band index with O(delta) incremental
   * maintenance — the dedup-index counterpart of [[IvfAnn]]'s cell
@@ -25,13 +25,15 @@ import graft.sources.{Bucketing, Tables, Tombstones}
   *  4. appending the non-duplicate docs' band rows — the corpus is
   *     never rewritten and the quantizer-free index never retrains.
   *
-  * Two physical layouts serve the probe, both tables of the index
-  * root's log: the root table (the ingest tier — appends are cheap, the
-  * probe shuffles |delta|·Bands + collided index rows, AQE broadcasts
-  * the delta side when small), and the [[compactBucketed]] bulk tier
-  * [[Bulk]] bucketed by `(band, bkt)` (the 100 TB steady state —
-  * [[candidatesBucketed]] plans with zero exchange over the index side,
-  * so the corpus-sized scan never moves however big the delta).
+  * Two physical tiers serve the probe, both tables of the index root's
+  * log: the root table (the ingest tier — appends are cheap, the probe
+  * shuffles |delta|·Bands + collided index rows, AQE broadcasts the
+  * delta side when small), and the bulk tier [[Bulk]] a rollover
+  * ([[compactBucketedAndTruncate]]) builds, bucketed by `(band, bkt)`
+  * (the 100 TB steady state — its probe plans with zero exchange over
+  * the index side, so the corpus-sized scan never moves however big the
+  * delta). [[candidates]] is the one probe: it reads whichever tiers
+  * hold files, under one marker set.
   */
 object LshIndex {
 
@@ -55,10 +57,10 @@ object LshIndex {
       path: String): Unit =
     Tables.overwrite(bandRows(corpus, idCol, shCol), path)
 
-  /** The probe join shared by every serving tier: prebuilt delta band
-    * rows equi-joined to an index frame on `(band, bkt)`. Taking the
-    * band rows (not the raw delta) lets a multi-tier probe reuse ONE
-    * signature scan of the delta across tiers ([[candidatesHybrid]]).
+  /** The probe join shared by both tiers: prebuilt delta band rows
+    * equi-joined to an index frame on `(band, bkt)`. Taking the band
+    * rows (not the raw delta) lets a two-tier probe reuse ONE signature
+    * scan of the delta across tiers ([[candidates]]).
     */
   private def probeBands(dBand: DataFrame, index: DataFrame,
       idCol: String): DataFrame =
@@ -67,20 +69,53 @@ object LshIndex {
         col("d.band") === col("c.band") && col("d.bkt") === col("c.bkt"))
       .select(col(s"d.$idCol").as("deltaId"), col(s"c.$idCol").as("indexId"))
 
-  private def probe(index: DataFrame, delta: DataFrame, idCol: String,
-      shCol: String): DataFrame =
-    probeBands(bandRows(delta, idCol, shCol), index, idCol)
+  /** The tiers of one snapshot that hold rows: the bulk tier when its
+    * table holds files, the ingest tier when it does or the bulk does
+    * not (so an empty index still reads under its schema).
+    */
+  private def tiers(t: Table): Seq[Table] = {
+    val bulk = t.sub(Bulk)
+    if (bulk.files.isEmpty) Seq(t)
+    else if (t.files.isEmpty) Seq(bulk)
+    else Seq(bulk, t)
+  }
+
+  /** Every band row of both tiers, read from one snapshot. */
+  def rows(spark: SparkSession, path: String): DataFrame =
+    rows(Tables.at(spark, path))
+
+  private def rows(t: Table): DataFrame =
+    tiers(t).map(_.df).reduce(_ unionByName _)
 
   /** Probe the persisted index with a delta batch: distinct
-    * `(deltaId, indexId)` pairs sharing any band bucket. Only the
-    * index rows whose buckets collide ever leave the scan; pending
-    * logical deletes ([[delete]]) are filtered with an anti-join
+    * `(deltaId, indexId)` pairs sharing any band bucket, over every
+    * tier of one snapshot that holds rows. Only the index rows whose
+    * buckets collide ever leave the scan, and pending logical deletes
+    * ([[delete]]) are filtered from either tier with an anti-join
     * against the (compaction-bounded) tombstone set.
+    *
+    * The bucketed bulk side plans exchange-free (a small delta
+    * broadcasts with the index side streamed; a LARGE backfill delta
+    * degrades to a sort-merge join where only the delta shuffles into
+    * the bulk's bucket layout), and the ingest side holds only the band
+    * rows appended since the last rollover. When both tiers are probed
+    * the delta's band rows are cached (registered in
+    * [[graft.CacheScope]]) so its MinHash signature scan — the dominant
+    * per-row admission cost — runs once, not once per tier; unioning
+    * the index sides instead would forfeit the bulk's exchange-free
+    * plan. A single-tier index caches nothing. Admission semantics do
+    * not depend on the tiers — pinned by the q141 oracle, the
+    * sequential-recurrence SQL with no notion of tiers.
     */
   def candidates(spark: SparkSession, path: String, delta: DataFrame,
       idCol: String, shCol: String): DataFrame = {
     val t = Tables.at(spark, path)
-    probe(Tombstones.filterLive(t, t.df, idCol), delta, idCol, shCol)
+    val probed = tiers(t)
+    val dBand = bandRows(delta, idCol, shCol)
+    val shared = if (probed.size > 1) graft.CacheScope.cache(dBand) else dBand
+    probed
+      .map(x => probeBands(shared, Tombstones.filterLive(t, x.df, idCol), idCol))
+      .reduce(_ unionByName _)
       .distinct()
   }
 
@@ -88,10 +123,11 @@ object LshIndex {
     * [[graft.sources.Tombstones]] mechanics: O(|deletes|) append-only
     * markers. [[candidates]] skips tombstoned docs at probe time — a
     * forgotten document must stop blocking new admissions IMMEDIATELY,
-    * not at compaction cadence — and the next [[compact]] drops their
-    * band rows physically (and removes the markers it applied in the
-    * same commit). The right-to-be-forgotten shape for the dedup
-    * index: the delete path never rewrites the corpus.
+    * not at compaction cadence — and the next [[compact]] (or, once the
+    * index has a bulk tier, the next rollover) drops their band rows
+    * physically and removes the markers it applied in the same commit.
+    * The right-to-be-forgotten shape for the dedup index: the delete
+    * path never rewrites the corpus.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit =
@@ -118,100 +154,71 @@ object LshIndex {
     }
   }
 
-  /** Compact the index: per-batch appends accumulate one small file
-    * each, and probe cost degrades with file COUNT (open/footer per
-    * file) long before it degrades with rows. The rewrite coalesces to
-    * `targetFiles` in one commit ([[Tombstones.compact]]) —
-    * the [[IvfAnn.compactCells]] discipline for the dedup index
-    * (content untouched, spec-asserted). `idCol` names the id column
-    * explicitly — inferring it from column position would silently
-    * anti-join tombstones against the wrong column if a layout ever
-    * arrived reordered, permanently losing the deletes. For the 100 TB
-    * steady-state probe layout, see [[compactBucketed]].
+  /** Compact a single-tier index: per-batch appends accumulate one
+    * small file each, and probe cost degrades with file COUNT
+    * (open/footer per file) long before it degrades with rows. The
+    * rewrite coalesces to one file and applies pending markers in one
+    * commit ([[Tombstones.compact]]) — the [[IvfAnn.compactIndex]]
+    * discipline for the dedup index (content untouched, spec-asserted).
+    * `idCol` names the id column explicitly — inferring it from column
+    * position would silently anti-join tombstones against the wrong
+    * column if a layout ever arrived reordered, permanently losing the
+    * deletes.
+    *
+    * An index whose bulk tier holds files fails loudly: the markers
+    * mask rows of both tiers, and this rewrite sees only the ingest
+    * tier, so removing them would bring deleted bulk rows back. A
+    * two-tier index compacts by rolling over
+    * ([[compactBucketedAndTruncate]]).
     */
-  def compact(spark: SparkSession, path: String, idCol: String,
-      targetFiles: Int = 1): Unit =
-    Tombstones.compact(spark, path, idCol)(_.repartition(targetFiles))
+  def compact(spark: SparkSession, path: String, idCol: String): Unit = {
+    require(Tables.at(spark, path).sub(Bulk).files.isEmpty,
+      s"$path has a bulk tier: compact it with a rollover")
+    Tombstones.compact(spark, path, idCol)(_.repartition(1))
+  }
 
   /** The bulk tier's table in the index root's log. */
   val Bulk = "_bulk"
 
-  private def bulkBucketing(buckets: Int) =
-    Some(Bucketing(buckets, Seq("band", "bkt")))
-
-  /** Compact the index into its bulk tier ([[Bulk]]), BUCKETED by
-    * `(band, bkt)` — the steady-state serving layout at 100 TB: the
-    * admission probe joins on `(band, bkt)`, and a scan of a table
-    * bucketed on exactly those keys already satisfies the join's
-    * clustering, so [[candidatesBucketed]] plans with NO exchange over
-    * the index side (spec-pinned; bucketing on `bkt` alone would still
-    * shuffle — Spark's co-partitioning check requires ALL join keys).
-    * The corpus-sized side of every future probe stops moving; only the
-    * delta shuffles. Pending tombstones apply to the bulk physically;
-    * the ingest tier and its markers stay as they are. One commit.
-    */
-  def compactBucketed(spark: SparkSession, path: String, buckets: Int,
-      idCol: String): Unit = {
-    val t = Tables.at(spark, path)
-    val base = t.df
-    require(base.columns.contains(idCol),
-      s"id column '$idCol' not in index schema ${base.columns.mkString(",")}")
-    val bulk = t.sub(Bulk)
-    Tables.commit(t.snap, "compact") { tx =>
-      tx.remove(bulk.files)
-      tx.put(bulk, Tombstones.filterLive(t, base, idCol),
-        bucketing = bulkBucketing(buckets))
-    }
-  }
-
-  /** [[candidates]] against a [[compactBucketed]] bulk tier: same
-    * distinct `(deltaId, indexId)` contract, but the index side reads
-    * pre-clustered by `(band, bkt)` — a small delta broadcasts (index
-    * side streamed, zero exchange), and a LARGE backfill delta degrades
-    * to a sort-merge join where only the DELTA shuffles into the
-    * index's bucket layout. Either way the index never moves.
-    *
-    * Delete contract: the bulk is a COMPACTED generation — pending
-    * markers were applied physically when it was built, and this probe
-    * does not consult the markers, so deletes written AFTER the
-    * compaction are NOT masked here. Immediate masking goes through
-    * [[candidatesHybrid]] (the markers mask both tiers) or a re-run of
-    * [[compactBucketed]].
-    */
-  def candidatesBucketed(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, shCol: String): DataFrame =
-    probe(Tables.at(spark, path).sub(Bulk).df, delta, idCol, shCol)
-      .distinct()
+  /** The bulk tier's bucket count. */
+  val BulkBuckets = 16
 
   /** The two-tier (lambda) layout rollover, ONE commit: the bulk tier
     * ([[Bulk]]) is replaced by `bulk ∪ ingest` minus pending
-    * tombstones, bucketed by `(band, bkt)`, and the ingest files and
-    * markers the rollover read are removed. The ingest tier then
-    * receives subsequent [[append]]s, which [[candidatesHybrid]] probes
-    * alongside the bulk.
+    * tombstones, and the ingest files and markers the rollover read are
+    * removed. The ingest tier then receives subsequent [[append]]s,
+    * which [[candidates]] probes alongside the bulk.
+    *
+    * The bulk is BUCKETED by `(band, bkt)` into [[BulkBuckets]] buckets
+    * — the steady-state serving layout at 100 TB: the admission probe
+    * joins on `(band, bkt)`, and a scan of a table bucketed on exactly
+    * those keys already satisfies the join's clustering, so the probe
+    * plans with NO exchange over the bulk side (spec-pinned; bucketing
+    * on `bkt` alone would still shuffle — Spark's co-partitioning check
+    * requires ALL join keys). The corpus-sized side of every future
+    * probe stops moving; only the delta shuffles.
     *
     * Rollover N>1 folds BOTH tiers — compacting only the ingest tier
     * would replace the bulk with the latest appends, silently
     * un-indexing the whole compacted corpus (round-9 verdict). Band rows
     * appended and markers committed while it runs are adds the commit
     * never removes, so they stay in the ingest tier, where
-    * [[candidatesHybrid]] serves and applies them to either tier.
+    * [[candidates]] serves and applies them to either tier.
     * A rollover that fails before its commit publishes leaves both tiers
     * and the markers as they were, and a retry folds the same rows; the
     * bulk lives in the index root's log, so it survives the JVM, and a
     * fresh [[write]] replaces both tiers.
     */
   def compactBucketedAndTruncate(spark: SparkSession, path: String,
-      buckets: Int, idCol: String): Unit =
-    compactBucketedAndTruncate(spark, path, buckets, idCol, () => ())
+      idCol: String): Unit =
+    compactBucketedAndTruncate(spark, path, idCol, () => ())
 
   /** Test seam: `midRollover` runs after the new bulk generation is
     * staged and before the commit publishes — the window a concurrent
     * append or delete can land in.
     */
   private[graft] def compactBucketedAndTruncate(spark: SparkSession,
-      path: String, buckets: Int, idCol: String,
-      midRollover: () => Unit): Unit = {
+      path: String, idCol: String, midRollover: () => Unit): Unit = {
     val t = Tables.at(spark, path)
     val pathRows = t.df
     require(pathRows.columns.contains(idCol),
@@ -222,7 +229,7 @@ object LshIndex {
       tx.remove(t.files ++ Tombstones.markers(t).files ++ bulk.files)
       // pending tombstones apply physically here — to BOTH tiers
       tx.put(bulk, Tombstones.filterLive(t, all, idCol),
-        bucketing = bulkBucketing(buckets))
+        bucketing = Some(Bucketing(BulkBuckets, Seq("band", "bkt"))))
       midRollover()
     }
   }
@@ -253,10 +260,11 @@ object LshIndex {
     * index's maintenance loop (q128 MEASURES bucket skew; this ACTS on
     * it — the [[IvfAnn.retrainIfDrifted]] pattern for the LSH family):
     * the index's total `candidate_pairs` (Σ s·(s−1)/2 over band
-    * buckets — its exact probe-join cost) is computed from the index
-    * rows alone, one O(index) groupBy with no corpus access. When it
-    * exceeds `pairBudget`, the index rebuilds over [[dfCapShingles]]
-    * shingle sets in one commit ([[Tables.commit]]);
+    * buckets — its exact probe-join cost) is computed from the band
+    * rows of both tiers ([[rows]]), one O(index) groupBy with no corpus
+    * access. When it exceeds `pairBudget`, the index rebuilds over
+    * [[dfCapShingles]] shingle sets in one commit ([[Tables.commit]])
+    * that, like [[write]], replaces both tiers and the markers;
     * below budget nothing is touched. The expensive path hides behind
     * the cheap telemetry — q121's discipline.
     * @return (candidate_pairs observed, whether a rebuild ran)
@@ -274,7 +282,7 @@ object LshIndex {
       corpus: DataFrame, idCol: String, shCol: String,
       capDf: Long, pairBudget: Long, midRebuild: () => Unit): (Long, Boolean) = {
     val t = Tables.at(spark, path)
-    val pairs = t.df
+    val pairs = rows(t)
       .groupBy(col("band"), col("bkt")).agg(count(lit(1)).as("s"))
       .agg(coalesce(sum(expr("(s * (s - 1)) div 2")), lit(0L)))
       .head.getLong(0)
@@ -283,47 +291,15 @@ object LshIndex {
       // the rebuild sources band rows from the CALLER's corpus, which
       // may still hold logically deleted docs — pending markers apply
       // physically here, or the rebuild would resurrect forgotten
-      // documents and destroy their markers (round-9 advice)
+      // documents and destroy their markers (round-9 advice); the bulk
+      // tier goes too, or its rows would serve beside the rebuilt ones
       Tables.commit(t.snap, "rebucket") { tx =>
-        tx.remove(t.files ++ Tombstones.markers(t).files)
+        tx.remove(t.tree)
         tx.put(t, Tombstones.filterLive(t, bandRows(
           dfCapShingles(corpus, idCol, shCol, capDf), idCol, shCol), idCol))
         midRebuild()
       }
       (pairs, true)
     }
-  }
-
-  /** Probe BOTH tiers of a [[compactBucketedAndTruncate]] layout in one
-    * pass, read from one snapshot — the steady-state serving shape at
-    * 100 TB: the bucketed bulk side plans exchange-free (the corpus
-    * never moves), the ingest side holds only band rows appended since
-    * the last rollover (small — broadcasts or shuffles cheaply), and
-    * deletes written AFTER the rollover mask rows in EITHER tier (the
-    * index's marker set applies to both). Admission semantics are
-    * identical to the single-tier [[candidates]] — pinned by the q141
-    * oracle, which is the sequential-recurrence SQL with no notion of
-    * tiers.
-    */
-  def candidatesHybrid(spark: SparkSession, path: String,
-      delta: DataFrame, idCol: String, shCol: String): DataFrame = {
-    // ONE MinHash scan of the delta probes BOTH tiers: the band-rows
-    // frame is cached (registered in CacheScope) and reused — the
-    // delta's signature scan is the dominant per-row admission cost
-    // and used to run once per tier. Unioning the index sides instead
-    // would forfeit the bucketed side's exchange-free plan.
-    val dBand = graft.CacheScope.cache(bandRows(delta, idCol, shCol))
-    val t = Tables.at(spark, path)
-    probeBands(dBand, Tombstones.filterLive(t, t.sub(Bulk).df, idCol),
-        idCol)
-      .unionByName(probeBands(dBand, Tombstones.filterLive(t, t.df, idCol),
-        idCol))
-      .distinct()
-  }
-
-  /** Every band row of both tiers, read from one snapshot. */
-  def rows(spark: SparkSession, path: String): DataFrame = {
-    val t = Tables.at(spark, path)
-    t.sub(Bulk).df.unionByName(t.df)
   }
 }

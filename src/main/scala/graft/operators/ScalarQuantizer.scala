@@ -146,7 +146,7 @@ object ScalarQuantizer {
   }
 
   /** LOGICAL delete — O(|deletes|) markers; [[searchIndex]] masks them
-    * and the next [[IvfAnn.compactCells]]-style rewrite of `dir/codes`
+    * and the next [[IvfAnn.compactIndex]]-style rewrite of `dir/codes`
     * applies them physically.
     */
   def deleteFromIndex(spark: SparkSession, dir: String, ids: DataFrame,

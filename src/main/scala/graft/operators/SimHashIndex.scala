@@ -114,10 +114,8 @@ object SimHashIndex {
     graft.sources.Tombstones.read(spark, path)
 
   /** Defragment append waves and apply pending deletes physically —
-    * [[LshIndex.compact]] for this family.
+    * [[LshIndex.compact]] for this family, into one file.
     */
-  def compact(spark: SparkSession, path: String, idCol: String,
-      targetFiles: Int = 1): Unit =
-    graft.sources.Tombstones.compact(spark, path, idCol)(
-      _.repartition(targetFiles))
+  def compact(spark: SparkSession, path: String, idCol: String): Unit =
+    graft.sources.Tombstones.compact(spark, path, idCol)(_.repartition(1))
 }

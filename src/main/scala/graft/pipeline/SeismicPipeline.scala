@@ -35,7 +35,8 @@ import graft.state.WatermarkStore
   *  - the gold overwrite, whose commit observes gold's row count.
   *
   * No fixture read starts a job ([[Tables.load]]). A run with no new
-  * records stops after the aggregate and counts silver and gold.
+  * records stops after the aggregate and takes silver's and gold's row
+  * counts from their latest commits.
   */
 object SeismicPipeline {
 
@@ -70,13 +71,21 @@ object SeismicPipeline {
     val stats = increment.agg(count(lit(1)), max(col("ts"))).head()
     val newCount = stats.getLong(0)
     if (newCount == 0L) {
-      // no-op run; silver/gold may not exist yet if the very first run
-      // saw no data past the seed watermark
-      def countIfExists(path: String): Long =
-        if (Tables.exists(spark, path)) Tables.read(spark, path).count()
-        else 0L
-      return RunSummary(0L, countIfExists(silverPath(workDir)),
-        countIfExists(goldPath(workDir)), wm)
+      // no-op run: silver and gold are whole-table rewrites (merge,
+      // overwrite), so the latest commit of each observed its row count;
+      // neither exists yet if the very first run saw no data past the
+      // seed watermark
+      def rowsOf(path: String): Long = {
+        val t = Tables.at(spark, path)
+        t.snap.log.filter(_._2.tables.contains(t.name)).lastOption
+          .fold(0L) { case (_, c) =>
+            require(Set("merge", "overwrite")(c.operation),
+              s"$path: latest commit is a ${c.operation}, not a rewrite")
+            c.rows
+          }
+      }
+      return RunSummary(0L, rowsOf(silverPath(workDir)),
+        rowsOf(goldPath(workDir)), wm)
     }
 
     // W1 dedup-keep-latest within the increment

@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * machinery; this rule removes it entirely when the rank column
   * itself is not needed.
   *
-  * Measured regimes (graft.TopKBench, 10M rows, local[32], round 6 —
-  * honest numbers with this rule EXCLUDED from the window side): the
+  * Measured regimes (the `graft.TopKBench` dev main, last held in
+  * commit cd62d4a: 10M synthetic rows, local[32], round 6 — honest
+  * numbers with this rule EXCLUDED from the window side): the
   * heap operator wins when the per-key reduction is real — 7× at 100
   * keys, 2× at 10k keys (the sort the native path still pays
   * dominates) — and the native WindowGroupLimit path wins ~1.8× from

@@ -495,14 +495,15 @@ object DedupQueries {
       |ORDER BY doc_id""".stripMargin
 
   /** Shared Spark-side admission pipeline for q125/q140: build the
-    * on-disk index from the corpus split, probe the delta through
-    * `probe` (ingest tier vs bucketed bulk tier — the only difference
-    * between the two gates), Jaccard-verify collided docs only, append
-    * the admitted band rows, and report per-doc stats plus the on-disk
-    * row count read back AFTER the append.
+    * on-disk index from the corpus split, optionally roll it over into
+    * the bucketed bulk tier (the only difference between the two
+    * gates), probe the delta, Jaccard-verify collided
+    * docs only, append the admitted band rows, and report per-doc stats
+    * plus the index's row count across both tiers read back AFTER the
+    * append.
     */
   private def lshAdmissionRun(spark: SparkSession, dir: String, tag: String,
-      probe: (String, DataFrame) => DataFrame): DataFrame = {
+      rollover: Boolean): DataFrame = {
     import graft.operators.LshIndex
     val docs = SharedIndexes.lshDocs(spark, dir)
       .transform(graft.CacheScope.cache)
@@ -512,7 +513,8 @@ object DedupQueries {
     // appends the admitted band rows into its copy)
     val path = graft.Scratch.cloneBase(
       SharedIndexes.lshBase80(spark, dir), tag + "_lsh_index")
-    val cand = probe(path, delta)
+    if (rollover) LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
+    val cand = LshIndex.candidates(spark, path, delta, "doc_id", "sh")
     // verify against only the collided corpus docs (left-semi prune);
     // the collided-id set is bounded by the probe contract (distinct
     // index docs sharing a bucket with the bounded delta), so it
@@ -543,7 +545,7 @@ object DedupQueries {
       delta.join(perDoc.filter(col("admitted")).select(col("doc_id")),
         Seq("doc_id"), "left_semi"),
       "doc_id", "sh", path)
-    val after = Tables.read(spark, path)
+    val after = LshIndex.rows(spark, path)
       .agg(count(lit(1)).as("index_rows_after"))
     perDoc.crossJoin(broadcast(after)).orderBy(col("doc_id"))
   }
@@ -551,17 +553,16 @@ object DedupQueries {
   val lshIndexAppend: QuerySpec = QuerySpec.sql(
     "q125_lsh_index_append", lshIndexAppendSql
   ) { (spark, dir) =>
-    lshAdmissionRun(spark, dir, "q125", (path, delta) =>
-      graft.operators.LshIndex
-        .candidates(spark, path, delta, "doc_id", "sh"))
+    lshAdmissionRun(spark, dir, "q125", rollover = false)
   }
 
   /** q125's admission run against the BUCKETED steady-state serving
-    * layout ([[graft.operators.LshIndex.compactBucketed]]): the index
-    * is compacted into its bulk tier, bucketed by the probe keys
-    * `(band, bkt)`, and the delta probes it exchange-free on the index
-    * side ([[graft.operators.LshIndex.candidatesBucketed]];
-    * `LshIndexSpec` pins the plan) — at 100 TB this is the difference
+    * layout: the index rolls over into its bulk tier
+    * ([[graft.operators.LshIndex.compactBucketedAndTruncate]]), bucketed
+    * by the probe keys `(band, bkt)`, and the delta probes it
+    * exchange-free on the index side
+    * ([[graft.operators.LshIndex.candidates]]; `LshIndexSpec` pins the
+    * plan) — at 100 TB this is the difference
     * between re-shuffling the corpus-sized index on every ingest batch
     * and shuffling only the delta. Identical oracle to q125: the
     * physical layout must be invisible to the admission semantics, so
@@ -571,12 +572,7 @@ object DedupQueries {
   val lshBucketedAdmission: QuerySpec = QuerySpec.sql(
     "q140_lsh_bucketed", lshIndexAppendSql
   ) { (spark, dir) =>
-    lshAdmissionRun(spark, dir, "q140", (path, delta) => {
-      graft.operators.LshIndex
-        .compactBucketed(spark, path, buckets = 16, "doc_id")
-      graft.operators.LshIndex
-        .candidatesBucketed(spark, path, delta, "doc_id", "sh")
-    })
+    lshAdmissionRun(spark, dir, "q140", rollover = true)
   }
 
   /** Substring-level dedup ([[graft.operators.SpanScrub]]): delete
@@ -953,7 +949,7 @@ object DedupQueries {
 
   /** Two-tier (lambda) serving for the dedup index
     * ([[graft.operators.LshIndex.compactBucketedAndTruncate]] +
-    * [[graft.operators.LshIndex.candidatesHybrid]]): the compacted
+    * [[graft.operators.LshIndex.candidates]]): the compacted
     * bulk lives in the `(band, bkt)`-bucketed bulk tier — the
     * exchange-free probe side q140 pins — while the ingest tier is
     * truncated to EMPTY and receives each wave's admitted band rows;
@@ -979,10 +975,10 @@ object DedupQueries {
       SharedIndexes.lshBase80(spark, dir), "q141_lsh_delta")
     // rollover: the index folds into the bucketed bulk tier, the ingest
     // tier is truncated to empty
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 16, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
     val perWave = TieredWaves.zipWithIndex.map { case ((lo, hi), i) =>
       val wave = docs.filter(col("bucket") >= lo && col("bucket") < hi)
-      val cand = LshIndex.candidatesHybrid(spark, path, wave, "doc_id", "sh")
+      val cand = LshIndex.candidates(spark, path, wave, "doc_id", "sh")
       val stats = waveStats(docs, wave, cand, i + 1)
       LshIndex.append(
         wave.join(stats.filter(col("admitted")).select(col("doc_id")),
@@ -1024,10 +1020,10 @@ object DedupQueries {
     val path = graft.Scratch.cloneBase(
       SharedIndexes.lshBase80(spark, dir), "q149_lsh_delta")
     // rollover #1: the whole corpus folds into the bucketed bulk
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 16, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
     val perWave = SeqWaves.zipWithIndex.map { case ((lo, hi), i) =>
       val wave = docs.filter(col("bucket") >= lo && col("bucket") < hi)
-      val cand = LshIndex.candidatesHybrid(spark, path, wave, "doc_id", "sh")
+      val cand = LshIndex.candidates(spark, path, wave, "doc_id", "sh")
       val stats = waveStats(docs, wave, cand, i + 1)
       LshIndex.append(
         wave.join(stats.filter(col("admitted")).select(col("doc_id")),
@@ -1039,8 +1035,7 @@ object DedupQueries {
       // the last wave: its rows serve from the ingest tier, which the
       // final two-tier count reads back anyway)
       if (i < SeqWaves.length - 1)
-        LshIndex.compactBucketedAndTruncate(spark, path, buckets = 16,
-          "doc_id")
+        LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
       stats
     }
     val after = LshIndex.rows(spark, path)

@@ -66,10 +66,10 @@ object SharedIndexes {
     case other => sys.error(s"unknown embedding slice '$other'")
   }
 
-  /** Plain-IVF index (centroids + cell layout,
-    * [[graft.operators.IvfAnn.writeIndex]]: `cells/` + `centroids/`)
-    * over an embeddings slice. Consumers: q104/q129 (`full`),
-    * q107/q119/q121/q124 v0 (`base`), q124 v1 (`full`).
+  /** Plain-IVF index root (centroids + cell layout in one log,
+    * [[graft.operators.IvfAnn.writeIndex]]) over an embeddings slice.
+    * Consumers: q104/q129 (`full`), q107/q119/q121/q124 v0 (`base`),
+    * q124 v1 (`full`).
     */
   def ivfIndex(spark: SparkSession, dir: String, slice: String,
       clusters: Int, iters: Int): String =
@@ -80,10 +80,6 @@ object SharedIndexes {
       graft.operators.IvfAnn
         .writeIndex(emb, "vec_id", "embedding", cents, s"$d/idx")
     } + "/idx"
-
-  /** Centroid frame of a [[graft.operators.IvfAnn.writeIndex]] layout. */
-  def ivfCentroids(spark: SparkSession, idx: String): DataFrame =
-    graft.sources.Tables.read(spark, s"$idx/centroids")
 
   /** Residual IVFADC index ([[graft.operators.IvfPq.writeIndex]])
     * over an embeddings slice. Consumers: q144/q146/q147/q148 v0/q150

@@ -321,8 +321,8 @@ object SimilarityQueries {
   }
 
   /** IVF ANN against the ON-DISK cell-partitioned layout — q58's search
-    * re-run through [[graft.operators.IvfAnn.writePartitionedByCell]] +
-    * [[graft.operators.IvfAnn.searchPartitioned]]: the assigned corpus
+    * re-run through [[graft.operators.IvfAnn.writeIndex]] +
+    * [[graft.operators.IvfAnn.searchIndex]]: the assigned corpus
     * is materialized hive-partitioned by cell, and the search's corpus
     * READ prunes to the probed cells' files (partition pruning,
     * file-set-asserted by `IvfCellLayoutSpec`), so I/O tracks
@@ -342,13 +342,11 @@ object SimilarityQueries {
     // probed READ-ONLY, so no clone
     val idx = SharedIndexes.ivfIndex(spark, dir, "full",
       clusters = 16, iters = 2)
-    val path = s"$idx/cells"
-    val cents = SharedIndexes.ivfCentroids(spark, idx)
     val queries = Tables.load(spark, dir, "embeddings")
       .filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     graft.operators.IvfAnn
-      .searchPartitioned(spark, path, cents, "vec_id", "embedding",
+      .searchIndex(spark, idx, "vec_id", "embedding",
         queries, "qid", "qv", k = 3, nProbe = 4)
       .select(col("qid"), col("neighbor"),
         round(col("cosine") + lit(1e-9), 4).as("cosine"))
@@ -401,7 +399,7 @@ object SimilarityQueries {
     * layout: the quantizer is trained on the BASE corpus only (vectors
     * with `vec_id % 5 <> 0`), the base is written cell-partitioned, and
     * the remaining 20% arrive later as a DELTA batch absorbed by
-    * [[graft.operators.IvfAnn.appendPartitionedByCell]] — assigned to
+    * [[graft.operators.IvfAnn.appendIndex]] — assigned to
     * their nearest EXISTING centroids and appended as new files under
     * the matching cell directories, O(|delta|) with zero corpus rewrite
     * and zero retraining. The search then runs over the combined layout
@@ -420,16 +418,16 @@ object SimilarityQueries {
       val all0 = Tables.load(spark, dir, "embeddings")
       val delta = all0.filter(col("vec_id") % 5 === 0)
       // copy-on-write from the shared immutable base-slice index (this
-      // gate appends the delta into its copy); quantizer from the layout
-      val idx = SharedIndexes.ivfIndex(spark, dir, "base", clusters, iters)
-      val cents = SharedIndexes.ivfCentroids(spark, idx)
-      val path = graft.Scratch.cloneBase(s"$idx/cells", "q107_ivf_cells")
+      // gate appends the delta into its copy, under the stored quantizer)
+      val path = graft.Scratch.cloneBase(
+        SharedIndexes.ivfIndex(spark, dir, "base", clusters, iters),
+        "q107_ivf")
       graft.operators.IvfAnn
-        .appendPartitionedByCell(delta, "vec_id", "embedding", cents, path)
+        .appendIndex(delta, "vec_id", "embedding", path)
       val queries = all0.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.IvfAnn
-        .searchPartitioned(spark, path, cents, "vec_id", "embedding",
+        .searchIndex(spark, path, "vec_id", "embedding",
           queries, "qid", "qv", k = k, nProbe = nProbe)
         .select(col("qid"), col("neighbor"),
           round(col("cosine") + lit(1e-9), 4).as("cosine"))
@@ -441,8 +439,8 @@ object SimilarityQueries {
     * Structured Streaming ingest instead of one batch call: the delta
     * generation arrives as three AvailableNow micro-batches
     * (`maxFilesPerTrigger=1`) and each `foreachBatch` appends its rows
-    * to the cell layout via
-    * [[graft.operators.IvfAnn.appendPartitionedByCell]] — the
+    * to the index via
+    * [[graft.operators.IvfAnn.appendIndex]] — the
     * continuous-ingest shape a production vector index actually runs
     * (per-micro-batch O(batch) appends, never a rewrite). Appends
     * commute (each lands new files under its cells), so the layout's
@@ -460,9 +458,9 @@ object SimilarityQueries {
       val root = graft.Scratch.fresh("q119")
       // copy-on-write from the shared immutable base-slice index (this
       // gate appends the streamed delta into its copy)
-      val idx = SharedIndexes.ivfIndex(spark, dir, "base", clusters, iters)
-      val cents = SharedIndexes.ivfCentroids(spark, idx)
-      val path = graft.Scratch.cloneBase(s"$idx/cells", "q119_ivf_cells")
+      val path = graft.Scratch.cloneBase(
+        SharedIndexes.ivfIndex(spark, dir, "base", clusters, iters),
+        "q119_ivf")
       // the delta replays as three REAL micro-batches
       graft.streaming.Replay.files(root,
         all0.filter(col("vec_id") % 5 === 0)
@@ -470,12 +468,12 @@ object SimilarityQueries {
             pmod(hash(col("vec_id")), lit(3)).as("wave")),
         "wave", 3) { (batch, _) =>
         graft.operators.IvfAnn
-          .appendPartitionedByCell(batch, "vec_id", "embedding", cents, path)
+          .appendIndex(batch, "vec_id", "embedding", path)
       }
       val queries = all0.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.IvfAnn
-        .searchPartitioned(spark, path, cents, "vec_id", "embedding",
+        .searchIndex(spark, path, "vec_id", "embedding",
           queries, "qid", "qv", k = k, nProbe = nProbe)
         .select(col("qid"), col("neighbor"),
           round(col("cosine") + lit(1e-9), 4).as("cosine"))
@@ -1025,7 +1023,7 @@ object SimilarityQueries {
 
   /** IVF index-staleness report ([[graft.operators.IvfAnn.driftReport]])
     * — the WHEN-to-retrain signal completing the maintenance loop
-    * (q107 appends without retraining, `compactCells` defragments):
+    * (q107 appends without retraining, `compactIndex` defragments):
     * train on the base generation, assign base AND appended delta to
     * cells, report per-cell mean squared centroid distance by
     * generation and their ratio. One corpus scan + a broadcast centroid
@@ -1059,9 +1057,9 @@ object SimilarityQueries {
     * and because shifted vectors sit ~16 squared-distance units from
     * centroids trained on unit-norm data the ratio blows through
     * `tau = 3`, so the operator retrains on the full corpus and
-    * rewrites the layout through the crash-safe staged publish. The
-    * search then runs over the REBUILT layout with the RETRAINED
-    * quantizer; the oracle replays q58's unrolled-Lloyd chain on the
+    * replaces cells and centroids in one commit. The search then runs
+    * over the REBUILT index, whose stored quantizer is the RETRAINED
+    * one; the oracle replays q58's unrolled-Lloyd chain on the
     * post-retrain corpus (base + shifted delta), so a hash-equal
     * result gates the decision path end-to-end — had the gate NOT
     * fired, the search would have run on stale centroids and
@@ -1093,24 +1091,24 @@ object SimilarityQueries {
             .as("embedding"))
       // copy-on-write from the shared immutable base-slice index (this
       // gate appends a drifted delta, then retrains in place)
-      val idx0 = SharedIndexes.ivfIndex(spark, dir, "base", clusters, iters)
-      val cents0 = SharedIndexes.ivfCentroids(spark, idx0)
-      val path = graft.Scratch.cloneBase(s"$idx0/cells", "q121_ivf_cells")
+      val path = graft.Scratch.cloneBase(
+        SharedIndexes.ivfIndex(spark, dir, "base", clusters, iters),
+        "q121_ivf")
       graft.operators.IvfAnn
-        .appendPartitionedByCell(delta, "vec_id", "embedding", cents0, path)
+        .appendIndex(delta, "vec_id", "embedding", path)
       val tagged = graft.CacheScope.cache(
         base.withColumn("gen", lit("base"))
           .unionByName(delta.withColumn("gen", lit("delta"))))
-      val (cents1, retrained) = graft.operators.IvfAnn
+      val retrained = graft.operators.IvfAnn
         .retrainIfDrifted(spark, path, tagged, "gen", "vec_id",
-          "embedding", cents0, clusters, iters, tau = 3.0)
+          "embedding", clusters, iters, tau = 3.0)
       // fail loudly if the gate ever stops firing — a silent stale-path
       // search would surface only as an oracle hash mismatch
       require(retrained, "drift gate did not fire on a +0.5-shifted delta")
       val queries = tagged.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       graft.operators.IvfAnn
-        .searchPartitioned(spark, path, cents1, "vec_id", "embedding",
+        .searchIndex(spark, path, "vec_id", "embedding",
           queries, "qid", "qv", k = k, nProbe = nProbe)
         .select(col("qid"), col("neighbor"),
           round(col("cosine") + lit(1e-9), 4).as("cosine"))
@@ -1182,12 +1180,12 @@ object SimilarityQueries {
 
   /** DELETE leg of the index lifecycle — tombstoned logical deletes
     * served correctly, then applied physically by compaction
-    * ([[graft.operators.IvfAnn.deleteFromCells]]): 10% of the corpus
+    * ([[graft.operators.IvfAnn.deleteFromIndex]]): 10% of the corpus
     * (every `vec_id ≥ 10` with `vec_id % 10 = 3`) is deleted as an
     * O(|deletes|) append-only marker — NO corpus rewrite on the delete
     * path — and the search runs twice: phase `tombstone` (markers
     * anti-joined at probe time) and phase `compacted` (after
-    * [[graft.operators.IvfAnn.compactCells]] rewrote the cells without
+    * [[graft.operators.IvfAnn.compactIndex]] rewrote the cells without
     * the deleted rows and removed the markers it applied). Both
     * phases must hash-match ONE oracle: the unrolled-Lloyd search over
     * the full-corpus-trained quantizer scoring only surviving vectors
@@ -1210,23 +1208,23 @@ object SimilarityQueries {
         .select(col("vec_id"), col("embedding"))
       // copy-on-write from the shared immutable full-corpus index (this
       // gate deletes and compacts in place)
-      val idx = SharedIndexes.ivfIndex(spark, dir, "full", clusters, iters)
-      val cents = SharedIndexes.ivfCentroids(spark, idx)
-      val path = graft.Scratch.cloneBase(s"$idx/cells", "q129_ivf_cells")
-      graft.operators.IvfAnn.deleteFromCells(spark, path,
+      val path = graft.Scratch.cloneBase(
+        SharedIndexes.ivfIndex(spark, dir, "full", clusters, iters),
+        "q129_ivf")
+      graft.operators.IvfAnn.deleteFromIndex(spark, path,
         corpus.filter(col("vec_id") >= 10 && col("vec_id") % 10 === 3)
           .select(col("vec_id")), "vec_id")
       val queries = corpus.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       def searchNow(phase: String) = graft.operators.IvfAnn
-        .searchPartitioned(spark, path, cents, "vec_id", "embedding",
+        .searchIndex(spark, path, "vec_id", "embedding",
           queries, "qid", "qv", k = k, nProbe = nProbe)
         .withColumn("phase", lit(phase))
       // materialize the tombstone-phase result BEFORE compaction deletes
       // the files under its (lazy) file scan
       val served = graft.CacheScope.cacheTruncated(searchNow("tombstone"))
       served.count()
-      graft.operators.IvfAnn.compactCells(spark, path, "vec_id")
+      graft.operators.IvfAnn.compactIndex(spark, path, "vec_id")
       served.unionByName(searchNow("compacted"))
         .select(col("phase"), col("qid"), col("neighbor"),
           round(col("cosine") + lit(1e-9), 4).as("cosine"))

@@ -36,11 +36,11 @@ class CacheScopeSpec extends SparkTestBase {
     "q104_ivf_partitioned", // corpus + query/probe caches
     "q105_hist_stream",    // price-column cache
     "q106_hist_grouped_exact", // lineitem + grouped-sketch caches
-    "q107_ivf_append",     // corpus cache + searchPartitioned probe cache
+    "q107_ivf_append",     // corpus cache + searchIndex probe cache
     "q111_cms_stream",     // doc + token caches
     "q114_semantic_dedup", // SemanticDedup assigned-frame cache
     "q117_ivf_drift",      // embeddings cache
-    "q119_ivf_stream",     // embeddings cache + searchPartitioned probe cache
+    "q119_ivf_stream",     // embeddings cache + searchIndex probe cache
     "q120_curation_diff",  // token-stats cache
     "q121_ivf_retrain",    // embeddings + tagged-generation caches
     "q123_curation_decon", // shingled-base cache

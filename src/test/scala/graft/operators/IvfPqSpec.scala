@@ -128,7 +128,7 @@ class IvfPqSpec extends SparkTestBase {
     val masked = neighbors()
     // the shared cell-layout compactor works on the codes layout too:
     // tombstones apply physically, markers clear, results unchanged
-    IvfAnn.compactCells(spark, s"$idx/cells", "vec_id")
+    IvfAnn.compactIndex(spark, idx, "vec_id")
     assert(IvfPq.tombstones(spark, idx).isEmpty)
     assert(spark.read.parquet(s"$idx/cells")
       .filter(col("vec_id") === victim).count() === 0L)
@@ -273,11 +273,11 @@ class IvfPqSpec extends SparkTestBase {
     IvfPq.deleteFromIndex(spark, idx, Seq(victim).toDF("vec_id"), "vec_id")
     val masked = neighbors()
     // the shared cell compactor operates on the codes schema; the
-    // _residual_codes flag lives OUTSIDE dir/cells, so the publish swap
-    // of the cell layout must leave the encoding intact — a lost flag
-    // would score the residual codes with global tables and change
-    // every distance below
-    IvfAnn.compactCells(spark, s"$idx/cells", "vec_id")
+    // encoding is the `residual` property of the cells table it
+    // rewrites, so the rewrite must keep it — a lost flag would score
+    // the residual codes with global tables and change every distance
+    // below
+    IvfAnn.compactIndex(spark, idx, "vec_id")
     assert(IvfPq.tombstones(spark, idx).isEmpty)
     assert(spark.read.parquet(s"$idx/cells")
       .filter(col("vec_id") === victim).count() === 0L)

@@ -42,10 +42,13 @@ class LshIndexSpec extends SparkTestBase {
     val delta = withSh(Seq(
       20L -> "shared text body one two three four five six seven",
       21L -> "a fresh never before seen document with novel content"))
+    val cached = graft.CacheScope.activeCount
     val cand = LshIndex.candidates(spark, path, delta, "doc_id", "sh")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand.contains((20L, 10L)))
     assert(!cand.exists(_._1 == 21L))
+    assert(graft.CacheScope.activeCount === cached,
+      "a single-tier probe must cache nothing")
 
     // admit only the novel doc; index grows by Bands rows
     LshIndex.append(delta.filter(col("doc_id") === 21L), "doc_id", "sh", path)
@@ -113,9 +116,11 @@ class LshIndexSpec extends SparkTestBase {
     val path = graft.Scratch.fresh("lshindex_bucketed") + "/idx"
     val docs = (0L until 40L).map(i =>
       i -> s"document number $i body with distinct words w$i x$i y$i z$i")
+    val plain = graft.Scratch.fresh("lshindex_bucketed_plain") + "/idx"
     LshIndex.write(withSh(docs), "doc_id", "sh", path)
+    LshIndex.write(withSh(docs), "doc_id", "sh", plain)
     try {
-      LshIndex.compactBucketed(spark, path, buckets = 8, "doc_id")
+      LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
       val delta = withSh(Seq(
         100L -> "document number 7 body with distinct words w7 x7 y7 z7",
         101L -> "a wholly novel document that matches nothing in the index"))
@@ -124,8 +129,7 @@ class LshIndexSpec extends SparkTestBase {
       // LARGE-delta shape: only the delta shuffles into the index's
       // bucket layout
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cand = LshIndex.candidatesBucketed(spark, path, delta,
-        "doc_id", "sh")
+      val cand = LshIndex.candidates(spark, path, delta, "doc_id", "sh")
       val plan = cand.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
       val exchanges = "Exchange".r.findAllIn(plan).length
@@ -134,9 +138,9 @@ class LshIndexSpec extends SparkTestBase {
       // shuffling this would be 3
       assert(exchanges <= 2,
         s"index side of the probe must not shuffle ($exchanges exchanges):\n$plan")
-      // same answer as the plain-path probe
+      // same answer as a probe of the same rows in a single-tier index
       val got = cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val want = LshIndex.candidates(spark, path, delta, "doc_id", "sh")
+      val want = LshIndex.candidates(spark, plain, delta, "doc_id", "sh")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === want)
       assert(got.contains((100L, 7L)) && !got.exists(_._1 == 101L))
@@ -144,7 +148,7 @@ class LshIndexSpec extends SparkTestBase {
   }
 
   private def hybrid(path: String, probe: org.apache.spark.sql.DataFrame) =
-    LshIndex.candidatesHybrid(spark, path, probe, "doc_id", "sh")
+    LshIndex.candidates(spark, path, probe, "doc_id", "sh")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   private def bulk(path: String) = Tables.read(spark, s"$path/${LshIndex.Bulk}")
@@ -156,7 +160,7 @@ class LshIndexSpec extends SparkTestBase {
       10L -> "shared text body one two three four five six seven",
       11L -> "unrelated corpus document about entirely other things here"))
     LshIndex.write(corpus, "doc_id", "sh", path)
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
     // ingest tier is empty (schema preserved), bulk holds everything
     assert(Tables.read(spark, path).count() === 0L)
     assert(bulk(path).count() === 2L * MinHashLSH.Bands)
@@ -192,7 +196,7 @@ class LshIndexSpec extends SparkTestBase {
       11L -> "unrelated corpus document about entirely other things here"))
     LshIndex.write(corpus, "doc_id", "sh", path)
     // rollover #1: path holds the whole index (the q141 shape)
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
     // an admission wave lands in the truncated ingest tier…
     LshIndex.append(
       withSh(Seq(30L -> "a wholly new document admitted after rollover")),
@@ -201,7 +205,7 @@ class LshIndexSpec extends SparkTestBase {
     // bulk must come out as tier-1 ∪ tier-2, not just the ingest-tier
     // rows (round-9 verdict: the old code overwrote the bulk with only
     // the appends, un-indexing the compacted corpus)
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
     assert(Tables.read(spark, path).count() === 0L)
     assert(bulk(path).count() === 3L * MinHashLSH.Bands)
     // a dup of a TIER-1 doc must still be refused after rollover #2
@@ -223,7 +227,7 @@ class LshIndexSpec extends SparkTestBase {
       10L -> "shared text body one two three four five six seven",
       11L -> "unrelated corpus document about entirely other things here")),
       "doc_id", "sh", path)
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
     assert(catalog() === tables, "a rollover must register no catalog table")
     LshIndex.append(withSh(Seq(
       30L -> "a wholly new document admitted after rollover",
@@ -237,13 +241,13 @@ class LshIndexSpec extends SparkTestBase {
       Tables.at(spark, s"$path/${LshIndex.Bulk}").files.map(_.path).sorted)
     val before = state()
     intercept[IllegalStateException] {
-      LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id",
+      LshIndex.compactBucketedAndTruncate(spark, path, "doc_id",
         () => throw new IllegalStateException("crash before the publish"))
     }
     assert(state() === before,
       "ingest rows, markers and the bulk generation must be unchanged")
     assert(catalog() === tables)
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
     assert(catalog() === tables)
     assert(Tables.read(spark, path).count() === 0L)
     assert(LshIndex.tombstones(spark, path).isEmpty)
@@ -266,7 +270,7 @@ class LshIndexSpec extends SparkTestBase {
     import spark.implicits._
     // the delete lands AFTER the live read staged the new bulk but
     // BEFORE the rollover publishes
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id",
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id",
       () => LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id"))
     assert(LshIndex.tombstones(spark, path).isDefined,
       "the mid-rollover marker must survive the rollover")
@@ -285,7 +289,7 @@ class LshIndexSpec extends SparkTestBase {
     import spark.implicits._
     // both land after the rollover read the ingest tier and staged the
     // new bulk, before it commits
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id",
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id",
       () => {
         LshIndex.append(withSh(Seq(
           30L -> "a wholly new document admitted during the rollover")),
@@ -347,13 +351,13 @@ class LshIndexSpec extends SparkTestBase {
         10L -> "shared text body one two three four five six seven")),
       "doc_id", "sh", path)
     try {
-      LshIndex.compactBucketedAndTruncate(spark, path, buckets = 4, "doc_id")
+      LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
       LshIndex.append(
         withSh(Seq(30L -> "a wholly new document admitted after rollover")),
         "doc_id", "sh", path)
       val delta = withSh(Seq(
         20L -> "shared text body one two three four five six seven"))
-      val cand = LshIndex.candidatesHybrid(spark, path, delta, "doc_id", "sh")
+      val cand = LshIndex.candidates(spark, path, delta, "doc_id", "sh")
       // both tier probes must read the CACHED band-rows frame — the
       // delta's MinHash signature scan is the dominant admission cost
       // and used to run once per tier (round-9 verdict #4)
@@ -371,7 +375,7 @@ class LshIndexSpec extends SparkTestBase {
     val docs = (0L until 40L).map(i =>
       i -> s"document number $i body with distinct words w$i x$i y$i z$i")
     LshIndex.write(withSh(docs), "doc_id", "sh", path)
-    LshIndex.compactBucketedAndTruncate(spark, path, buckets = 8, "doc_id")
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
     LshIndex.append(
       withSh(Seq(50L -> "a post rollover admission with words v50 u50")),
       "doc_id", "sh", path)
@@ -379,7 +383,7 @@ class LshIndexSpec extends SparkTestBase {
     try {
       val delta = withSh(Seq(
         100L -> "document number 7 body with distinct words w7 x7 y7 z7"))
-      val plan = LshIndex.candidatesHybrid(spark, path, delta,
+      val plan = LshIndex.candidates(spark, path, delta,
         "doc_id", "sh").queryExecution.executedPlan.toString
       // exchanges with the bulk side co-located: delta into the bulk's
       // bucket layout (1), both sides of the path-tier join (2), the
@@ -390,6 +394,55 @@ class LshIndexSpec extends SparkTestBase {
         s"bulk table side of the hybrid probe must not shuffle " +
           s"($exchanges exchanges):\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
+  test("compact refuses an index whose bulk tier holds files, so bulk " +
+      "rows stay masked") {
+    val path = graft.Scratch.fresh("lshindex_compact_bulk") + "/idx"
+    LshIndex.write(withSh(Seq(
+      10L -> "shared text body one two three four five six seven",
+      11L -> "unrelated corpus document about entirely other things here")),
+      "doc_id", "sh", path)
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
+    import spark.implicits._
+    LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id")
+    val dupOf10 = withSh(Seq(
+      20L -> "shared text body one two three four five six seven"))
+    assert(hybrid(path, dupOf10) === Set())
+    // the markers mask bulk rows; a compaction of the ingest tier alone
+    // would drop them and serve doc 10 again
+    intercept[IllegalArgumentException] {
+      LshIndex.compact(spark, path, "doc_id")
+    }
+    assert(LshIndex.tombstones(spark, path).isDefined)
+    assert(hybrid(path, dupOf10) === Set())
+  }
+
+  test("rebucketIfSkewed over a two-tier index counts both tiers, keeps " +
+      "deletes masked and holds each live doc once") {
+    val docs = withSh(Seq(
+      1L -> "alpha beta gamma delta epsilon zeta eta theta",
+      2L -> "alpha beta gamma delta epsilon zeta eta theta",
+      10L -> "shared text body one two three four five six seven",
+      11L -> "unrelated corpus document about entirely other things here"))
+    val path = graft.Scratch.fresh("lshindex_rebucket_bulk") + "/idx"
+    LshIndex.write(docs, "doc_id", "sh", path)
+    LshIndex.compactBucketedAndTruncate(spark, path, "doc_id")
+    import spark.implicits._
+    LshIndex.delete(spark, path, Seq(10L).toDF("doc_id"), "doc_id")
+    // capDf = 5 keeps every shingle, so the rebuild changes only layout
+    val (pairs, rebuilt) = LshIndex.rebucketIfSkewed(spark, path, docs,
+      "doc_id", "sh", capDf = 5L, pairBudget = 0L)
+    assert(pairs >= MinHashLSH.Bands, "docs 1/2 collide in every band")
+    assert(rebuilt)
+    val perDoc = LshIndex.rows(spark, path).groupBy(col("doc_id")).count()
+      .as[(Long, Long)].collect().toMap
+    assert(perDoc === Map(1L -> MinHashLSH.Bands.toLong,
+      2L -> MinHashLSH.Bands.toLong, 11L -> MinHashLSH.Bands.toLong),
+      "each live doc once across both tiers, the deleted one gone")
+    assert(hybrid(path, withSh(Seq(
+        20L -> "shared text body one two three four five six seven"))) ===
+      Set(), "the deleted doc must stay masked")
   }
 
   test("rebucketIfSkewed: below budget nothing moves; above it hot " +

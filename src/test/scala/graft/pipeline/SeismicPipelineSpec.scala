@@ -15,6 +15,11 @@ class SeismicPipelineSpec extends SparkTestBase {
     */
   private val IncrementJobBudget = 13
 
+  /** Spark jobs of a run with no new records: the watermark read and
+    * the increment's aggregate; the counts come from the commits.
+    */
+  private val NoOpJobBudget = 3
+
   test("full run, idempotent re-run, and watermark advance") {
     val work = Files.createTempDirectory("pipe").toString
 
@@ -28,11 +33,20 @@ class SeismicPipelineSpec extends SparkTestBase {
     assert(r1.goldRows > 0)
 
     // second run sees nothing past the watermark and changes nothing
-    val r2 = SeismicPipeline.runIncremental(spark, sfDir, work)
+    var r2: SeismicPipeline.RunSummary = null
+    val m = graft.Metrics.measure(spark) {
+      r2 = SeismicPipeline.runIncremental(spark, sfDir, work)
+    }
+    assert(m.jobs <= NoOpJobBudget,
+      m.spans.map(j => s"${j.site} ${j.sql}").mkString("\n"))
     assert(r2.newRecords === 0L)
     assert(r2.silverRows === r1.silverRows)
     assert(r2.goldRows === r1.goldRows)
     assert(r2.watermark === r1.watermark)
+    assert(r2.silverRows ===
+      Tables.read(spark, SeismicPipeline.silverPath(work)).count())
+    assert(r2.goldRows ===
+      Tables.read(spark, SeismicPipeline.goldPath(work)).count())
   }
 
   test("an increment into existing silver stays within its job budget " +
